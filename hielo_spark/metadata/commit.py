@@ -38,25 +38,24 @@ What this enables honestly:
     commit that drops expired snapshot entries from the metadata
     (ops/analysis.remove_orphan_files then reclaims the files).
 
-Appends also record per-file column min/max bounds (single stats pass)
-that the read side's ``skip_filter`` prunes files by, and
-``create_ref``/``drop_ref`` commit named tags/branches that time travel
-resolves (``VERSION AS OF 'name'`` semantics).
+Appends also record per-file column stats — NaN-free min/max bounds
+that the read side's ``skip_filter`` prunes files by, null, NaN and
+distinct counts — computed by the writer tasks themselves
+(metadata/data_files.py, shared with the ``hielo_iceberg`` DataSource
+writer), and ``create_ref``/``drop_ref`` commit named tags/branches
+that time travel resolves (``VERSION AS OF 'name'`` semantics).
 
 Catalog-service commits: catalog/rest.py speaks the REST spec's
 CommitTableRequest (assert-ref requirements + add-snapshot/set-ref
 updates, 409 → CommitConflictError) — tested against an in-process
 protocol server; a live service would make it end-to-end. Glue's
 UpdateTable commit (VersionId optimistic lock) is implemented the same
-way in catalog/glue.py. Manifest stats cover min/max bounds and null
-counts (is_null/is_not_null skipping); remaining out of scope
-(documented): nan counts and distinct counts; schema evolution is
-add-column only (read-side mergeSchema).
+way in catalog/glue.py.
 
 Scale note: commits are planning-plane work — one manifest row per
 data file, driver-side Avro/JSON writes of KB-scale artifacts, exactly
 what any engine's commit coordinator does. The data itself is written
-by distributed ``df.write.parquet``.
+by the tasks of one distributed ``mapInArrow`` job per commit.
 """
 
 from __future__ import annotations
@@ -67,6 +66,8 @@ import os
 import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .data_files import BOUNDABLE
 
 # Spark-SQL partition-value types → Avro types for the r102 partition
 # record (identity int-ish transforms; everything else rides as string,
@@ -522,157 +523,6 @@ def write_avro(
     from .avro_py import write_avro_file
 
     write_avro_file(path, schema_json, rows, meta=meta)
-
-
-class _FileStats:
-    """One distributed stats pass over a freshly-written data dir:
-    per-file row count + per-column min/max (the manifest bounds an
-    Iceberg planner skips files by). Bounds cover orderable primitive
-    columns not in ``exclude_cols`` (partition values are carried
-    separately). One collected row per written file — planning plane."""
-
-    _BOUNDABLE = (
-        "tinyint", "smallint", "int", "bigint", "float", "double",
-        "string", "date", "timestamp", "timestamp_ntz",
-    )
-
-    def __init__(self, spark, data_dir, dtypes, exclude_cols, read_schema=None):
-        from pyspark.sql import functions as F
-
-        #: write.metadata.metrics.default applied at read-out: None =
-        #: full, ("truncate", N), "counts" (no bounds), "none" (no
-        #: column metrics at all) — set by _write_data_files
-        self.metrics_mode = None
-
-        self.bound_cols = [
-            c for c, t in dtypes.items()
-            if t in self._BOUNDABLE and c not in exclude_cols
-        ]
-        # null counts need no ordering — cover every non-excluded column
-        # (boolean/binary/decimal/array too), unlike min/max bounds
-        self.null_cols = [c for c in dtypes if c not in exclude_cols]
-        # NaN counts (spec data_file field 137) exist only for
-        # floating-point columns — same single stats pass
-        self.nan_cols = [
-            c for c in self.null_cols if dtypes[c] in ("float", "double")
-        ]
-        self.btypes = {c: dtypes[c] for c in self.bound_cols} or None
-        self._float_cols = {
-            c for c in self.bound_cols if dtypes[c] in ("float", "double")
-        }
-        # The writer hands its own schema over when the layout is flat
-        # (no partition dirs to re-derive), skipping the footer
-        # schema-inference pass the fresh read would otherwise pay —
-        # ~0.15 s of driver time per commit (guide §7.3 driver-side
-        # work; same footers the write just produced).
-        reader = spark.read.schema(read_schema) if read_schema is not None else spark.read
-        self.rows = (
-            reader.parquet(data_dir)
-            .select(F.col("_metadata.file_path").alias("fp"), *self.null_cols)
-            .groupBy("fp")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                # Iceberg spec: NaN is excluded from lower/upper bounds
-                # (it is counted in nan_value_counts, field 137). Spark's
-                # max() ranks NaN above every double, so a single NaN row
-                # would otherwise poison the upper bound and make bounds
-                # comparators prune the file for every =/>/>= predicate.
-                *[
-                    F.min(self._nan_free(F, c)).cast("string").alias(f"_lo_{c}")
-                    for c in self.bound_cols
-                ],
-                *[
-                    F.max(self._nan_free(F, c)).cast("string").alias(f"_hi_{c}")
-                    for c in self.bound_cols
-                ],
-                *[
-                    (F.count(F.lit(1)) - F.count(c)).cast("string").alias(f"_nn_{c}")
-                    for c in self.null_cols
-                ],
-                *[
-                    F.sum(F.when(F.isnan(c), 1).otherwise(0))
-                    .cast("string")
-                    .alias(f"_nan_{c}")
-                    for c in self.nan_cols
-                ],
-                # per-file NDV estimates (HLL) — the stats a planner's
-                # join-size / dictionary-encoding decisions read
-                *[
-                    F.approx_count_distinct(c).cast("string").alias(f"_dv_{c}")
-                    for c in self.bound_cols
-                ],
-            )
-            .collect()
-        )
-
-    def _nan_free(self, F, c):
-        """Column expr for bounds: NaN rows masked out of float/double
-        min/max (spec: NaN never appears in lower/upper bounds)."""
-        if c in self._float_cols:
-            return F.when(~F.isnan(F.col(c)), F.col(c))
-        return F.col(c)
-
-    @staticmethod
-    def _norm(p: str) -> str:
-        import re
-        from urllib.parse import unquote
-
-        return unquote(re.sub(r"^file:/+", "/", p))
-
-    def _row_of(self, p):
-        # full-path match: partitioned writes can produce IDENTICAL
-        # basenames under different col=value dirs (one task, many
-        # partitions), so basename matching would swap files' stats
-        want = os.path.abspath(self._norm(p))
-        for r in self.rows:
-            if os.path.abspath(self._norm(r["fp"])) == want:
-                return r
-        return None
-
-    def records_of(self, p: str) -> int:
-        r = self._row_of(p)
-        return int(r["_n"]) if r is not None else 0
-
-    def bounds_of(self, p: str) -> tuple[dict | None, dict | None]:
-        r = self._row_of(p)
-        if r is None:
-            return (None, None)
-        lo = {c: r[f"_lo_{c}"] for c in self.bound_cols if r[f"_lo_{c}"] is not None}
-        hi = {c: r[f"_hi_{c}"] for c in self.bound_cols if r[f"_hi_{c}"] is not None}
-        return _apply_metrics_mode(
-            lo or None, hi or None, self.btypes, self.metrics_mode
-        )
-
-    def null_counts_of(self, p: str) -> dict | None:
-        r = self._row_of(p)
-        if r is None:
-            return None
-        return {
-            c: r[f"_nn_{c}"] for c in self.null_cols
-            if _col_metrics_mode(self.metrics_mode, c) != "none"
-        } or None
-
-    def nan_counts_of(self, p: str) -> dict | None:
-        r = self._row_of(p)
-        if r is None:
-            return None
-        return {
-            c: r[f"_nan_{c}"] for c in self.nan_cols
-            if _col_metrics_mode(self.metrics_mode, c) != "none"
-        } or None
-
-    def distinct_counts_of(self, p: str) -> dict | None:
-        r = self._row_of(p)
-        if r is None:
-            return None
-        return {
-            c: r[f"_dv_{c}"] for c in self.bound_cols
-            if _col_metrics_mode(self.metrics_mode, c) != "none"
-        } or None
-
-
-def _file_stats(spark, data_dir, dtypes, exclude_cols, read_schema=None) -> _FileStats:
-    return _FileStats(spark, data_dir, dtypes, exclude_cols, read_schema=read_schema)
 
 
 def _parse_metrics_value(v: str):
@@ -1420,12 +1270,15 @@ def _with_totals(
 
 
 def _carry_forward_rows(
-    spark: SparkSession, mdir: str, doc: dict, base_id: int | None = None
+    mdir: str, doc: dict, base_id: int | None = None
 ) -> list[dict]:
     """Base snapshot's manifest-list rows (default: the current
-    snapshot), re-emitted with their own sequence numbers (a commit
-    keeps history; only the new manifest is added)."""
-    from .manifests import _resolve, read_manifest_list
+    snapshot), re-emitted as existing manifests with their own sequence
+    numbers and ``min_sequence_number`` (a commit keeps history; only
+    the new manifest is added). Pure Python — no SparkSession — so the
+    DataSource writer's commit worker composes commits with it too."""
+    from .avro_py import read_avro_file
+    from .manifests import _COUNT_ALIASES, _resolve
 
     snaps = doc.get("snapshots", [])
     current_id = base_id if base_id is not None else doc.get("current-snapshot-id")
@@ -1435,33 +1288,39 @@ def _carry_forward_rows(
     prev_list = _resolve(
         os.path.join(mdir, "x"), current["manifest-list"].removeprefix("file:")
     )
+
+    def count(m: dict, name: str) -> int:
+        return next(
+            (int(m[a]) for a in _COUNT_ALIASES[name] if m.get(a) is not None),
+            0,
+        )
+
     rows = []
-    for m in read_manifest_list(spark, prev_list).collect():
+    for m in read_avro_file(prev_list)[2]:
+        files = count(m, "added_files_count") + count(m, "existing_files_count")
         # a manifest whose only content was status=2 tombstones (DV
-        # supersession visibility) lives exactly one snapshot — the
-        # spec keeps deleted entries only in the snapshot that deleted
-        # them, so the next commit drops the row
-        if (
-            (m.added_files_count or 0) + (m.existing_files_count or 0) == 0
-            and (m.deleted_files_count or 0) > 0
-        ):
+        # supersession visibility, dynamic overwrites) lives exactly one
+        # snapshot — the spec keeps deleted entries only in the snapshot
+        # that deleted them, so the next commit drops the row
+        if files == 0 and count(m, "deleted_files_count") > 0:
             continue
+        seq = int(m.get("sequence_number") or 0)
+        min_seq = m.get("min_sequence_number")
         rows.append(
             {
-                "manifest_path": m.manifest_path,
-                "manifest_length": m.manifest_length,
-                "partition_spec_id": m.partition_spec_id or 0,
-                "content": m.content,
-                "sequence_number": m.sequence_number if m.sequence_number is not None else 0,
-                "min_sequence_number": m.sequence_number if m.sequence_number is not None else 0,
-                "added_snapshot_id": m.added_snapshot_id or 0,
+                "manifest_path": str(m["manifest_path"]),
+                "manifest_length": int(m["manifest_length"]),
+                "partition_spec_id": int(m.get("partition_spec_id") or 0),
+                "content": int(m.get("content") or 0),
+                "sequence_number": seq,
+                "min_sequence_number": int(min_seq) if min_seq is not None else seq,
+                "added_snapshot_id": int(m.get("added_snapshot_id") or 0),
                 "added_files_count": 0,
-                "existing_files_count": (m.added_files_count or 0)
-                + (m.existing_files_count or 0),
+                "existing_files_count": files,
                 "deleted_files_count": 0,
                 "added_rows_count": 0,
-                "existing_rows_count": (m.added_rows_count or 0)
-                + (m.existing_rows_count or 0),
+                "existing_rows_count": int(m.get("added_rows_count") or 0)
+                + int(m.get("existing_rows_count") or 0),
                 "deleted_rows_count": 0,
             }
         )
@@ -1469,7 +1328,6 @@ def _carry_forward_rows(
 
 
 def _finalize_commit(
-    spark: SparkSession,
     table_dir: str,
     doc: dict,
     prev_version: int,
@@ -1487,6 +1345,8 @@ def _finalize_commit(
     instead of the main ``current-snapshot-id`` — the write half of the
     write-audit-publish pattern (stage commits on a branch, publish via
     ``fast_forward``)."""
+    from .avro_py import write_avro_file
+
     mdir = os.path.join(table_dir, "metadata")
     list_path = os.path.join(mdir, f"snap-{snapshot_id}-{_uuid.uuid4().hex[:8]}.avro")
     # transient marker from _staged_manifest_row (lineage-materialized
@@ -1500,8 +1360,8 @@ def _finalize_commit(
         row.setdefault("added_rows_count", 0)
         row.setdefault("existing_rows_count", 0)
         row.setdefault("deleted_rows_count", 0)
-    write_avro(
-        spark, list_path, MANIFEST_LIST_SCHEMA_V2, manifest_rows,
+    write_avro_file(
+        list_path, MANIFEST_LIST_SCHEMA_V2, manifest_rows,
         meta={
             "snapshot-id": str(snapshot_id),
             "sequence-number": str(seq),
@@ -1564,63 +1424,173 @@ def _finalize_commit(
     return snapshot
 
 
-def _write_data_files(spark, data_dir: str, df: DataFrame, transforms, dtypes,
-                      metrics_mode=None):
-    """Shared distributed data-file write for append/merge: derive any
-    hidden-partition columns, write (hive layout when partitioned),
-    and return ``(parts, partition_of, ptypes, stats)`` — the pieces a
-    manifest entry needs. ``metrics_mode`` (from
-    ``write.metadata.metrics.default``) truncates or suppresses the
-    per-file column metrics the stats pass collects."""
-    from urllib.parse import unquote
+def _write_data_files(spark, data_dir: str, df: DataFrame, transforms,
+                      sort_exprs=()) -> list[dict]:
+    """Distributed data-file write shared by append, merge and
+    compaction: every task streams its rows through
+    ``data_files.write_files`` inside ``mapInArrow`` and returns one
+    stats record per file (path, size, counts, bounds, partition
+    values); the driver collects the records — one Spark job, no
+    re-read of what was just written. Partitioned writes sort each task
+    by partition key first (then by ``sort_exprs``), as Spark's own
+    ``partitionBy`` writer does, so a task keeps one file open. Files
+    land at ``data_dir/[<field>=<value>/]part-*.parquet``. Only the
+    records of successful tasks are collected; any other attempt's files
+    stay unreferenced for ``remove_orphan_files``."""
+    import json as _json
 
-    if transforms:
-        wdf = df
-        for t in transforms:
-            if t.kind != "identity":
-                wdf = wdf.withColumn(t.field, t.expr(dtypes[t.source]))
-        wdf.write.partitionBy(*[t.field for t in transforms]).parquet(data_dir)
-        parts = sorted(
-            _glob.glob(os.path.join(data_dir, "**", "part-*.parquet"), recursive=True)
-        )
-    else:
-        df.write.parquet(data_dir)
-        parts = sorted(_glob.glob(os.path.join(data_dir, "part-*.parquet")))
+    from ..session import _ship_package
+    from .data_files import write_files
 
-    def partition_of(p: str) -> dict | None:
-        if not transforms:
-            return None
-        vals = {}
-        for seg in os.path.relpath(p, data_dir).split(os.sep)[:-1]:
-            k, _, v = seg.partition("=")
-            vals[k] = unquote(v)
-        return vals
+    _ship_package(spark)
+    dtypes = dict(df.dtypes)
+    keys = [t.expr(dtypes[t.source]) for t in transforms] + list(sort_exprs)
+    if keys:
+        df = df.sortWithinPartitions(*keys)
 
-    # identity partitions carry their SQL type (the read side reattaches
-    # them as typed literals); transform partitions carry their spec
-    # behind a marker — the source column is IN the data, nothing to
-    # reattach, but time travel still prunes on the recorded value
-    ptypes = (
-        {
-            t.field: (
-                dtypes[t.source]
-                if t.kind == "identity"
-                else f"transform:{t.spec}"
+    def write_task(batches):
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        # part-<task>-<uuid>: files sort by task, like Spark's writer
+        prefix = f"part-{TaskContext.get().partitionId():05d}"
+        records, _ = write_files(batches, data_dir, transforms, prefix,
+                                 fanout=False)
+        if records:
+            yield pa.RecordBatch.from_pydict(
+                {"rec": [_json.dumps(r) for r in records]}
             )
-            for t in transforms
-        }
-        if transforms
+
+    return [
+        _json.loads(r.rec)
+        for r in df.mapInArrow(write_task, "rec string").collect()
+    ]
+
+
+def _partition_types(transforms, dtypes: dict[str, str]) -> dict | None:
+    """The manifest's ``partition_types`` map: identity fields carry
+    their source column's SQL type (the read planes reattach them as
+    typed literals); transform fields carry their spec behind a marker
+    — the source column is IN the data, nothing to reattach, but
+    pruning and time travel still match on the recorded value."""
+    return {
+        t.field: (
+            dtypes[t.source] if t.kind == "identity"
+            else f"transform:{t.spec}"
+        )
+        for t in transforms
+    } or None
+
+
+def _stage_files_manifest(
+    doc: dict,
+    files: list[dict],
+    dtypes: dict[str, str],
+    snapshot_id: int,
+    seq: int,
+    mdir: str,
+    spec_id: int,
+    pfields: list[tuple],
+    ptypes: dict | None,
+    sort_order_id: int | None = None,
+    assign_row_ids: bool = True,
+) -> dict:
+    """Write the data manifest for newly written ``files`` — the one
+    builder of manifest entries for new data files, whichever plane
+    wrote them. Each file dict is a writer stats record (``path``,
+    ``record_count``, ``file_size_in_bytes`` and optional
+    ``lower_bounds`` / ``upper_bounds`` / ``null_counts`` /
+    ``nan_counts`` / ``distinct_counts`` string maps and
+    ``partition_values``); the table's metrics properties
+    (:func:`_metrics_mode_of`) truncate or drop column metrics here.
+    Bounds are recorded twice: as the engine's name-keyed strings and
+    as the spec's field-id-keyed Appendix D bytes.
+
+    v3 row lineage: with ``assign_row_ids`` every file gets the
+    ``_row_id`` of its first row (field 142), contiguous from the
+    table's next-row-id watermark in manifest order; _finalize_commit
+    advances the watermark. Without it (files carrying materialized
+    lineage columns) first_row_id stays null and the manifest-list row
+    is marked so the watermark does not move.
+
+    Returns ``{manifest_path, spec_id, n_files, added_records,
+    added_bytes, partition_values_of, lineage_materialized}``."""
+    from .avro_py import write_avro_file
+
+    mode = _metrics_mode_of(doc)
+    name2id = _name2id(doc)
+
+    def counts(m: dict | None) -> dict | None:
+        return {
+            c: v for c, v in (m or {}).items()
+            if _col_metrics_mode(mode, c) != "none"
+        } or None
+
+    rid = (
+        int(doc.get("next-row-id", 0))
+        if assign_row_ids and int(doc.get("format-version", 2)) >= 3
         else None
     )
-    stats = _file_stats(
-        spark,
-        data_dir,
-        dtypes,
-        read_schema=df.schema if not transforms else None,
-        exclude_cols=[t.source for t in transforms if t.kind == "identity"],
+    entries = []
+    for f in files:
+        records = int(f["record_count"])
+        lo, hi = _apply_metrics_mode(
+            f.get("lower_bounds"), f.get("upper_bounds"), dtypes, mode
+        )
+        btypes = {
+            c: dtypes[c] for c in {**(lo or {}), **(hi or {})} if c in dtypes
+        } or None
+        nulls = counts(f.get("null_counts"))
+        entries.append({
+            "status": 1,
+            "snapshot_id": snapshot_id,
+            "data_file": {
+                "content": 0,
+                "file_path": f["path"],
+                "file_format": "PARQUET",
+                "sort_order_id": sort_order_id,
+                "first_row_id": rid,
+                "partition": _typed_partition(
+                    f.get("partition_values"), pfields
+                ),
+                "record_count": records,
+                "file_size_in_bytes": int(f["file_size_in_bytes"]),
+                **_spec_stats(
+                    name2id, btypes, lo, hi, nulls, records,
+                    counts(f.get("nan_counts")),
+                ),
+                "partition_values": (
+                    f.get("partition_values") if pfields else None
+                ),
+                "partition_types": ptypes if pfields else None,
+                "lower_bounds_str": lo,
+                "upper_bounds_str": hi,
+                "bounds_types": btypes,
+                "null_counts": nulls,
+                "distinct_counts_str": counts(f.get("distinct_counts")),
+            },
+        })
+        if rid is not None:
+            rid += records
+    os.makedirs(mdir, exist_ok=True)
+    manifest_path = os.path.join(
+        mdir, f"manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
     )
-    stats.metrics_mode = metrics_mode
-    return parts, partition_of, ptypes, stats
+    write_avro_file(
+        manifest_path, manifest_entry_schema(pfields), entries,
+        meta=_manifest_header_meta(doc, spec_id, "data"),
+    )
+    return {
+        "manifest_path": manifest_path,
+        "spec_id": spec_id,
+        "n_files": len(files),
+        "added_records": sum(int(f["record_count"]) for f in files),
+        "added_bytes": sum(int(f["file_size_in_bytes"]) for f in files),
+        "partition_values_of": {
+            f["path"]: f.get("partition_values") for f in files
+        },
+        "lineage_materialized": not assign_row_ids,
+    }
 
 
 def _spec_transforms_from_doc(doc: dict):
@@ -1688,9 +1658,8 @@ def _stage_append_manifest(
     table\'s distribution mode and sort order, write the data files,
     and emit their manifest. Mutates ``doc`` the same way append
     always has (shape recording, next-row-id is advanced later by
-    _finalize_commit). Returns ``{manifest_path, n_files,
-    added_records, added_bytes, partition_values_of}`` —
-    ``partition_values_of`` maps file path → stringified partition
+    _finalize_commit). Returns :func:`_stage_files_manifest`'s dict —
+    its ``partition_values_of`` maps file path → stringified partition
     values (what overwrite_partitions dooms prior files against).
 
     ``lineage_materialized``: the frame CARRIES the v3 lineage columns
@@ -1795,7 +1764,7 @@ def _stage_append_manifest(
             df = df.repartition(*keys)
     # honor the table's default sort order on appends
     # (_sort_spec_from_doc — transform sort fields sort by the derived
-    # value): a LOCAL per-task sort —
+    # value): a LOCAL per-task sort (after the partition key) —
     # no extra shuffle — so fresh files carry tight column bounds and
     # file-/row-group pruning bites immediately, not only after the
     # next sorted compaction (Iceberg writers apply the sort order on
@@ -1803,11 +1772,9 @@ def _stage_append_manifest(
     # and null order come from the declared sort fields: a file
     # stamped with sort_order_id must actually be in THAT order, desc
     # and nulls-last included.
-    if sort_spec:
-        df = df.sortWithinPartitions(*_sort_exprs(sort_spec, dtypes))
-    parts, partition_of, ptypes, stats = _write_data_files(
-        spark, data_dir, df, transforms, dtypes,
-        metrics_mode=_metrics_mode_of(doc),
+    files = _write_data_files(
+        spark, data_dir, df, transforms,
+        _sort_exprs(sort_spec, dtypes) if sort_spec else (),
     )
     # stamp the order id ONLY when every order column was present —
     # a partial sort must not claim the full order to readers
@@ -1816,10 +1783,10 @@ def _stage_append_manifest(
         if sort_cols and len(sort_cols) == len(order_cols)
         else None
     )
-    records_of, bounds_of, btypes = stats.records_of, stats.bounds_of, stats.btypes
 
     # 2. manifest for the added files (entry seq null → inherited),
     # with the spec's typed r102 partition record + header metadata
+    ptypes = _partition_types(transforms, dtypes)
     spec_id = int(doc.get("default-spec-id", 0))
     pfields = _partition_avro_fields(doc, ptypes, spec_id)
     if [t.field for t in transforms] != [f[0] for f in pfields]:
@@ -1837,63 +1804,14 @@ def _stage_append_manifest(
             )
             for i, t in enumerate(transforms)
         ]
-    manifest_path = os.path.join(mdir, f"manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro")
-    name2id = _name2id(doc)
-    # v3 row lineage: every added file gets the _row_id of its first row
-    # (field 142) — contiguous from the table's next-row-id watermark in
-    # manifest order; _finalize_commit advances the watermark. A
-    # lineage-materialized write (UPDATE re-append) keeps first_row_id
+    # a lineage-materialized write (UPDATE re-append) keeps first_row_id
     # null on every file: the parquet carries explicit _row_id columns,
-    # which the lineage read coalesces BEFORE the inheritance fallback.
-    first_row_id_of: dict[str, int | None] = {p: None for p in parts}
-    if int(doc.get("format-version", 2)) >= 3 and not lineage_materialized:
-        rid = int(doc.get("next-row-id", 0))
-        for p in parts:
-            first_row_id_of[p] = rid
-            rid += records_of(p)
-    write_avro(
-        spark,
-        manifest_path,
-        manifest_entry_schema(pfields),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "sort_order_id": sort_oid,
-                    "first_row_id": first_row_id_of[p],
-                    "partition": _typed_partition(partition_of(p), pfields),
-                    "record_count": records_of(p),
-                    "file_size_in_bytes": os.path.getsize(p),
-                    **_spec_stats(
-                        name2id, btypes, bounds_of(p)[0], bounds_of(p)[1],
-                        stats.null_counts_of(p), records_of(p),
-                        stats.nan_counts_of(p),
-                    ),
-                    "partition_values": partition_of(p),
-                    "partition_types": ptypes,
-                    "lower_bounds_str": bounds_of(p)[0],
-                    "upper_bounds_str": bounds_of(p)[1],
-                    "bounds_types": btypes,
-                    "null_counts": stats.null_counts_of(p),
-                    "distinct_counts_str": stats.distinct_counts_of(p),
-                },
-            }
-            for p in parts
-        ],
-        meta=_manifest_header_meta(doc, spec_id, "data"),
+    # which the lineage read coalesces BEFORE the inheritance fallback
+    return _stage_files_manifest(
+        doc, files, dtypes, snapshot_id, seq, mdir, spec_id, pfields,
+        ptypes, sort_order_id=sort_oid,
+        assign_row_ids=not lineage_materialized,
     )
-    return {
-        "manifest_path": manifest_path,
-        "n_files": len(parts),
-        "added_records": sum(records_of(p) for p in parts),
-        "added_bytes": sum(os.path.getsize(p) for p in parts),
-        "partition_values_of": {p: partition_of(p) for p in parts},
-        "lineage_materialized": lineage_materialized,
-    }
 
 
 def append(
@@ -1947,19 +1865,34 @@ def append(
 
     ``snapshot_id`` / ``timestamp_ms`` are injectable for deterministic
     tests (defaults: sequence-derived id, current wall clock)."""
+    doc, prev_version = _load_doc(table_dir)
+    seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms, branch
+    )
+    staged = _stage_append_manifest(
+        spark, table_dir, doc, seq, snapshot_id, df,
+        partition_by=partition_by, variant_cols=variant_cols,
+        variant_shred=variant_shred,
+    )
+    return _commit_staged(
+        table_dir, doc, prev_version, staged, seq, snapshot_id,
+        timestamp_ms, base_id, "append", branch=branch,
+        extra_summary=extra_summary, extra_properties=extra_properties,
+    )
+
+
+def _commit_ids(doc: dict, snapshot_id, timestamp_ms, branch):
+    """``(seq, snapshot_id, timestamp_ms, base_id)`` for a new data
+    commit: the next sequence number, the caller's ids or the defaults
+    (sequence-derived snapshot id, wall clock), and the snapshot the
+    commit builds on — the current one, or the head of ``branch``."""
     import time
 
-    from .transforms import parse_partition_by
-
-    doc, prev_version = _load_doc(table_dir)
     seq = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq)
-    )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
+    if snapshot_id is None:
+        snapshot_id = _default_snapshot_id(doc, seq)
+    if timestamp_ms is None:
+        timestamp_ms = int(time.time() * 1000)
     base_id = doc.get("current-snapshot-id")
     if branch is not None:
         ref = doc.get("refs", {}).get(branch)
@@ -1967,35 +1900,52 @@ def append(
             if ref.get("type") != "branch":
                 raise ValueError(f"ref {branch!r} is a tag, not a branch")
             base_id = int(ref["snapshot-id"])
+    return seq, snapshot_id, timestamp_ms, base_id
+
+
+def _commit_staged(
+    table_dir: str,
+    doc: dict,
+    prev_version: int,
+    staged: dict,
+    seq: int,
+    snapshot_id: int,
+    timestamp_ms: int,
+    base_id: int | None,
+    mode: str,
+    branch: str | None = None,
+    extra_summary: dict[str, str] | None = None,
+    extra_properties: dict[str, str] | None = None,
+) -> dict:
+    """Compose the snapshot around one staged data manifest
+    (:func:`_stage_files_manifest`) and commit it. ``mode``:
+
+    * ``"append"`` — the base snapshot's manifests carry forward;
+    * ``"overwrite"`` — REPLACE: no carry-forward (the new files ARE
+      the table), operation ``overwrite`` with reset running totals —
+      Iceberg's truncate-and-write;
+    * ``"dynamic-overwrite"`` — dynamic PARTITION overwrite: prior
+      manifests carry forward with live entries of exactly the incoming
+      files' partition tuples tombstoned (copy-on-write); on an
+      unpartitioned table every live data file is doomed."""
     mdir = os.path.join(table_dir, "metadata")
-    os.makedirs(mdir, exist_ok=True)
-
-    staged = _stage_append_manifest(
-        spark, table_dir, doc, seq, snapshot_id, df,
-        partition_by=partition_by, variant_cols=variant_cols,
-        variant_shred=variant_shred,
-    )
-    manifest_path = staged["manifest_path"]
-
-    # 3. manifest list = base snapshot's manifests (carried forward,
-    # keeping their own sequence numbers) + the new manifest; then the
-    # snapshot entry + metadata.json version bump
-    prior_rows = _carry_forward_rows(spark, mdir, doc, base_id)
-    new_row = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": int(doc.get("default-spec-id", 0)),
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": staged["n_files"],
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": staged["added_records"],
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
+    overwrite = mode == "overwrite"
+    dynamic = mode == "dynamic-overwrite"
+    prior_rows = [] if overwrite else _carry_forward_rows(mdir, doc, base_id)
+    dropped_files = dropped_rows = dropped_bytes = 0
+    if dynamic:
+        pnames = [f[0] for f in _partition_avro_fields(doc, None)]
+        incoming = {
+            tuple(str(pv.get(n)) for n in pnames)
+            for pv in staged["partition_values_of"].values() if pv
+        }
+        prior_rows, dropped_files, dropped_rows, dropped_bytes = (
+            _tombstone_partitions_in_rows(
+                prior_rows, incoming, pnames, mdir, seq, snapshot_id,
+                int(doc.get("format-version", 2)),
+                current_spec_id=int(doc.get("default-spec-id", 0)),
+            )
+        )
     added_records = staged["added_records"]
     added_bytes = staged["added_bytes"]
     total_records = added_records
@@ -2004,27 +1954,37 @@ def append(
          if s.get("snapshot-id") == base_id),
         None,
     )
-    if base is not None:
+    if base is not None and not overwrite:
         try:
             total_records += int(
                 base.get("summary", {}).get("total-records", "0") or 0
-            )
+            ) - dropped_rows
         except ValueError:
             pass  # junk-tolerant, like _with_totals
+    summary = {
+        "operation": "append" if mode == "append" else "overwrite",
+        "added-data-files": str(staged["n_files"]),
+        "added-records": str(added_records),
+        **(
+            {
+                "deleted-data-files": str(dropped_files),
+                "deleted-records": str(dropped_rows),
+                "removed-files-size": str(dropped_bytes),
+            }
+            if dynamic else {}
+        ),
+        "total-records": str(max(total_records, 0)),
+        "added-files-size": str(added_bytes),
+        **(extra_summary or {}),
+    }
     return _finalize_commit(
-        spark, table_dir, doc, prev_version, prior_rows + [new_row],
+        table_dir, doc, prev_version,
+        prior_rows + [_staged_manifest_row(staged, seq, snapshot_id)],
         snapshot_id, timestamp_ms, seq,
         _with_totals(
-            {
-                "operation": "append",
-                "added-data-files": str(staged["n_files"]),
-                "added-records": str(added_records),
-                "total-records": str(total_records),
-                "added-files-size": str(added_bytes),
-                **(extra_summary or {}),
-            },
-            doc, base_id,
-            staged["n_files"], added_bytes, 0,
+            summary, doc, base_id,
+            staged["n_files"] - dropped_files, added_bytes - dropped_bytes, 0,
+            reset=overwrite,
         ),
         branch=branch,
         parent_id=base_id,
@@ -2032,63 +1992,86 @@ def append(
     )
 
 
-def _stringify_footer_stat(v, ty: str) -> str | None:
-    """Parquet footer statistic → the engine's stringified-bound form
-    (the same rendering _FileStats' ``cast("string")`` pass produces,
-    close enough that both readers parse identically: numerics parse by
-    value, timestamps through _canon_ts_value's fraction trimming).
-    NaN returns None — the spec excludes NaN from bounds."""
-    import datetime as _dt
-    import math as _math
+def append_files(
+    table_dir: str,
+    files: list[dict],
+    dtypes: dict[str, str],
+    snapshot_id: int | None = None,
+    timestamp_ms: int | None = None,
+    extra_summary: dict[str, str] | None = None,
+    extra_properties: dict[str, str] | None = None,
+    mode: str = "append",
+    branch: str | None = None,
+) -> dict:
+    """Commit already-written parquet ``files`` as one snapshot, with no
+    SparkSession — the commit half of the ``hielo_iceberg`` DataSource
+    writer, whose ``commit()`` runs in a plain Python worker. Each file
+    dict is a writer stats record (see :func:`_stage_files_manifest`);
+    ``dtypes`` are the written frame's Spark types. ``mode`` is
+    ``append`` / ``overwrite`` / ``dynamic-overwrite`` as in
+    :func:`_commit_staged`. ``branch`` stages the commit on that branch
+    ref instead of moving ``current-snapshot-id`` (the write half of
+    write-audit-publish; publish with ``fast_forward``); readers see
+    the staged rows only via ``ref=branch`` / ``option("branch", ...)``.
+    Returns the snapshot dict.
 
-    if v is None:
-        return None
-    if isinstance(v, bytes):
-        try:
-            v = v.decode("utf-8")
-        except UnicodeDecodeError:
-            return None
-    if ty in ("float", "double") and isinstance(v, float):
-        if _math.isnan(v):
-            return None
-        return repr(v)
-    if isinstance(v, _dt.datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    return str(v)
+    On a partitioned default spec the writer tasks must have split rows
+    by the spec and attached per-file ``partition_values`` (the values
+    live in the manifest, not the files); files without them raise
+    rather than record inconsistent metadata."""
+    if mode not in ("append", "overwrite", "dynamic-overwrite"):
+        raise ValueError(f"unsupported commit mode {mode!r}")
+    doc, prev_version = _load_doc(table_dir)
+    seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms, branch
+    )
+    mdir = os.path.join(table_dir, "metadata")
+    _record_table_shape(doc, dtypes, [])
+    ptypes = _partition_types(_spec_transforms_from_doc(doc), dtypes)
+    spec_id = int(doc.get("default-spec-id", 0))
+    pfields = _partition_avro_fields(doc, ptypes, spec_id)
+    if pfields and any(f.get("partition_values") is None for f in files):
+        raise ValueError(
+            f"table {table_dir!r} has a partitioned default spec but the "
+            "write produced files without partition values — the writer "
+            "must split rows by the spec's partition fields"
+        )
+    staged = _stage_files_manifest(
+        doc, files, dtypes, snapshot_id, seq, mdir, spec_id, pfields, ptypes,
+    )
+    return _commit_staged(
+        table_dir, doc, prev_version, staged, seq, snapshot_id,
+        timestamp_ms, base_id, mode, branch=branch,
+        extra_summary=extra_summary, extra_properties=extra_properties,
+    )
 
 
 def _footer_file_stats(md, dtypes: dict[str, str], bound_cols,
                        rename: dict[str, str] | None = None):
     """(records, lo, hi, null_counts) for one parquet file from its
-    FOOTER metadata alone — per-row-group stats aggregated per column.
-    Writer-truncated string stats remain valid ENCLOSING bounds; NaN
-    float stats (old writers) are masked. A column records bounds (or
-    a null count) only when EVERY row group contributed one — a file
-    bound that misses a statless group's values would wrongly prune
-    (the same completeness rule _write_delete_parts applies). NaN-only
-    float groups count as contributing (NaN is spec-excluded from
-    bounds), but a group with NO stats at all drops the column.
+    FOOTER metadata alone — per-row-group stats aggregated per column
+    and rendered by ``data_files.render_bound``. Writer-truncated
+    string stats remain valid ENCLOSING bounds; NaN float stats (old
+    writers) are masked. A column records bounds (or a null count) only
+    when EVERY row group contributed one — a file bound that misses a
+    statless group's values would wrongly prune. NaN-only float groups
+    count as contributing (NaN is spec-excluded from bounds), but a
+    group with NO stats at all drops the column.
 
     ``rename`` maps physical footer column names to table names
     (name-mapped imports): stats land under the ICEBERG names so the
     manifest bounds prune like any native file's."""
-    lo: dict[str, str] = {}
-    hi: dict[str, str] = {}
+    import math
+
+    from .data_files import render_bound
+
+    lo: dict = {}
+    hi: dict = {}
     nn: dict[str, int] = {}
     # columns that missed min/max (or null_count) in ANY row group —
     # their file-level stat would not enclose the file
-    lo_incomplete: set[str] = set()
-    hi_incomplete: set[str] = set()
+    incomplete: set[str] = set()
     nn_incomplete: set[str] = set()
-
-    def _key_of(ty: str):
-        if ty in ("tinyint", "smallint", "int", "bigint"):
-            return int  # exact above 2^53, where float comparison lies
-        if ty in ("float", "double"):
-            return float
-        return lambda s: s
 
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
@@ -2102,7 +2085,6 @@ def _footer_file_stats(md, dtypes: dict[str, str], bound_cols,
             if name not in dtypes:
                 continue
             st = col.statistics
-            ty = dtypes[name]
             if st is None or st.null_count is None:
                 nn_incomplete.add(name)
             else:
@@ -2110,33 +2092,36 @@ def _footer_file_stats(md, dtypes: dict[str, str], bound_cols,
             if name not in bound_cols:
                 continue
             if st is None or not st.has_min_max:
-                lo_incomplete.add(name)
-                hi_incomplete.add(name)
+                incomplete.add(name)
                 continue
-            slo = _stringify_footer_stat(st.min, ty)
-            shi = _stringify_footer_stat(st.max, ty)
-            # NaN-masked float stats: a NaN-only group contributes no
-            # value but the remaining groups' bounds still enclose all
-            # non-NaN rows (spec excludes NaN from bounds) — only a
-            # truly statless/undecodable stat marks incompleteness
-            float_nanlike = ty in ("float", "double")
-            key = _key_of(ty)
-            if slo is not None:
-                if name not in lo or key(slo) < key(lo[name]):
-                    lo[name] = slo
-            elif not float_nanlike:
-                lo_incomplete.add(name)
-            if shi is not None:
-                if name not in hi or key(shi) > key(hi[name]):
-                    hi[name] = shi
-            elif not float_nanlike:
-                hi_incomplete.add(name)
-    lo = {c: v for c, v in lo.items() if c not in lo_incomplete}
-    hi = {c: v for c, v in hi.items() if c not in hi_incomplete}
+            mn, mx = st.min, st.max
+            if isinstance(mn, bytes):
+                try:
+                    mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
+                except UnicodeDecodeError:
+                    incomplete.add(name)
+                    continue
+            if isinstance(mn, float) and (math.isnan(mn) or math.isnan(mx)):
+                # a NaN-only group contributes no value (the other
+                # groups' bounds still enclose every non-NaN row); a
+                # half-NaN stat hides one non-NaN extreme
+                if not (math.isnan(mn) and math.isnan(mx)):
+                    incomplete.add(name)
+                continue
+            if name not in lo or mn < lo[name]:
+                lo[name] = mn
+            if name not in hi or mx > hi[name]:
+                hi[name] = mx
+    lo_s = {
+        c: render_bound(v) for c, v in lo.items() if c not in incomplete
+    }
+    hi_s = {
+        c: render_bound(v) for c, v in hi.items() if c not in incomplete
+    }
     nn_s = {
         c: str(v) for c, v in nn.items() if c not in nn_incomplete
     } or None
-    return int(md.num_rows), lo or None, hi or None, nn_s
+    return int(md.num_rows), lo_s or None, hi_s or None, nn_s
 
 
 def add_files(
@@ -2171,7 +2156,6 @@ def add_files(
     segments when the table's default spec (or the hive layout) has
     them; non-identity transforms cannot be derived without scanning
     and raise."""
-    import time
     from urllib.parse import unquote
 
     import pyarrow.parquet as pq
@@ -2182,17 +2166,10 @@ def add_files(
     files = [os.path.abspath(p.removeprefix("file:")) for p in files]
 
     doc, prev_version = _load_doc(table_dir)
-    seq = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq)
+    seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms, None
     )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
-    base_id = doc.get("current-snapshot-id")
     mdir = os.path.join(table_dir, "metadata")
-    os.makedirs(mdir, exist_ok=True)
 
     # duplicate-registration check against the current snapshot
     if base_id is not None:
@@ -2347,9 +2324,8 @@ def add_files(
 
     bound_cols = [
         c for c, ty in dtypes.items()
-        if ty in _FileStats._BOUNDABLE and c in file_dtypes
+        if ty in BOUNDABLE and c in file_dtypes
     ]
-    btypes = {c: dtypes[c] for c in bound_cols} or None
 
     # every file must carry every table data column the first file
     # established (the docstring's per-file contract — a half-missing
@@ -2378,25 +2354,19 @@ def add_files(
         return _footer_file_stats(pf.metadata, dtypes, bound_cols,
                                   rename=phys2cur or None)
 
-    # manifest entries
+    # manifest entries: footer stats through the same builder as
+    # freshly written files
     spec_id = int(doc.get("default-spec-id", 0))
+    # partition-only columns live in the path, not the files: string
+    # unless the schema types them
     ptypes = (
         {t.field: dtypes.get(t.source, "string") for t in transforms}
         or None
     )
     pfields = _partition_avro_fields(doc, ptypes, spec_id)
-    name2id = _name2id(doc)
-    manifest_path = os.path.join(
-        mdir, f"manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
-    )
-    entries, added_records, added_bytes = [], 0, 0
-    first_row_id_of: dict[str, int | None] = {}
-    rid = int(doc.get("next-row-id", 0))
-    v3 = int(doc.get("format-version", 2)) >= 3
-    rows_of: dict[str, int] = {}
+    entries = []
     for p in files:
         records, lo, hi, nn = footer_stats(p)
-        rows_of[p] = records
         pvals = None
         if transforms:
             hv = hive_pvals(p, keys=[t.field for t in transforms])
@@ -2407,85 +2377,19 @@ def add_files(
                     f"fields {missing}"
                 )
             pvals = {t.field: hv[t.field] for t in transforms}
-        first_row_id_of[p] = rid if v3 else None
-        if v3:
-            rid += records
-        size = os.path.getsize(p)
-        added_records += records
-        added_bytes += size
-        entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "sort_order_id": None,
-                    "first_row_id": first_row_id_of[p],
-                    "partition": _typed_partition(pvals, pfields),
-                    "record_count": records,
-                    "file_size_in_bytes": size,
-                    **_spec_stats(name2id, btypes, lo, hi, nn, records),
-                    "partition_values": pvals,
-                    "partition_types": ptypes,
-                    "lower_bounds_str": lo,
-                    "upper_bounds_str": hi,
-                    "bounds_types": btypes,
-                    "null_counts": nn,
-                    "distinct_counts_str": None,
-                },
-            }
-        )
-    write_avro(
-        spark, manifest_path, manifest_entry_schema(pfields), entries,
-        meta=_manifest_header_meta(doc, spec_id, "data"),
+        entries.append({
+            "path": p, "record_count": records,
+            "file_size_in_bytes": os.path.getsize(p),
+            "lower_bounds": lo, "upper_bounds": hi, "null_counts": nn,
+            "partition_values": pvals,
+        })
+    staged = _stage_files_manifest(
+        doc, entries, dtypes, snapshot_id, seq, mdir, spec_id, pfields,
+        ptypes,
     )
-
-    prior_rows = _carry_forward_rows(spark, mdir, doc, base_id)
-    new_row = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": spec_id,
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(files),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": added_records,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    total_records = added_records
-    base = next(
-        (s for s in doc.get("snapshots", [])
-         if s.get("snapshot-id") == base_id),
-        None,
-    )
-    if base is not None:
-        try:
-            total_records += int(
-                base.get("summary", {}).get("total-records", "0") or 0
-            )
-        except ValueError:
-            pass
-    return _finalize_commit(
-        spark, table_dir, doc, prev_version, prior_rows + [new_row],
-        snapshot_id, timestamp_ms, seq,
-        _with_totals(
-            {
-                "operation": "append",
-                "added-data-files": str(len(files)),
-                "added-records": str(added_records),
-                "total-records": str(total_records),
-                "added-files-size": str(added_bytes),
-            },
-            doc, base_id,
-            len(files), added_bytes, 0,
-        ),
-        parent_id=base_id,
+    return _commit_staged(
+        table_dir, doc, prev_version, staged, seq, snapshot_id,
+        timestamp_ms, base_id, "append",
     )
 
 
@@ -2546,19 +2450,17 @@ def _rewrite_manifest_dropping_data(
             dropped_files, dropped_rows, dropped_bytes)
 
 
-def _staged_manifest_row(
-    staged: dict, doc: dict, seq: int, snapshot_id: int
-) -> dict:
-    """Manifest-list row for a _stage_append_manifest result (shared by
-    the UPDATE paths on both format versions). A lineage-materialized
-    stage carries the transient ``assigns_row_ids=False`` marker —
+def _staged_manifest_row(staged: dict, seq: int, snapshot_id: int) -> dict:
+    """Manifest-list row for a staged data manifest
+    (:func:`_stage_files_manifest`). A lineage-materialized stage
+    carries the transient ``assigns_row_ids=False`` marker —
     _finalize_commit then excludes the row's added records from the
     next-row-id watermark advance (the rows keep their prior ids) and
     strips the key before the avro write."""
     row: dict = {
         "manifest_path": staged["manifest_path"],
         "manifest_length": os.path.getsize(staged["manifest_path"]),
-        "partition_spec_id": int(doc.get("default-spec-id", 0)),
+        "partition_spec_id": staged["spec_id"],
         "content": 0,
         "sequence_number": seq,
         "min_sequence_number": seq,
@@ -2700,99 +2602,22 @@ def overwrite_partitions(
     overwriting across a spec change. The incremental/changelog planes
     treat the resulting ``overwrite`` snapshot as unsafe to cross
     (loud), exactly like Iceberg's incremental append scan."""
-    import time
-
     if df.isEmpty():
         return None
     doc, prev_version = _load_doc(table_dir)
-    seq = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq)
+    # a branch overwrite replaces partitions of the BRANCH head (same
+    # staging semantics as append's branch writes; publish with
+    # fast_forward)
+    seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms, branch
     )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
-    base_id = doc.get("current-snapshot-id")
-    if branch is not None:
-        # WAP: overwrite the BRANCH head (same staging semantics as
-        # append's branch writes; publish with fast_forward)
-        ref = doc.get("refs", {}).get(branch)
-        if ref is not None:
-            if ref.get("type") != "branch":
-                raise ValueError(f"ref {branch!r} is a tag, not a branch")
-            base_id = int(ref["snapshot-id"])
-    mdir = os.path.join(table_dir, "metadata")
-    os.makedirs(mdir, exist_ok=True)
-
     staged = _stage_append_manifest(
         spark, table_dir, doc, seq, snapshot_id, df,
     )
-    transforms = _spec_transforms_from_doc(doc)
-    pfields = [t.field for t in transforms]
-    incoming: set[tuple] = set()
-    for pv in staged["partition_values_of"].values():
-        if pv:
-            incoming.add(tuple(str(pv.get(f)) for f in pfields))
-
-    prior_rows = _carry_forward_rows(spark, mdir, doc, base_id)
-    out_rows, dropped_files, dropped_rows, dropped_bytes = (
-        _tombstone_partitions_in_rows(
-            prior_rows, incoming, pfields, mdir, seq, snapshot_id,
-            int(doc.get("format-version", 2)),
-            current_spec_id=int(doc.get("default-spec-id", 0)),
-        )
-    )
-
-    new_row = {
-        "manifest_path": staged["manifest_path"],
-        "manifest_length": os.path.getsize(staged["manifest_path"]),
-        "partition_spec_id": int(doc.get("default-spec-id", 0)),
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": staged["n_files"],
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": staged["added_records"],
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    total_records = staged["added_records"]
-    base = next(
-        (s for s in doc.get("snapshots", [])
-         if s.get("snapshot-id") == base_id),
-        None,
-    )
-    if base is not None:
-        try:
-            total_records += int(
-                base.get("summary", {}).get("total-records", "0") or 0
-            ) - dropped_rows
-        except ValueError:
-            pass  # junk-tolerant, like _with_totals
-    return _finalize_commit(
-        spark, table_dir, doc, prev_version, out_rows + [new_row],
-        snapshot_id, timestamp_ms, seq,
-        _with_totals(
-            {
-                "operation": "overwrite",
-                "added-data-files": str(staged["n_files"]),
-                "added-records": str(staged["added_records"]),
-                "deleted-data-files": str(dropped_files),
-                "deleted-records": str(dropped_rows),
-                "total-records": str(max(total_records, 0)),
-                "added-files-size": str(staged["added_bytes"]),
-                "removed-files-size": str(dropped_bytes),
-                **(extra_summary or {}),
-            },
-            doc, base_id,
-            staged["n_files"] - dropped_files,
-            staged["added_bytes"] - dropped_bytes, 0,
-        ),
-        branch=branch,
-        parent_id=base_id,
+    return _commit_staged(
+        table_dir, doc, prev_version, staged, seq, snapshot_id,
+        timestamp_ms, base_id, "dynamic-overwrite", branch=branch,
+        extra_summary=extra_summary,
     )
 
 
@@ -2947,9 +2772,9 @@ def delete_equality(
         "existing_rows_count": 0,
         "deleted_rows_count": 0,
     }
-    prior_rows = _carry_forward_rows(spark, mdir, doc)
+    prior_rows = _carry_forward_rows(mdir, doc)
     return _finalize_commit(
-        spark, table_dir, doc, prev_version, prior_rows + [new_row],
+        table_dir, doc, prev_version, prior_rows + [new_row],
         snapshot_id, timestamp_ms, seq,
         _with_totals(
             {
@@ -3155,81 +2980,29 @@ def rewrite_data_files(
         live = live.repartitionByRange(n_out, *keys).sortWithinPartitions(*keys)
     else:
         live = live.repartition(n_out)
-    live.write.parquet(data_dir)
-    parts = sorted(_glob.glob(os.path.join(data_dir, "part-*.parquet")))
-    # same stats pass as append: compacted files get fresh column bounds,
-    # which is where sort/zorder strategies pay off (tight disjoint
-    # ranges → skip_filter reads touch one file)
-    stats = _file_stats(
-        spark, data_dir, dict(live.dtypes), exclude_cols=[], read_schema=live.schema
+    # compacted files get fresh column stats from the writer, which is
+    # where sort/zorder strategies pay off (tight disjoint ranges →
+    # skip_filter reads touch one file). The rewrite is unpartitioned
+    # (spec 0) and its rows keep their lineage (no new row ids).
+    staged = _stage_files_manifest(
+        doc, _write_data_files(spark, data_dir, live, []),
+        dict(live.dtypes), snapshot_id, seq, mdir, 0, [], None,
+        assign_row_ids=False,
     )
-    stats.metrics_mode = _metrics_mode_of(doc)
-    records_of = stats.records_of
-
-    manifest_path = os.path.join(
-        mdir, f"manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
-    )
-    name2id = _name2id(doc)
-    write_avro(
-        spark,
-        manifest_path,
-        MANIFEST_ENTRY_SCHEMA_V2,
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 0,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "record_count": records_of(p),
-                    "file_size_in_bytes": os.path.getsize(p),
-                    **_spec_stats(
-                        name2id, stats.btypes, stats.bounds_of(p)[0],
-                        stats.bounds_of(p)[1], stats.null_counts_of(p),
-                        records_of(p), stats.nan_counts_of(p),
-                    ),
-                    "lower_bounds_str": stats.bounds_of(p)[0],
-                    "upper_bounds_str": stats.bounds_of(p)[1],
-                    "bounds_types": stats.btypes,
-                    "null_counts": stats.null_counts_of(p),
-                    "distinct_counts_str": stats.distinct_counts_of(p),
-                },
-            }
-            for p in parts
-        ],
-        meta=_manifest_header_meta(doc, 0, "data"),
-    )
-    total_records = sum(records_of(p) for p in parts)
-    new_row = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(parts),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": total_records,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    added_bytes = sum(os.path.getsize(p) for p in parts)
     return _finalize_commit(
-        spark, table_dir, doc, prev_version, [new_row],  # REPLACE: no carry-forward
+        table_dir, doc, prev_version,
+        [_staged_manifest_row(staged, seq, snapshot_id)],  # REPLACE: no carry-forward
         snapshot_id, timestamp_ms, seq,
         _with_totals(
             {
                 "operation": "replace",
                 "rewritten-data-files": str(len(old_files)),
-                "added-data-files": str(len(parts)),
-                "total-records": str(total_records),
-                "added-files-size": str(added_bytes),
+                "added-data-files": str(staged["n_files"]),
+                "total-records": str(staged["added_records"]),
+                "added-files-size": str(staged["added_bytes"]),
             },
             doc, None,
-            len(parts), added_bytes, 0,
+            staged["n_files"], staged["added_bytes"], 0,
             reset=True,
         ),
     )
@@ -3316,10 +3089,11 @@ def _write_delete_parts(
     spec-ordered within each task, with zero-row task outputs removed.
     Returns ``(parts, rows_of, bounds_of)`` with per-file footer row
     counts and per-file column min/max aggregated from the parquet
-    ROW-GROUP STATISTICS (footer-only — no data read; parquet stat
-    truncation keeps stored mins <= real and maxes >= real, so the
-    bounds stay conservative-valid for pruning). One local footer read
-    per file: planning-plane, bounded by the task count. The bounds let
+    ROW-GROUP STATISTICS by :func:`_footer_file_stats` (footer-only —
+    no data read; parquet stat truncation keeps stored mins <= real and
+    maxes >= real, so the bounds stay conservative-valid for pruning).
+    One local footer read per file: planning-plane, bounded by the task
+    count. The bounds let
     read planners skip whole delete files whose referenced range can't
     intersect a scan (spec: delete files carry bounds like data files —
     a position delete's ``file_path`` bounds say which data files it
@@ -3370,6 +3144,8 @@ def _write_delete_parts(
                 k, _, v = seg.partition("=")
                 vals[k] = unquote(v)
             pvals_of[p] = vals
+    dtypes = dict(df.dtypes)
+    bound_cols = [c for c, t in dtypes.items() if t in BOUNDABLE]
     rows_of: dict[str, int] = {}
     bounds_of: dict[str, tuple[dict, dict]] = {}
     for p in list(parts):
@@ -3378,57 +3154,8 @@ def _write_delete_parts(
             os.remove(p)  # empty shuffle partition — no manifest entry
             parts.remove(p)
             continue
-        rows_of[p] = md.num_rows
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-        complete: set[str] = set()
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                st = col.statistics
-                name = col.path_in_schema
-                if st is None or not st.has_min_max:
-                    complete.discard(name)
-                    lo.pop(name, None)
-                    hi.pop(name, None)
-                    continue
-                if rg == 0:
-                    complete.add(name)
-                if name not in complete:
-                    continue
-                mn, mx = st.min, st.max
-                if isinstance(mn, bytes):
-                    try:
-                        mn, mx = mn.decode(), mx.decode()
-                    except UnicodeDecodeError:
-                        complete.discard(name)
-                        lo.pop(name, None)
-                        hi.pop(name, None)
-                        continue
-                lo[name] = mn if name not in lo else min(lo[name], mn)
-                hi[name] = mx if name not in hi else max(hi[name], mx)
-
-        def canon(v):
-            # the canonical stringified-stat forms the comparators and
-            # the Appendix D serializer parse (timestamps space-
-            # separated with trimmed fractions, dates ISO)
-            import datetime as _dt
-
-            if isinstance(v, _dt.datetime):
-                if v.tzinfo is not None:
-                    v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                s = v.strftime("%Y-%m-%d %H:%M:%S")
-                frac = f"{v.microsecond:06d}".rstrip("0")
-                return f"{s}.{frac}" if frac else s
-            if isinstance(v, _dt.date):
-                return v.isoformat()
-            return str(v)
-
-        bounds_of[p] = (
-            {k: canon(v) for k, v in lo.items()},
-            {k: canon(v) for k, v in hi.items()},
-        )
+        rows_of[p], lo, hi, _ = _footer_file_stats(md, dtypes, bound_cols)
+        bounds_of[p] = (lo or {}, hi or {})
     return parts, rows_of, bounds_of, pvals_of
 
 
@@ -3856,14 +3583,14 @@ def delete_where(
     }
     d_files, d_bytes = 0, sum(os.path.getsize(p) for p in parts)
     if staged_update is not None:
-        rows.append(_staged_manifest_row(staged_update, doc, seq,
+        rows.append(_staged_manifest_row(staged_update, seq,
                                          snapshot_id))
         _apply_update_summary(summary, staged_update)
         d_files += staged_update["n_files"]
         d_bytes += staged_update["added_bytes"]
-    prior_rows = _carry_forward_rows(spark, mdir, doc, base_id)
+    prior_rows = _carry_forward_rows(mdir, doc, base_id)
     res = _finalize_commit(
-        spark, table_dir, doc, prev_version, prior_rows + rows,
+        table_dir, doc, prev_version, prior_rows + rows,
         snapshot_id, timestamp_ms, seq,
         _with_totals(
             summary,
@@ -4032,7 +3759,7 @@ def _commit_deletion_vectors(
 
     base_id = int(current["snapshot-id"])  # branch head under branch DML
     prior_rows = _supersede_dv_rows(
-        _carry_forward_rows(spark, mdir, doc, base_id), replaced,
+        _carry_forward_rows(mdir, doc, base_id), replaced,
         old_dvs, mdir, seq, snapshot_id=snapshot_id,
     )
 
@@ -4066,12 +3793,12 @@ def _commit_deletion_vectors(
     if staged_update is not None:
         # UPDATE on a v3 table: the staged data manifest rides the
         # same commit; the DVs above reference only the OLD files
-        rows.append(_staged_manifest_row(staged_update, doc, seq,
+        rows.append(_staged_manifest_row(staged_update, seq,
                                          snapshot_id))
         _apply_update_summary(summary, staged_update)
         d_files = staged_update["n_files"]
     return _finalize_commit(
-        spark, table_dir, doc, prev_version, prior_rows + rows,
+        table_dir, doc, prev_version, prior_rows + rows,
         snapshot_id, timestamp_ms, seq,
         _with_totals(
             summary,
@@ -4626,7 +4353,7 @@ def rewrite_deletion_vectors(
         d["dv"]["referenced"].removeprefix("file:"): d for d in dvs
     }
     prior_rows = _supersede_dv_rows(
-        _carry_forward_rows(spark, mdir, doc),
+        _carry_forward_rows(mdir, doc),
         set(rewritten_old), rewritten_old, mdir, seq_new,
         snapshot_id=snapshot_id,
     )
@@ -4648,7 +4375,7 @@ def rewrite_deletion_vectors(
     }
     old_blob_bytes = sum(d["dv"]["size"] for d in dvs)
     return _finalize_commit(
-        spark, table_dir, doc, prev_version, prior_rows + [new_row],
+        table_dir, doc, prev_version, prior_rows + [new_row],
         snapshot_id, timestamp_ms, seq_new,
         _with_totals(
             {
@@ -5242,11 +4969,11 @@ def rewrite_position_deletes(
     # carry forward every manifest EXCEPT the pure position-delete ones
     # just rewritten (a mixed/foreign delete manifest stays untouched)
     prior_rows = [
-        r for r in _carry_forward_rows(spark, mdir, doc)
+        r for r in _carry_forward_rows(mdir, doc)
         if r["manifest_path"] not in pure_pos_manifests
     ]
     return _finalize_commit(
-        spark, table_dir, doc, prev_version, prior_rows + [new_row],
+        table_dir, doc, prev_version, prior_rows + [new_row],
         snapshot_id, timestamp_ms, seq_new,
         _with_totals(
             {
@@ -5426,7 +5153,7 @@ def rewrite_manifests(
             }
         )
     return _finalize_commit(
-        spark, table_dir, doc, prev_version, new_rows + delete_rows,
+        table_dir, doc, prev_version, new_rows + delete_rows,
         snapshot_id, timestamp_ms, seq,
         _with_totals(
             {
@@ -5611,7 +5338,7 @@ def merge_into(
         target.join(delete_keys, on, "left_semi").count() if n_delete_keys else 0
     )
 
-    manifest_rows = _carry_forward_rows(spark, mdir, doc, base_id)
+    manifest_rows = _carry_forward_rows(mdir, doc, base_id)
 
     fv = int(doc.get("format-version", 2))
     del_parts: list[str] = []
@@ -5782,8 +5509,7 @@ def merge_into(
             }
         )
 
-    added_records = 0
-    data_parts: list[str] = []
+    added_records = data_files = data_bytes = 0
     if to_append is not None:
         data_dir = os.path.join(table_dir, "data", f"seq-{seq:05d}")
         # keep the table's recorded partition spec: merged rows land in
@@ -5793,92 +5519,28 @@ def merge_into(
         # merged-in rows honor the default sort order exactly like
         # appends (local per-task sort — tight bounds on fresh files),
         # declared direction/null-order included
-        merge_sort = [
-            s for s in _sort_spec_from_doc(doc)
-            if s[0] in dict(to_append.dtypes)
-        ]
-        if merge_sort:
-            to_append = to_append.sortWithinPartitions(
-                *_sort_exprs(merge_sort, dict(to_append.dtypes))
-            )
-        data_parts, partition_of, ptypes, stats = _write_data_files(
+        dtypes = dict(to_append.dtypes)
+        merge_sort = [s for s in _sort_spec_from_doc(doc) if s[0] in dtypes]
+        files = _write_data_files(
             spark, data_dir, to_append, spec_transforms,
-            dict(to_append.dtypes), metrics_mode=_metrics_mode_of(doc),
+            _sort_exprs(merge_sort, dtypes) if merge_sort else (),
         )
-        added_records = sum(stats.records_of(p) for p in data_parts)
-        if added_records == 0:
-            data_parts = []  # empty append side: skip the data manifest
-        else:
-            data_manifest = os.path.join(
-                mdir, f"manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
-            )
+        added_records = sum(f["record_count"] for f in files)
+        if files:
+            ptypes = _partition_types(spec_transforms, dtypes)
+            # the merged files were written through the table's
+            # recorded DEFAULT spec (spec_transforms above), so
+            # attribute them to it — not spec 0 — after partition
+            # evolution; merged-in rows are NEW rows — fresh row ids
             merge_spec_id = int(doc.get("default-spec-id", 0))
-            merge_pfields = _partition_avro_fields(doc, ptypes, merge_spec_id)
-            name2id = _name2id(doc)
-            # v3 row lineage: merged-in rows are NEW rows — fresh ids
-            frid_of: dict[str, int | None] = {p: None for p in data_parts}
-            if int(doc.get("format-version", 2)) >= 3:
-                rid = int(doc.get("next-row-id", 0))
-                for p in data_parts:
-                    frid_of[p] = rid
-                    rid += stats.records_of(p)
-            write_avro(
-                spark,
-                data_manifest,
-                manifest_entry_schema(merge_pfields),
-                [
-                    {
-                        "status": 1,
-                        "snapshot_id": snapshot_id,
-                        "data_file": {
-                            "content": 0,
-                            "file_path": p,
-                            "file_format": "PARQUET",
-                            "first_row_id": frid_of[p],
-                            "partition": _typed_partition(
-                                partition_of(p), merge_pfields
-                            ),
-                            "record_count": stats.records_of(p),
-                            "file_size_in_bytes": os.path.getsize(p),
-                            **_spec_stats(
-                                name2id, stats.btypes, stats.bounds_of(p)[0],
-                                stats.bounds_of(p)[1],
-                                stats.null_counts_of(p), stats.records_of(p),
-                                stats.nan_counts_of(p),
-                            ),
-                            "partition_values": partition_of(p),
-                            "partition_types": ptypes,
-                            "lower_bounds_str": stats.bounds_of(p)[0],
-                            "upper_bounds_str": stats.bounds_of(p)[1],
-                            "bounds_types": stats.btypes,
-                            "null_counts": stats.null_counts_of(p),
-                            "distinct_counts_str": stats.distinct_counts_of(p),
-                        },
-                    }
-                    for p in data_parts
-                ],
-                meta=_manifest_header_meta(doc, merge_spec_id, "data"),
+            staged = _stage_files_manifest(
+                doc, files, dtypes, snapshot_id, seq, mdir, merge_spec_id,
+                _partition_avro_fields(doc, ptypes, merge_spec_id), ptypes,
             )
+            data_bytes = staged["added_bytes"]
+            data_files = staged["n_files"]
             manifest_rows.append(
-                {
-                    "manifest_path": data_manifest,
-                    "manifest_length": os.path.getsize(data_manifest),
-                    # the merged files were written through the table's
-                    # recorded DEFAULT spec (spec_transforms above), so
-                    # attribute them to it — not spec 0 — after
-                    # partition evolution
-                    "partition_spec_id": merge_spec_id,
-                    "content": 0,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": snapshot_id,
-                    "added_files_count": len(data_parts),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": added_records,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                }
+                _staged_manifest_row(staged, seq, snapshot_id)
             )
 
     if not n_delete_keys and added_records == 0:
@@ -5886,12 +5548,12 @@ def merge_into(
 
     prior_total = int(current.get("summary", {}).get("total-records", "0") or 0)
     return _finalize_commit(
-        spark, table_dir, doc, prev_version, manifest_rows,
+        table_dir, doc, prev_version, manifest_rows,
         snapshot_id, timestamp_ms, seq,
         _with_totals(
             {
                 "operation": "overwrite",
-                "added-data-files": str(len(data_parts)),
+                "added-data-files": str(data_files),
                 "added-records": str(added_records),
                 "deleted-records": str(n_deleted_rows),
                 "equality-delete-files": str(len(del_parts)),
@@ -5904,8 +5566,8 @@ def merge_into(
                 **(extra_summary or {}),
             },
             doc, base_id,
-            len(data_parts),
-            sum(os.path.getsize(p) for p in data_parts + del_parts)
+            data_files,
+            data_bytes + sum(os.path.getsize(p) for p in del_parts)
             + dv_net_bytes,
             len(del_parts) + dv_net_files,
         ),
@@ -6131,9 +5793,9 @@ def cherrypick_snapshot(
             )
         except ValueError:
             pass
-    prior_rows = _carry_forward_rows(spark, mdir, doc)
+    prior_rows = _carry_forward_rows(mdir, doc)
     return _finalize_commit(
-        spark, table_dir, doc, prev_version, prior_rows + [new_row],
+        table_dir, doc, prev_version, prior_rows + [new_row],
         snapshot_id, timestamp_ms, seq,
         _with_totals(
             {

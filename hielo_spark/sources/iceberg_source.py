@@ -62,6 +62,7 @@ from pyspark.sql.datasource import (
 )
 
 from ..metadata.avro_py import read_avro_file
+from ..metadata.data_files import render_bound
 
 _ICEBERG_TO_DDL = {
     "boolean": "boolean", "int": "int", "long": "bigint",
@@ -291,10 +292,10 @@ def _file_survives(filters, e: dict) -> bool:
             return True
         # pushed TimestampType values arrive as tz-aware datetimes;
         # bounds strings are tz-less UTC — normalize through the same
-        # stringification the stats plane uses, else every timestamp
+        # renderer the writer records bounds with, else every timestamp
         # comparison carries a '+00:00' suffix (or a session-tz shift)
         # and wrongly prunes matching files
-        value = _stringify_stat(value)
+        value = render_bound(value)
         ctype = bt.get(col)
         if ctype is None:
             # unknown column type (legacy manifest without bounds_types
@@ -2517,37 +2518,6 @@ class _WrittenFiles(WriterCommitMessage):
         self.dtypes = dtypes  # {col: spark dtype}
 
 
-_ARROW_TO_SPARK = {
-    "int8": "tinyint", "int16": "smallint", "int32": "int", "int64": "bigint",
-    "float": "float", "double": "double", "string": "string",
-    "large_string": "string", "bool": "boolean", "binary": "binary",
-    "date32[day]": "date",
-}
-
-
-def _spark_dtype_of(arrow_type) -> str:
-    import pyarrow as pa
-
-    t = arrow_type
-    if (pa.types.is_list(t) or pa.types.is_large_list(t)
-            or pa.types.is_fixed_size_list(t)):
-        return f"array<{_spark_dtype_of(t.value_type)}>"
-    if pa.types.is_map(t):
-        return f"map<{_spark_dtype_of(t.key_type)},{_spark_dtype_of(t.item_type)}>"
-    if pa.types.is_struct(t):
-        inner = ",".join(
-            f"{t.field(i).name}:{_spark_dtype_of(t.field(i).type)}"
-            for i in range(t.num_fields)
-        )
-        return f"struct<{inner}>"
-    if pa.types.is_decimal(t):
-        return f"decimal({t.precision},{t.scale})"
-    s = str(t)
-    if s.startswith("timestamp"):
-        return "timestamp" if "tz=" in s else "timestamp_ntz"
-    return _ARROW_TO_SPARK.get(s, "string")
-
-
 def _arrow_type_of_ddl(ddl: str):
     """Spark DDL type string → pyarrow type (None when unparseable —
     callers then skip casting/declare string)."""
@@ -2595,54 +2565,14 @@ def _arrow_type_of_ddl(ddl: str):
     return None
 
 
-def _transform_partition_values(t, col) -> list:
-    """Derived partition values for one spec field over a task's Arrow
-    column — the no-Spark twin of ``PartitionTransform.expr`` (writer
-    tasks have no SQL engine). Canonical forms match
-    metadata/transforms.py: time transforms render the date_format
-    shapes, truncate floors / prefixes, bucket is the spec-exact
-    murmur3 ordinal (vectorized over int/date/timestamp sources via the
-    same numpy kernel the Arrow bucket UDF uses; strings take the
-    scalar UTF-8 hash)."""
-    import numpy as np
-    import pyarrow as pa
-
-    from ..metadata.transforms import murmur3_32_long
-
-    if t.kind == "identity":
-        return col.to_pylist()
-    if t.kind == "bucket":
-        ty = col.type
-        ints = None
-        if pa.types.is_timestamp(ty):
-            # spec: timestamps hash their epoch MICROseconds
-            ints = col.cast(pa.timestamp("us", tz=ty.tz)).cast(pa.int64())
-        elif pa.types.is_date(ty):
-            ints = col.cast(pa.date32()).cast(pa.int32()).cast(pa.int64())
-        elif pa.types.is_integer(ty):
-            ints = col.cast(pa.int64())
-        if ints is not None:
-            vals = ints.to_pylist()
-            idx = [i for i, v in enumerate(vals) if v is not None]
-            out: list = [None] * len(vals)
-            if idx:
-                h = murmur3_32_long(
-                    np.asarray([vals[i] for i in idx], dtype=np.int64)
-                )
-                buckets = (h.astype(np.int64) & 0x7FFFFFFF) % t.param
-                for i, b in zip(idx, buckets):
-                    out[i] = int(b)
-            return out
-    return [None if v is None else t.value_of(v) for v in col.to_pylist()]
-
-
 class HieloIcebergWriter(DataSourceArrowWriter):
     """``df.write.format("hielo_iceberg").mode("append").save(dir)`` —
-    executors stream their Arrow batches into one parquet file each
-    (data plane, fully distributed) and report (path, stats); the
-    driver-side ``commit()`` composes ONE append snapshot through the
-    pure-Python commit plane (metadata/commit_py.py) — manifest +
-    manifest list + metadata.json, identical artifacts to the JVM path.
+    executors stream their Arrow batches into parquet through the
+    writer the JVM plane's ``commit.append`` also runs
+    (metadata/data_files.py) and report one stats record per file;
+    ``commit()`` composes ONE append snapshot with
+    ``commit.append_files`` — the same manifest builder and
+    finalize step as every other commit, needing no SparkSession.
 
     Exactly-once: only files named in SUCCESSFUL tasks' commit messages
     enter the manifest; retried/zombie task outputs are unreferenced
@@ -2655,7 +2585,7 @@ class HieloIcebergWriter(DataSourceArrowWriter):
     carry-forward, reset totals — Iceberg truncate-and-write); with
     ``option("overwrite-mode", "dynamic")`` it is dynamic PARTITION
     overwrite instead: only the partitions present in the frame are
-    replaced (copy-on-write tombstones, commit_py mode
+    replaced (copy-on-write tombstones, append_files mode
     'dynamic-overwrite' — Iceberg's overwritePartitions());
     ``option("branch", name)`` stages the snapshot on that branch ref
     for write-audit-publish (readers see it only via
@@ -2737,126 +2667,38 @@ class HieloIcebergWriter(DataSourceArrowWriter):
             )
         return ts
 
-    @staticmethod
-    def _file_entry(table, path):
-        """Write ``table`` to ``path`` and return (file_dict, dtypes)
-        with the engine-extension stats maps."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
+    def _with_write_defaults(self, batches):
+        import pyarrow as pa
 
-        pq.write_table(table, path)
-        lo, hi, nulls, dtypes = {}, {}, {}, {}
-        for name in table.column_names:
-            col = table.column(name)
-            dtypes[name] = _spark_dtype_of(col.type)
-            nulls[name] = str(col.null_count)
-            if dtypes[name] in ("tinyint", "smallint", "int", "bigint",
-                                "float", "double", "string", "date",
-                                "timestamp", "timestamp_ntz"):
-                if col.null_count < len(col):
-                    mn, mx = pc.min(col).as_py(), pc.max(col).as_py()
-                    if mn is not None:
-                        lo[name] = _stringify_stat(mn)
-                        hi[name] = _stringify_stat(mx)
-        return (
-            {
-                "path": path,
-                "record_count": table.num_rows,
-                "file_size_in_bytes": os.path.getsize(path),
-                "lower_bounds": lo or None,
-                "upper_bounds": hi or None,
-                "null_counts": nulls or None,
-            },
-            dtypes,
-        )
+        for batch in batches:
+            for name, val, ddl in self.write_defaults:
+                if name not in batch.schema.names:
+                    batch = batch.append_column(
+                        name,
+                        pa.array(
+                            [val] * batch.num_rows,
+                            type=_arrow_type_of_ddl(ddl) or pa.string(),
+                        ),
+                    )
+            yield batch
 
     def write(self, iterator):
-        import pyarrow as pa
-        import uuid as _uuid
-        from urllib.parse import quote
+        # the writer shared with the JVM plane: Arrow batches stream
+        # into ds-*.parquet files split by the default spec's partition
+        # tuple (identity sources stay out of the files — their values
+        # live in the manifest), one stats record per file. Input
+        # arrives in any order, so each partition keeps its file open.
+        from ..metadata.data_files import write_files
 
-        batches = list(iterator)
-        if not batches or sum(b.num_rows for b in batches) == 0:
-            return _WrittenFiles([], {})
-        table = pa.Table.from_batches(batches)
-        for name, val, ddl in self.write_defaults:
-            if name not in table.column_names:
-                table = table.append_column(
-                    name,
-                    pa.array(
-                        [val] * table.num_rows,
-                        type=_arrow_type_of_ddl(ddl) or pa.string(),
-                    ),
-                )
-        data_dir = os.path.join(self.table_dir, "data")
-        os.makedirs(data_dir, exist_ok=True)
-
-        if not self.partition_transforms:
-            path = os.path.join(data_dir, f"ds-{_uuid.uuid4().hex}.parquet")
-            entry, dtypes = self._file_entry(table, path)
-            return _WrittenFiles([entry], dtypes)
-
-        # partitioned: split THIS task's rows per derived partition
-        # tuple (hive semantics — values live in the manifest; IDENTITY
-        # source columns are stripped from the file and reattached by
-        # the read planes, while transform sources stay in the data —
-        # that's what makes the partitioning hidden). Per-task distinct
-        # values bound the fan-out, the same shape as Spark's
-        # partitionBy writer tasks.
-        missing = [t.source for t in self.partition_transforms
-                   if t.source not in table.column_names]
-        if missing:
-            raise ValueError(
-                f"frame lacks partition source columns {missing}"
-            )
-        # same manifest ptype convention as the JVM plane
-        # (commit._write_data_files): identity fields carry the source
-        # SQL type for typed reattachment; transform fields carry the
-        # spec behind a marker — nothing to reattach, but pruning and
-        # time travel still match on the recorded value
-        ptypes = {
-            t.field: (
-                _spark_dtype_of(table.column(t.source).type)
-                if t.kind == "identity"
-                else f"transform:{t.spec}"
-            )
-            for t in self.partition_transforms
-        }
-        full_dtypes = {
-            name: _spark_dtype_of(table.column(name).type)
-            for name in table.column_names
-        }
-        keys = list(zip(*[
-            _transform_partition_values(t, table.column(t.source))
-            for t in self.partition_transforms
-        ]))
-        ident_srcs = [
-            t.source for t in self.partition_transforms
-            if t.kind == "identity"
-        ]
-        files = []
-        for tup in sorted(set(keys), key=lambda t: tuple(map(str, t))):
-            mask = pa.array([k == tup for k in keys], type=pa.bool_())
-            sub = table.filter(mask).drop_columns(ident_srcs)
-            pvals, segs = {}, []
-            for t, v in zip(self.partition_transforms, tup):
-                sval = (
-                    "__HIVE_DEFAULT_PARTITION__" if v is None
-                    else _stringify_stat(v)
-                )
-                pvals[t.field] = sval
-                segs.append(f"{t.field}={quote(sval, safe='')}")
-            pdir = os.path.join(data_dir, *segs)
-            os.makedirs(pdir, exist_ok=True)
-            path = os.path.join(pdir, f"ds-{_uuid.uuid4().hex}.parquet")
-            entry, _dt = self._file_entry(sub, path)
-            entry["partition_values"] = pvals
-            entry["partition_types"] = ptypes
-            files.append(entry)
-        return _WrittenFiles(files, full_dtypes)
+        files, dtypes = write_files(
+            self._with_write_defaults(iterator),
+            os.path.join(self.table_dir, "data"),
+            self.partition_transforms, "ds", fanout=True,
+        )
+        return _WrittenFiles(files, dtypes)
 
     def commit(self, messages):
-        from ..metadata.commit_py import append_files
+        from ..metadata.commit import append_files
 
         files, dtypes = [], {}
         for m in messages:
@@ -2926,16 +2768,14 @@ class HieloIcebergStreamWriter(DataSourceStreamArrowWriter):
     # per-task Arrow write is identical to the batch writer's (incl.
     # spec-partitioned splitting — the helpers only touch table_dir)
     write = HieloIcebergWriter.write
+    _with_write_defaults = HieloIcebergWriter._with_write_defaults
     _spec_partition_transforms = HieloIcebergWriter._spec_partition_transforms
     _schema_write_defaults = HieloIcebergWriter._schema_write_defaults
-    # re-wrap: accessing a staticmethod through the class yields the bare
-    # function, which would rebind as an instance method here
-    _file_entry = staticmethod(HieloIcebergWriter._file_entry)
 
     def commit(self, messages, batchId=None):  # noqa: N802 (API name)
         import json as _json
 
-        from ..metadata.commit_py import append_files
+        from ..metadata.commit import append_files
 
         qid = self.options.get("query-name", "hielo_iceberg_stream")
         if batchId is not None:
@@ -2986,30 +2826,6 @@ class HieloIcebergStreamWriter(DataSourceStreamArrowWriter):
 
     def abort(self, messages, batchId=None):  # noqa: N802
         HieloIcebergWriter.abort(self, messages)
-
-
-def _stringify_stat(v) -> str:
-    """Match the Spark cast-to-string forms the bounds comparators and
-    Appendix D serializer parse (timestamps 'YYYY-MM-DD HH:MM:SS[.us]',
-    dates ISO, numbers plain)."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        s = v.strftime("%Y-%m-%d %H:%M:%S")
-        # Spark's cast-to-string trims trailing fraction zeros
-        # ('…05.1', not '…05.100000'); the bounds comparators match
-        # these strings lexicographically against JVM-plane *_bounds_str
-        # values, so BOTH renderings must be canonical — a padded form
-        # sorts above its trimmed twin and wrongly prunes files whose
-        # bound equals the filter value (trimmed fractions still compare
-        # correctly as strings: '05.09' < '05.1' < '05.15')
-        frac = f"{v.microsecond:06d}".rstrip("0")
-        return f"{s}.{frac}" if frac else s
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    return str(v)
 
 
 # -- metadata surfaces (the reference IS a metadata viewer: expose the

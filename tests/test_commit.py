@@ -1597,8 +1597,6 @@ def test_default_snapshot_id_never_collides(spark, tmp_path):
     assert len(ids) == len(set(ids)) == 2
 
     # pure-Python plane: same guard
-    from hielo_spark.metadata.commit_py import append_files
-
     t2 = str(tmp_path / "t2")
     C.append(spark, t2, spark.createDataFrame([(1, "a")], ["id", "v"]),
              snapshot_id=1002, timestamp_ms=1700000000000)
@@ -1608,7 +1606,7 @@ def test_default_snapshot_id_never_collides(spark, tmp_path):
     import glob
     import os
     p = glob.glob(os.path.join(files_dir, "part-*.parquet"))[0]
-    s2 = append_files(t2, [{
+    s2 = C.append_files(t2, [{
         "path": p, "record_count": 1,
         "file_size_in_bytes": os.path.getsize(p),
     }], {"id": "bigint", "v": "string"}, timestamp_ms=1700100000000)

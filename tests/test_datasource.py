@@ -638,7 +638,7 @@ def test_nested_type_schema_renders_ddl(tmp_path):
 
 
 def test_timestamp_bound_rendering_is_canonical(registered, tmp_path):
-    """ADVICE r5 medium: _stringify_stat padded fractions to 6 digits
+    """ADVICE r5 medium: the writer's stat renderer padded fractions to 6 digits
     while JVM-plane bounds strings are Spark cast-to-string (trailing
     zeros trimmed); the lexicographic comparator then wrongly pruned
     files whose bound EQUALS the filter value. Both renderings are now
@@ -646,14 +646,13 @@ def test_timestamp_bound_rendering_is_canonical(registered, tmp_path):
     file — end to end through the registered source."""
     import datetime as dt
 
-    from hielo_spark.sources.iceberg_source import (
-        _file_survives, _stringify_stat,
-    )
+    from hielo_spark.metadata.data_files import render_bound
+    from hielo_spark.sources.iceberg_source import _file_survives
     from pyspark.sql.datasource import EqualTo
 
     # unit level: trimmed rendering + no false prune at the bound
     v = dt.datetime(2024, 1, 2, 3, 4, 5, 100000, tzinfo=dt.timezone.utc)
-    assert _stringify_stat(v) == "2024-01-02 03:04:05.1"
+    assert render_bound(v) == "2024-01-02 03:04:05.1"
     entry = {"data_file": {
         "lower_bounds_str": {"ts": "2024-01-02 03:04:05.05"},
         "upper_bounds_str": {"ts": "2024-01-02 03:04:05.1"},
@@ -1284,8 +1283,9 @@ def test_eq_delete_planning_uses_equality_ids_not_footers(
     from hielo_spark.sources import iceberg_source as S
 
     t = str(tmp_path / "t")
+    # one data file holding the deleted key, so the delete attaches to it
     C.append(spark, t, spark.createDataFrame(
-        [(1, "a"), (2, "b")], ["id", "v"]),
+        [(1, "a"), (2, "b")], ["id", "v"]).coalesce(1),
         snapshot_id=101, timestamp_ms=1700000000000)
     C.delete_equality(spark, t, spark.createDataFrame([(2,)], ["id"]),
                       snapshot_id=102, timestamp_ms=1700100000000)
@@ -2302,7 +2302,7 @@ def test_streaming_rows_cap_offset_walk(registered, tmp_path):
 def test_write_format_dynamic_partition_overwrite(registered, tmp_path):
     """mode('overwrite') + option('overwrite-mode', 'dynamic') through
     the DataSource write plane replaces exactly the partitions present
-    in the frame (commit_py mode 'dynamic-overwrite', the same COW
+    in the frame (append_files mode 'dynamic-overwrite', the same COW
     tombstone helper as the JVM-plane overwrite_partitions); static
     overwrite still truncates; time travel sees every old row."""
     from hielo_spark.metadata.manifests import read_data_at_snapshot

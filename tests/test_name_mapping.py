@@ -228,7 +228,7 @@ def test_add_files_resolves_name_mapped_footers(registered, spark,
                if s["snapshot-id"] == doc["current-snapshot-id"])
     dicts = live_data_file_dicts(
         cur["manifest-list"].removeprefix("file:"))
-    b = next(d for p, d in dicts.items() if p.endswith("b.parquet"))
+    b = next(d for p, d in dicts.items() if p.endswith("/b.parquet"))
     assert b["lb"]["id"] == "100" and b["ub"]["id"] == "105"
     pruned = read_data_at_snapshot(
         spark, C.current_metadata_path(t), skip_filter=("id", ">", 99))

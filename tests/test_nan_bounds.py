@@ -214,8 +214,8 @@ def test_nan_counts_survive_manifest_rewrite(registered, tmp_path):
 # ---------------------------------------------------------------------------
 # Property: bounds pruning NEVER drops a file containing a matching row,
 # for any float population (NaN / null / ±inf included) and any pushed
-# comparison — the invariant the r11 NaN bug broke. Pure-Python: stats
-# are computed exactly the way the writer records them, matches are
+# comparison — the invariant the r11 NaN bug broke. No Spark: stats come
+# from the writer's own kernel over real float64/float32 arrays, matches are
 # evaluated under Spark SQL semantics (NaN ranks above every double,
 # NaN = NaN is true, null matches nothing).
 # ---------------------------------------------------------------------------
@@ -253,28 +253,34 @@ _OPS = {
 }
 
 
-def _writer_stats(values):
-    """(lb, ub, nc, nanc, records) exactly as _FileStats records them:
-    bounds over NaN-masked non-null values, stringified."""
-    present = [v for v in values if v is not None]
-    finite_or_inf = [v for v in present if not math.isnan(v)]
-    lb = {"x": str(min(finite_or_inf))} if finite_or_inf else {}
-    ub = {"x": str(max(finite_or_inf))} if finite_or_inf else {}
-    nc = {"x": str(len(values) - len(present))}
-    nanc = {"x": str(sum(1 for v in present if math.isnan(v)))}
-    return lb, ub, nc, nanc, len(values)
+def _writer_stats(values, dtype):
+    """(lb, ub, nc, nanc, records) exactly as the writer records them:
+    the shared stats kernel run over a real pyarrow array of the
+    column's type."""
+    import pyarrow as pa
+
+    from hielo_spark.metadata.data_files import FileStats
+
+    arrow_type = {"double": pa.float64(), "float": pa.float32()}[dtype]
+    batch = pa.record_batch([pa.array(values, type=arrow_type)], names=["x"])
+    stats = FileStats(batch.schema)
+    stats.update(batch)
+    r = stats.record()
+    return (r["lower_bounds"] or {}, r["upper_bounds"] or {},
+            r["null_counts"], r["nan_counts"], r["record_count"])
 
 
 @settings(max_examples=400, deadline=None)
-@given(st.lists(_floats, min_size=1, max_size=8), 
-       st.sampled_from(list(_OPS)), _floats.filter(lambda v: v is not None))
-def test_file_pruning_never_drops_matches(values, op, threshold):
-    lb, ub, nc, nanc, records = _writer_stats(values)
+@given(st.lists(_floats, min_size=1, max_size=8),
+       st.sampled_from(list(_OPS)), _floats.filter(lambda v: v is not None),
+       st.sampled_from(["double", "float"]))
+def test_file_pruning_never_drops_matches(values, op, threshold, dtype):
+    lb, ub, nc, nanc, records = _writer_stats(values, dtype)
     any_match = any(
         v is not None and _OPS[op](_spark_cmp(v, threshold))
         for v in values
     )
-    f = {"lb": lb, "ub": ub, "bt": {"x": "double"}, "nc": nc,
+    f = {"lb": lb, "ub": ub, "bt": {"x": dtype}, "nc": nc,
          "nanc": nanc, "records": records}
     kept_jvm = _file_may_match(f, ("x", op, threshold))
     from pyspark.sql.datasource import (
@@ -291,7 +297,7 @@ def test_file_pruning_never_drops_matches(values, op, threshold):
             "<": LessThan, "<=": LessThanOrEqual}[op]
     e = {"data_file": {
         "lower_bounds_str": lb or None, "upper_bounds_str": ub or None,
-        "bounds_types": {"x": "double"},
+        "bounds_types": {"x": dtype},
         "null_counts": nc, "nan_counts": nanc,
         "record_count": records,
     }}

@@ -204,7 +204,7 @@ def test_datasource_lineage_agrees_with_jvm_plane(spark, tmp_path):
 
 
 def test_datasource_writer_assigns_row_ids(spark, tmp_path):
-    """The DataSource write plane (commit_py.append_files, no JVM)
+    """The DataSource write plane (commit.append_files, no JVM)
     assigns v3 row ids exactly like the JVM-plane append — contiguous
     from the next-row-id watermark, snapshot first-row-id recorded —
     so a table written through df.write.format('hielo_iceberg') has
