@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
+from ..io import local_frame
+
 
 def _matches(col: str, q: str) -> Column:
     """F2 — case-insensitive substring (main.rs:653-667)."""
@@ -108,5 +110,5 @@ def live_catalog_tree(spark, catalog_name: str | None = None) -> DataFrame:
 
     frames = [per_namespace(ns) for ns in namespaces]
     if not frames:
-        return spark.createDataFrame([], TREE_SCHEMA)
+        return local_frame(spark, [], TREE_SCHEMA)
     return reduce(lambda a, b: a.unionByName(b), frames)

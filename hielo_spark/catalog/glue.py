@@ -37,6 +37,8 @@ import urllib.request
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from ..io import local_frame
+
 _ALGO = "AWS4-HMAC-SHA256"
 _SERVICE = "glue"
 
@@ -258,7 +260,8 @@ class GlueCatalogClient:
             for db in self.get_databases()
             for t in self.get_tables(db)
         ]
-        df = spark.createDataFrame(
+        df = local_frame(
+            spark,
             rows,
             "catalog_name string, namespace string, table_name string, table_type string",
         )

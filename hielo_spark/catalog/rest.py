@@ -28,6 +28,8 @@ import urllib.request
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from ..io import local_frame
+
 #: multi-level namespace separator in URL paths, per the REST spec
 NS_SEPARATOR = "\x1f"
 
@@ -312,8 +314,8 @@ class RestCatalogClient:
             for ns in self.list_namespace_tuples()
             for t in self.list_tables(ns)
         ]
-        df = spark.createDataFrame(
-            rows, "catalog_name string, namespace string, table_name string"
+        df = local_frame(
+            spark, rows, "catalog_name string, namespace string, table_name string"
         )
         return df.select(
             "catalog_name",
@@ -332,8 +334,8 @@ class RestCatalogClient:
 
         doc = self.load_table(namespace, table)
         meta = doc.get("metadata", {})
-        return spark.createDataFrame(
-            snapshot_rows_from_doc(f"{namespace}.{table}", meta), SNAPSHOT_SCHEMA
+        return local_frame(
+            spark, snapshot_rows_from_doc(f"{namespace}.{table}", meta), SNAPSHOT_SCHEMA
         )
 
 

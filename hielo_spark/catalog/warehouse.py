@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from ..io import local_frame
+
 
 def discover_tables(spark: SparkSession, warehouse_dir: str) -> DataFrame:
     """(namespace, table_name, full_name, metadata_json_path, version)
@@ -112,7 +114,7 @@ def snapshots_for_warehouse(spark: SparkSession, warehouse_dir: str) -> DataFram
     if out is None:
         from ..metadata.fixtures import SNAPSHOT_SCHEMA
 
-        return spark.createDataFrame([], SNAPSHOT_SCHEMA)
+        return local_frame(spark, [], SNAPSHOT_SCHEMA)
     return out
 
 

@@ -67,6 +67,7 @@ import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..io import local_frame
 from .data_files import BOUNDABLE
 
 # Spark-SQL partition-value types → Avro types for the r102 partition
@@ -2917,12 +2918,13 @@ def rewrite_data_files(
     tile with tight min/max stats on all keyed columns).
 
     Scale: the rewrite itself is one distributed read→repartition→write;
-    only the planning-plane file list (count + byte sizes) is collected,
-    bounded by files-per-snapshot like any engine's planner."""
+    the planning-plane file list (count + byte sizes) is decoded
+    driver-side from the manifests, bounded by files-per-snapshot like
+    any engine's planner, and starts no Spark job."""
     import math
     import time
 
-    from .manifests import files_from_manifest_list, read_data_at_snapshot
+    from .manifests import live_data_file_dicts, read_data_at_snapshot
 
     doc, prev_version = _load_doc(table_dir)
     if doc.get("current-snapshot-id") is None:
@@ -2940,11 +2942,11 @@ def rewrite_data_files(
     current = next(
         s for s in doc["snapshots"] if s["snapshot-id"] == doc["current-snapshot-id"]
     )
-    old_files = files_from_manifest_list(
-        spark, os.path.basename(table_dir),
+    old_files = live_data_file_dicts(
         current["manifest-list"].removeprefix("file:"),
-    ).collect()
-    total_bytes = sum(int(r.file_size_in_bytes or 0) for r in old_files)
+        doc.get("format-version", 2),
+    )
+    total_bytes = sum(int(f["size"] or 0) for f in old_files.values())
     n_out = max(1, math.ceil(total_bytes / target_file_size_bytes))
 
     if sort_by and zorder_by:
@@ -3871,8 +3873,8 @@ def _build_dv_entries(
                 fh.seek(d["dv"]["offset"])
                 old_rows.append((ref, bytearray(fh.read(d["dv"]["size"]))))
         if old_rows:
-            old_df = spark.createDataFrame(
-                old_rows, "file_path string, _old binary"
+            old_df = local_frame(
+                spark, old_rows, "file_path string, _old binary"
             )
             pos2 = positions.join(F.broadcast(old_df), "file_path", "left")
         else:
@@ -4891,8 +4893,8 @@ def rewrite_position_deletes(
             F.lit(dseq).cast("long").alias("_dseq"),
         )
         merged = one if merged is None else merged.unionByName(one)
-    live_df = spark.createDataFrame(
-        live_paths, "live_path string, data_seq long"
+    live_df = local_frame(
+        spark, live_paths, "live_path string, data_seq long"
     )
     from .metadata_json import _strip_scheme
 

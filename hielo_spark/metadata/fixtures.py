@@ -32,7 +32,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..io import fan_out, load_table
+from ..io import fan_out, load_table, local_frame
 
 # ---------------------------------------------------------------------------
 # 1. Orders-derived snapshots (oracle-checkable)
@@ -341,7 +341,7 @@ def synthetic_snapshots(spark: SparkSession) -> DataFrame:
               "total-size": str(gb * 1024**3)})
         )
     data = [(t, sid, c, m, sc, summ) for (t, sid, c, m, sc, summ) in rows]
-    return spark.createDataFrame(data, SNAPSHOT_SCHEMA)
+    return local_frame(spark, data, SNAPSHOT_SCHEMA)
 
 
 def synthetic_schemas(spark: SparkSession) -> DataFrame:
@@ -382,7 +382,7 @@ def synthetic_schemas(spark: SparkSession) -> DataFrame:
             StructField("parent_field_id", IntegerType(), True),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def synthetic_partition_specs(spark: SparkSession) -> DataFrame:
@@ -412,4 +412,4 @@ def synthetic_partition_specs(spark: SparkSession) -> DataFrame:
             StructField("transform", StringType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

@@ -29,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..io import local_frame
+
 SCHEMAS_LONG_SCHEMA = StructType(
     [
         StructField("table_name", StringType(), False),
@@ -176,7 +178,7 @@ def schemas_from_metadata_json(
     """
     import pandas as pd
 
-    pairs = spark.createDataFrame(paths, ["table_name", "path"])
+    pairs = local_frame(spark, paths, "table_name string, path string")
     texts = spark.read.text([p for _, p in paths], wholetext=True).select(
         F.input_file_name().alias("file_uri"), F.col("value").alias("content")
     )
@@ -238,7 +240,7 @@ def snapshots_from_metadata_json(
 
     with open(path) as f:
         doc = json.load(f)
-    return spark.createDataFrame(snapshot_rows_from_doc(table_name, doc), SNAPSHOT_SCHEMA)
+    return local_frame(spark, snapshot_rows_from_doc(table_name, doc), SNAPSHOT_SCHEMA)
 
 
 def partition_spec_rows_from_doc(table_name: str, doc: dict) -> list[tuple]:

@@ -28,6 +28,7 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
 
+from ..io import local_frame
 from ..metadata.manifests import files_from_manifest_list
 from ..metadata.metadata_json import _strip_scheme
 
@@ -112,7 +113,8 @@ def expire_snapshots_plan(
         and (older_than_ms is None or int(s["timestamp-ms"]) < older_than_ms)
     ]
     kept = [s for s in snaps if s not in expired]
-    expired_df = spark.createDataFrame(
+    expired_df = local_frame(
+        spark,
         [
             (int(s["snapshot-id"]), int(s["timestamp-ms"]), s.get("manifest-list", ""))
             for s in expired
@@ -122,7 +124,7 @@ def expire_snapshots_plan(
     expired_files = _snapshot_files(spark, metadata_json_path, expired)
     kept_files = _snapshot_files(spark, metadata_json_path, kept)
     if expired_files is None:
-        removable = spark.createDataFrame([], "file_path string")
+        removable = local_frame(spark, [], "file_path string")
     elif kept_files is None:
         removable = expired_files
     else:

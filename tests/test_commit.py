@@ -164,6 +164,53 @@ def test_rewrite_data_files_compacts_and_preserves_rows(spark, tmp_path):
     assert len(files) == 1 and files[0].record_count == 18
 
 
+def test_rewrite_data_files_plans_live_data_files_only(spark, tmp_path):
+    """Compaction counts exactly the live DATA files of the current
+    snapshot, from both write planes, and not the position-delete file
+    a merge-on-read delete left beside them."""
+    from hielo_spark.metadata.manifests import (
+        files_from_manifest_list,
+        live_data_file_dicts,
+    )
+    from hielo_spark.sources import register
+
+    register(spark)
+    t = str(tmp_path / "wh" / "ns" / "t")
+    for i, sid in enumerate((101, 102)):
+        C.append(
+            spark, t,
+            spark.createDataFrame(
+                [(i * 10 + k, f"v{k}") for k in range(10)], ["id", "v"]
+            ).repartition(2),
+            snapshot_id=sid, timestamp_ms=1700000000000 + i * 1000,
+        )
+    spark.createDataFrame([(20, "w"), (21, "w")], ["id", "v"]).coalesce(1) \
+        .write.format("hielo_iceberg").mode("append") \
+        .option("snapshot-id", "103").option("timestamp-ms", "1700000003000") \
+        .save(t)
+    C.delete_where(spark, t, "id = 4 OR id = 21",
+                   snapshot_id=104, timestamp_ms=1700000004000)
+    mpath = C.current_metadata_path(t)
+    before = sorted(
+        (r.id, r.v) for r in read_data_at_snapshot(spark, mpath).collect())
+    assert [i for i, _ in before] == [
+        i for i in range(22) if i not in (4, 21)]
+    doc = C._load_doc(t)[0]
+    mlist = doc["snapshots"][-1]["manifest-list"].removeprefix("file:")
+    live = live_data_file_dicts(mlist)
+    assert len(live) == 5  # 2 + 2 from commit.append, 1 DataSource file
+    assert files_from_manifest_list(spark, "t", mlist, content=1).count() >= 1
+
+    snap = C.rewrite_data_files(spark, t, snapshot_id=105,
+                                timestamp_ms=1700000005000)
+    assert int(snap["summary"]["rewritten-data-files"]) == len(live)
+    after = sorted(
+        (r.id, r.v)
+        for r in read_data_at_snapshot(
+            spark, C.current_metadata_path(t)).collect())
+    assert after == before
+
+
 def test_rewrite_then_orphan_sweep_reclaims_old_files(spark, tmp_path):
     import glob as g
     import os

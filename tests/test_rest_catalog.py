@@ -413,3 +413,40 @@ def test_rest_properties_commit():
             client.commit_properties("analytics", "orders_t")
     finally:
         srv.shutdown()
+
+
+def test_snapshot_instants_ignore_process_timezone(
+    spark, rest_server, tmp_path, monkeypatch
+):
+    """``committed_at`` is the snapshot's ``timestamp-ms`` instant under
+    any process time zone: the session zone is UTC, and the frame must
+    not shift by the process's local offset (a +5 h shift under New York
+    time would move every health window with it)."""
+    import time
+
+    from hielo_spark.metadata.metadata_json import snapshots_from_metadata_json
+
+    path = tmp_path / "v1.metadata.json"
+    path.write_text(json.dumps(METADATA_DOC))
+    expected = {
+        s["snapshot-id"]: s["timestamp-ms"] for s in METADATA_DOC["snapshots"]
+    }
+    client = RestCatalogClient(rest_server, token=TOKEN)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        frames = [
+            snapshots_from_metadata_json(spark, "analytics.orders_t", str(path)),
+            client.snapshots(spark, "analytics", "orders_t"),
+        ]
+        for df in frames:
+            got = {
+                r.snapshot_id: r.ms
+                for r in df.selectExpr(
+                    "snapshot_id", "unix_millis(committed_at) AS ms"
+                ).collect()
+            }
+            assert got == expected
+    finally:
+        monkeypatch.undo()
+        time.tzset()
