@@ -24,6 +24,14 @@ larger counts the distributed path is `spark.read.format("avro")`
 (spark-avro jar) or the Iceberg metadata tables themselves — both
 jar-gated here. The JVM objects never cross to executors.
 
+Planning is shared by both read planes: ``select_snapshot`` /
+``read_schema_block``, ``live_entries`` (the one manifest-entry record),
+``_file_may_match`` (the one bounds comparator) and the delete planners
+``_prune_pos_deletes`` / ``_dv_per_file`` serve ``read_data_at_snapshot``
+here and the ``hielo_iceberg`` DataSource readers alike. The planes
+differ only in execution: Spark anti-joins here, in-task Arrow delete
+kernels there.
+
 Every frame built here from driver-held rows (manifest list, manifest
 entries, the per-file ``seq_map`` / ``dmap`` / ``lmap`` maps the scan
 broadcasts, DV blob coordinates, empty read frames) goes through
@@ -40,6 +48,7 @@ import pyspark.sql.functions as F
 
 from ..io import local_frame
 from .avro_py import read_avro_file
+from .lineage import chain as lineage_chain
 
 # Iceberg spec field names; v1/v2 disagree on the count columns
 # (https://iceberg.apache.org/spec/#manifest-lists — public spec).
@@ -68,39 +77,65 @@ def inherited_seq_of(m: dict, format_version: int = 2) -> int | None:
     return v
 
 
+def live_entries(
+    manifest_list_path: str,
+    format_version: int = 2,
+    table_root: str | None = None,
+) -> list[dict]:
+    """Every live (status != 2) manifest entry of a snapshot, of any
+    content kind, as one dict each — the planning record both read
+    planes, the maintenance planners and the metadata surfaces consume.
+    One avro pass over the list plus one per manifest, no Spark.
+
+    Keys: ``content`` (0 data / 1 position deletes or DVs / 2 equality
+    deletes), ``status``, ``path`` (``_norm_ref_path`` against
+    ``table_root``), ``file_path`` (as recorded), ``seq`` and ``sid``
+    (inherited from the manifest list when the entry leaves them null),
+    ``records``, ``size``, ``pvals``/``ptypes`` (the engine's string
+    maps), ``partition`` (the spec's typed record), ``spec_id`` (the
+    manifest's partition spec), ``lb``/``ub``/``bt``/``nc``/``nanc``
+    (the bounds record ``_file_may_match`` reads), ``dv`` (deletion
+    vector blob coordinates), ``frid`` (v3 first_row_id) and
+    ``equality_ids``."""
+    _, _, mlist_rows = read_avro_file(manifest_list_path)
+    out: list[dict] = []
+    for m in mlist_rows:
+        spec_id = int(m.get("partition_spec_id") or 0)
+        for t, rec in _decode_entries(
+            _resolve(manifest_list_path, m["manifest_path"]),
+            inherited_seq_of(m, format_version),
+            m.get("added_snapshot_id"),
+        ):
+            (status, sid, fpath, _fmt, records, size, content, seq,
+             pvals, ptypes, lb, ub, bt, nc, _dc, dv, frid, nanc) = t
+            if status == 2:
+                continue
+            out.append({
+                "content": content, "status": status,
+                "path": _norm_ref_path(fpath, table_root),
+                "file_path": fpath, "seq": seq, "sid": sid,
+                "records": records, "size": size,
+                "pvals": pvals, "ptypes": ptypes,
+                "partition": rec.get("partition"), "spec_id": spec_id,
+                "lb": lb, "ub": ub, "bt": bt, "nc": nc, "nanc": nanc,
+                "dv": dv, "frid": frid,
+                "equality_ids": rec.get("equality_ids"),
+            })
+    return out
+
+
 def live_data_file_dicts(
     manifest_list_path: str, format_version: int = 2
 ) -> dict[str, dict]:
-    """Pure-Python planning helper: live DATA files of a snapshot as
-    ``{path: {path, pvals, ptypes, seq, records, size, lb, ub, bt, nc}}`` —
-    one avro pass, no Spark hops (the same r5 planning-latency fix
-    read_data_at_snapshot got, shared by the incremental/changelog
-    planners). The bound keys feed ``_file_may_match`` so callers
-    (delete_where's candidate pruning) skip files straight off the
-    manifest stats."""
-    _, _, mlist_rows = read_avro_file(manifest_list_path)
+    """The live DATA files of a snapshot as :func:`live_entries` records
+    keyed by path (the recorded path minus a ``file:`` scheme, which is
+    also each record's ``path``) — shared by the incremental/changelog
+    planners and the commit plane's candidate pruning."""
     out: dict[str, dict] = {}
-    for m in mlist_rows:
-        if (m.get("content") or 0) != 0:
-            continue
-        for e in decode_manifest(
-            _resolve(manifest_list_path, m["manifest_path"]),
-            inherited_seq=inherited_seq_of(m, format_version),
-            inherited_snapshot_id=m.get("added_snapshot_id"),
-        ):
-            (status, sid, fpath, _fmt, records, size, fcontent, seq,
-             pvals, ptypes, lb, ub, bt, nc, _dc, _dv, _frid, nanc) = e
-            if status == 2 or (fcontent or 0) != 0:
-                continue
-            p = fpath.removeprefix("file:")
-            out[p] = {
-                "path": p, "pvals": pvals, "ptypes": ptypes, "seq": seq,
-                "records": records, "size": size,
-                "lb": lb, "ub": ub, "bt": bt, "nc": nc,
-                "nanc": nanc,
-                "frid": _frid,  # v3 first_row_id (lineage planners)
-                "sid": sid,  # the snapshot that ADDED the file
-            }
+    for e in live_entries(manifest_list_path, format_version):
+        if e["content"] == 0:
+            p = e["file_path"].removeprefix("file:")
+            out[p] = {**e, "path": p}
     return out
 
 
@@ -199,6 +234,20 @@ def decode_manifest(
     snapshot (mis-attributing changelog/incremental scans). Pass the
     owning manifest's ``added_snapshot_id``; our own writer records
     explicit ids, which take precedence."""
+    return [
+        t for t, _rec in
+        _decode_entries(path, inherited_seq, inherited_snapshot_id)
+    ]
+
+
+def _decode_entries(
+    path: str,
+    inherited_seq: int | None,
+    inherited_snapshot_id: int | None,
+) -> list[tuple[tuple, dict]]:
+    """:func:`decode_manifest`'s tuples, each paired with the entry's
+    raw ``data_file`` record (for the fields the tuple leaves out:
+    ``equality_ids``, the typed ``partition`` record)."""
     import json as _json
 
     _, meta, raw = read_avro_file(path)
@@ -254,7 +303,7 @@ def decode_manifest(
                 if name in (lb or {}) or name in (ub or {})
             }
         sid = r.get("snapshot_id")
-        rows.append(
+        rows.append((
             (
                 int(r.get("status")),
                 int(sid) if sid is not None else inherited_snapshot_id,
@@ -296,8 +345,9 @@ def decode_manifest(
                 # must consult this to keep files whose only matching
                 # rows are NaN (Spark SQL ranks NaN above every double)
                 _map_or_spec(df_rec, "nan_counts", "nan_value_counts", _decode_long),
-            )
-        )
+            ),
+            df_rec,
+        ))
     return rows
 
 
@@ -384,6 +434,113 @@ def _norm_ref_path(p, table_root: str | None = None) -> str:
             table_root, s[2:] if s.startswith("./") else s
         )
     return s
+
+
+def select_snapshot(
+    doc: dict, snapshot_id=None, as_of_ms=None, ref: str | None = None
+) -> dict:
+    """The snapshot a read resolves to: by id, by named ``ref``, by
+    ``as_of_ms`` (the latest MAIN-line snapshot committed at or before
+    that instant, mirroring ``TIMESTAMP AS OF``), or — none given — the
+    ``current-snapshot-id`` snapshot (newest by timestamp when the
+    pointer is absent). Ids and instants may be int-like strings (the
+    DataSource options). At most one selector may be passed."""
+    snaps = sorted(doc.get("snapshots", []), key=lambda s: int(s["timestamp-ms"]))
+    if not snaps:
+        raise ValueError("table has no snapshots")
+    if sum(x is not None for x in (snapshot_id, as_of_ms, ref)) > 1:
+        raise ValueError("pass at most one of snapshot_id / as_of_ms / ref")
+    if ref is not None:
+        refs = doc.get("refs", {})
+        if ref not in refs:
+            raise ValueError(f"no ref named {ref!r} (have {sorted(refs)})")
+        snapshot_id = refs[ref]["snapshot-id"]
+    if snapshot_id is not None:
+        match = next(
+            (s for s in snaps if int(s["snapshot-id"]) == int(snapshot_id)),
+            None,
+        )
+        if match is None:
+            raise ValueError(
+                f"snapshot {snapshot_id} not in table (have "
+                f"{sorted(int(s['snapshot-id']) for s in snaps)})"
+            )
+        return match
+    if as_of_ms is not None:
+        # TIMESTAMP AS OF resolves against the MAIN branch's history
+        # (Iceberg: the snapshot log tracks current-snapshot-id flips),
+        # never against staged branch-only commits — otherwise a read
+        # taken after `append(branch=...)` would leak unpublished,
+        # unaudited rows and break write-audit-publish isolation.
+        # Tables with no current pointer (legacy/synthetic) fall back
+        # to all snapshots.
+        from .lineage import main_line_ids
+
+        main = main_line_ids(doc)
+        cands = [s for s in snaps if not main or int(s["snapshot-id"]) in main]
+        before = [s for s in cands if int(s["timestamp-ms"]) <= int(as_of_ms)]
+        if not before:
+            raise ValueError(f"no snapshot at or before {as_of_ms}")
+        return before[-1]
+    # the default read follows current-snapshot-id (rollback flips it,
+    # staged BRANCH commits never move it)
+    cur = doc.get("current-snapshot-id")
+    return next(
+        (s for s in snaps if cur is not None and int(s["snapshot-id"]) == int(cur)),
+        snaps[-1],
+    )
+
+
+def read_schema_block(doc: dict, snapshot: dict | None = None) -> dict | None:
+    """The schema a data read resolves under. A LATEST read (``snapshot``
+    None) scans under the table's CURRENT schema — ``update_schema`` is
+    a metadata-only commit that adds no snapshot, so a snapshot's
+    recorded schema-id can lag current-schema-id. TIME TRAVEL passes
+    the selected snapshot and reads under its recorded ``schema-id``, so
+    history shows its historical shape (current when the snapshot
+    predates schema-id tracking)."""
+    from .metadata_json import current_schema_block
+
+    sid = (snapshot or {}).get("schema-id")
+    if sid is not None:
+        blk = next(
+            (s for s in doc.get("schemas", []) if s.get("schema-id") == sid),
+            None,
+        )
+        if blk is not None:
+            return blk
+    return current_schema_block(doc)
+
+
+def historical_names(doc: dict, schema: dict) -> dict[str, list[str]]:
+    """``{field name: its other names}`` for each field of ``schema``
+    that has any: names the same field id carries elsewhere in the
+    schema history (most recent first), then its
+    ``schema.name-mapping.default`` names (spec Appendix C). Our parquet
+    carries no Iceberg field ids, so a file written before a rename
+    resolves its columns — and its manifest bounds — through these. A
+    rename is authoritative (the file was OURS); the mapping is the
+    import-time fallback for files whose names never matched any
+    Iceberg schema name."""
+    from .metadata_json import parse_name_mapping
+
+    by_id = sorted(doc.get("schemas") or [], key=lambda s: int(s.get("schema-id", 0)))
+    nmap = parse_name_mapping(doc)
+    out: dict[str, list[str]] = {}
+    for f in schema.get("fields", []):
+        hist: list[str] = []
+        for s in by_id:
+            for g in s.get("fields", []):
+                if g["id"] == f["id"] and g["name"] != f["name"] \
+                        and g["name"] not in hist:
+                    hist.append(g["name"])
+        hist = hist[::-1]  # most recent old name first
+        for n in nmap.get(f["id"], []):
+            if n != f["name"] and n not in hist:
+                hist.append(n)
+        if hist:
+            out[f["name"]] = hist
+    return out
 
 
 def files_from_manifest_list(
@@ -509,16 +666,31 @@ def _canon_ts_value(s: str) -> str | None:
         return None
 
 
+def _incr_bytes(p: bytes) -> bytes | None:
+    """The smallest byte string strictly greater than every string
+    with prefix ``p`` (rightmost non-0xFF byte incremented, the rest
+    truncated); None when ``p`` is all 0xFF (no upper bound)."""
+    b = bytearray(p)
+    for i in range(len(b) - 1, -1, -1):
+        if b[i] != 0xFF:
+            return bytes(b[:i]) + bytes([b[i] + 1])
+    return None
+
+
 def _file_may_match(
     f: dict, skip_filter: tuple, aliases: dict[str, list[str]] | None = None
 ) -> bool:
-    """Can a file's manifest bounds satisfy ``(col, op, value)``?
+    """Can a file's manifest bounds satisfy ``(col, op, value)``? The one
+    file-level comparator of both read planes (the DataSource maps its
+    pushed filters onto it in ``_file_survives``) and of the commit
+    plane's candidate pruning; ``f`` is a :func:`live_entries` record.
     True on any missing information (no bounds recorded, unknown column,
     unknown op) — skipping must never drop a possibly-matching file.
     Numeric types compare as floats (decimals exactly via Decimal);
     strings/dates/timestamps compare lexicographically on their
     CANONICALIZED stringified form (ISO timestamps sort correctly as
     strings once both sides have trailing fraction zeros trimmed).
+    Beyond ``_SKIP_OPS`` it answers ``startswith`` (string prefix).
 
     ``aliases`` maps a column's CURRENT name to its historical names
     (evolved_read_plan's shape): a file written before a rename carries
@@ -561,6 +733,17 @@ def _file_may_match(
             return False
         return True
     btype = bt.get(key) or ""
+    if op == "startswith":
+        # v startswith p <=> p <= v < incr(p): prune when the bounds
+        # range can't intersect that interval (string bounds only;
+        # UTF-8 byte order == code-point order)
+        if btype != "string" or not isinstance(value, str):
+            return True
+        pb = value.encode("utf-8", "surrogatepass")
+        up = _incr_bytes(pb)
+        return str(hi).encode("utf-8", "surrogatepass") >= pb and (
+            up is None or str(lo).encode("utf-8", "surrogatepass") < up
+        )
     if btype in _NUMERIC_BOUND_TYPES:
         try:
             lo, hi, value = float(lo), float(hi), float(value)
@@ -633,10 +816,12 @@ def _prune_pos_deletes(
     pos_delete_files: list[dict], data_paths: list[str]
 ) -> list[dict]:
     """Skip position-delete files whose ``file_path`` bounds can't
-    reference any of the scan's surviving data files — the delete-side
-    twin of data-file skipping (a 100 TB table's scan of one partition
-    must not materialize every delete file in the snapshot). A delete
-    file without bounds (older writers) is kept — pruning never drops a
+    reference any of ``data_paths`` — the delete-side twin of data-file
+    skipping (a 100 TB table's scan of one partition must not
+    materialize every delete file in the snapshot). Both read planes
+    call it: for a scan's surviving files, and per file when the
+    DataSource attaches each task's deletes. A delete file without
+    bounds (older writers) is kept — pruning never drops a
     possibly-applicable file."""
     import bisect
 
@@ -654,12 +839,39 @@ def _prune_pos_deletes(
         if not (lo.startswith("/") and hi.startswith("/")):
             # foreign path forms (s3://, ./-relative): the raw-string
             # min/max is NOT the min/max of the normalized paths —
-            # never prune on it (the row-level anti-join stays exact)
+            # never prune on it (row-level application stays exact)
             return True
         i = bisect.bisect_left(paths, lo)
         return i < len(paths) and paths[i] <= hi
 
     return [d for d in pos_delete_files if may_reference(d)]
+
+
+def _dv_per_file(
+    pos_entries: list[dict], data_paths, table_root: str | None = None
+) -> dict[str, dict]:
+    """``{data path: deletion-vector entry}`` for the files in
+    ``data_paths``: at most one DV applies per data file (the spec's
+    invariant; our writer merges the prior DV into each new one, so the
+    max-sequence DV is a superset of every older one). DVs of files
+    outside ``data_paths`` are dropped, so pruned-away files' blobs are
+    never fetched. References match on absolute normalized paths."""
+    import os
+
+    want = {os.path.abspath(p): p for p in data_paths}
+    best: dict[str, dict] = {}
+    for d in pos_entries:
+        if not d.get("dv"):
+            continue
+        p = want.get(os.path.abspath(
+            _norm_ref_path(d["dv"]["referenced"], table_root)
+        ))
+        if p is None:
+            continue
+        cur = best.get(p)
+        if cur is None or (d["seq"] or 0) > (cur["seq"] or 0):
+            best[p] = d
+    return best
 
 
 def _row_predicate(skip_filter: tuple):
@@ -711,9 +923,7 @@ def evolved_read_plan(
     target = next((s for s in schemas if s.get("schema-id") == sid), None)
     if target is None:
         return None, None
-    by_id = sorted(schemas, key=lambda s: int(s.get("schema-id", 0)))
     cols: list[tuple] = []
-    aliases: dict[str, list[str]] = {}
     from .types import iceberg_to_ddl
 
     for f in target.get("fields", []):
@@ -734,25 +944,7 @@ def evolved_read_plan(
             except ValueError:
                 return None, None  # unknown kind: fall back to mergeSchema
         cols.append((f["name"], ddl))
-        hist: list[str] = []
-        for s in by_id:
-            for g in s.get("fields", []):
-                if (
-                    g["id"] == f["id"]
-                    and g["name"] != f["name"]
-                    and g["name"] not in hist
-                ):
-                    hist.append(g["name"])
-        hist = hist[::-1]  # most recent old name first
-        # name-mapping names rank after the schema history: a rename
-        # is authoritative (the file was OURS), the mapping is the
-        # import-time fallback
-        for n in nmap.get(f["id"], []):
-            if n != f["name"] and n not in hist:
-                hist.append(n)
-        if hist:
-            aliases[f["name"]] = hist
-    return cols, aliases
+    return cols, historical_names(doc, target)
 
 
 def schema_defaults(
@@ -1049,14 +1241,6 @@ def read_data_at_snapshot(
 
     with open(metadata_json_path) as f:
         doc = json.load(f)
-    snaps = sorted(doc.get("snapshots", []), key=lambda s: int(s["timestamp-ms"]))
-    if not snaps:
-        raise ValueError(f"no snapshots in {metadata_json_path}")
-    if sum(x is not None for x in (snapshot_id, as_of_ms, ref)) > 1:
-        raise ValueError("pass at most one of snapshot_id / as_of_ms / ref")
-    # remember whether this is TIME TRAVEL (explicit snapshot/as-of/ref)
-    # or a LATEST read — they resolve the read schema differently below
-    time_travel = any(x is not None for x in (snapshot_id, as_of_ms, ref))
     if skip_filter is not None and skip_filter[1] == "in" \
             and not isinstance(skip_filter[2], (list, tuple, set, frozenset)):
         raise ValueError(
@@ -1069,47 +1253,7 @@ def read_data_at_snapshot(
         )
     if partition_filter and any(v is None for v in partition_filter.values()):
         raise ValueError("partition_filter values must be non-null")
-    if ref is not None:
-        refs = doc.get("refs", {})
-        if ref not in refs:
-            raise ValueError(
-                f"no ref named {ref!r} (have {sorted(refs)})"
-            )
-        snapshot_id = int(refs[ref]["snapshot-id"])
-    if snapshot_id is not None:
-        matching = [s for s in snaps if int(s["snapshot-id"]) == snapshot_id]
-        if not matching:
-            raise ValueError(f"snapshot {snapshot_id} not in {metadata_json_path}")
-        chosen = matching[0]
-    elif as_of_ms is not None:
-        # TIMESTAMP AS OF resolves against the MAIN branch's history
-        # (Iceberg: the snapshot log tracks current-snapshot-id flips),
-        # never against staged branch-only commits — otherwise a read
-        # taken after `append(branch=...)` would leak unpublished,
-        # unaudited rows and break write-audit-publish isolation.
-        # Tables with no current pointer (legacy/synthetic) fall back
-        # to all snapshots.
-        from .lineage import main_line_ids
-
-        main_ids = main_line_ids(doc)
-        candidates = (
-            [s for s in snaps if int(s["snapshot-id"]) in main_ids]
-            if main_ids
-            else snaps
-        )
-        before = [s for s in candidates if int(s["timestamp-ms"]) <= as_of_ms]
-        if not before:
-            raise ValueError(f"no snapshot at or before {as_of_ms}")
-        chosen = before[-1]
-    else:
-        # the default read follows current-snapshot-id (Iceberg
-        # semantics: rollback flips it, staged BRANCH commits never move
-        # it) — newest-by-timestamp only when the pointer is absent
-        cur = doc.get("current-snapshot-id")
-        chosen = next(
-            (s for s in snaps if int(s["snapshot-id"]) == int(cur)), snaps[-1]
-        ) if cur is not None else snaps[-1]
-
+    chosen = select_snapshot(doc, snapshot_id, as_of_ms, ref)
     mlist = _resolve(metadata_json_path, chosen["manifest-list"])
 
     from ..metadata.metadata_json import _strip_scheme
@@ -1118,39 +1262,15 @@ def read_data_at_snapshot(
     # file_path forms a foreign writer may have recorded
     table_root = os.path.dirname(os.path.dirname(metadata_json_path))
 
-    # planning is PURE PYTHON end to end (r5): one avro_py read of the
-    # manifest list, decode_manifest per referenced manifest — no
-    # frame/collect Spark hop per content kind (three of those cost ~3 s
-    # of per-read planning latency on an 8-file snapshot). The per-file
-    # maps the scan joins below are io.local_frame LocalRelations, so
-    # their broadcasts run without a Python worker.
-    _, _, mlist_rows = read_avro_file(mlist)
+    # planning is PURE PYTHON end to end (r5): the same live_entries walk
+    # the DataSource plans from — no frame/collect Spark hop per content
+    # kind (three of those cost ~3 s of per-read planning latency on an
+    # 8-file snapshot). The per-file maps the scan joins below are
+    # io.local_frame LocalRelations, so their broadcasts run without a
+    # Python worker.
     entries_by_kind: dict[int, list[dict]] = {0: [], 1: [], 2: []}
-    for m in mlist_rows:
-        for e in decode_manifest(
-            _resolve(mlist, m["manifest_path"]),
-            inherited_seq=inherited_seq_of(m, doc.get("format-version", 2)),
-        ):
-            (status, _sid, fpath, _fmt, records, _size, fcontent, seq,
-             pvals, ptypes, lb, ub, bt, nc, _dc, dv, frid, nanc) = e
-            if status == 2:
-                continue
-            entries_by_kind.setdefault(fcontent, []).append(
-                {
-                    "path": _norm_ref_path(fpath, table_root),
-                    "seq": seq,
-                    "pvals": pvals,
-                    "ptypes": ptypes,
-                    "lb": lb,
-                    "ub": ub,
-                    "bt": bt,
-                    "nc": nc,
-                    "nanc": nanc,
-                    "records": records,
-                    "dv": dv,
-                    "frid": frid,
-                }
-            )
+    for e in live_entries(mlist, doc.get("format-version", 2), table_root):
+        entries_by_kind.setdefault(e["content"], []).append(e)
 
     def live_files(content: int) -> list[dict]:
         return entries_by_kind.get(content, [])
@@ -1159,16 +1279,12 @@ def read_data_at_snapshot(
     if not data_files:
         raise ValueError(f"snapshot {chosen['snapshot-id']} has no live data files")
 
-    # schema resolution: a LATEST read scans under the table's CURRENT
-    # schema (Iceberg semantics — update_schema is a metadata-only
-    # commit that adds no snapshot, so the snapshot's recorded schema-id
-    # can lag current-schema-id); TIME TRAVEL reads under the SNAPSHOT's
-    # schema so history shows its historical shape.
+    # LATEST reads scan under the current schema, time travel under the
+    # snapshot's (read_schema_block)
+    time_travel = any(x is not None for x in (snapshot_id, as_of_ms, ref))
     read_schema_id = (
-        chosen.get("schema-id")
-        if time_travel
-        else doc.get("current-schema-id", chosen.get("schema-id"))
-    )
+        read_schema_block(doc, chosen if time_travel else None) or {}
+    ).get("schema-id")
     schema_cols, aliases = evolved_read_plan(doc, read_schema_id)
 
     # partition pruning: drop files whose manifest partition values
@@ -1244,22 +1360,7 @@ def read_data_at_snapshot(
         [d for d in all_pos if not d.get("dv")],
         [f["path"] for f in data_files],
     )
-    # v3 deletion vectors: at most one DV applies per data file (the
-    # spec's invariant; our writer merges the prior DV into each new
-    # one, so the max-sequence DV is a superset of every older one).
-    # Restrict to the files this scan still reads — pruned-away files'
-    # DV blobs are never even fetched.
-    scan_paths = {f["path"] for f in data_files}
-    dv_best: dict[str, dict] = {}
-    for d in all_pos:
-        if not d.get("dv"):
-            continue
-        ref = _norm_ref_path(d["dv"]["referenced"], table_root)
-        if ref not in scan_paths:
-            continue
-        cur = dv_best.get(ref)
-        if cur is None or (d["seq"] or 0) > (cur["seq"] or 0):
-            dv_best[ref] = d
+    dv_best = _dv_per_file(all_pos, [f["path"] for f in data_files], table_root)
     if row_lineage and int(doc.get("format-version", 2)) < 3:
         raise ValueError(
             "row lineage requires a format-version >= 3 table "
@@ -1740,30 +1841,18 @@ def read_incremental(
     if to_snapshot_id not in by_id:
         raise ValueError(f"to_snapshot {to_snapshot_id} not in table")
 
-    # ancestry walk: to → ... → from
-    chain = []
-    cur = to_snapshot_id
-    while cur != from_snapshot_id:
-        s_ = by_id.get(cur)
-        if s_ is None:
-            raise ValueError(
-                f"from_snapshot {from_snapshot_id} is not an ancestor of "
-                f"{to_snapshot_id}"
-            )
-        chain.append(s_)
-        parent = s_.get("parent-snapshot-id")
-        if parent is None:
-            raise ValueError(
-                f"from_snapshot {from_snapshot_id} is not an ancestor of "
-                f"{to_snapshot_id}"
-            )
-        cur = int(parent)
+    walk = lineage_chain(doc, from_snapshot_id, to_snapshot_id)
+    if walk is None:
+        raise ValueError(
+            f"from_snapshot {from_snapshot_id} is not an ancestor of "
+            f"{to_snapshot_id}"
+        )
     skipped_ops = (
         ({"replace"} if skip_replace else set())
         | ({"delete"} if skip_delete else set())
     )
     append_ids, any_skipped = set(), False
-    for s_ in chain:
+    for s_ in walk:
         op = s_.get("summary", {}).get("operation")
         if op == "append":
             append_ids.add(int(s_["snapshot-id"]))
@@ -1932,25 +2021,13 @@ def read_changelog(
     if from_snapshot_id is not None and from_snapshot_id not in by_id:
         raise ValueError(f"from_snapshot {from_snapshot_id} not in table")
 
-    # lineage walk to → ... → from (exclusive); from=None walks to root
-    chain: list[dict] = []
-    cur: int | None = to_snapshot_id
-    while cur is not None and cur != from_snapshot_id:
-        s_ = by_id.get(cur)
-        if s_ is None:
-            raise ValueError(
-                f"from_snapshot {from_snapshot_id} is not an ancestor of "
-                f"{to_snapshot_id}"
-            )
-        chain.append(s_)
-        parent = s_.get("parent-snapshot-id")
-        cur = int(parent) if parent is not None else None
-    if cur is None and from_snapshot_id is not None:
+    # lineage walk from (exclusive; None = the root) to to, oldest first
+    chain = lineage_chain(doc, from_snapshot_id, to_snapshot_id)
+    if chain is None:
         raise ValueError(
             f"from_snapshot {from_snapshot_id} is not an ancestor of "
             f"{to_snapshot_id}"
         )
-    chain.reverse()  # oldest change first
 
     def live(snap_id: int | None) -> DataFrame | None:
         if snap_id is None:

@@ -15,20 +15,23 @@ first-class Spark sources with no jar:
     stream = (spark.readStream.format("hielo_iceberg")
               .load("/warehouse/ns/t"))        # append micro-batches
 
-Execution model (and why a PURE-PYTHON metadata plane exists):
-``schema()``/``partitions()`` run in a Python process with NO JVM
-gateway, so planning reads metadata.json with stdlib json and the
-manifest Avro with ``metadata/avro_py.py`` (spec-derived container
-decoder); ``read()`` runs on executors and scans parquet via pyarrow,
-applying the snapshot's merge-on-read deletes with the SAME
-sequence-number scoping as manifests.read_data_at_snapshot (position
-deletes ``delete_seq >= data_seq``, equality ``>``).
+Execution model: ``schema()``/``partitions()`` run in a Python process
+with NO JVM gateway, and plan through the pure-Python planner in
+``metadata/manifests.py`` that ``read_data_at_snapshot`` plans with —
+one snapshot selector (``select_snapshot``), one live-entry walk
+(``live_entries``), one bounds comparator (``_file_may_match``, which
+the pushed filters map onto in ``_file_survives``) and one delete
+planner (``_prune_pos_deletes``, ``_dv_per_file``). Only execution
+differs: ``read()`` runs on executors and scans parquet via pyarrow,
+applying the attached merge-on-read deletes in-task (position deletes
+``delete_seq >= data_seq``, equality ``>``), where the DataFrame plane
+anti-joins.
 
-Scale notes: one InputPartition per live data file (natural parquet
-parallelism); pushed filters prune whole files from the plan via the
-manifest bounds (spec binary bounds or the engine's string stats —
-both planes read here) before any scan; Spark re-applies the filters
-row-level, so pruning is conservative-safe. The JVM path
+Scale notes: live data files pack into target-sized InputPartitions;
+pushed filters prune whole files from the plan via the manifest bounds
+(spec binary bounds or the engine's string stats) before any scan;
+Spark re-applies the filters row-level, so pruning is
+conservative-safe. The JVM path
 (``manifests.read_data_at_snapshot``) stays the raw-throughput route —
 whole-stage codegen over the parquet scan — while this source is the
 standard-API surface (SQL via ``.load().createOrReplaceTempView``,
@@ -39,7 +42,7 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
+from decimal import Decimal
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -61,18 +64,20 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..metadata.avro_py import read_avro_file
 from ..metadata.data_files import render_bound
-
-_ICEBERG_TO_DDL = {
-    "boolean": "boolean", "int": "int", "long": "bigint",
-    "float": "float", "double": "double", "date": "date",
-    "timestamp": "timestamp_ntz", "timestamptz": "timestamp",
-    "string": "string", "binary": "binary", "uuid": "string",
-}
-
-#: iceberg type → the Spark dtype names _file_may_match treats numeric
-_NUMERIC = {"int", "long", "float", "double"}
+from ..metadata.lineage import chain as lineage_chain
+from ..metadata.manifests import (
+    _dv_per_file,
+    _file_may_match,
+    _incr_bytes,
+    _norm_ref_path,
+    _prune_pos_deletes,
+    _resolve,
+    historical_names,
+    live_entries,
+    read_schema_block,
+    select_snapshot,
+)
 
 
 def _current_metadata_path(table_dir: str) -> str:
@@ -103,339 +108,86 @@ def _current_schema_block(doc: dict) -> dict | None:
     return current_schema_block(doc)
 
 
+_TRAVEL_OPTIONS = ("snapshot-id", "as-of-ms", "ref")
+
+
+def _snapshot_of(doc: dict, options) -> dict:
+    """The snapshot the read options select (manifests.select_snapshot)."""
+    return select_snapshot(doc, *(options.get(k) for k in _TRAVEL_OPTIONS))
+
+
 def _read_schema_block(doc: dict, options) -> dict | None:
-    """The schema a data read resolves under — the JVM-plane rule
-    (manifests.read_data_at_snapshot): a LATEST read scans under the
-    table's CURRENT schema; TIME TRAVEL (snapshot-id / as-of-ms / ref)
-    scans under the SNAPSHOT's recorded schema-id so history shows its
-    historical shape. Falls back to current when the snapshot predates
-    schema-id tracking."""
-    if any(
-        options.get(k) is not None
-        for k in ("snapshot-id", "as-of-ms", "ref")
-    ):
-        snap = _select_snapshot(doc, options)
-        sid = snap.get("schema-id")
-        if sid is not None:
-            blk = next(
-                (
-                    s for s in doc.get("schemas", [])
-                    if s.get("schema-id") == sid
-                ),
-                None,
-            )
-            if blk is not None:
-                return blk
-    return _current_schema_block(doc)
+    """The schema a data read resolves under (manifests.read_schema_block:
+    current for LATEST reads, the snapshot's for time travel)."""
+    travel = any(options.get(k) is not None for k in _TRAVEL_OPTIONS)
+    return read_schema_block(doc, _snapshot_of(doc, options) if travel else None)
 
 
-def _resolve_rel(base: str, p: str) -> str:
-    p = p.removeprefix("file:")
-    if not os.path.isabs(p):
-        p = os.path.join(os.path.dirname(base), p)
-    return p
+def _manifest_list(table_dir: str, snap: dict) -> str:
+    return _resolve(os.path.join(table_dir, "metadata", "x"), snap["manifest-list"])
 
 
-def _select_snapshot(doc: dict, options) -> dict:
-    snaps = sorted(doc.get("snapshots", []), key=lambda s: int(s["timestamp-ms"]))
-    if not snaps:
-        raise ValueError("table has no snapshots")
-    sid = options.get("snapshot-id")
-    ref = options.get("ref")
-    as_of = options.get("as-of-ms")
-    if sum(x is not None for x in (sid, ref, as_of)) > 1:
-        raise ValueError("pass at most one of snapshot-id / ref / as-of-ms")
-    if ref is not None:
-        refs = doc.get("refs", {})
-        if ref not in refs:
-            raise ValueError(f"no ref named {ref!r}")
-        sid = int(refs[ref]["snapshot-id"])
-    if sid is not None:
-        match = next(
-            (s for s in snaps if int(s["snapshot-id"]) == int(sid)), None
-        )
-        if match is None:
-            raise ValueError(
-                f"snapshot {sid} not in table (have "
-                f"{sorted(int(s['snapshot-id']) for s in snaps)})"
-            )
-        return match
-    by_id = {int(s["snapshot-id"]): s for s in snaps}
-    cur = doc.get("current-snapshot-id")
-    if as_of is not None:
-        # main-branch lineage only, like manifests.read_data_at_snapshot
-        from ..metadata.lineage import main_line_ids
-
-        main = main_line_ids(doc)
-        cands = [s for s in snaps if not main or int(s["snapshot-id"]) in main]
-        before = [s for s in cands if int(s["timestamp-ms"]) <= int(as_of)]
-        if not before:
-            raise ValueError(f"no snapshot at or before {as_of}")
-        return before[-1]
-    if cur is not None and int(cur) in by_id:
-        return by_id[int(cur)]
-    return snaps[-1]
-
-
-def _manifest_entries(
-    mlist_path: str, format_version: int = 2
-) -> Iterator[tuple[dict, dict]]:
-    """(manifest-list row, live entry) pairs across all manifests."""
-    from ..metadata.manifests import inherited_seq_of
-
-    _, _, mrows = read_avro_file(mlist_path)
-    for m in mrows:
-        mpath = _resolve_rel(mlist_path, m["manifest_path"])
-        _, header, entries = read_avro_file(mpath)
-        # v1 manifest lists carry no sequence_number field at all →
-        # every v1 sequence number reads as 0 (spec v1→v2 inheritance)
-        inherited = inherited_seq_of(m, format_version)
-        id2field = {}
-        raw = header.get("schema")
-        if raw:
-            try:
-                for f in json.loads(raw.decode("utf-8")).get("fields", []):
-                    if isinstance(f.get("type"), str):
-                        id2field[int(f["id"])] = (f["name"], f["type"])
-            except ValueError:
-                pass
-        for e in entries:
-            if e.get("status") == 2:
-                continue
-            seq = e.get("sequence_number")
-            e["_seq"] = seq if seq is not None else inherited
-            e["_id2field"] = id2field
-            yield m, e
-
-
-def _entry_bounds(e: dict) -> tuple[dict, dict, dict]:
-    """(lower, upper, types) in stringified form — extension maps first,
-    spec binary maps decoded via metadata/values.py otherwise."""
-    from ..metadata.values import deserialize_value
-
-    data_file = e["data_file"]
-    lo = data_file.get("lower_bounds_str")
-    hi = data_file.get("upper_bounds_str")
-    bt = data_file.get("bounds_types") or {}
-    if lo is not None or hi is not None:
-        return lo or {}, hi or {}, bt
-    id2field = e.get("_id2field") or {}
-
-    def decode(kvs):
-        if isinstance(kvs, dict):
-            # legacy pre-r5 tables: string map under the spec name
-            return {str(k): str(v) for k, v in kvs.items()}
-        out = {}
-        for kv in kvs or []:
-            f = id2field.get(int(kv["key"]))
-            if f is not None and kv.get("value") is not None:
-                out[f[0]] = deserialize_value(f[1], kv["value"])
-        return out
-
-    lo = decode(data_file.get("lower_bounds"))
-    hi = decode(data_file.get("upper_bounds"))
-    bt = {
-        name: ("bigint" if t in _NUMERIC else t)
-        for name, t in id2field.values()
+def _pvals_of(f: dict) -> dict:
+    """A live entry's partition values as strings: the engine's string
+    map, else the spec's typed partition record."""
+    if f["pvals"] is not None:
+        return f["pvals"]
+    return {
+        k: str(v) for k, v in (f["partition"] or {}).items() if v is not None
     }
-    return lo, hi, bt
 
 
-def _entry_count_map(e: dict, ext_name: str, spec_name: str) -> dict:
-    """A per-column long-count stat map keyed by column name — the
-    engine-extension string map when present, else the spec's
-    field-id-keyed kv array decoded through the manifest header schema.
-    Empty when unrecorded."""
-    data_file = e.get("data_file") or {}
-    ext = data_file.get(ext_name)
-    if isinstance(ext, dict):
-        return {str(k): int(v) for k, v in ext.items()}
-    kvs = data_file.get(spec_name)
-    id2field = e.get("_id2field") or {}
-    out: dict[str, int] = {}
-    if isinstance(kvs, dict):  # legacy string-map form
-        return {str(k): int(v) for k, v in kvs.items()}
-    for kv in kvs or []:
-        f = id2field.get(int(kv["key"]))
-        if f is not None and kv.get("value") is not None:
-            out[f[0]] = int(kv["value"])
-    return out
+def _bounds_of(f: dict) -> tuple[dict, dict, dict]:
+    return f["lb"] or {}, f["ub"] or {}, f["bt"] or {}
 
 
-def _entry_nan_counts(e: dict) -> dict:
-    """Per-column NaN row counts (spec data_file field 137) keyed by
-    column name; empty when unrecorded. Bounds exclude NaN per spec, so
-    >/>= pruning on float columns consults this to keep files whose
-    only matching rows are NaN."""
-    return _entry_count_map(e, "nan_counts", "nan_value_counts")
+def _dv_ref(d: dict | None) -> tuple | None:
+    """A deletion-vector entry → the (puffin path, offset, size) blob
+    region a scan task reads."""
+    return (d["path"], d["dv"]["offset"], d["dv"]["size"]) if d else None
 
 
-def _file_survives(filters, e: dict) -> bool:
-    """Conservative manifest-bounds pruning for the pushed filters —
-    identical comparator rules to manifests._file_may_match; any missing
-    information keeps the file."""
-    lo, hi, bt = _entry_bounds(e)
+def _file_survives(filters, f: dict, aliases=None) -> bool:
+    """Manifest-bounds pruning for the pushed filters: each one maps to a
+    ``(col, op, value)`` triple for ``manifests._file_may_match``, the
+    comparator the DataFrame plane prunes with, so the two planes keep
+    the same files. ``f`` is a ``live_entries`` record; ``aliases`` maps
+    current column names to their historical ones. Pushed values render
+    like the writer's bounds (tz-aware timestamps as UTC, booleans
+    lower-case); numbers pass through, since the comparator parses them
+    as numbers and a rendered number would compare as a string on a
+    column of unknown type."""
+    ops = {EqualTo: "=", GreaterThan: ">", GreaterThanOrEqual: ">=",
+           LessThan: "<", LessThanOrEqual: "<=",
+           StringStartsWith: "startswith"}
 
-    def cmp_ok(col, op, value):
-        l, h = lo.get(col), hi.get(col)
-        if l is None or h is None:
-            # no bounds, but an ALL-NULL column provably matches no
-            # comparison (SQL null semantics); NaN-masked float bounds
-            # also read absent, but there nulls < records, so this
-            # never fires for all-NaN files (NaN can match >/>=)
-            nc = _entry_count_map(
-                e, "null_counts", "null_value_counts"
-            ).get(col)
-            records = (e.get("data_file") or {}).get("record_count")
-            if nc is not None and records and int(nc) == int(records):
-                return False
-            return True
-        # pushed TimestampType values arrive as tz-aware datetimes;
-        # bounds strings are tz-less UTC — normalize through the same
-        # renderer the writer records bounds with, else every timestamp
-        # comparison carries a '+00:00' suffix (or a session-tz shift)
-        # and wrongly prunes matching files
-        value = render_bound(value)
-        ctype = bt.get(col)
-        if ctype is None:
-            # unknown column type (legacy manifest without bounds_types
-            # AND without a header schema): comparing numerics
-            # lexicographically can WRONGLY prune ("10" < "9") — keep
-            # the file, pruning must stay conservative
-            return True
-        if ctype in ("tinyint", "smallint", "int", "bigint",
-                     "float", "double", "long"):
-            try:
-                l, h, value = float(l), float(h), float(value)
-            except (TypeError, ValueError):
-                return True
-            import math
+    def render(v):
+        num = isinstance(v, (int, float, Decimal)) and not isinstance(v, bool)
+        return v if num else render_bound(v)
 
-            # NaN-contaminated bounds (foreign/pre-r12 writers): every
-            # comparison against NaN is False → would wrongly prune.
-            # Spec bounds exclude NaN; treat a NaN bound as absent.
-            if math.isnan(l) or math.isnan(h):
-                return True
-            if math.isnan(value):
-                # Spark SQL: NaN = NaN true, NaN >= NaN true, nothing
-                # exceeds NaN — only NaN rows match =/>=, none match >
-                n = _entry_nan_counts(e).get(col)
-                if n is not None:
-                    if op in ("=", ">="):
-                        return n > 0
-                    if op == ">":
-                        return False
-                return True
-            if op in (">", ">="):
-                # NaN ranks above every double in Spark: a file whose
-                # only matching rows are NaN still matches >/>= finite
-                n = _entry_nan_counts(e).get(col)
-                if n is not None and n > 0:
-                    return True
-        if op == "=":
-            return l <= value <= h
-        if op == ">":
-            return h > value
-        if op == ">=":
-            return h >= value
-        if op == "<":
-            return l < value
-        if op == "<=":
-            return l <= value
-        return True
-
-    def prefix_ok(col, prefix):
-        # v startswith p ⟺ p <= v < incr(p): prune when the bounds
-        # range can't intersect that interval (string bounds only;
-        # UTF-8 byte order == code-point order)
-        l, h = lo.get(col), hi.get(col)
-        if l is None or h is None or bt.get(col) != "string" \
-                or not isinstance(prefix, str):
-            return True
-        pb = prefix.encode("utf-8", "surrogatepass")
-        lb = str(l).encode("utf-8", "surrogatepass")
-        hb = str(h).encode("utf-8", "surrogatepass")
-        up = _incr_bytes(pb)
-        return hb >= pb and (up is None or lb < up)
-
-    def null_ok(col, want_null):
-        # file-level IS [NOT] NULL pruning from null_value_counts +
-        # record_count (the JVM plane's _file_may_match twin): a
-        # zero-null file can't serve IS NULL, an all-null file can't
-        # serve IS NOT NULL. Missing counts keep the file.
-        nc = _entry_count_map(e, "null_counts", "null_value_counts").get(col)
-        records = (e.get("data_file") or {}).get("record_count")
-        if nc is None or records is None:
-            return True
-        return nc > 0 if want_null else nc < int(records)
-
-    for f in filters:
-        col = f.attribute[0] if hasattr(f, "attribute") else None
+    for flt in filters:
+        col = flt.attribute[0] if hasattr(flt, "attribute") else None
         if col is None:
             continue
-        if isinstance(f, IsNull) and not null_ok(col, True):
-            return False
-        if isinstance(f, IsNotNull) and not null_ok(col, False):
-            return False
-        if isinstance(f, EqualNullSafe) and f.value is None \
-                and not null_ok(col, True):
-            return False
-        if isinstance(f, EqualTo) and not cmp_ok(col, "=", f.value):
-            return False
-        if isinstance(f, EqualNullSafe) and f.value is not None \
-                and not cmp_ok(col, "=", f.value):
-            return False
-        if isinstance(f, GreaterThan) and not cmp_ok(col, ">", f.value):
-            return False
-        if isinstance(f, GreaterThanOrEqual) and not cmp_ok(col, ">=", f.value):
-            return False
-        if isinstance(f, LessThan) and not cmp_ok(col, "<", f.value):
-            return False
-        if isinstance(f, LessThanOrEqual) and not cmp_ok(col, "<=", f.value):
-            return False
-        if isinstance(f, In):
-            vals = [v for v in (f.value or ()) if v is not None]
-            if vals and not any(cmp_ok(col, "=", v) for v in vals):
-                return False
-        if isinstance(f, StringStartsWith) and not prefix_ok(
-            col, f.value
+        if isinstance(flt, IsNull) or (
+            isinstance(flt, EqualNullSafe) and flt.value is None
         ):
+            triple = (col, "is_null", None)
+        elif isinstance(flt, IsNotNull):
+            triple = (col, "is_not_null", None)
+        elif isinstance(flt, EqualNullSafe):
+            triple = (col, "=", render(flt.value))
+        elif isinstance(flt, In):
+            triple = (col, "in", [
+                render(v) for v in (flt.value or ()) if v is not None
+            ])
+        elif type(flt) in ops:
+            triple = (col, ops[type(flt)], render(flt.value))
+        else:
+            continue
+        if not _file_may_match(f, triple, aliases):
             return False
     return True
-
-
-def _incr_bytes(p: bytes) -> bytes | None:
-    """The smallest byte string strictly greater than every string
-    with prefix ``p`` (rightmost non-0xFF byte incremented, the rest
-    truncated); None when ``p`` is all 0xFF (no upper bound)."""
-    b = bytearray(p)
-    for i in range(len(b) - 1, -1, -1):
-        if b[i] != 0xFF:
-            return bytes(b[:i]) + bytes([b[i] + 1])
-    return None
-
-
-_SCHEME_RE = None
-
-
-def _norm_path(p, table_root=None) -> str:
-    """Foreign path forms → a comparable local form: URI schemes
-    stripped (``file:/a``, ``file:///a``, ``s3a://bucket/k`` →
-    ``/a`` / ``/bucket/k``), ``./``-relative and bare-relative paths
-    resolved against the table root (spec paths SHOULD be full URIs,
-    but a foreign writer's relative form must not silently
-    under-delete)."""
-    global _SCHEME_RE
-    if _SCHEME_RE is None:
-        import re
-
-        _SCHEME_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9.+-]*:/+")
-    s = _SCHEME_RE.sub("/", str(p))
-    if not s.startswith("/") and table_root:
-        s = os.path.join(
-            table_root, s[2:] if s.startswith("./") else s
-        )
-    return s
 
 
 class _PackedScanPartition(InputPartition):
@@ -804,7 +556,7 @@ def _read_partition(part: _ScanPartition):
                 mine = [
                     u for u in uniq.to_pylist()
                     if os.path.abspath(
-                        _norm_path(u, part.table_root)
+                        _norm_ref_path(u, part.table_root)
                     ) == me
                 ]
                 if not mine:
@@ -1681,33 +1433,23 @@ class HieloIcebergReader(DataSourceReader):
         import pyarrow.parquet as pq
 
         doc = _load_doc(self.table_dir)
-        snap = _select_snapshot(doc, self.options)
-        mlist = _resolve_rel(
-            os.path.join(self.table_dir, "metadata", "x"),
-            snap["manifest-list"],
+        entries = live_entries(
+            _manifest_list(self.table_dir, _snapshot_of(doc, self.options)),
+            doc.get("format-version", 2), self.table_dir,
         )
-        data, pos_del_files, eq_del_files, dv_files = [], [], [], []
-        fv = doc.get("format-version", 2)
-        for m, e in _manifest_entries(mlist, fv):
-            content = e["data_file"].get("content", 0)
-            path = _norm_path(
-                e["data_file"]["file_path"], self.table_dir
-            )
-            if content == 0:
-                # pushed filters prune data files HERE so the delete
-                # planning below only references delete files that can
-                # touch a surviving data file
-                if _file_survives(self.filters, e):
-                    data.append((path, e))
-            elif content == 1:
-                if e["data_file"].get("referenced_data_file") is not None:
-                    # v3 deletion vector: the entry points at ONE data
-                    # file and a blob region inside a Puffin file
-                    dv_files.append((path, e["_seq"], e["data_file"]))
-                else:
-                    pos_del_files.append((path, e["_seq"], e))
-            elif content == 2:
-                eq_del_files.append((path, e["_seq"], e))
+        # pushed filters prune data files HERE (the comparator and the
+        # rename aliases the DataFrame plane prunes with) so the delete
+        # planning below only references delete files that can touch a
+        # surviving data file
+        aliases = {
+            c[0]: list(c[2]) for c in self.schema_cols if len(c) > 2 and c[2]
+        }
+        data = [
+            f for f in entries
+            if f["content"] == 0 and _file_survives(self.filters, f, aliases)
+        ]
+        pos_entries = [f for f in entries if f["content"] == 1]
+        eq_del_files = [f for f in entries if f["content"] == 2]
         # Deletes are planned as REFERENCES, never materialized here:
         # the driver keeps only (delete file path / blob region
         # coordinates) per surviving data file, and each scan task
@@ -1715,59 +1457,17 @@ class HieloIcebergReader(DataSourceReader):
         # (_read_partition). At 100 TB under heavy deletes no position
         # ever masses on the driver — planning cost is O(delete files),
         # not O(deleted rows). Position-delete files whose file_path
-        # bounds can't touch a surviving data file are never attached
-        # (the delete-side twin of data-file skipping).
-        surviving = sorted(p for p, _e in data)
-
-        def _pos_del_bounds(e):
-            lo_m, hi_m, _bt = _entry_bounds(e)
-            lo = (lo_m or {}).get("file_path")
-            hi = (hi_m or {}).get("file_path")
-            if lo is None or hi is None:
-                return None, None
-            lo2 = lo.removeprefix("file:")
-            hi2 = hi.removeprefix("file:")
-            if not (lo2.startswith("/") and hi2.startswith("/")):
-                # foreign path forms (s3://, ./-relative): the raw
-                # string min/max is NOT the min/max of the normalized
-                # paths — never prune on it, always attach (the task's
-                # own normalization decides exactly)
-                return None, None
-            return lo2, hi2
-
-        def _may_reference(lo, hi) -> bool:
-            import bisect
-
-            if lo is None or hi is None:
-                return True
-            i = bisect.bisect_left(surviving, lo)
-            return i < len(surviving) and surviving[i] <= hi
-
-        # (dpath, dseq, lo, hi) for delete files that can touch ANY
-        # surviving file; per-partition attachment re-checks the bounds
-        # against that file's own path below
-        pos_del_refs = []
-        for dpath, dseq, de in pos_del_files:
-            lo, hi = _pos_del_bounds(de)
-            if _may_reference(lo, hi):
-                pos_del_refs.append((dpath, dseq, lo, hi))
-        dv_best: dict[str, tuple] = {}
-        if dv_files:
-            # v3 deletion vectors: at most one applies per data file —
-            # keep the max-sequence one (our writer merges the prior DV
-            # into each replacement, so it's a superset). Planning only
-            # records each blob's (path, offset, size) coordinates; the
-            # scan task reads its own ≤8 KiB region and decodes there.
-            surviving_abs = {os.path.abspath(p) for p in surviving}
-            for ppath, dseq, df_rec in dv_files:
-                key = os.path.abspath(_norm_path(
-                    df_rec["referenced_data_file"], self.table_dir
-                ))
-                if key not in surviving_abs:
-                    continue
-                cur = dv_best.get(key)
-                if cur is None or (dseq or 0) > (cur[1] or 0):
-                    dv_best[key] = (ppath, dseq, df_rec)
+        # bounds can't touch a surviving data file are never attached;
+        # per-file attachment re-checks the bounds against that file's
+        # own path below.
+        surviving = [f["path"] for f in data]
+        pos_dels = _prune_pos_deletes(
+            [d for d in pos_entries if not d["dv"]], surviving
+        )
+        # v3 deletion vectors: planning only records each blob's (path,
+        # offset, size) coordinates; the scan task reads its own
+        # ≤8 KiB region and decodes there
+        dv_best = _dv_per_file(pos_entries, surviving, self.table_dir)
         # equality deletes: the projection must be widened by the
         # delete files' KEY columns, which planning learns from each
         # parquet FOOTER only (read_schema — no row is decoded); the
@@ -1786,21 +1486,21 @@ class HieloIcebergReader(DataSourceReader):
                     id2names.setdefault(int(g["id"]), set()).add(
                         g["name"]
                     )
-        for dpath, dseq, de in eq_del_files:
+        for de in eq_del_files:
             # spec: the entry's equality_ids name the key FIELDS — no
             # file read at all when every id maps to a single name
             # across the schema history (a post-delete rename makes the
             # parquet's own column names diverge from the current ones;
             # the footer is then the source of truth)
             cols = None
-            eq_ids = de["data_file"].get("equality_ids")
+            eq_ids = de["equality_ids"]
             if eq_ids:
                 cand = [id2names.get(int(i)) for i in eq_ids]
                 if all(c is not None and len(c) == 1 for c in cand):
                     cols = [next(iter(c)) for c in cand]
             if cols is None:
-                cols = list(pq.read_schema(dpath).names)
-            eq_del.append((dpath, cols, dseq, _entry_bounds(de)))
+                cols = list(pq.read_schema(de["path"]).names)
+            eq_del.append((de["path"], cols, de["seq"], _bounds_of(de)))
 
         def _eq_may_touch(del_bounds, data_bounds, cols) -> bool:
             dlo, dhi, dbt = del_bounds
@@ -1893,7 +1593,7 @@ class HieloIcebergReader(DataSourceReader):
                     vx.append((src, hist, fld, op, f.value))
                 continue
             # r11: plain-column filters become row-group pruning hints
-            # (the file-level twin of _file_survives' manifest-bounds
+            # (below _file_survives' file-level manifest-bounds
             # pruning; Spark re-applies every filter row-exactly)
             if name not in hist_of:
                 continue
@@ -1922,46 +1622,28 @@ class HieloIcebergReader(DataSourceReader):
         scan_log = self.options.get("scan_log")
         parts = []
         sizes = []
-        for path, e in data:  # already filter-pruned above
-            data_file = e["data_file"]
-            pvals = data_file.get("partition_values")
-            if pvals is None and data_file.get("partition"):
-                pvals = {
-                    k: str(v)
-                    for k, v in data_file["partition"].items()
-                    if v is not None
-                }
+        for f in data:  # already filter-pruned above
+            path, seq = f["path"], f["seq"]
             # this file's delete REFERENCES, bounds- and sequence-scoped
             # here so the task reads only delete files that can apply
             # to it (spec: position deletes apply at dseq >= data seq)
-            seq = e["_seq"]
             my_refs = [
-                (dpath, dseq)
-                for dpath, dseq, lo, hi in pos_del_refs
-                if (lo is None or hi is None or lo <= path <= hi)
-                and (seq is None or dseq is None or dseq >= seq)
+                (d["path"], d["seq"])
+                for d in _prune_pos_deletes(pos_dels, [path])
+                if seq is None or d["seq"] is None or d["seq"] >= seq
             ]
-            dv = dv_best.get(os.path.abspath(path))
-            dv_ref = None
-            if dv is not None:
-                _ppath, _dseq, df_rec = dv
-                dv_ref = (
-                    _ppath,
-                    int(df_rec["content_offset"]),
-                    int(df_rec["content_size_in_bytes"]),
-                )
+            dv = dv_best.get(path)
             # equality deletes attach per file too: sequence-scoped
             # (strictly newer than the data file) and bounds-pruned on
             # the shared key columns, so a task never reads a delete
             # parquet that cannot touch its file
-            file_bounds = _entry_bounds(e)
+            file_bounds = _bounds_of(f)
             my_eq = [
                 (dpath, cols, dseq)
                 for dpath, cols, dseq, dbounds in eq_del
                 if (seq is None or dseq is None or dseq > seq)
                 and _eq_may_touch(dbounds, file_bounds, cols)
             ]
-            frid = data_file.get("first_row_id")
             # parquet chunk stats exclude NaN, but Spark SQL ranks NaN
             # above every double — in a file that HOLDS NaN rows
             # (manifest nan_value_counts, field 137), a >/>= hint could
@@ -1970,28 +1652,26 @@ class HieloIcebergReader(DataSourceReader):
             # parquet source gets this wrong — the recorded NaN counts
             # let this source keep the rows.
             my_colf = col_filters
-            if col_filters:
-                nanc = _entry_nan_counts(e)
-                if nanc:
-                    my_colf = [
-                        cf for cf in col_filters
-                        if not (
-                            cf[2] in (">", ">=")
-                            and nanc.get(cf[0], 0) > 0
-                        )
-                    ] or None
+            nanc = f["nanc"]
+            if col_filters and nanc:
+                my_colf = [
+                    cf for cf in col_filters
+                    if not (
+                        cf[2] in (">", ">=")
+                        and int(nanc.get(cf[0], 0)) > 0
+                    )
+                ] or None
             parts.append(
                 _ScanPartition(path, seq, my_refs, my_eq,
-                               task_cols, pvals,
+                               task_cols, _pvals_of(f),
                                out_names=out_names, scan_log=scan_log,
-                               frid=(int(frid) if frid is not None
-                                     else None),
-                               lineage=lineage, dv_ref=dv_ref,
+                               frid=f["frid"],
+                               lineage=lineage, dv_ref=_dv_ref(dv),
                                table_root=self.table_dir,
                                vx_filters=vx_filters,
                                col_filters=my_colf)
             )
-            sizes.append(int(data_file.get("file_size_in_bytes") or 0))
+            sizes.append(f["size"])
         if not parts:
             # Spark requires >= 1 partition; an empty scan still needs one
             return [_ScanPartition(None, None, [], [], task_cols,
@@ -2006,20 +1686,6 @@ class HieloIcebergReader(DataSourceReader):
         if partition.path is None:
             return
         yield from _read_partition(partition)
-
-
-def _snapshot_lineage(doc: dict, start_id, end_id) -> list[dict]:
-    """Parent-chain walk from ``end_id`` back to (exclusive)
-    ``start_id``; returned oldest-first. ``start_id`` None walks to the
-    root."""
-    by_id = {int(s["snapshot-id"]): s for s in doc.get("snapshots", [])}
-    chain = []
-    cur = end_id
-    while cur is not None and cur != start_id and cur in by_id:
-        chain.append(by_id[cur])
-        parent = by_id[cur].get("parent-snapshot-id")
-        cur = int(parent) if parent is not None else None
-    return list(reversed(chain))
 
 
 class _ChangesPartition(InputPartition):
@@ -2087,10 +1753,8 @@ class HieloIcebergChangesReader(DataSourceReader):
             # table hasn't advanced — an EMPTY changeset, not an error
             return [_ChangesPartition(
                 _ScanPartition(None, None, [], [], self.schema_cols), 0, 0)]
-        chain = _snapshot_lineage(doc, from_id, to_id)
-        if from_id is not None and (
-            not chain or chain[0].get("parent-snapshot-id") != from_id
-        ):
+        chain = lineage_chain(doc, from_id, to_id)
+        if chain is None:
             raise ValueError(
                 f"from-snapshot-id {from_id} is not an ancestor of "
                 f"{to_id} on this table"
@@ -2101,64 +1765,6 @@ class HieloIcebergChangesReader(DataSourceReader):
         # change_type) so the change-metadata columns stay
         # per-partition constants
         by_id = {int(x["snapshot-id"]): x for x in doc.get("snapshots", [])}
-
-        def _pd_bounds(e):
-            lo_m = e["data_file"].get("lower_bounds_str") or {}
-            hi_m = e["data_file"].get("upper_bounds_str") or {}
-            lo = (lo_m or {}).get("file_path")
-            hi = (hi_m or {}).get("file_path")
-            if lo is None or hi is None:
-                return None, None
-            lo2, hi2 = lo.removeprefix("file:"), hi.removeprefix("file:")
-            if not (lo2.startswith("/") and hi2.startswith("/")):
-                return None, None  # foreign path forms: never prune
-            return lo2, hi2
-
-        def _delete_state(mlist_path):
-            """One manifest-list pass → (live data entries by norm
-            path, position-delete refs, best DV per data file, any
-            live equality deletes?)."""
-            live, pos_refs, dvb = {}, [], {}
-            live_eq = False
-            for m, e in _manifest_entries(mlist_path, fv):
-                content = e["data_file"].get("content", 0)
-                path = _norm_path(
-                    e["data_file"]["file_path"], self.table_dir
-                )
-                if content == 0:
-                    live[path] = e
-                elif content == 1:
-                    refd = e["data_file"].get("referenced_data_file")
-                    if refd is not None:
-                        ref = os.path.abspath(
-                            _norm_path(refd, self.table_dir)
-                        )
-                        prev = dvb.get(ref)
-                        added = e.get("snapshot_id")                             or m.get("added_snapshot_id")
-                        if prev is None or (e["_seq"] or 0) > (
-                            prev[1] or 0
-                        ):
-                            dvb[ref] = (path, e["_seq"],
-                                        e["data_file"],
-                                        int(added or -2))
-                    else:
-                        added = e.get("snapshot_id")                             or m.get("added_snapshot_id")
-                        pos_refs.append(
-                            (path, e["_seq"], *_pd_bounds(e),
-                             int(added or -2))
-                        )
-                elif content == 2:
-                    live_eq = True
-            return live, pos_refs, dvb, live_eq
-
-        def _dv_ref_of(dv):
-            _ppath, _dseq, rec, _added = dv
-            return (
-                _ppath,
-                int(rec["content_offset"]),
-                int(rec["content_size_in_bytes"]),
-            )
-
         groups: dict[tuple, tuple[list, list]] = {}
 
         def _add_scan(key, scan, size):
@@ -2172,10 +1778,6 @@ class HieloIcebergChangesReader(DataSourceReader):
             if op == "replace":
                 continue  # compaction: no logical row change
             snap_id = int(s["snapshot-id"])
-            mlist = _resolve_rel(
-                os.path.join(self.table_dir, "metadata", "x"),
-                s["manifest-list"],
-            )
             is_update = op == "overwrite" and "updated-records" in summary
             if op not in ("append", "delete") and not is_update:
                 # ValueError, NOT NotImplementedError: the DataSource
@@ -2186,13 +1788,17 @@ class HieloIcebergChangesReader(DataSourceReader):
                     f"(operation={op!r}) — its changelog needs the "
                     "multiset diff; use metadata.read_changelog"
                 )
+            entries = live_entries(
+                _manifest_list(self.table_dir, s), fv, self.table_dir
+            )
             if op in ("delete",) or is_update:
                 # before-image rendering without a diff: the commit's
                 # NEW position deletes / DVs NAME the deleted rows —
                 # scan them straight off the referenced files, minus
                 # whatever the PARENT state had already deleted
                 parent = s.get("parent-snapshot-id")
-                psnap = by_id.get(int(parent)) if parent is not None                     else None
+                psnap = by_id.get(int(parent)) if parent is not None \
+                    else None
                 if psnap is None:
                     raise ValueError(
                         f"changes range crosses snapshot "
@@ -2200,13 +1806,11 @@ class HieloIcebergChangesReader(DataSourceReader):
                         "parent is unavailable — use "
                         "metadata.read_changelog"
                     )
-                p_mlist = _resolve_rel(
-                    os.path.join(self.table_dir, "metadata", "x"),
-                    psnap["manifest-list"],
+                p_entries = live_entries(
+                    _manifest_list(self.table_dir, psnap), fv,
+                    self.table_dir,
                 )
-                p_live, p_pos, p_dvb, p_eq = _delete_state(p_mlist)
-                _s_live, s_pos, s_dvb, s_eq = _delete_state(mlist)
-                if p_eq or s_eq:
+                if any(f["content"] == 2 for f in p_entries + entries):
                     # a live equality delete makes the position-named
                     # before-image inexact (eq-deleted rows are not
                     # positions) — the diff plane stays exact
@@ -2215,73 +1819,66 @@ class HieloIcebergChangesReader(DataSourceReader):
                         f"{s['snapshot-id']} with equality deletes in "
                         "play — use metadata.read_changelog"
                     )
+                p_live = [f for f in p_entries if f["content"] == 0]
+                p_paths = [f["path"] for f in p_live]
+                p_pos = [f for f in p_entries if f["content"] == 1]
+                s_pos = [f for f in entries if f["content"] == 1]
                 new_pos = [
-                    r for r in s_pos if r[4] == snap_id
+                    d for d in s_pos if not d["dv"] and d["sid"] == snap_id
                 ]
                 new_dvs = {
-                    ref: dv for ref, dv in s_dvb.items()
-                    if dv[3] == snap_id
+                    p: d for p, d in _dv_per_file(
+                        s_pos, p_paths, self.table_dir
+                    ).items()
+                    if d["sid"] == snap_id
                 }
+                p_dvs = _dv_per_file(p_pos, p_paths, self.table_dir)
+                prior_pos = [d for d in p_pos if not d["dv"]]
                 before_key = (
                     snap_id, ordinal,
                     "UPDATE_BEFORE" if is_update else "DELETE",
                 )
-                for path, e in p_live.items():
-                    ab = os.path.abspath(path)
-                    seq = e["_seq"]
+                for f in p_live:
+                    path, seq = f["path"], f["seq"]
                     my_new = [
-                        (dpath, dseq)
-                        for dpath, dseq, lo, hi, _a in new_pos
-                        if lo is None or hi is None or lo <= path <= hi
+                        (d["path"], d["seq"])
+                        for d in _prune_pos_deletes(new_pos, [path])
                     ]
-                    ndv = new_dvs.get(ab)
+                    ndv = new_dvs.get(path)
                     if not my_new and ndv is None:
                         continue  # commit didn't touch this file
                     my_prior = [
-                        (dpath, dseq)
-                        for dpath, dseq, lo, hi, _a in p_pos
-                        if (lo is None or hi is None
-                            or lo <= path <= hi)
-                        and (seq is None or dseq is None or dseq >= seq)
+                        (d["path"], d["seq"])
+                        for d in _prune_pos_deletes(prior_pos, [path])
+                        if seq is None or d["seq"] is None
+                        or d["seq"] >= seq
                     ]
-                    pdv = p_dvb.get(ab)
                     _add_scan(
                         before_key,
                         _ScanPartition(
                             path, seq, my_new, [], self.schema_cols,
-                            pvals=e["data_file"].get("partition_values"),
+                            pvals=f["pvals"],
                             table_root=self.table_dir,
                             invert_deletes=True,
                             prior_pos_deletes=my_prior,
-                            prior_dv_ref=(
-                                _dv_ref_of(pdv) if pdv else None
-                            ),
-                            dv_ref=_dv_ref_of(ndv) if ndv else None,
+                            prior_dv_ref=_dv_ref(p_dvs.get(path)),
+                            dv_ref=_dv_ref(ndv),
                         ),
-                        int(e["data_file"].get("file_size_in_bytes")
-                            or 0),
+                        f["size"],
                     )
                 if not is_update:
                     continue  # plain DELETE: no after-image
-            after_type = (
-                "UPDATE_AFTER"
-                if (op == "overwrite" and "updated-records" in summary)
-                else "INSERT"
-            )
-            for m, e in _manifest_entries(mlist, fv):
-                if e["data_file"].get("content", 0) != 0:
-                    continue
-                added_by = e.get("snapshot_id") or m.get("added_snapshot_id")
-                if e.get("status") == 1 and int(added_by or -2) == snap_id:
+            after_type = "UPDATE_AFTER" if is_update else "INSERT"
+            for f in entries:
+                if f["content"] == 0 and f["status"] == 1 \
+                        and f["sid"] == snap_id:
                     _add_scan(
                         (snap_id, ordinal, after_type),
                         _ScanPartition(
-                            e["data_file"]["file_path"]
-                            .removeprefix("file:"),
-                            e["_seq"], [], [], self.schema_cols,
-                            pvals=e["data_file"].get("partition_values"),
+                            f["path"], f["seq"], [], [], self.schema_cols,
+                            pvals=f["pvals"],
                         ),
-                        int(e["data_file"].get("file_size_in_bytes") or 0),
+                        f["size"],
                     )
         parts = []
         for (snap_id, ordinal, ctype), (scans, szs) in groups.items():
@@ -2389,17 +1986,12 @@ class HieloIcebergStreamReader(DataSourceStreamReader):
         ):
             self._last_end = head
             return {"snapshot_id": head}
-        chain = _snapshot_lineage(
-            doc, None if start == -1 else start, head
-        )
+        chain = lineage_chain(doc, None if start == -1 else start, head)
         # defensive: a basis that is not an ancestor of head (never in
         # the traced call orders) must not cap — capping from a stale
         # basis could hand Spark an offset BEHIND the checkpoint and
         # re-emit consumed rows; uncapped is always exactly-once
-        if not chain or (
-            start != -1
-            and int(chain[0].get("parent-snapshot-id") or -2) != start
-        ):
+        if not chain:
             self._last_end = head
             return {"snapshot_id": head}
         def _int0(v) -> int:
@@ -2423,9 +2015,6 @@ class HieloIcebergStreamReader(DataSourceStreamReader):
         self._last_end = chosen
         return {"snapshot_id": chosen}
 
-    def _lineage(self, doc, start_id, end_id):
-        return _snapshot_lineage(doc, start_id, end_id)
-
     def partitions(self, start, end):
         start_id, end_id = int(start["snapshot_id"]), int(end["snapshot_id"])
         # keep the admission-control basis in sync with the batch range
@@ -2438,14 +2027,14 @@ class HieloIcebergStreamReader(DataSourceStreamReader):
         if end_id == -1 or start_id == end_id:
             return [_ScanPartition(None, None, [], [], self.schema_cols)]
         doc = _load_doc(self.table_dir)
-        chain = self._lineage(doc, None if start_id == -1 else start_id, end_id)
+        chain = lineage_chain(
+            doc, None if start_id == -1 else start_id, end_id
+        )
         # a start offset that is not an ancestor of end would make the
         # walk swallow the WHOLE history and re-emit consumed rows —
         # loud error beats silent duplicates (unreachable under the
         # traced Spark call orders; guards offset-log corruption)
-        if start_id != -1 and chain and (
-            int(chain[0].get("parent-snapshot-id") or -2) != start_id
-        ):
+        if chain is None:
             raise ValueError(
                 f"stream offset {start_id} is not an ancestor of "
                 f"{end_id} — checkpoint does not match the table lineage"
@@ -2474,25 +2063,19 @@ class HieloIcebergStreamReader(DataSourceStreamReader):
                 )
         if not chain:
             return [_ScanPartition(None, None, [], [], self.schema_cols)]
-        mlist = _resolve_rel(
-            os.path.join(self.table_dir, "metadata", "x"),
-            chain[-1]["manifest-list"],
-        )
         parts, sizes = [], []
-        for m, e in _manifest_entries(mlist, doc.get("format-version", 2)):
-            if e["data_file"].get("content", 0) != 0:
-                continue
-            snap_of_entry = e.get("snapshot_id") or m.get("added_snapshot_id")
-            if e.get("status") == 1 and int(snap_of_entry or -2) in new_ids:
+        for f in live_entries(
+            _manifest_list(self.table_dir, chain[-1]),
+            doc.get("format-version", 2), self.table_dir,
+        ):
+            if f["content"] == 0 and f["status"] == 1 \
+                    and f["sid"] in new_ids:
                 parts.append(
                     _ScanPartition(
-                        e["data_file"]["file_path"].removeprefix("file:"),
-                        e["_seq"], [], [], self.schema_cols,
+                        f["path"], f["seq"], [], [], self.schema_cols,
                     )
                 )
-                sizes.append(
-                    int(e["data_file"].get("file_size_in_bytes") or 0)
-                )
+                sizes.append(f["size"])
         if not parts:
             return [_ScanPartition(None, None, [], [], self.schema_cols)]
         # a micro-batch of many small appended files packs into
@@ -2953,11 +2536,9 @@ def _meta_surface_rows(table_dir: str, surface: str, options) -> list[tuple]:
             )
             for e in doc.get("partition-statistics", [])
         ]
-    snap = _select_snapshot(doc, options)
-    mlist = _resolve_rel(
-        os.path.join(table_dir, "metadata", "x"), snap["manifest-list"]
-    )
+    mlist = _manifest_list(table_dir, _snapshot_of(doc, options))
     if surface == "manifests":
+        from ..metadata.avro_py import read_avro_file
         from ..metadata.manifests import _COUNT_ALIASES
 
         _, _, mrows = read_avro_file(mlist)
@@ -2980,62 +2561,44 @@ def _meta_surface_rows(table_dir: str, surface: str, options) -> list[tuple]:
             )
             for m in mrows
         ]
+    entries = live_entries(mlist, doc.get("format-version", 2), table_dir)
     if surface == "files":
-        out = []
-        for _m, e in _manifest_entries(mlist):
-            data_file = e["data_file"]
-            pvals = data_file.get("partition_values") or {
-                k: str(v) for k, v in (data_file.get("partition") or {}).items()
-                if v is not None
-            }
-            out.append(
-                (
-                    data_file.get("content") or 0,
-                    data_file["file_path"],
-                    data_file.get("record_count"),
-                    data_file.get("file_size_in_bytes"),
-                    e.get("_seq"),
-                    json.dumps(pvals or {}, sort_keys=True),
-                    # v3: DV blob coordinates + row-lineage base
-                    data_file.get("referenced_data_file"),
-                    data_file.get("content_offset"),
-                    data_file.get("content_size_in_bytes"),
-                    data_file.get("first_row_id"),
-                    # Iceberg's t.files carries the per-column count
-                    # stats; JSON-rendered (name-keyed) for a stable
-                    # surface schema
-                    (lambda m: json.dumps(m, sort_keys=True)
-                     if m else None)(
-                        _entry_count_map(
-                            e, "null_counts", "null_value_counts")),
-                    (lambda m: json.dumps(m, sort_keys=True)
-                     if m else None)(_entry_nan_counts(e)),
-                )
+
+        def counts_json(m):
+            # Iceberg's t.files carries the per-column count stats;
+            # JSON-rendered (name-keyed) for a stable surface schema
+            return json.dumps(
+                {k: int(v) for k, v in m.items()}, sort_keys=True
+            ) if m else None
+
+        return [
+            (
+                f["content"], f["file_path"], f["records"], f["size"],
+                f["seq"], json.dumps(_pvals_of(f), sort_keys=True),
+                # v3: DV blob coordinates + row-lineage base
+                *(
+                    (f["dv"]["referenced"], f["dv"]["offset"],
+                     f["dv"]["size"])
+                    if f["dv"] else (None, None, None)
+                ),
+                f["frid"], counts_json(f["nc"]), counts_json(f["nanc"]),
             )
-        return out
+            for f in entries
+        ]
     if surface == "partitions":
         # Iceberg's t.partitions metadata table: live files at the
         # selected snapshot grouped by partition tuple — per-partition
         # row/file/byte counts plus delete-file counts (planning-plane:
         # one pass over the manifest entries, no data read)
         agg: dict = {}
-        for _m, e in _manifest_entries(mlist):
-            data_file = e["data_file"]
-            pvals = data_file.get("partition_values") or {
-                k: str(v) for k, v in (data_file.get("partition") or {}).items()
-                if v is not None
-            }
-            key = (
-                json.dumps(pvals or {}, sort_keys=True),
-                int(_m.get("partition_spec_id") or 0),
-            )
+        for f in entries:
+            key = (json.dumps(_pvals_of(f), sort_keys=True), f["spec_id"])
             a = agg.setdefault(key, [0, 0, 0, 0, 0])
-            content = data_file.get("content") or 0
-            if content == 0:
-                a[0] += int(data_file.get("record_count") or 0)
+            if f["content"] == 0:
+                a[0] += f["records"]
                 a[1] += 1
-                a[2] += int(data_file.get("file_size_in_bytes") or 0)
-            elif content == 1:
+                a[2] += f["size"]
+            elif f["content"] == 1:
                 a[3] += 1
             else:
                 a[4] += 1
@@ -3234,39 +2797,17 @@ class HieloIcebergDataSource(DataSource):
 
     def _schema_cols(self):
         doc = _load_doc(self.options["path"])
-        schemas = doc.get("schemas", [])
         schema = _read_schema_block(doc, self.options)
         if schema is None:
             raise ValueError("table metadata carries no schema block")
-        by_id = sorted(schemas, key=lambda s: int(s.get("schema-id", 0)))
-        from ..metadata.metadata_json import parse_name_mapping
-
-        nmap = parse_name_mapping(doc)
+        # each field's other names (rename history, then name-mapping
+        # names): our parquet carries no Iceberg field ids, so a file
+        # predating a rename, or imported under foreign names, resolves
+        # its columns through these
+        names = historical_names(doc, schema)
         out = []
         for f in schema.get("fields", []):
-            # rename history by field id (most recent old name first):
-            # our parquet carries no Iceberg field ids, so a file
-            # predating a rename resolves through these historical
-            # names — the spec's name-mapping fallback. A
-            # schema.name-mapping.default property (spec Appendix C)
-            # appends each field's MAPPED physical names after the
-            # schema history (renames are authoritative, the mapping is
-            # the import-time fallback) — foreign-imported files whose
-            # parquet names never matched any Iceberg name then resolve
-            # instead of silently reading null.
-            hist: list[str] = []
-            for s in by_id:
-                for g in s.get("fields", []):
-                    if (
-                        g["id"] == f["id"]
-                        and g["name"] != f["name"]
-                        and g["name"] not in hist
-                    ):
-                        hist.append(g["name"])
-            hist = hist[::-1]  # most recent old name first
-            for n in nmap.get(f["id"], []):
-                if n != f["name"] and n not in hist:
-                    hist.append(n)
+            hist = names.get(f["name"], [])
             from ..metadata.types import (
                 UnsupportedIcebergType,
                 iceberg_to_ddl,

@@ -653,11 +653,11 @@ def test_timestamp_bound_rendering_is_canonical(registered, tmp_path):
     # unit level: trimmed rendering + no false prune at the bound
     v = dt.datetime(2024, 1, 2, 3, 4, 5, 100000, tzinfo=dt.timezone.utc)
     assert render_bound(v) == "2024-01-02 03:04:05.1"
-    entry = {"data_file": {
-        "lower_bounds_str": {"ts": "2024-01-02 03:04:05.05"},
-        "upper_bounds_str": {"ts": "2024-01-02 03:04:05.1"},
-        "bounds_types": {"ts": "timestamp"},
-    }}
+    entry = {
+        "lb": {"ts": "2024-01-02 03:04:05.05"},
+        "ub": {"ts": "2024-01-02 03:04:05.1"},
+        "bt": {"ts": "timestamp"},
+    }
     assert _file_survives([EqualTo(("ts",), v)], entry)
     # and ordering still works on trimmed fractions
     past = dt.datetime(2024, 1, 2, 3, 4, 5, 90000, tzinfo=dt.timezone.utc)

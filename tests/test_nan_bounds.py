@@ -159,15 +159,12 @@ def test_foreign_nan_bounds_datasource_comparator():
     from hielo_spark.sources.iceberg_source import _file_survives
     from pyspark.sql.datasource import EqualTo, GreaterThan
 
-    e = {
-        "data_file": {
-            "lower_bounds_str": {"x": "0.0"},
-            "upper_bounds_str": {"x": "NaN"},
-            "bounds_types": {"x": "double"},
-        },
+    f = {
+        "lb": {"x": "0.0"}, "ub": {"x": "NaN"},
+        "bt": {"x": "double"}, "nc": None, "nanc": None, "records": None,
     }
-    assert _file_survives([EqualTo(("x",), 5.0)], e)
-    assert _file_survives([GreaterThan(("x",), 5.0)], e)
+    assert _file_survives([EqualTo(("x",), 5.0)], f)
+    assert _file_survives([GreaterThan(("x",), 5.0)], f)
 
 
 def test_nan_literal_filter(registered, tmp_path):
@@ -295,13 +292,7 @@ def test_file_pruning_never_drops_matches(values, op, threshold, dtype):
 
     fcls = {"=": EqualTo, ">": GreaterThan, ">=": GreaterThanOrEqual,
             "<": LessThan, "<=": LessThanOrEqual}[op]
-    e = {"data_file": {
-        "lower_bounds_str": lb or None, "upper_bounds_str": ub or None,
-        "bounds_types": {"x": dtype},
-        "null_counts": nc, "nan_counts": nanc,
-        "record_count": records,
-    }}
-    kept_ds = _file_survives([fcls(("x",), threshold)], e)
+    kept_ds = _file_survives([fcls(("x",), threshold)], f)
     if any_match:
         assert kept_jvm, (values, op, threshold, f)
         assert kept_ds, (values, op, threshold)

@@ -804,6 +804,87 @@ def test_foreign_truncate16_string_bounds(registered, spark, tmp_path):
     assert {c for c, _ in nothing.dtypes} == {"id", "s"}
 
 
+def test_padded_timestamp_bounds_prune_alike(registered, spark, tmp_path):
+    """Manifests written before the bound renderer trimmed fractions
+    carry ``…05.100000``-style timestamp bounds. An equality filter on
+    the lower bound must keep the file on BOTH read planes: the
+    DataSource plane prunes through the same comparator, which trims the
+    padded fraction before comparing."""
+    import datetime as dt
+
+    t = str(tmp_path / "t")
+    base = dt.datetime(2024, 1, 2, 3, 4, 5)
+    df = spark.createDataFrame(
+        [(i, base + dt.timedelta(milliseconds=100 * (i + 1)))
+         for i in range(3)],
+        "id long, ts timestamp",
+    ).coalesce(1)
+    C.append(spark, t, df, snapshot_id=101, timestamp_ms=1700000000000)
+
+    def pad(v):
+        head, _, frac = v.partition(".")
+        return f"{head}.{frac.ljust(6, '0')}"
+
+    def pad_bounds(e):
+        dfile = dict(e["data_file"])
+        for key in ("lower_bounds_str", "upper_bounds_str"):
+            m = dict(dfile[key])
+            m["ts"] = pad(m["ts"])
+            dfile[key] = m
+        e["data_file"] = dfile
+        return e
+
+    (mp,) = _data_manifest_paths(t)
+    _rewrite_manifest(mp, lambda sch: sch, pad_bounds)
+    _s, _m, (entry,) = read_avro_file(mp)
+    assert entry["data_file"]["lower_bounds_str"]["ts"] \
+        == "2024-01-02 03:04:05.100000"
+
+    ds = spark.read.format("hielo_iceberg").load(t).filter(
+        "ts = TIMESTAMP'2024-01-02 03:04:05.1'")
+    assert [r.id for r in ds.collect()] == [0]
+    jvm = read_data_at_snapshot(
+        spark, C.current_metadata_path(t),
+        skip_filter=("ts", "=", "2024-01-02 03:04:05.1"))
+    assert [r.id for r in jvm.collect()] == [0]
+
+
+def test_renamed_column_prunes_on_both_planes(registered, spark, tmp_path):
+    """A file written before ``a → b`` records its bounds under ``a``.
+    A filter on ``b`` must still prune it through the rename history,
+    on the DataSource plan as on the DataFrame plane."""
+    from pyspark.sql.datasource import EqualTo
+
+    from hielo_spark.sources.iceberg_source import (
+        HieloIcebergDataSource,
+        _PackedScanPartition,
+    )
+
+    t = str(tmp_path / "t")
+    C.append(spark, t, spark.createDataFrame(
+        [(1, 10), (2, 20)], "id long, a long").coalesce(1),
+        snapshot_id=101, timestamp_ms=1700000000000)
+    C.update_schema(t, rename={"a": "b"}, timestamp_ms=1700050000000)
+    C.append(spark, t, spark.createDataFrame([(3, 30)], "id long, b long"),
+             snapshot_id=102, timestamp_ms=1700100000000)
+
+    loaded = spark.read.format("hielo_iceberg").load(t)
+    reader = HieloIcebergDataSource({"path": t}).reader(loaded.schema)
+    list(reader.pushFilters([EqualTo(("b",), 30)]))
+    planned = [
+        f.path for p in reader.partitions()
+        for f in (p.files if isinstance(p, _PackedScanPartition) else [p])
+        if f.path is not None
+    ]
+    assert len(planned) == 1
+    jvm = read_data_at_snapshot(
+        spark, C.current_metadata_path(t), skip_filter=("b", "=", 30))
+    assert len(set(jvm.inputFiles())) == 1
+    assert [(r.id, r.b) for r in jvm.collect()] == [(3, 30)]
+    assert [(r.id, r.b) for r in loaded.filter("b = 30").collect()] \
+        == [(3, 30)]
+
+
 def test_foreign_nan_contaminated_bounds(registered, spark, tmp_path):
     """A foreign writer that ignored the spec's NaN-exclusion rule can
     record NaN as a double bound. Readers must treat the poisoned

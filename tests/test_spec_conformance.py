@@ -713,7 +713,7 @@ def test_v1_sequence_and_content_defaults(v1_table):
 def test_v1_table_reads_on_both_planes(spark, v1_table):
     from hielo_spark.metadata.manifests import read_data_at_snapshot
     from hielo_spark.sources import register
-    from hielo_spark.sources.iceberg_source import _manifest_entries
+    from hielo_spark.metadata.manifests import live_entries
 
     mpath = os.path.join(v1_table, "metadata", "v1.metadata.json")
     jvm = read_data_at_snapshot(spark, mpath)
@@ -727,11 +727,11 @@ def test_v1_table_reads_on_both_planes(spark, v1_table):
         (1, "a"), (2, "b"), (3, "c")]
 
     doc = json.load(open(mpath))
-    for _m, e in _manifest_entries(
+    for e in live_entries(
         doc["snapshots"][0]["manifest-list"], doc["format-version"]
     ):
-        assert e["_seq"] == 0                           # spec default
-        assert e["data_file"].get("content", 0) == 0    # data
+        assert e["seq"] == 0                            # spec default
+        assert e["content"] == 0                        # data
 
 
 def test_delete_manifests_carry_typed_r102_partition(spark, tmp_path):
