@@ -38,12 +38,15 @@ What this enables honestly:
     commit that drops expired snapshot entries from the metadata
     (ops/analysis.remove_orphan_files then reclaims the files).
 
-Appends also record per-file column stats — NaN-free min/max bounds
-that the read side's ``skip_filter`` prunes files by, null, NaN and
-distinct counts — computed by the writer tasks themselves
-(metadata/data_files.py, shared with the ``hielo_iceberg`` DataSource
-writer), and ``create_ref``/``drop_ref`` commit named tags/branches
-that time travel resolves (``VERSION AS OF 'name'`` semantics).
+Every table file — data, position-delete and equality-delete alike —
+is written by one in-task writer (metadata/data_files.py, shared with
+the ``hielo_iceberg`` DataSource writer) that returns per-file column
+stats: NaN-free min/max bounds that the read side's ``skip_filter``
+and delete-file attachment prune by, null, NaN and distinct counts.
+One composer (``_stage_files_manifest`` / ``_staged_manifest_row``)
+turns them into manifest entries and manifest-list rows for both
+kinds. ``create_ref``/``drop_ref`` commit named tags/branches that
+time travel resolves (``VERSION AS OF 'name'`` semantics).
 
 Catalog-service commits: catalog/rest.py speaks the REST spec's
 CommitTableRequest (assert-ref requirements + add-snapshot/set-ref
@@ -68,7 +71,7 @@ import uuid as _uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from ..io import local_frame
-from .data_files import BOUNDABLE
+from .data_files import BOUNDABLE, ROW_GROUP_ROWS
 
 # Spark-SQL partition-value types → Avro types for the r102 partition
 # record (identity int-ish transforms; everything else rides as string,
@@ -364,6 +367,13 @@ def _name2id(doc: dict) -> dict[str, int]:
         None,
     )
     return {f["name"]: int(f["id"]) for f in (schema or {}).get("fields", [])}
+
+
+#: reserved field ids of the position-delete columns (spec "Position
+#: Delete Files"): a delete file's ``file_path`` bounds say which data
+#: files it can reference, so a scan reads only the delete files that
+#: may touch its surviving candidates
+_POS_DELETE_IDS = {"file_path": 2147483546, "pos": 2147483545}
 
 
 def _spec_stats(
@@ -1426,18 +1436,21 @@ def _finalize_commit(
 
 
 def _write_data_files(spark, data_dir: str, df: DataFrame, transforms,
-                      sort_exprs=()) -> list[dict]:
-    """Distributed data-file write shared by append, merge and
-    compaction: every task streams its rows through
-    ``data_files.write_files`` inside ``mapInArrow`` and returns one
-    stats record per file (path, size, counts, bounds, partition
-    values); the driver collects the records — one Spark job, no
-    re-read of what was just written. Partitioned writes sort each task
-    by partition key first (then by ``sort_exprs``), as Spark's own
-    ``partitionBy`` writer does, so a task keeps one file open. Files
-    land at ``data_dir/[<field>=<value>/]part-*.parquet``. Only the
-    records of successful tasks are collected; any other attempt's files
-    stay unreferenced for ``remove_orphan_files``."""
+                      sort_exprs=(),
+                      row_group_rows: int = ROW_GROUP_ROWS) -> list[dict]:
+    """Distributed table-file write shared by append, merge, compaction
+    and every delete-file writer (:func:`_stage_delete_files`): every
+    task streams its rows through ``data_files.write_files`` inside
+    ``mapInArrow`` and returns one stats record per file (path, size,
+    counts, bounds, partition values); the driver collects the records
+    — one Spark job, no re-read of what was just written. Partitioned
+    writes sort each task by partition key first (then by
+    ``sort_exprs`` — the spec's within-file order for delete files), as
+    Spark's own ``partitionBy`` writer does, so a task keeps one file
+    open. Files land at ``data_dir/[<field>=<value>/]part-*.parquet``,
+    in row groups of ``row_group_rows`` rows. Only the records of
+    successful tasks are collected; any other attempt's files stay
+    unreferenced for ``remove_orphan_files``."""
     import json as _json
 
     from ..session import _ship_package
@@ -1456,7 +1469,8 @@ def _write_data_files(spark, data_dir: str, df: DataFrame, transforms,
         # part-<task>-<uuid>: files sort by task, like Spark's writer
         prefix = f"part-{TaskContext.get().partitionId():05d}"
         records, _ = write_files(batches, data_dir, transforms, prefix,
-                                 fanout=False)
+                                 fanout=False,
+                                 row_group_rows=row_group_rows)
         if records:
             yield pa.RecordBatch.from_pydict(
                 {"rec": [_json.dumps(r) for r in records]}
@@ -1495,10 +1509,11 @@ def _stage_files_manifest(
     ptypes: dict | None,
     sort_order_id: int | None = None,
     assign_row_ids: bool = True,
+    content: int = 0,
 ) -> dict:
-    """Write the data manifest for newly written ``files`` — the one
-    builder of manifest entries for new data files, whichever plane
-    wrote them. Each file dict is a writer stats record (``path``,
+    """Write the manifest for newly written ``files`` — the one builder
+    of manifest entries for new table files, whichever plane wrote
+    them. Each file dict is a writer stats record (``path``,
     ``record_count``, ``file_size_in_bytes`` and optional
     ``lower_bounds`` / ``upper_bounds`` / ``null_counts`` /
     ``nan_counts`` / ``distinct_counts`` string maps and
@@ -1507,6 +1522,14 @@ def _stage_files_manifest(
     Bounds are recorded twice: as the engine's name-keyed strings and
     as the spec's field-id-keyed Appendix D bytes.
 
+    ``content`` 1 (position deletes, stats under the reserved
+    ``file_path``/``pos`` field ids) or 2 (equality deletes on the
+    ``dtypes`` columns, recorded as ``equality_ids``) stages a delete
+    manifest instead: a ``delete-manifest-NNNNN-*.avro`` with the
+    ``deletes`` header, full metrics whatever the metrics properties
+    say (a delete file's bounds decide which data files it may touch),
+    and no row ids.
+
     v3 row lineage: with ``assign_row_ids`` every file gets the
     ``_row_id`` of its first row (field 142), contiguous from the
     table's next-row-id watermark in manifest order; _finalize_commit
@@ -1514,12 +1537,19 @@ def _stage_files_manifest(
     lineage columns) first_row_id stays null and the manifest-list row
     is marked so the watermark does not move.
 
-    Returns ``{manifest_path, spec_id, n_files, added_records,
-    added_bytes, partition_values_of, lineage_materialized}``."""
+    Returns ``{manifest_path, spec_id, content, n_files,
+    added_records, added_bytes, partition_values_of,
+    lineage_materialized}`` — ``content`` is the manifest list's code
+    (0 data, 1 deletes)."""
     from .avro_py import write_avro_file
 
-    mode = _metrics_mode_of(doc)
-    name2id = _name2id(doc)
+    deletes = content != 0
+    mode = None if deletes else _metrics_mode_of(doc)
+    name2id = _POS_DELETE_IDS if content == 1 else _name2id(doc)
+    equality_ids = (
+        [name2id[c] for c in dtypes if c in name2id] or None
+        if content == 2 else None
+    )
 
     def counts(m: dict | None) -> dict | None:
         return {
@@ -1529,7 +1559,8 @@ def _stage_files_manifest(
 
     rid = (
         int(doc.get("next-row-id", 0))
-        if assign_row_ids and int(doc.get("format-version", 2)) >= 3
+        if assign_row_ids and not deletes
+        and int(doc.get("format-version", 2)) >= 3
         else None
     )
     entries = []
@@ -1546,11 +1577,12 @@ def _stage_files_manifest(
             "status": 1,
             "snapshot_id": snapshot_id,
             "data_file": {
-                "content": 0,
+                "content": content,
                 "file_path": f["path"],
                 "file_format": "PARQUET",
                 "sort_order_id": sort_order_id,
                 "first_row_id": rid,
+                "equality_ids": equality_ids,
                 "partition": _typed_partition(
                     f.get("partition_values"), pfields
                 ),
@@ -1575,22 +1607,27 @@ def _stage_files_manifest(
             rid += records
     os.makedirs(mdir, exist_ok=True)
     manifest_path = os.path.join(
-        mdir, f"manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
+        mdir,
+        f"{'delete-manifest' if deletes else 'manifest'}-{seq:05d}-"
+        f"{_uuid.uuid4().hex[:8]}.avro",
     )
     write_avro_file(
         manifest_path, manifest_entry_schema(pfields), entries,
-        meta=_manifest_header_meta(doc, spec_id, "data"),
+        meta=_manifest_header_meta(
+            doc, spec_id, "deletes" if deletes else "data"
+        ),
     )
     return {
         "manifest_path": manifest_path,
         "spec_id": spec_id,
+        "content": 1 if deletes else 0,
         "n_files": len(files),
         "added_records": sum(int(f["record_count"]) for f in files),
         "added_bytes": sum(int(f["file_size_in_bytes"]) for f in files),
         "partition_values_of": {
             f["path"]: f.get("partition_values") for f in files
         },
-        "lineage_materialized": not assign_row_ids,
+        "lineage_materialized": not (assign_row_ids or deletes),
     }
 
 
@@ -2452,7 +2489,7 @@ def _rewrite_manifest_dropping_data(
 
 
 def _staged_manifest_row(staged: dict, seq: int, snapshot_id: int) -> dict:
-    """Manifest-list row for a staged data manifest
+    """Manifest-list row for a staged data or delete manifest
     (:func:`_stage_files_manifest`). A lineage-materialized stage
     carries the transient ``assigns_row_ids=False`` marker —
     _finalize_commit then excludes the row's added records from the
@@ -2462,7 +2499,7 @@ def _staged_manifest_row(staged: dict, seq: int, snapshot_id: int) -> dict:
         "manifest_path": staged["manifest_path"],
         "manifest_length": os.path.getsize(staged["manifest_path"]),
         "partition_spec_id": staged["spec_id"],
-        "content": 0,
+        "content": staged["content"],
         "sequence_number": seq,
         "min_sequence_number": seq,
         "added_snapshot_id": snapshot_id,
@@ -2622,35 +2659,90 @@ def overwrite_partitions(
     )
 
 
-def _eq_delete_partition_plan(
-    doc: dict, keys_df: DataFrame
-) -> tuple[DataFrame, list[str], dict[str, str]]:
-    """``(write_frame, partition_fields, ptypes)`` for a
-    partition-scoped equality-delete write. When every partition-source
-    column is among the delete KEYS, a key tuple pins its rows to one
-    partition (identity directly; transforms because exact key equality
-    implies equal transform values) — so the delete files hive-lay-out
-    on derived ``__p_*`` twins (twins, because partitionBy would
-    otherwise drop identity KEY columns from the parquet, which readers
-    must keep). Otherwise the delete stays global: ``([], {})``, which
-    is always correct."""
+#: rows per row group in position-delete parquet: the read side pushes
+#: a ``file_path IN`` filter whose pruning is row-group-granular, so a
+#: delete file spanning many data files must cut groups well below the
+#: data files' 1M rows or a task scanning ONE data file decodes every
+#: position in the delete file. 10,000 sorted (file_path, pos) rows is
+#: about 0.4 MB of parquet — the groups Spark's writer cut at a 1 MiB
+#: block size (9-11k rows) — so each group covers a handful of data
+#: files and the IN filter skips all but a task's own slice.
+_POS_DELETE_ROW_GROUP_ROWS = 10_000
+
+
+def _delete_partition_plan(doc: dict, dtypes: dict[str, str]) -> list:
+    """The spec's partition transforms when every partition-source
+    column is in ``dtypes`` (the delete writer can then derive each
+    delete row's partition), else ``[]``: the delete stays global,
+    which is always correct. Equality deletes qualify when every source
+    is among the KEYS — exact key equality implies equal transform
+    values, so a key tuple pins its rows to one partition."""
     transforms = _spec_transforms_from_doc(doc)
-    kd = dict(keys_df.dtypes)
-    if not transforms or not all(t.source in kd for t in transforms):
-        return keys_df, [], {}
-    wdf = keys_df
+    if not all(t.source in dtypes for t in transforms):
+        return []
+    return transforms
+
+
+def _stage_delete_files(
+    spark: SparkSession,
+    doc: dict,
+    content: int,
+    src: DataFrame | None,
+    cols: list,
+    transforms,
+    del_dir: str,
+    snapshot_id: int,
+    seq: int,
+    mdir: str,
+) -> dict:
+    """Write ``src.select(*cols)`` as delete files and stage their
+    delete manifest — the one delete-file writer behind
+    ``delete_equality``, ``delete_where``, ``rewrite_position_deletes``
+    and ``merge_into``. ``content`` 1 writes position deletes (``cols``
+    give ``file_path, pos``; hash-partitioned on ``file_path`` so N
+    tasks write — never a single-task funnel), 2 equality deletes on
+    ``cols``. Rows sort by ``cols`` within each file, the spec's
+    delete-file order. ``src=None`` stages an empty delete manifest (a
+    delete whose condition pruned every data file still commits its
+    snapshot).
+
+    With ``transforms`` (from :func:`_delete_partition_plan`) each row's
+    partition values are derived from ``src``'s columns as
+    ``__p_<field>`` twins (the expressions the data writer partitions
+    by) and reach ``write_files`` as identity transforms named by the
+    spec field: every delete file belongs to exactly ONE partition —
+    the spec's partition-scoped delete files, which the partition-stats
+    plane attributes by — and the twins, not the key columns, stay out
+    of the parquet. Returns :func:`_stage_files_manifest`'s dict."""
+    from .transforms import PartitionTransform
+
+    twins = []
     for t in transforms:
-        wdf = wdf.withColumn(f"__p_{t.field}", t.expr(kd[t.source]))
-    return (
-        wdf,
-        [f"__p_{t.field}" for t in transforms],
-        {
-            t.field: (
-                kd[t.source] if t.kind == "identity"
-                else f"transform:{t.spec}"
-            )
-            for t in transforms
-        },
+        twin = PartitionTransform(f"__p_{t.field}")
+        twin.field = t.field
+        twins.append(twin)
+    files, sdt, kdt = [], {}, {}
+    if src is not None:
+        sdt = dict(src.dtypes)
+        df = src.select(*cols, *[
+            t.expr(sdt[t.source]).alias(w.source)
+            for t, w in zip(transforms, twins)
+        ])
+        kdt = dict(df.dtypes[:len(cols)])
+        if content == 1:
+            df = df.repartition(*[w.source for w in twins], "file_path")
+        files = _write_data_files(
+            spark, del_dir, df, twins, list(kdt),
+            row_group_rows=(
+                _POS_DELETE_ROW_GROUP_ROWS if content == 1 else ROW_GROUP_ROWS
+            ),
+        )
+    spec_id = int(doc.get("default-spec-id", 0)) if transforms else 0
+    ptypes = _partition_types(transforms, sdt)
+    return _stage_files_manifest(
+        doc, files, kdt, snapshot_id, seq, mdir, spec_id,
+        _partition_avro_fields(doc, ptypes, spec_id) if transforms else [],
+        ptypes, content=content,
     )
 
 
@@ -2686,105 +2778,28 @@ def delete_equality(
 
     # distributed write, natural partitioning (keys frames are usually
     # small; when they're not, the tasks that produced them write in
-    # parallel — no coalesce(1) single-task funnel), spec-sorted within
-    # each task; per-file counts from the parquet footers.
-    # When every partition-source column is among the delete KEYS, a
-    # key tuple pins its rows to one partition (identity directly;
-    # transforms because exact key equality implies equal transform
-    # values) — so the delete files write hive-partitioned on derived
-    # `__p_*` twins (twins, because partitionBy would otherwise drop
-    # identity KEY columns from the parquet, which readers must keep)
-    # and each file gets its partition stamped; otherwise the delete
-    # stays global (partition-less), which is always correct.
-    del_dir = os.path.join(table_dir, "data", f"seq-{seq:05d}-deletes")
-    wdf, part_fields, eq_ptypes = _eq_delete_partition_plan(doc, keys_df)
-    parts, rows_of, bounds_of, pvals_of = _write_delete_parts(
-        wdf, del_dir, list(keys_df.columns),
-        partition_fields=part_fields or None,
+    # parallel — no coalesce(1) single-task funnel); partition-scoped
+    # when the keys cover the spec's source columns
+    transforms = _delete_partition_plan(doc, dict(keys_df.dtypes))
+    staged = _stage_delete_files(
+        spark, doc, 2, keys_df, keys_df.columns, transforms,
+        os.path.join(table_dir, "data", f"seq-{seq:05d}-deletes"),
+        snapshot_id, seq, mdir,
     )
-    # strip the `__p_` twin prefix back to the spec field names
-    pvals_of = {
-        p: {k.removeprefix("__p_"): v for k, v in vals.items()}
-        for p, vals in pvals_of.items()
-    }
-    n_keys = sum(rows_of.values())
-
-    manifest_path = os.path.join(
-        mdir, f"delete-manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
-    )
-    # equality-delete files carry key-column bounds (spec), enabling
-    # future per-scan delete-file skipping on key ranges
-    eq_btypes = dict(keys_df.dtypes)
-    name2id = _name2id(doc)
-    spec_id = int(doc.get("default-spec-id", 0)) if part_fields else 0
-    pfields = (
-        _partition_avro_fields(doc, eq_ptypes, spec_id)
-        if part_fields else []
-    )
-    write_avro(
-        spark,
-        manifest_path,
-        manifest_entry_schema(pfields),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 2,  # equality deletes
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": _typed_partition(pvals_of.get(p), pfields),
-                    "record_count": rows_of[p],
-                    "file_size_in_bytes": os.path.getsize(p),
-                    # spec field 135: key-column field ids (planners
-                    # read these instead of the parquet footer)
-                    "equality_ids": [
-                        name2id[k] for k in eq_btypes if k in name2id
-                    ] or None,
-                    **_spec_stats(
-                        name2id, eq_btypes,
-                        bounds_of.get(p, ({}, {}))[0],
-                        bounds_of.get(p, ({}, {}))[1],
-                        None, rows_of[p],
-                    ),
-                    "lower_bounds_str": bounds_of.get(p, ({}, {}))[0] or None,
-                    "upper_bounds_str": bounds_of.get(p, ({}, {}))[1] or None,
-                    "bounds_types": eq_btypes,
-                    "partition_values": pvals_of.get(p) or None,
-                    "partition_types": eq_ptypes or None,
-                },
-            }
-            for p in parts
-        ],
-        meta=_manifest_header_meta(doc, spec_id, "deletes"),
-    )
-    new_row = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": spec_id,
-        "content": 1,  # delete manifest
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(parts),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n_keys,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    prior_rows = _carry_forward_rows(mdir, doc)
+    n_files = staged["n_files"]
     return _finalize_commit(
-        table_dir, doc, prev_version, prior_rows + [new_row],
+        table_dir, doc, prev_version,
+        _carry_forward_rows(mdir, doc)
+        + [_staged_manifest_row(staged, seq, snapshot_id)],
         snapshot_id, timestamp_ms, seq,
         _with_totals(
             {
                 "operation": "delete",
-                "equality-delete-files": str(len(parts)),
-                "added-delete-records": str(n_keys),
+                "equality-delete-files": str(n_files),
+                "added-delete-records": str(staged["added_records"]),
             },
             doc, doc.get("current-snapshot-id"),
-            0, sum(os.path.getsize(p) for p in parts), len(parts),
+            0, staged["added_bytes"], n_files,
         ),
     )
 
@@ -3067,100 +3082,6 @@ def _conjunct_skip_filters(condition) -> list[tuple]:
     return out
 
 
-#: row-group target for POSITION-delete parquet: the read side pushes a
-#: ``file_path IN`` filter whose pruning is row-group-granular, so a
-#: delete file spanning many data files must flush row groups well
-#: below parquet's 128 MB default or a task scanning ONE data file
-#: decodes every position in the delete file. 1 MiB ≈ a few thousand
-#: sorted (file_path, pos) rows per group — each group covers a handful
-#: of data files, so the IN filter skips all but a task's own slice.
-_POS_DELETE_ROW_GROUP_BYTES = 1 << 20
-
-
-def _write_delete_parts(
-    df: DataFrame, del_dir: str, sort_cols: list[str],
-    partition_fields: list[str] | None = None,
-    row_group_bytes: int | None = None,
-) -> tuple[
-    list[str], dict[str, int], dict[str, tuple[dict, dict]],
-    dict[str, dict],
-]:
-    """Distributed delete-file write: a plain parquet write — NEVER
-    ``coalesce(1)``, which funnels every matched row through one task (a
-    DELETE WHERE touching 1% of a 100 TB table is billions of rows) —
-    spec-ordered within each task, with zero-row task outputs removed.
-    Returns ``(parts, rows_of, bounds_of)`` with per-file footer row
-    counts and per-file column min/max aggregated from the parquet
-    ROW-GROUP STATISTICS by :func:`_footer_file_stats` (footer-only —
-    no data read; parquet stat truncation keeps stored mins <= real and
-    maxes >= real, so the bounds stay conservative-valid for pruning).
-    One local footer read per file: planning-plane, bounded by the task
-    count. The bounds let
-    read planners skip whole delete files whose referenced range can't
-    intersect a scan (spec: delete files carry bounds like data files —
-    a position delete's ``file_path`` bounds say which data files it
-    touches).
-
-    With ``partition_fields``, the frame carries those derived
-    partition columns and the write is hive-laid-out on them (the same
-    shape as :func:`_write_data_files`) so every delete file belongs
-    to exactly ONE partition — the spec's partition-scoped delete
-    files, and what lets the partition-statistics plane attribute
-    delete counts to their true partitions. The returned ``pvals_of``
-    maps each written file to its partition values (parsed back from
-    the hive directory names); empty when unpartitioned."""
-    import pyarrow.parquet as pq
-    from urllib.parse import unquote
-
-    # With a hive partitionBy, Spark's dynamic-partition write inserts
-    # its OWN task-local sort on the partition columns, which would
-    # destroy a bare (file_path, pos) order. Lead the sort with the
-    # partition fields so the writer's required ordering is already
-    # satisfied and no destructive re-sort is inserted — rows within
-    # each partition directory stay spec-ordered by ``sort_cols``.
-    writer = df.sortWithinPartitions(
-        *(partition_fields or []), *sort_cols
-    ).write
-    if row_group_bytes:
-        # small row groups keep the read side's file_path IN pushdown
-        # pruning inside large delete files (row-group granularity)
-        writer = writer.option(
-            "parquet.block.size", str(int(row_group_bytes))
-        ).option(
-            "parquet.page.size",
-            str(min(int(row_group_bytes), 1 << 20)),
-        )
-    if partition_fields:
-        writer.partitionBy(*partition_fields).parquet(del_dir)
-        parts = sorted(_glob.glob(
-            os.path.join(del_dir, "**", "part-*.parquet"), recursive=True
-        ))
-    else:
-        writer.parquet(del_dir)
-        parts = sorted(_glob.glob(os.path.join(del_dir, "part-*.parquet")))
-    pvals_of: dict[str, dict] = {}
-    if partition_fields:
-        for p in parts:
-            vals = {}
-            for seg in os.path.relpath(p, del_dir).split(os.sep)[:-1]:
-                k, _, v = seg.partition("=")
-                vals[k] = unquote(v)
-            pvals_of[p] = vals
-    dtypes = dict(df.dtypes)
-    bound_cols = [c for c, t in dtypes.items() if t in BOUNDABLE]
-    rows_of: dict[str, int] = {}
-    bounds_of: dict[str, tuple[dict, dict]] = {}
-    for p in list(parts):
-        md = pq.ParquetFile(p).metadata
-        if md.num_rows == 0:
-            os.remove(p)  # empty shuffle partition — no manifest entry
-            parts.remove(p)
-            continue
-        rows_of[p], lo, hi, _ = _footer_file_stats(md, dtypes, bound_cols)
-        bounds_of[p] = (lo or {}, hi or {})
-    return parts, rows_of, bounds_of, pvals_of
-
-
 def update_where(
     spark: SparkSession,
     table_dir: str,
@@ -3302,10 +3223,12 @@ def delete_where(
         candidates = [f for f in candidates if _file_may_match(f, sf, ev_aliases)]
     cond = F.expr(condition) if isinstance(condition, str) else condition
     assert isinstance(cond, Column)
-    positions = None
-    pos_parted = None   # v2: positions + derived partition-field columns
-    part_fields: list[str] = []
-    pdel_ptypes: dict[str, str] = {}
+    coords = [
+        F.col("_fp").alias("file_path"),
+        F.col("_pos").cast("long").alias("pos"),
+    ]
+    matched = None
+    part_transforms: list = []
     if candidates:
         # partition-aware scan (hive-layout files carry identity
         # partition columns only in metadata — reattach so conditions on
@@ -3316,48 +3239,18 @@ def delete_where(
             schema_cols=ev_cols, aliases=ev_aliases,
         )
         matched = scan.filter(cond)
-        positions = matched.select(
-            F.col("_fp").alias("file_path"),
-            F.col("_pos").cast("long").alias("pos"),
-        )
-        # partitioned tables: derive the spec's partition-field values
-        # beside each matched row (identity columns ride the scan;
-        # transforms recompute from their source columns, the same
-        # expressions the data writer uses) so the delete files write
-        # hive-partitioned — every delete file belongs to exactly ONE
-        # partition (spec partition scoping, and what the
-        # partition-statistics plane attributes delete counts by)
-        transforms = _spec_transforms_from_doc(doc)
-        sdt = dict(scan.dtypes)
-        if (
-            int(doc.get("format-version", 2)) < 3
-            and transforms
-            and all(t.source in sdt for t in transforms)
-            and not {t.field for t in transforms} & {"file_path", "pos"}
-        ):
-            pos_parted = matched.select(
-                F.col("_fp").alias("file_path"),
-                F.col("_pos").cast("long").alias("pos"),
-                *[
-                    t.expr(sdt[t.source]).alias(t.field)
-                    for t in transforms
-                ],
-            )
-            part_fields = [t.field for t in transforms]
-            pdel_ptypes = {
-                t.field: (
-                    sdt[t.source] if t.kind == "identity"
-                    else f"transform:{t.spec}"
-                )
-                for t in transforms
-            }
+        # v2 partitioned tables: every delete file belongs to exactly
+        # ONE partition, derived from the matched rows (identity
+        # columns ride the scan; transforms recompute from sources)
+        if int(doc.get("format-version", 2)) < 3:
+            part_transforms = _delete_partition_plan(doc, dict(scan.dtypes))
     # UPDATE: stage the matched rows, set-exprs applied, as new data
     # files in the SAME commit (position-scoped deletes reference only
     # the OLD files by path, so the staged files are untouched)
     staged_update = None
     persisted = None
     if update_set is not None:
-        if positions is None:
+        if matched is None:
             return None  # no candidate files → nothing matched
         # variant columns read back as canonical JSON strings — the
         # write path re-encodes those (variant_cols below), so UPDATE
@@ -3468,27 +3361,13 @@ def delete_where(
             or None,
             lineage_materialized=fv3_lineage,
         )
-        # tombstone exactly the LIVE matched rows
-        positions = persisted.select(
-            F.col("_fp").alias("file_path"),
-            F.col("_pos").cast("long").alias("pos"),
-        )
-        if pos_parted is not None:
-            transforms = _spec_transforms_from_doc(doc)
-            sdt2 = {c: t for c, t in persisted.dtypes}
-            pos_parted = persisted.select(
-                F.col("_fp").alias("file_path"),
-                F.col("_pos").cast("long").alias("pos"),
-                *[
-                    t.expr(sdt2[t.source]).alias(t.field)
-                    for t in transforms
-                ],
-            )
+        matched = persisted  # tombstone exactly the LIVE matched rows
     if int(doc.get("format-version", 2)) >= 3:
         # v3 forbids position-delete files: deletes commit as deletion
         # vectors (one roaring bitmap per touched data file)
         res = _commit_deletion_vectors(
-            spark, table_dir, doc, prev_version, positions,
+            spark, table_dir, doc, prev_version,
+            None if matched is None else matched.select(*coords),
             seq, snapshot_id, timestamp_ms, mdir, current,
             staged_update=staged_update,
             branch=branch,
@@ -3496,94 +3375,19 @@ def delete_where(
         if persisted is not None:
             persisted.unpersist()
         return res
-    del_dir = os.path.join(table_dir, "data", f"seq-{seq:05d}-posdeletes")
-    parts: list[str] = []
-    rows_of: dict[str, int] = {}
-    bounds_of = {}
-    pvals_of: dict[str, dict] = {}
-    if positions is not None:
-        parts, rows_of, bounds_of, pvals_of = _write_delete_parts(
-            pos_parted.repartition(*part_fields, "file_path")
-            if pos_parted is not None
-            else positions.repartition(F.col("file_path")),
-            del_dir,
-            ["file_path", "pos"],
-            partition_fields=part_fields or None,
-            row_group_bytes=_POS_DELETE_ROW_GROUP_BYTES,
-        )
-    n_deleted = sum(rows_of.values())
-
-    manifest_path = os.path.join(
-        mdir, f"delete-manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
+    staged = _stage_delete_files(
+        spark, doc, 1, matched, coords, part_transforms,
+        os.path.join(table_dir, "data", f"seq-{seq:05d}-posdeletes"),
+        snapshot_id, seq, mdir,
     )
-    # delete files carry bounds like data files (spec): a position
-    # delete's file_path min/max says which data files it can reference,
-    # so a scan materializes only the delete files that may touch its
-    # surviving candidates. Spec bounds use the reserved field ids
-    # (2147483546 file_path / 2147483545 pos).
-    _POS_DELETE_IDS = {"file_path": 2147483546, "pos": 2147483545}
-    _POS_DELETE_TYPES = {"file_path": "string", "pos": "bigint"}
-    # partitioned tables: each hive-laid-out delete file carries its
-    # one partition — typed r102 record + the engine's string maps
-    spec_id = int(doc.get("default-spec-id", 0)) if part_fields else 0
-    pfields = (
-        _partition_avro_fields(doc, pdel_ptypes, spec_id)
-        if part_fields else []
-    )
-    write_avro(
-        spark,
-        manifest_path,
-        manifest_entry_schema(pfields),
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 1,  # position deletes
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "partition": _typed_partition(pvals_of.get(p), pfields),
-                    "record_count": rows_of[p],
-                    "file_size_in_bytes": os.path.getsize(p),
-                    **_spec_stats(
-                        _POS_DELETE_IDS, _POS_DELETE_TYPES,
-                        bounds_of.get(p, ({}, {}))[0],
-                        bounds_of.get(p, ({}, {}))[1],
-                        None, rows_of[p],
-                    ),
-                    "lower_bounds_str": bounds_of.get(p, ({}, {}))[0] or None,
-                    "upper_bounds_str": bounds_of.get(p, ({}, {}))[1] or None,
-                    "bounds_types": _POS_DELETE_TYPES,
-                    "partition_values": pvals_of.get(p) or None,
-                    "partition_types": pdel_ptypes or None,
-                },
-            }
-            for p in parts
-        ],
-        meta=_manifest_header_meta(doc, spec_id, "deletes"),
-    )
-    new_row = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": spec_id,
-        "content": 1,  # delete manifest
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(parts),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n_deleted,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    rows = [new_row]
+    n_files = staged["n_files"]
+    rows = [_staged_manifest_row(staged, seq, snapshot_id)]
     summary = {
         "operation": "delete",
-        "position-delete-files": str(len(parts)),
-        "added-delete-records": str(n_deleted),
+        "position-delete-files": str(n_files),
+        "added-delete-records": str(staged["added_records"]),
     }
-    d_files, d_bytes = 0, sum(os.path.getsize(p) for p in parts)
+    d_files, d_bytes = 0, staged["added_bytes"]
     if staged_update is not None:
         rows.append(_staged_manifest_row(staged_update, seq,
                                          snapshot_id))
@@ -3597,7 +3401,7 @@ def delete_where(
         _with_totals(
             summary,
             doc, base_id,
-            d_files, d_bytes, len(parts),
+            d_files, d_bytes, n_files,
         ),
         branch=branch,
         parent_id=base_id,
@@ -4824,9 +4628,9 @@ def rewrite_position_deletes(
     scoping is by key, where seq DOES change semantics).
 
     Scale: distributed union → seq-scoped join against the live
-    (path, data_seq) list → dedup → hash-partitioned write (the same
-    no-single-task-funnel contract as _write_delete_parts); planning is
-    pure Python over the manifests. Returns the new snapshot dict, or
+    (path, data_seq) list → dedup → hash-partitioned write through
+    :func:`_stage_delete_files` (N writer tasks, never a single-task
+    funnel); planning is pure Python over the manifests. Returns the new snapshot dict, or
     None when the table has fewer than two position-delete files."""
     import time
 
@@ -4913,61 +4717,12 @@ def rewrite_position_deletes(
     )
     old_bytes = sum(os.path.getsize(p) for p, _ in pos_files)
 
-    del_dir = os.path.join(table_dir, "data", f"seq-{seq_new:05d}-posrewrite")
-    parts, rows_of, bounds_of, _pvals = _write_delete_parts(
-        survivors.repartition(F.col("file_path")), del_dir,
-        ["file_path", "pos"],
-        row_group_bytes=_POS_DELETE_ROW_GROUP_BYTES,
+    staged = _stage_delete_files(
+        spark, doc, 1, survivors, ["file_path", "pos"], [],
+        os.path.join(table_dir, "data", f"seq-{seq_new:05d}-posrewrite"),
+        snapshot_id, seq_new, mdir,
     )
-    _POS_IDS = {"file_path": 2147483546, "pos": 2147483545}
-    _POS_TYPES = {"file_path": "string", "pos": "bigint"}
-    manifest_path = os.path.join(
-        mdir, f"delete-manifest-{seq_new:05d}-{_uuid.uuid4().hex[:8]}.avro"
-    )
-    write_avro(
-        spark, manifest_path, MANIFEST_ENTRY_SCHEMA_V2,
-        [
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 1,
-                    "file_path": p,
-                    "file_format": "PARQUET",
-                    "record_count": rows_of[p],
-                    "file_size_in_bytes": os.path.getsize(p),
-                    **_spec_stats(
-                        _POS_IDS, _POS_TYPES,
-                        bounds_of.get(p, ({}, {}))[0],
-                        bounds_of.get(p, ({}, {}))[1],
-                        None, rows_of[p],
-                    ),
-                    "lower_bounds_str": bounds_of.get(p, ({}, {}))[0] or None,
-                    "upper_bounds_str": bounds_of.get(p, ({}, {}))[1] or None,
-                    "bounds_types": _POS_TYPES,
-                },
-            }
-            for p in parts
-        ],
-        meta=_manifest_header_meta(doc, 0, "deletes"),
-    )
-    n_rows = sum(rows_of.values())
-    new_bytes = sum(os.path.getsize(p) for p in parts)
-    new_row = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": 0,
-        "content": 1,
-        "sequence_number": seq_new,
-        "min_sequence_number": seq_new,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(parts),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": n_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
+    n_files = staged["n_files"]
     # carry forward every manifest EXCEPT the pure position-delete ones
     # just rewritten (a mixed/foreign delete manifest stays untouched)
     prior_rows = [
@@ -4975,17 +4730,18 @@ def rewrite_position_deletes(
         if r["manifest_path"] not in pure_pos_manifests
     ]
     return _finalize_commit(
-        table_dir, doc, prev_version, prior_rows + [new_row],
+        table_dir, doc, prev_version,
+        prior_rows + [_staged_manifest_row(staged, seq_new, snapshot_id)],
         snapshot_id, timestamp_ms, seq_new,
         _with_totals(
             {
                 "operation": "replace",
                 "rewritten-delete-files": str(len(pos_files)),
-                "added-delete-files": str(len(parts)),
-                "added-delete-records": str(n_rows),
+                "added-delete-files": str(n_files),
+                "added-delete-records": str(staged["added_records"]),
             },
             doc, doc.get("current-snapshot-id"),
-            0, new_bytes - old_bytes, len(parts) - len(pos_files),
+            0, staged["added_bytes"] - old_bytes, n_files - len(pos_files),
         ),
     )
 
@@ -5343,7 +5099,7 @@ def merge_into(
     manifest_rows = _carry_forward_rows(mdir, doc, base_id)
 
     fv = int(doc.get("format-version", 2))
-    del_parts: list[str] = []
+    eq_files = eq_bytes = 0
     dv_entries_count = 0
     dv_net_files = 0
     dv_net_bytes = 0
@@ -5427,89 +5183,14 @@ def merge_into(
     elif n_delete_keys:
         # distributed delete-key write (no coalesce(1) funnel; the keys
         # frame keeps the join's partitioning), spec-sorted per task
-        del_dir = os.path.join(table_dir, "data", f"seq-{seq:05d}-deletes")
-        mdf, mdel_fields, mdel_ptypes = _eq_delete_partition_plan(
-            doc, delete_keys
+        transforms = _delete_partition_plan(doc, dict(delete_keys.dtypes))
+        staged = _stage_delete_files(
+            spark, doc, 2, delete_keys, list(on), transforms,
+            os.path.join(table_dir, "data", f"seq-{seq:05d}-deletes"),
+            snapshot_id, seq, mdir,
         )
-        del_parts, del_rows_of, del_bounds_of, del_pvals = (
-            _write_delete_parts(
-                mdf, del_dir, list(on),
-                partition_fields=mdel_fields or None,
-            )
-        )
-        del_pvals = {
-            p: {k.removeprefix("__p_"): v for k, v in vals.items()}
-            for p, vals in del_pvals.items()
-        }
-        del_manifest = os.path.join(
-            mdir, f"delete-manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
-        )
-        eq_btypes = dict(delete_keys.dtypes)
-        name2id = _name2id(doc)
-        mdel_spec_id = (
-            int(doc.get("default-spec-id", 0)) if mdel_fields else 0
-        )
-        mdel_pfields = (
-            _partition_avro_fields(doc, mdel_ptypes, mdel_spec_id)
-            if mdel_fields else []
-        )
-        write_avro(
-            spark,
-            del_manifest,
-            manifest_entry_schema(mdel_pfields),
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": snapshot_id,
-                    "data_file": {
-                        "content": 2,  # equality deletes
-                        "file_path": p,
-                        "file_format": "PARQUET",
-                        "partition": _typed_partition(
-                            del_pvals.get(p), mdel_pfields
-                        ),
-                        "record_count": del_rows_of[p],
-                        "file_size_in_bytes": os.path.getsize(p),
-                        "equality_ids": [
-                            name2id[k] for k in eq_btypes
-                            if k in name2id
-                        ] or None,
-                        **_spec_stats(
-                            name2id, eq_btypes,
-                            del_bounds_of.get(p, ({}, {}))[0],
-                            del_bounds_of.get(p, ({}, {}))[1],
-                            None, del_rows_of[p],
-                        ),
-                        "lower_bounds_str":
-                            del_bounds_of.get(p, ({}, {}))[0] or None,
-                        "upper_bounds_str":
-                            del_bounds_of.get(p, ({}, {}))[1] or None,
-                        "bounds_types": eq_btypes,
-                        "partition_values": del_pvals.get(p) or None,
-                        "partition_types": mdel_ptypes or None,
-                    },
-                }
-                for p in del_parts
-            ],
-            meta=_manifest_header_meta(doc, mdel_spec_id, "deletes"),
-        )
-        manifest_rows.append(
-            {
-                "manifest_path": del_manifest,
-                "manifest_length": os.path.getsize(del_manifest),
-                "partition_spec_id": mdel_spec_id,
-                "content": 1,  # delete manifest
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(del_parts),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(del_rows_of.values()),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
+        eq_files, eq_bytes = staged["n_files"], staged["added_bytes"]
+        manifest_rows.append(_staged_manifest_row(staged, seq, snapshot_id))
 
     added_records = data_files = data_bytes = 0
     if to_append is not None:
@@ -5558,7 +5239,7 @@ def merge_into(
                 "added-data-files": str(data_files),
                 "added-records": str(added_records),
                 "deleted-records": str(n_deleted_rows),
-                "equality-delete-files": str(len(del_parts)),
+                "equality-delete-files": str(eq_files),
                 **(
                     {"added-dvs": str(dv_entries_count)}
                     if dv_entries_count else {}
@@ -5569,9 +5250,8 @@ def merge_into(
             },
             doc, base_id,
             data_files,
-            data_bytes + sum(os.path.getsize(p) for p in del_parts)
-            + dv_net_bytes,
-            len(del_parts) + dv_net_files,
+            data_bytes + eq_bytes + dv_net_bytes,
+            eq_files + dv_net_files,
         ),
         branch=branch,
         parent_id=base_id,

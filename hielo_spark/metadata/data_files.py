@@ -1,7 +1,8 @@
-"""The in-task data-file writer shared by both write planes.
+"""The in-task table-file writer shared by both write planes.
 
 ``commit._write_data_files`` runs :func:`write_files` inside
-``DataFrame.mapInArrow`` tasks; the ``hielo_iceberg`` DataSource writer
+``DataFrame.mapInArrow`` tasks — for data files and for position- and
+equality-delete files alike; the ``hielo_iceberg`` DataSource writer
 calls it straight from its Python worker. Either way the task streams
 its Arrow batches into parquet, split by the table's partition tuple,
 and returns one stats record per file from the one kernel below —
@@ -239,12 +240,15 @@ def _statistics_columns(schema) -> list[str]:
 
 class _OpenFile:
     """One parquet file being written: batches buffer until a full row
-    group is ready, so row groups match ``pq.write_table``'s and the
-    buffer never holds more than one row group."""
+    group of ``group_rows`` rows is ready, so row groups match
+    ``pq.write_table``'s and the buffer never holds more than one row
+    group."""
 
-    def __init__(self, path: str, partition_values: dict | None):
+    def __init__(self, path: str, partition_values: dict | None,
+                 group_rows: int):
         self.path = path
         self.partition_values = partition_values
+        self.group_rows = group_rows
         self.writer = None
         self.stats = None
         self.buf: list = []
@@ -256,7 +260,7 @@ class _OpenFile:
         self.stats.update(batch)
         self.buf.append(batch)
         self.buffered += batch.num_rows
-        if self.buffered >= ROW_GROUP_ROWS:
+        if self.buffered >= self.group_rows:
             self._flush(full_groups_only=True)
 
     def _flush(self, full_groups_only: bool = False) -> None:
@@ -264,7 +268,7 @@ class _OpenFile:
         import pyarrow.parquet as pq
 
         table = pa.Table.from_batches(self.buf)
-        keep = table.num_rows % ROW_GROUP_ROWS if full_groups_only else 0
+        keep = table.num_rows % self.group_rows if full_groups_only else 0
         out = table.slice(0, table.num_rows - keep)
         if self.writer is None:
             os.makedirs(os.path.dirname(self.path), exist_ok=True)
@@ -272,7 +276,7 @@ class _OpenFile:
                 self.path, table.schema,
                 write_statistics=_statistics_columns(table.schema),
             )
-        self.writer.write_table(out, row_group_size=ROW_GROUP_ROWS)
+        self.writer.write_table(out, row_group_size=self.group_rows)
         rest = table.slice(table.num_rows - keep)
         self.buf = rest.to_batches() if keep else []
         self.buffered = keep
@@ -330,7 +334,8 @@ def transform_partition_values(t, col) -> list:
 
 
 def write_files(batches, base_dir: str, transforms, prefix: str,
-                fanout: bool) -> tuple[list[dict], dict[str, str]]:
+                fanout: bool, row_group_rows: int = ROW_GROUP_ROWS,
+                ) -> tuple[list[dict], dict[str, str]]:
     """Stream ``batches`` into parquet under ``base_dir`` and return
     ``(records, dtypes)``: one stats record per written file (path,
     size, :class:`FileStats` maps, ``partition_values``) and the Spark
@@ -344,7 +349,16 @@ def write_files(batches, base_dir: str, transforms, prefix: str,
     for input in any order; without it the input must arrive clustered
     by partition tuple, and a file closes as soon as its tuple changes,
     so the task holds one open file. Batches with no rows write
-    nothing, so an empty task writes no file."""
+    nothing, so an empty task writes no file. Row groups hold
+    ``row_group_rows`` rows (position-delete files cut them small, so
+    a reader's ``file_path IN`` filter skips the groups of other data
+    files).
+
+    Delete files come through here too: the caller precomputes the
+    spec's partition values as columns and passes identity transforms
+    over them, named by the spec field — so those columns stay out of
+    the files, the key columns stay in, and the partition values render
+    exactly as a data file's do."""
     from urllib.parse import quote
 
     import pyarrow as pa
@@ -370,7 +384,7 @@ def write_files(batches, base_dir: str, transforms, prefix: str,
             path = os.path.join(
                 base_dir, *segs, f"{prefix}-{_uuid.uuid4().hex}.parquet"
             )
-            f = open_files[key] = _OpenFile(path, pvals)
+            f = open_files[key] = _OpenFile(path, pvals, row_group_rows)
         f.write(batch)
 
     for batch in batches:

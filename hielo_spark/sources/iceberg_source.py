@@ -137,10 +137,6 @@ def _pvals_of(f: dict) -> dict:
     }
 
 
-def _bounds_of(f: dict) -> tuple[dict, dict, dict]:
-    return f["lb"] or {}, f["ub"] or {}, f["bt"] or {}
-
-
 def _dv_ref(d: dict | None) -> tuple | None:
     """A deletion-vector entry → the (puffin path, offset, size) blob
     region a scan task reads."""
@@ -1500,16 +1496,26 @@ class HieloIcebergReader(DataSourceReader):
                     cols = [next(iter(c)) for c in cand]
             if cols is None:
                 cols = list(pq.read_schema(de["path"]).names)
-            eq_del.append((de["path"], cols, de["seq"], _bounds_of(de)))
+            eq_del.append((de["path"], cols, de["seq"], de))
 
-        def _eq_may_touch(del_bounds, data_bounds, cols) -> bool:
-            dlo, dhi, dbt = del_bounds
-            flo, fhi, fbt = data_bounds
+        def _may_hold(counts, c) -> bool:
+            return counts is None or int(counts.get(c, 1)) > 0
+
+        def _eq_may_touch(d, f, cols) -> bool:
+            dlo, dhi, dbt = d["lb"] or {}, d["ub"] or {}, d["bt"] or {}
+            flo, fhi, fbt = f["lb"] or {}, f["ub"] or {}, f["bt"] or {}
             for c in cols:
                 a_lo, a_hi = dlo.get(c), dhi.get(c)
                 b_lo, b_hi = flo.get(c), fhi.get(c)
                 if None in (a_lo, a_hi, b_lo, b_hi):
                     continue  # missing info: conservative, keep
+                # bounds leave NULL and NaN out, and a NULL (NaN) key
+                # matches a NULL (NaN) row outside both ranges
+                if _may_hold(d["nc"], c) and _may_hold(f["nc"], c):
+                    continue
+                if int((d["nanc"] or {}).get(c, 0)) \
+                        or int((f["nanc"] or {}).get(c, 0)):
+                    continue
                 if (dbt.get(c) or fbt.get(c)) in (
                     "tinyint", "smallint", "int", "bigint",
                     "float", "double", "long",
@@ -1534,7 +1540,7 @@ class HieloIcebergReader(DataSourceReader):
                 for a in (rest[0] if rest else ())
             }
             needed = set(self.out_names)
-            for _dpath, cols, _dseq, _bounds in eq_del:
+            for _dpath, cols, _dseq, _dent in eq_del:
                 for c in cols:
                     cur = c if c in {n for n, *_ in self.schema_cols} \
                         else hist2cur.get(c)
@@ -1637,12 +1643,11 @@ class HieloIcebergReader(DataSourceReader):
             # (strictly newer than the data file) and bounds-pruned on
             # the shared key columns, so a task never reads a delete
             # parquet that cannot touch its file
-            file_bounds = _bounds_of(f)
             my_eq = [
                 (dpath, cols, dseq)
-                for dpath, cols, dseq, dbounds in eq_del
+                for dpath, cols, dseq, dent in eq_del
                 if (seq is None or dseq is None or dseq > seq)
-                and _eq_may_touch(dbounds, file_bounds, cols)
+                and _eq_may_touch(dent, f, cols)
             ]
             # parquet chunk stats exclude NaN, but Spark SQL ranks NaN
             # above every double — in a file that HOLDS NaN rows

@@ -1828,7 +1828,7 @@ def test_no_single_partition_delete_write_plan(spark):
 
 
 def test_position_delete_files_carry_bounds_and_prune(spark, tmp_path):
-    """r7: position-delete files carry file_path bounds (footer-derived,
+    """r7: position-delete files carry file_path bounds (writer stats,
     spec reserved ids 2147483546/2147483545) and the read planner skips
     delete files that can't reference any surviving data file — a
     partition-scoped scan of a 100 TB table must not materialize every
@@ -2063,7 +2063,7 @@ def test_pos_delete_row_groups_keep_file_path_pruning(
 
     from hielo_spark.metadata import commit as C2
 
-    monkeypatch.setattr(C2, "_POS_DELETE_ROW_GROUP_BYTES", 4096)
+    monkeypatch.setattr(C2, "_POS_DELETE_ROW_GROUP_ROWS", 500)
     t = str(tmp_path / "t")
     df = (
         spark.range(0, 16_000)

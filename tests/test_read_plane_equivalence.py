@@ -28,6 +28,7 @@ from hielo_spark.metadata.manifests import (
     _norm_ref_path,
     _resolve,
     live_data_file_dicts,
+    live_entries,
     read_data_at_snapshot,
     select_snapshot,
 )
@@ -36,7 +37,7 @@ from hielo_spark.sources.iceberg_source import (
     _PackedScanPartition,
 )
 
-T1, T2, T3 = 1700000000000, 1700100000000, 1700200000000
+T1, T2, T3, T4 = 1700000000000, 1700100000000, 1700200000000, 1700300000000
 
 # (DataSource options, read_data_at_snapshot kwargs): current, by id,
 # by instant (between the 2nd and 3rd commits), by tag (on the 2nd)
@@ -70,7 +71,10 @@ def _rows(spark, lo, hi, value_col="a", nan=False):
 
 
 def _build(spark, t, shape):
-    part = {"identity": ["s"], "bucket": ["bucket(4, id)"]}.get(shape)
+    part = {
+        "identity": ["s"], "bucket": ["bucket(4, id)"],
+        "partdel": ["bucket(4, id)"],
+    }.get(shape)
     C.append(spark, t, _rows(spark, 0, 10, nan=shape == "nan"),
              snapshot_id=101, timestamp_ms=T1, partition_by=part)
     if shape == "dv":
@@ -85,6 +89,14 @@ def _build(spark, t, shape):
         C.delete_equality(
             spark, t, spark.createDataFrame([(3,), (14,)], "id long"),
             snapshot_id=103, timestamp_ms=T3)
+    elif shape == "partdel":
+        # the bucket source is the delete key, so both delete kinds
+        # are partition-scoped
+        C.delete_where(spark, t, "id % 4 = 0",
+                       snapshot_id=103, timestamp_ms=T3)
+        C.delete_equality(
+            spark, t, spark.createDataFrame([(3,), (14,), (17,)], "id long"),
+            snapshot_id=104, timestamp_ms=T4)
     elif shape == "rename":
         C.update_schema(t, rename={"a": "b"}, timestamp_ms=T2 + 5)
         C.append(spark, t, _rows(spark, 20, 30, value_col="b"),
@@ -142,7 +154,7 @@ def _ds_plan_paths(t, opts, schema, pushed) -> set[str]:
 @pytest.mark.parametrize(
     "shape",
     ["plain", "identity", "bucket", "posdel", "eqdel", "dv", "rename",
-     "nan"],
+     "nan", "partdel"],
 )
 def test_planes_agree(registered, tmp_path, shape):
     spark = registered
@@ -150,6 +162,17 @@ def test_planes_agree(registered, tmp_path, shape):
     _build(spark, t, shape)
     mpath = C.current_metadata_path(t)
     doc = json.load(open(mpath))
+    if shape == "partdel":
+        # every delete file lies in one data partition, its values
+        # rendered as the data files' are
+        live = live_entries(
+            _resolve(mpath, select_snapshot(doc)["manifest-list"]),
+            doc["format-version"],
+        )
+        data_pvals = [e["pvals"] for e in live if e["content"] == 0]
+        dels = [e for e in live if e["content"] != 0]
+        assert {e["content"] for e in dels} == {1, 2}
+        assert all(d["pvals"] in data_pvals for d in dels), dels
     for sel, (opts, kwargs) in SELECTORS.items():
         ds = spark.read.format("hielo_iceberg").options(**opts).load(t)
         v = "x" if shape == "nan" else ("b" if "b" in ds.columns else "a")

@@ -16,6 +16,7 @@ from hielo_spark.metadata import commit as C
 from hielo_spark.metadata.manifests import (
     files_from_manifest_list,
     live_data_file_dicts,
+    live_entries,
     read_data_at_snapshot,
 )
 
@@ -205,3 +206,149 @@ def test_streamed_file_keeps_write_table_row_groups(tmp_path):
     assert rec["record_count"] == n and dtypes == {"id": "bigint"}
     assert (rec["lower_bounds"], rec["upper_bounds"]) == (
         {"id": "0"}, {"id": str(n - 1)})
+
+
+@pytest.mark.parametrize("odd", [NAN, None], ids=["nan", "null"])
+def test_odd_equality_key_deletes_on_both_planes(registered, tmp_path, odd):
+    """A delete file's key bounds leave NaN and NULL out (its NaN and
+    null counts record them), so x ∈ [100, 100] beside a NaN (NULL) key
+    must not read as disjoint from a data file whose x ∈ [1, 2] also
+    holds a NaN (NULL) row."""
+    spark = registered
+    t = str(tmp_path / "t")
+    C.append(spark, t, spark.createDataFrame(
+        [(1, 1.0), (2, 2.0), (3, odd)], "id int, x double").coalesce(1),
+        snapshot_id=101, timestamp_ms=1700000000000)
+    C.delete_equality(spark, t, spark.createDataFrame(
+        [(odd,), (100.0,)], "x double").coalesce(1),
+        snapshot_id=102, timestamp_ms=1700000001000)
+    jvm = read_data_at_snapshot(spark, C.current_metadata_path(t))
+    assert sorted(r.id for r in jvm.collect()) == [1, 2]
+    ds = spark.read.format("hielo_iceberg").load(t)
+    assert sorted(r.id for r in ds.collect()) == [1, 2]
+
+
+def _ids(spark, t) -> list[int]:
+    return sorted(
+        r.id for r in read_data_at_snapshot(
+            spark, C.current_metadata_path(t)).collect()
+    )
+
+
+def test_delete_writers_never_read_footers(spark, tmp_path, monkeypatch):
+    """Every delete writer takes its stats from the in-task writer:
+    position deletes (``delete_where`` and ``rewrite_position_deletes``)
+    and equality deletes (``delete_equality`` and a v2 ``merge_into``)
+    commit with the footer reader unavailable."""
+    def no_footers(*_a, **_k):
+        raise AssertionError("delete writers must not read footers")
+
+    monkeypatch.setattr(C, "_footer_file_stats", no_footers)
+    t = str(tmp_path / "t")
+    C.append(spark, t, spark.range(0, 20).selectExpr("id", "id * 2 AS v"),
+             snapshot_id=101, timestamp_ms=1700000000000)
+    C.delete_where(spark, t, "id % 5 = 0",
+                   snapshot_id=102, timestamp_ms=1700000001000)
+    C.delete_where(spark, t, "id = 7",
+                   snapshot_id=103, timestamp_ms=1700000002000)
+    assert C.rewrite_position_deletes(
+        spark, t, snapshot_id=104, timestamp_ms=1700000003000) is not None
+    C.delete_equality(spark, t, spark.createDataFrame([(3,)], "id bigint"),
+                      snapshot_id=105, timestamp_ms=1700000004000)
+    C.merge_into(spark, t, spark.createDataFrame(
+        [(4, 400), (99, 990)], "id bigint, v bigint"), on=["id"],
+        snapshot_id=106, timestamp_ms=1700000005000)
+    assert _ids(spark, t) == [
+        1, 2, 4, 6, 8, 9, 11, 12, 13, 14, 16, 17, 18, 19, 99]
+    (eq,) = [e for e in live_entries(*_current_list(t))
+             if e["content"] == 2 and e["sid"] == 106]
+    assert eq["equality_ids"] == [1] and eq["records"] == 1
+
+
+def test_delete_files_come_back_from_their_write_job(
+    spark, tmp_path, monkeypatch
+):
+    """Delete files come back with their stats from the job that writes
+    them, with no re-read: an equality-delete write is one Spark job; a
+    position-delete write adds only its ``file_path`` hash-partition
+    shuffle, which adaptive execution runs as a job of its own. The
+    whole ``delete_where`` (candidate scan included) stays within 3."""
+    t = str(tmp_path / "t")
+    C.append(spark, t, spark.range(0, 100).selectExpr("id", "id * 2 AS v"),
+             snapshot_id=101, timestamp_ms=1700000000000)
+    st = spark.sparkContext.statusTracker()
+    write_jobs = []
+    real = C._write_data_files
+
+    def counted(*a, **k):
+        before = set(st.getJobIdsForGroup(None))
+        out = real(*a, **k)
+        write_jobs.append(len(set(st.getJobIdsForGroup(None)) - before))
+        return out
+
+    monkeypatch.setattr(C, "_write_data_files", counted)
+    before = set(st.getJobIdsForGroup(None))
+    C.delete_where(spark, t, "id % 3 = 0",
+                   snapshot_id=102, timestamp_ms=1700000001000)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert write_jobs == [2]
+    assert len(set(st.getJobIdsForGroup(None)) - before) <= 3
+    C.delete_equality(spark, t, spark.createDataFrame([(1,)], "id bigint"),
+                      snapshot_id=103, timestamp_ms=1700000002000)
+    assert write_jobs == [2, 1]
+    assert _ids(spark, t) == [i for i in range(100) if i % 3 and i != 1]
+
+
+def test_table_files_have_one_writer():
+    """Table files are written only by ``data_files.write_files``: no
+    module under ``hielo_spark/metadata`` or ``hielo_spark/sources``
+    calls a ``DataFrameWriter``'s ``.parquet(...)`` or globs Spark's
+    ``part-*.parquet`` output back."""
+    import ast
+    import pathlib
+
+    import hielo_spark
+
+    def chain(node):
+        """Attribute names along a call receiver, and its root node."""
+        names = []
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Call):
+                node = node.func
+            else:
+                names.append(node.attr)
+                node = node.value
+        return names, node
+
+    def is_writer(node, writers):
+        names, root = chain(node)
+        return bool({"write", "writeStream"} & set(names)) or (
+            isinstance(root, ast.Name) and root.id in writers
+        )
+
+    root = pathlib.Path(hielo_spark.__file__).parent
+    found = []
+    for sub in ("metadata", "sources"):
+        for path in sorted((root / sub).glob("*.py")):
+            tree = ast.parse(path.read_text())
+            writers = {
+                tgt.id
+                for node in ast.walk(tree) if isinstance(node, ast.Assign)
+                and is_writer(node.value, set())
+                for tgt in node.targets if isinstance(tgt, ast.Name)
+            }
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                fn = node.func
+                name = getattr(fn, "attr", getattr(fn, "id", None))
+                if name == "parquet" and isinstance(fn, ast.Attribute) \
+                        and is_writer(fn.value, writers):
+                    found.append((path.name, node.lineno, ".parquet("))
+                if name in ("glob", "iglob") and any(
+                    isinstance(c, ast.Constant) and isinstance(c.value, str)
+                    and "part-*" in c.value
+                    for a in node.args for c in ast.walk(a)
+                ):
+                    found.append((path.name, node.lineno, "part-* glob"))
+    assert found == []
