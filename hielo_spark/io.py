@@ -239,18 +239,6 @@ def synth_partsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    out = {t: load_table(spark, sf_dir, t) for t in TABLES}
-    out["partsupp"] = synth_partsupp(spark, sf_dir)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for spark.sql use."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def write_table(
     df: DataFrame,
     path: str,

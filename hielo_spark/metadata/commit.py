@@ -788,19 +788,26 @@ def _record_table_shape(
     doc: dict, dtypes: dict[str, str], transforms,
     variant_cols: set[str] | frozenset[str] = frozenset(),
 ) -> None:
-    """First commit on a fresh table: record the Iceberg ``schemas`` /
+    """Keep the table metadata's schema authoritative for a write of a
+    frame with ``dtypes`` — every read plane scans under it, never
+    under parquet footers.
+
+    First commit on a fresh table: record the Iceberg ``schemas`` /
     ``partition-specs`` blocks in the metadata document so the schema
     plane (J1/J2: schemas_from_metadata_json, partition_source_join)
     reads our own tables like any Iceberg table's. Field ids are
     assigned in column order from 1; partition field ids from 1000
     (both per the spec's conventions). Decimal/nested types pass
     through their SQL rendering (display-compatible with
-    parse_metadata_document's fallback). Later appends never rewrite
-    the shape (schema evolution is add-column via mergeSchema on the
-    read side, documented)."""
+    parse_metadata_document's fallback).
+
+    Later writes never rewrite existing fields, but a frame carrying
+    columns the current schema lacks records add-column evolution in
+    the same commit (:func:`_record_added_columns`)."""
     if "schemas" in doc:
+        _record_added_columns(doc, dtypes, variant_cols)
         return
-    from .types import max_field_id, sql_to_iceberg
+    from .types import sql_to_iceberg
 
     field_id = {c: i + 1 for i, c in enumerate(dtypes)}
     # nested element/key/value/struct-field ids are allocated ABOVE the
@@ -855,6 +862,64 @@ def _record_table_shape(
     # nested ids count toward the tracker too (next_id followed them)
     doc["last-column-id"] = next_id[0]
     doc["last-partition-id"] = 999 + len(transforms)
+
+
+def _record_added_columns(
+    doc: dict, dtypes: dict[str, str],
+    variant_cols: set[str] | frozenset[str] = frozenset(),
+) -> None:
+    """Add-column evolution by write: the frame's columns the current
+    schema lacks (by case-insensitive name, Spark's resolution rule)
+    become a NEW schema — the current fields plus one optional field
+    each, with fresh ids above ``last-column-id`` (nested ids too) —
+    and ``current-schema-id`` moves to it, so the snapshot this commit
+    adds records it and time travel to earlier snapshots keeps their
+    narrower shape. The reserved v3 lineage columns are never added,
+    nor a name an earlier schema gave to another field: pre-rename
+    files carry that name, and reading it as a new column would
+    misattribute their data (the write resolves through the rename
+    history instead, as before)."""
+    from .metadata_json import current_schema_block
+    from .types import max_field_id, sql_to_iceberg
+
+    cur = current_schema_block(doc) if doc.get("schemas") else None
+    if cur is None:
+        return
+    taken = {
+        f["name"].lower() for s in doc["schemas"] for f in s.get("fields", [])
+    }
+    added = [
+        (c, t) for c, t in dtypes.items()
+        if c.lower() not in taken
+        and c not in ("_row_id", "_last_updated_sequence_number")
+    ]
+    if not added:
+        return
+    next_id = [max([
+        int(doc.get("last-column-id", 0)),
+        *(
+            max(int(f["id"]), max_field_id(f["type"]))
+            for s in doc["schemas"] for f in s.get("fields", [])
+        ),
+    ])]
+
+    def alloc() -> int:
+        next_id[0] += 1
+        return next_id[0]
+
+    fields = list(cur.get("fields", []))
+    for c, t in added:
+        fid = alloc()
+        fields.append({
+            "id": fid, "name": c, "required": False,
+            "type": "variant" if c in variant_cols else sql_to_iceberg(t, alloc),
+        })
+    new_sid = max(int(s.get("schema-id", 0)) for s in doc["schemas"]) + 1
+    doc["schemas"] = doc["schemas"] + [
+        {**cur, "schema-id": new_sid, "fields": fields}
+    ]
+    doc["current-schema-id"] = new_sid
+    doc["last-column-id"] = next_id[0]
 
 
 def _variant_encode_udf(spark):
@@ -1546,9 +1611,13 @@ def _stage_files_manifest(
     deletes = content != 0
     mode = None if deletes else _metrics_mode_of(doc)
     name2id = _POS_DELETE_IDS if content == 1 else _name2id(doc)
+    # every key column must map to a field id: a partial list would
+    # make readers key the delete on fewer columns than it was written
+    # with (readers fall back to the file's own column names)
     equality_ids = (
-        [name2id[c] for c in dtypes if c in name2id] or None
-        if content == 2 else None
+        [name2id[c] for c in dtypes]
+        if content == 2 and dtypes and all(c in name2id for c in dtypes)
+        else None
     )
 
     def counts(m: dict | None) -> dict | None:
@@ -2694,6 +2763,7 @@ def _stage_delete_files(
     snapshot_id: int,
     seq: int,
     mdir: str,
+    ptypes: dict | None = None,
 ) -> dict:
     """Write ``src.select(*cols)`` as delete files and stage their
     delete manifest — the one delete-file writer behind
@@ -2713,7 +2783,10 @@ def _stage_delete_files(
     spec field: every delete file belongs to exactly ONE partition —
     the spec's partition-scoped delete files, which the partition-stats
     plane attributes by — and the twins, not the key columns, stay out
-    of the parquet. Returns :func:`_stage_files_manifest`'s dict."""
+    of the parquet. A twin ``src`` already carries is used as it is:
+    ``rewrite_position_deletes`` takes them from the target data files'
+    manifest entries and passes those entries' ``ptypes``. Returns
+    :func:`_stage_files_manifest`'s dict."""
     from .transforms import PartitionTransform
 
     twins = []
@@ -2725,7 +2798,8 @@ def _stage_delete_files(
     if src is not None:
         sdt = dict(src.dtypes)
         df = src.select(*cols, *[
-            t.expr(sdt[t.source]).alias(w.source)
+            w.source if w.source in sdt
+            else t.expr(sdt[t.source]).alias(w.source)
             for t, w in zip(transforms, twins)
         ])
         kdt = dict(df.dtypes[:len(cols)])
@@ -2738,7 +2812,8 @@ def _stage_delete_files(
             ),
         )
     spec_id = int(doc.get("default-spec-id", 0)) if transforms else 0
-    ptypes = _partition_types(transforms, sdt)
+    if ptypes is None:
+        ptypes = _partition_types(transforms, sdt)
     return _stage_files_manifest(
         doc, files, kdt, snapshot_id, seq, mdir, spec_id,
         _partition_avro_fields(doc, ptypes, spec_id) if transforms else [],
@@ -4627,16 +4702,25 @@ def rewrite_position_deletes(
     applies identically. Equality-delete files are untouched (their
     scoping is by key, where seq DOES change semantics).
 
-    Scale: distributed union → seq-scoped join against the live
-    (path, data_seq) list → dedup → hash-partitioned write through
-    :func:`_stage_delete_files` (N writer tasks, never a single-task
-    funnel); planning is pure Python over the manifests. Returns the new snapshot dict, or
-    None when the table has fewer than two position-delete files."""
+    The rewritten files keep partition scoping: each surviving row
+    lands in the delete file of its target data file's partition.
+
+    Scale: one scan of every delete file under the spec's fixed
+    ``file_path, pos`` schema → seq-scoped join against the live
+    (path, data_seq, partition) list → dedup → hash-partitioned write
+    through :func:`_stage_delete_files` (N writer tasks, never a
+    single-task funnel); planning is pure Python over the manifests.
+    Returns the new snapshot dict, or None when the table has fewer
+    than two position-delete files."""
     import time
 
-    from pyspark.sql import functions as F
-
-    from .manifests import decode_manifest, inherited_seq_of, read_avro_file, _resolve
+    from .manifests import (
+        _resolve,
+        decode_manifest,
+        inherited_seq_of,
+        read_avro_file,
+        read_position_deletes,
+    )
 
     doc, prev_version = _load_doc(table_dir)
     if doc.get("current-snapshot-id") is None:
@@ -4651,8 +4735,8 @@ def rewrite_position_deletes(
     )
     fv = doc.get("format-version", 2)
     _, _, mlist_rows = read_avro_file(mlist)
-    pos_files: list[tuple[str, int | None]] = []  # (path, delete seq)
-    live_paths: list[tuple[str, int | None]] = []  # (path, data seq)
+    pos_files: list[dict] = []  # {path, seq} of each delete file
+    live_files: list[tuple] = []  # (path, data seq, spec id, pvals, ptypes)
     pure_pos_manifests: set[str] = set()
     for m in mlist_rows:
         entries = decode_manifest(
@@ -4662,7 +4746,7 @@ def rewrite_position_deletes(
         kinds = set()
         for e in entries:
             (status, _sid, fpath, _fmt, _rec, _size, fcontent, seq,
-             *_rest) = e
+             pvals, ptypes, *_rest) = e
             dv = e[15]
             if status == 2:
                 continue
@@ -4673,9 +4757,14 @@ def rewrite_position_deletes(
             # carry-forward
             kinds.add("dv" if dv is not None else fcontent)
             if fcontent == 0:
-                live_paths.append((fpath.removeprefix("file:"), seq))
+                live_files.append((
+                    fpath.removeprefix("file:"), seq,
+                    int(m.get("partition_spec_id") or 0), pvals, ptypes,
+                ))
             elif fcontent == 1 and dv is None:
-                pos_files.append((fpath.removeprefix("file:"), seq))
+                pos_files.append(
+                    {"path": fpath.removeprefix("file:"), "seq": seq}
+                )
         if kinds == {1}:
             pure_pos_manifests.add(m["manifest_path"])
     if len(pos_files) < 2:
@@ -4690,16 +4779,31 @@ def rewrite_position_deletes(
         timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
     )
 
-    merged = None
-    for p, dseq in pos_files:
-        one = spark.read.parquet(p).select(
-            "file_path", F.col("pos").cast("long").alias("pos"),
-            F.lit(dseq).cast("long").alias("_dseq"),
-        )
-        merged = one if merged is None else merged.unionByName(one)
+    # partition scoping: each surviving row takes its target data file's
+    # partition values (from that file's manifest entry) as the
+    # ``__p_<field>`` twins _stage_delete_files writes by — one delete
+    # file per partition under the default spec. When live data files
+    # span other specs the rewrite stays global, which is always correct.
+    default_spec = int(doc.get("default-spec-id", 0))
+    transforms = _spec_transforms_from_doc(doc)
+    ptypes = next((pt for *_, pt in live_files if pt), None)
+    if ptypes is None or any(
+        spec != default_spec for _, _, spec, _, _ in live_files
+    ):
+        transforms = []
+    twins = [f"__p_{t.field}" for t in transforms]
     live_df = local_frame(
-        spark, live_paths, "live_path string, data_seq long"
+        spark,
+        [
+            (p, dseq, *[(pv or {}).get(t.field) for t in transforms])
+            for p, dseq, _, pv, _ in live_files
+        ],
+        ", ".join([
+            "live_path string", "data_seq long",
+            *[f"`{w}` string" for w in twins],
+        ]),
     )
+    merged = read_position_deletes(spark, pos_files)
     from .metadata_json import _strip_scheme
 
     cond = (
@@ -4712,15 +4816,15 @@ def rewrite_position_deletes(
         )
     )
     survivors = (
-        merged.join(live_df, cond, "left_semi")
-        .select("file_path", "pos").distinct()
+        merged.join(live_df, cond)
+        .select("file_path", "pos", *twins).distinct()
     )
-    old_bytes = sum(os.path.getsize(p) for p, _ in pos_files)
+    old_bytes = sum(os.path.getsize(d["path"]) for d in pos_files)
 
     staged = _stage_delete_files(
-        spark, doc, 1, survivors, ["file_path", "pos"], [],
+        spark, doc, 1, survivors, ["file_path", "pos"], transforms,
         os.path.join(table_dir, "data", f"seq-{seq_new:05d}-posrewrite"),
-        snapshot_id, seq_new, mdir,
+        snapshot_id, seq_new, mdir, ptypes=ptypes,
     )
     n_files = staged["n_files"]
     # carry forward every manifest EXCEPT the pure position-delete ones

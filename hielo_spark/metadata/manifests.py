@@ -847,6 +847,48 @@ def _prune_pos_deletes(
     return [d for d in pos_delete_files if may_reference(d)]
 
 
+def _pos_deletes_predate_files(
+    pos_delete_files: list[dict], dv_best: dict[str, dict],
+    data_files: list[dict],
+) -> bool:
+    """Whether some position-delete file or deletion vector may
+    reference a data file with a HIGHER sequence number, so that the
+    spec's ``delete_seq >= data_seq`` scoping must be applied per row.
+    Decided from the manifests: a delete file may reference the data
+    files inside its ``file_path`` bounds (every file when it has none,
+    as in :func:`_prune_pos_deletes`), a DV its one referenced file. A
+    null sequence number on either side applies, as the row rule does."""
+    import bisect
+
+    def norm(s: str) -> str:
+        return s[5:] if s.startswith("file:") else s
+
+    files = sorted((norm(f["path"]), f["seq"]) for f in data_files)
+    paths = [p for p, _ in files]
+
+    def later(dseq, seqs) -> bool:
+        return dseq is not None and any(
+            s is not None and s > dseq for s in seqs
+        )
+
+    for d in pos_delete_files:
+        lo = (d.get("lb") or {}).get("file_path")
+        hi = (d.get("ub") or {}).get("file_path")
+        span = files
+        if lo is not None and hi is not None:
+            lo, hi = norm(lo), norm(hi)
+            if lo.startswith("/") and hi.startswith("/"):
+                span = files[
+                    bisect.bisect_left(paths, lo):bisect.bisect_right(paths, hi)
+                ]
+        if later(d["seq"], (s for _, s in span)):
+            return True
+    seq_of = dict(files)
+    return any(
+        later(d["seq"], [seq_of.get(norm(p))]) for p, d in dv_best.items()
+    )
+
+
 def _dv_per_file(
     pos_entries: list[dict], data_paths, table_root: str | None = None
 ) -> dict[str, dict]:
@@ -893,58 +935,74 @@ def _row_predicate(skip_filter: tuple):
     }[op]
 
 
-def evolved_read_plan(
-    doc: dict, schema_id: int | None = None
-) -> tuple[list[tuple] | None, dict[str, list[str]] | None]:
-    """``(schema_cols, aliases)`` for reading data files under an
-    evolved table schema, or ``(None, None)`` for the single-schema fast
-    path (behavior unchanged). ``schema_cols`` is ``[(name, spark_ddl)]``
-    of the requested schema's fields in order; ``aliases`` maps a field's
-    CURRENT name to its older names (most recent first) collected by
-    field-id across the schema history — our parquet files carry no
-    Iceberg field ids, so renamed columns resolve through this
-    name-mapping fallback (the spec's ``schema.name-mapping.default``
-    mechanism) instead of id-based column resolution.
-
-    A ``schema.name-mapping.default`` table property (spec Appendix C)
-    extends each field's fallback list with its MAPPED physical names —
-    the case where the parquet names never matched ANY Iceberg schema
-    name (foreign Hive/Spark imports). Its presence also forces the
-    explicit-schema plan on single-schema tables: the mergeSchema fast
-    path would surface the foreign physical names as data columns and
-    read the Iceberg names as null."""
-    from .metadata_json import parse_name_mapping
-
-    schemas = doc.get("schemas") or []
-    nmap = parse_name_mapping(doc)
-    if len(schemas) < 2 and not nmap:
-        return None, None
-    sid = schema_id if schema_id is not None else doc.get("current-schema-id", 0)
-    target = next((s for s in schemas if s.get("schema-id") == sid), None)
-    if target is None:
-        return None, None
-    cols: list[tuple] = []
+def _scan_ddl(t) -> str:
+    """The Spark DDL a table column scans under: v3 variant rides in its
+    parquet shape and geometry/geography as WKB binary (the read plane
+    decodes both after the scan); every other type is
+    :func:`types.iceberg_to_ddl`'s, which names any type it cannot map."""
     from .types import iceberg_to_ddl
 
-    for f in target.get("fields", []):
-        t = f["type"]
-        if t == "variant":
-            # v3 variant rides the scan as its parquet shape; the read
-            # plane decodes it to JSON strings after the scan
-            ddl = "struct<metadata:binary,value:binary>"
-        elif isinstance(t, str) and t.split("(")[0] in (
-            "geometry", "geography"
-        ):
-            # v3 geometry/geography: WKB binary in parquet; the read
-            # plane decodes to WKT strings after the scan
-            ddl = "binary"
-        else:
-            try:
-                ddl = iceberg_to_ddl(t)  # nested types render as DDL
-            except ValueError:
-                return None, None  # unknown kind: fall back to mergeSchema
-        cols.append((f["name"], ddl))
-    return cols, historical_names(doc, target)
+    if t == "variant":
+        return "struct<metadata:binary,value:binary>"
+    if isinstance(t, str) and t.split("(")[0] in ("geometry", "geography"):
+        return "binary"
+    return iceberg_to_ddl(t)
+
+
+def evolved_read_plan(
+    doc: dict, schema_id: int | None = None, data_files: list[dict] = (),
+) -> tuple[list[tuple], dict[str, list[str]]]:
+    """``(schema_cols, aliases)``: the one schema plan every DataFrame-
+    plane read of data files scans under (snapshot reads, incremental
+    and changelog scans, DELETE/MERGE candidate scans), taken from the
+    table metadata, never from parquet footers. ``schema_cols`` is
+    ``[(name, spark_ddl)]`` of the requested schema's fields in order
+    (``schema_id``; the current schema when it is None or unknown);
+    ``aliases`` maps a field's CURRENT name to its older names (most
+    recent first) collected by field-id across the schema history, and
+    is empty when nothing was renamed — our parquet files carry no
+    Iceberg field ids, so renamed columns resolve through this
+    name-mapping fallback (the spec's ``schema.name-mapping.default``
+    mechanism) instead of id-based column resolution. A
+    ``schema.name-mapping.default`` table property (spec Appendix C)
+    extends each field's fallback list with its MAPPED physical names —
+    the case where the parquet names never matched ANY Iceberg schema
+    name (foreign Hive/Spark imports).
+
+    Metadata that records no schema at all (malformed, or a synthetic
+    fixture) plans from ``data_files`` instead: the union of their
+    parquet footers' columns (read by pyarrow on the driver, no Spark
+    job), then their identity partition columns; with no files
+    it raises ValueError. A column type with no Spark mapping raises
+    :class:`types.UnsupportedIcebergType`."""
+    from .metadata_json import current_schema_block
+
+    sid = schema_id if schema_id is not None else doc.get("current-schema-id", 0)
+    target = next(
+        (s for s in doc.get("schemas") or [] if s.get("schema-id") == sid),
+        None,
+    ) or current_schema_block(doc)
+    if (target or {}).get("fields"):
+        cols = [(f["name"], _scan_ddl(f["type"])) for f in target["fields"]]
+        return cols, historical_names(doc, target)
+    if not data_files:
+        raise ValueError("table metadata records no schema to read under")
+    import pyarrow.dataset as pads
+
+    from .types import arrow_to_ddl
+
+    plan: dict[str, str] = {}
+    for f in data_files:
+        # a dataset, not one footer: a foreign "file" may be a directory
+        for fld in pads.dataset(f["path"], format="parquet").schema:
+            if fld.name not in ("_row_id", "_last_updated_sequence_number"):
+                plan.setdefault(fld.name, arrow_to_ddl(fld.type))
+    for f in data_files:
+        for k in f["pvals"] or {}:
+            pt = (f["ptypes"] or {}).get(k, "string")
+            if not pt.startswith("transform:"):
+                plan.setdefault(k, pt)
+    return list(plan.items()), {}
 
 
 def schema_defaults(
@@ -1008,15 +1066,18 @@ def _read_files_with_partitions(
     spark: SparkSession,
     data_files: list[dict],
     row_coords: str = "fp_pos",
-    schema_cols: list[tuple] | None = None,
-    aliases: dict[str, list[str]] | None = None,
+    *,
+    schema_cols: list[tuple],
+    aliases: dict[str, list[str]],
 ) -> DataFrame:
     """Read a list of file dicts (as produced by files_from_manifest_list
-    consumption: path/pvals/ptypes keys), grouped by partition tuple:
+    consumption: path/pvals/ptypes keys) under the explicit schema plan
+    of :func:`evolved_read_plan`, grouped by partition tuple:
     partitionBy-written files don't carry the partition columns in the
     parquet, so each group re-attaches them as typed literals from the
     manifest metadata (group count = live partitions — planning-plane,
-    like any planner's per-partition scan groups).
+    like any planner's per-partition scan groups). The schema comes
+    from the table metadata, so building the frame starts no Spark job.
 
     ``row_coords`` controls the _fp/_pos metadata columns delete
     application joins on: "fp_pos" (position deletes need both), "fp"
@@ -1042,32 +1103,20 @@ def _read_files_with_partitions(
         "fp": [lambda: _strip_scheme(F.col("_metadata.file_path")).alias("_fp")],
         "none": [],
     }[row_coords]
-    # with an evolved schema the read is EXPLICIT-schema (not
-    # mergeSchema): Spark 4's parquet reader promotes int32→int64 /
-    # float→double per the requested type (mergeSchema refuses to merge
-    # them), absent columns (added after a file was written, or dropped
-    # names) come back null, and renamed columns ride along under their
+    # Spark 4's parquet reader promotes int32→int64 / float→double per
+    # the requested type, columns a file lacks (added after it was
+    # written, or dropped names) come back null — the Iceberg read rule
+    # for added fields — and renamed columns ride along under their
     # historical names (aliases) to be coalesced below
-    read_schema = None
-    if schema_cols is not None:
-        read_fields = list(schema_cols)
-        declared = {n for n, _ in read_fields}
-        for new, olds in (aliases or {}).items():
-            ddl = dict(schema_cols)[new]
-            read_fields += [(o, ddl) for o in olds if o not in declared]
-        read_schema = ", ".join(f"`{n}` {t}" for n, t in read_fields)
+    read_fields = list(schema_cols)
+    declared = {n for n, _ in read_fields}
+    for new, olds in aliases.items():
+        ddl = dict(schema_cols)[new]
+        read_fields += [(o, ddl) for o in olds if o not in declared]
+    read_schema = ", ".join(f"`{n}` {t}" for n, t in read_fields)
     parts = []
     for key, fs in groups.items():
-        # mergeSchema: add-column schema evolution — files written before
-        # the column carry null for it, exactly the Iceberg read behavior
-        # for added fields; a snapshot containing only pre-evolution files
-        # never surfaces the column (its file set IS its schema here)
-        reader = (
-            spark.read.schema(read_schema)
-            if read_schema is not None
-            else spark.read.option("mergeSchema", "true")
-        )
-        g = reader.parquet(
+        g = spark.read.schema(read_schema).parquet(
             *[f["path"] for f in fs]
         ).select("*", *[mk() for mk in meta_cols])
         if key:
@@ -1090,26 +1139,18 @@ def _read_files_with_partitions(
     data = parts[0]
     for g in parts[1:]:
         data = data.unionByName(g, allowMissingColumns=True)
-    if schema_cols is None:
-        # v3 compaction materializes the RESERVED lineage columns into
-        # rewritten parquet (spec metadata columns — user columns can
-        # never carry these names); a plain mergeSchema read must not
-        # surface them as data
-        data = data.drop("_row_id", "_last_updated_sequence_number")
-    if schema_cols is not None:
-        # resolve renames: a row came from a pre-rename file iff the new
-        # name is null and an old name is set (they never coexist in one
-        # file), then project to exactly the requested schema's columns
-        for new, olds in (aliases or {}).items():
-            present = [o for o in olds if o in data.columns]
-            if present:
-                data = data.withColumn(new, F.coalesce(new, *present))
-        keep = [n for n, _ in schema_cols] + (
-            ["_fp", "_pos"] if row_coords == "fp_pos"
-            else (["_fp"] if row_coords == "fp" else [])
-        )
-        data = data.select(*keep)
-    return data
+    # resolve renames: a row came from a pre-rename file iff the new
+    # name is null and an old name is set (they never coexist in one
+    # file), then project to exactly the requested schema's columns
+    for new, olds in aliases.items():
+        present = [o for o in olds if o in data.columns]
+        if present:
+            data = data.withColumn(new, F.coalesce(new, *present))
+    keep = [n for n, _ in schema_cols] + (
+        ["_fp", "_pos"] if row_coords == "fp_pos"
+        else (["_fp"] if row_coords == "fp" else [])
+    )
+    return data.select(*keep)
 
 
 #: (path, mtime_ns, size) → variant shape tuple; see _cached_vshape
@@ -1161,41 +1202,39 @@ def _variant_json_udf(spark):
     return _vjson
 
 
-def _empty_read_frame(spark, doc, read_schema_id, row_lineage):
-    """Zero-row frame in read_data_at_snapshot's OUTPUT shape (variant
-    decodes to JSON string, geometry/geography to WKT string, lineage
-    appends the two v3 columns) — the valid result of a filter no live
-    file can satisfy. None when the doc records no usable schema."""
-    from .metadata_json import current_schema_block
-    from .types import iceberg_to_ddl
-
-    blk = next(
-        (
-            s for s in doc.get("schemas", [])
-            if s.get("schema-id") == read_schema_id
-        ),
-        None,
-    ) or current_schema_block(doc)
-    if blk is None or not blk.get("fields"):
-        return None
-    cols = []
-    for f in blk["fields"]:
-        t = f["type"]
-        if t == "variant" or (
-            isinstance(t, str)
-            and t.split("(")[0] in ("geometry", "geography")
-        ):
-            ddl = "string"  # post-decode rendering (JSON / WKT)
-        else:
-            try:
-                ddl = iceberg_to_ddl(t)
-            except ValueError:
-                return None
-        cols.append(f"`{f['name']}` {ddl}")
+def _empty_read_frame(spark, schema_cols, decoded, row_lineage):
+    """Zero-row frame in read_data_at_snapshot's OUTPUT shape: the
+    ``decoded`` columns (variant → JSON, geometry/geography → WKT) are
+    strings, lineage appends the two v3 columns — the valid result of a
+    filter no live file can satisfy."""
+    cols = [
+        f"`{n}` {'string' if n in decoded else ddl}"
+        for n, ddl in schema_cols
+    ]
     if row_lineage:
         cols += ["`_row_id` bigint",
                  "`_last_updated_sequence_number` bigint"]
     return local_frame(spark, [], ", ".join(cols))
+
+
+def read_position_deletes(spark: SparkSession, entries: list[dict]) -> DataFrame:
+    """Position-delete files read under the spec's fixed ``file_path
+    string, pos bigint`` schema (no footer inference), with each row's
+    delete sequence number as ``_dseq`` from the files' manifest
+    ``entries``: one scan per sequence number — per delete commit, not
+    per file — carrying it as a literal. A path → seq map joined in
+    instead would cost a broadcast, and a broadcast of even a driver-held
+    LocalRelation runs a Spark job of its own."""
+    by_seq: dict = {}
+    for d in entries:
+        by_seq.setdefault(d["seq"], []).append(d["path"])
+    out = None
+    for seq, paths in by_seq.items():
+        one = spark.read.schema("file_path string, pos bigint").parquet(
+            *paths
+        ).withColumn("_dseq", F.lit(seq).cast("long"))
+        out = one if out is None else out.unionByName(one)
+    return out
 
 
 def read_data_at_snapshot(
@@ -1282,10 +1321,20 @@ def read_data_at_snapshot(
     # LATEST reads scan under the current schema, time travel under the
     # snapshot's (read_schema_block)
     time_travel = any(x is not None for x in (snapshot_id, as_of_ms, ref))
-    read_schema_id = (
-        read_schema_block(doc, chosen if time_travel else None) or {}
-    ).get("schema-id")
-    schema_cols, aliases = evolved_read_plan(doc, read_schema_id)
+    read_block = read_schema_block(doc, chosen if time_travel else None) or {}
+    read_schema_id = read_block.get("schema-id")
+    schema_cols, aliases = evolved_read_plan(doc, read_schema_id, data_files)
+    # v3 variant / geometry / geography columns scan in their parquet
+    # shape and decode to JSON / WKT strings after the scan
+    read_fields = read_block.get("fields", [])
+    variant_names = [
+        f["name"] for f in read_fields if f.get("type") == "variant"
+    ]
+    geo_names = [
+        f["name"] for f in read_fields
+        if isinstance(f.get("type"), str)
+        and f["type"].split("(")[0] in ("geometry", "geography")
+    ]
 
     # partition pruning: drop files whose manifest partition values
     # contradict the filter BEFORE any scan is planned — the same
@@ -1321,13 +1370,8 @@ def read_data_at_snapshot(
             # a partition value no live file carries is a VALID empty
             # result, not an error (r12 — same treatment as
             # skip_filter below)
-            empty = _empty_read_frame(spark, doc, read_schema_id, row_lineage)
-            if empty is not None:
-                return empty
-            raise ValueError(
-                f"partition filter {partition_filter} prunes every file of "
-                f"snapshot {chosen['snapshot-id']} and the metadata "
-                "carries no schema to shape an empty result"
+            return _empty_read_frame(
+                spark, schema_cols, {*variant_names, *geo_names}, row_lineage
             )
 
     # metadata skipping on column bounds: keep only files whose manifest
@@ -1346,13 +1390,8 @@ def read_data_at_snapshot(
             # a filter that legitimately matches zero files is a VALID
             # empty result, not an error — build the zero-row frame
             # from the metadata doc's read schema (r12; pre-r12 raised)
-            empty = _empty_read_frame(spark, doc, read_schema_id, row_lineage)
-            if empty is not None:
-                return empty
-            raise ValueError(
-                f"skip filter {skip_filter} prunes every file of "
-                f"snapshot {chosen['snapshot-id']} and the metadata "
-                "carries no schema to shape an empty result"
+            return _empty_read_frame(
+                spark, schema_cols, {*variant_names, *geo_names}, row_lineage
             )
 
     all_pos = live_files(1)
@@ -1375,38 +1414,8 @@ def read_data_at_snapshot(
         if (pos_delete_files or dv_best or row_lineage or keep_row_coords)
         else ("fp" if (eq_delete_files or defaults) else "none")
     )
-    if row_lineage and schema_cols is None:
-        # single-schema fast path has no explicit column plan, but a
-        # lineage read NEEDS one (the materialized _row_id columns of
-        # rewritten files must be requested explicitly and absent ones
-        # read as null — mergeSchema would surface them as data columns)
-        from .metadata_json import current_schema_block
-        from .types import iceberg_to_ddl
-
-        blk = next(
-            (
-                s for s in doc.get("schemas", [])
-                if s.get("schema-id") == read_schema_id
-            ),
-            None,
-        ) or current_schema_block(doc)
-        if blk is None:
-            raise ValueError("row lineage needs a table schema to plan")
-        def _scan_ddl(t):
-            if t == "variant":
-                return "struct<metadata:binary,value:binary>"
-            if isinstance(t, str) and t.split("(")[0] in (
-                "geometry", "geography"
-            ):
-                return "binary"
-            return iceberg_to_ddl(t)
-
-        schema_cols = [
-            (f["name"], _scan_ddl(f["type"]))
-            for f in blk.get("fields", [])
-        ]
     read_cols = schema_cols
-    if row_lineage and schema_cols is not None:
+    if row_lineage:
         # v3 row lineage: ALSO request the materialized lineage columns
         # (compaction writes them into rewritten parquet; files written
         # by normal appends lack them and read null — the coalesce
@@ -1415,31 +1424,15 @@ def read_data_at_snapshot(
             ("_row_id", "bigint"),
             ("_last_updated_sequence_number", "bigint"),
         ]
-    # v3 variant columns ride the scan in their parquet shape and decode
-    # to canonical JSON strings after. With an EXPLICIT (evolved) scan
-    # schema a SHREDDED file's typed_value subtree exists only in its
+    # A SHREDDED variant file's typed_value subtree exists only in its
     # footer — negotiate per file: probe EVERY planned footer (a
     # metadata-only read_schema, planning-plane, bounded by the file
     # count), group files by each variant column's actual struct shape,
     # scan each group under its true shape and decode variant→JSON per
     # group BEFORE the union (the decoded string column unions cleanly
     # across heterogeneous shredding shapes).
-    read_fields = [
-        f
-        for s in (doc.get("schemas") or [])
-        if s.get("schema-id") == read_schema_id
-        for f in s.get("fields", [])
-    ]
-    variant_names = [
-        f["name"] for f in read_fields if f.get("type") == "variant"
-    ]
-    geo_names = [
-        f["name"] for f in read_fields
-        if isinstance(f.get("type"), str)
-        and f["type"].split("(")[0] in ("geometry", "geography")
-    ]
     shape_groups: dict[tuple, list[dict]] | None = None
-    if variant_names and schema_cols is not None:
+    if variant_names:
         import pyarrow.parquet as pq
 
         from .types import arrow_to_ddl
@@ -1561,9 +1554,8 @@ def read_data_at_snapshot(
                 F.col("_last_updated_sequence_number"), F.col("_lseq")
             ),
         ).drop("_frid", "_lseq")
-    # v3 variant columns that rode the scan in struct shape (single-
-    # schema mergeSchema path, or unshredded explicit-schema groups)
-    # decode to the canonical JSON strings here; shape-negotiated
+    # v3 variant columns that rode the scan in struct shape (unshredded
+    # files) decode to the canonical JSON strings here; shape-negotiated
     # groups above arrive already decoded (string dtype) and skip.
     if variant_names or geo_names:
         from pyspark.sql.functions import pandas_udf
@@ -1605,13 +1597,19 @@ def read_data_at_snapshot(
 
     # attach each row's data sequence number from the (tiny, planning-
     # plane) path→seq map so delete scoping is a join predicate, not a
-    # per-file driver loop over the data
-    seq_map = local_frame(
-        spark,
-        [(f["path"], f["seq"]) for f in data_files],
-        "_fp string, _dataseq long",
-    ).select(_strip_scheme(F.col("_fp")).alias("_fp"), "_dataseq")
-    data = data.join(F.broadcast(seq_map), "_fp", "left")
+    # per-file driver loop over the data. Position deletes only need it
+    # when planning finds one that may reference a LATER data file: the
+    # map's broadcast is a Spark job of its own
+    pos_scoped = _pos_deletes_predate_files(
+        pos_delete_files, dv_best, data_files
+    )
+    if eq_delete_files or pos_scoped:
+        seq_map = local_frame(
+            spark,
+            [(f["path"], f["seq"]) for f in data_files],
+            "_fp string, _dataseq long",
+        ).select(_strip_scheme(F.col("_fp")).alias("_fp"), "_dataseq")
+        data = data.join(F.broadcast(seq_map), "_fp", "left")
 
     if pos_delete_files or dv_best:
         dels = None
@@ -1630,14 +1628,12 @@ def read_data_at_snapshot(
                 )
             )
 
-        for d in pos_delete_files:
-            p, dseq = d["path"], d["seq"]
-            one = spark.read.parquet(p).select(
+        if pos_delete_files:
+            dels = read_position_deletes(spark, pos_delete_files).select(
                 _norm_ref_col(F.col("file_path")).alias("_dfp"),
-                F.col("pos").cast("long").alias("_dpos"),
-                F.lit(dseq).cast("long").alias("_dseq"),
+                F.col("pos").alias("_dpos"),
+                "_dseq",
             )
-            dels = one if dels is None else dels.unionByName(one)
         if dv_best:
             # Rehydration strategy picks by TOTAL CARDINALITY, known
             # from the manifest entries BEFORE any decode or byte
@@ -1733,28 +1729,34 @@ def read_data_at_snapshot(
             dels = dvdels if dels is None else dels.unionByName(dvdels)
         # spec: position deletes apply at delete_seq >= data_seq; null
         # seq info on either side → unscoped fallback (apply)
-        cond = (
-            (data["_fp"] == dels["_dfp"])
-            & (data["_pos"] == dels["_dpos"])
-            & (
+        cond = (data["_fp"] == dels["_dfp"]) & (data["_pos"] == dels["_dpos"])
+        if pos_scoped:
+            cond = cond & (
                 dels["_dseq"].isNull()
                 | data["_dataseq"].isNull()
                 | (dels["_dseq"] >= data["_dataseq"])
             )
-        )
         data = data.join(dels, cond, "left_anti")
     # equality-delete key columns carry the names current when the
     # delete was WRITTEN — resolve each through the rename history
     # (historical → current) so a delete written before a rename still
     # applies; a key column whose field was DROPPED makes the delete
     # inexact (a partial key over-deletes), so skip it loudly instead.
-    hist2cur = {h: c for c, hs in (aliases or {}).items() for h in hs}
+    import pyarrow.parquet as pq
+
+    from .types import arrow_to_ddl
+
+    hist2cur = {h: c for c, hs in aliases.items() for h in hs}
     for d in eq_delete_files:
         p, dseq = d["path"], d["seq"]
-        eq = spark.read.parquet(p)
+        # the key columns as written: names and types from the parquet
+        # footer (no row is decoded, no Spark inference job) — a key
+        # frame may be wider than the table column (bigint keys on an
+        # int column), which the table type could not read
+        footer = pq.read_schema(p)
         resolved: dict[str, str] = {}
         unresolved: list[str] = []
-        for c in eq.columns:
+        for c in footer.names:
             rc = c if c in out_cols else hist2cur.get(c)
             if rc in out_cols:
                 resolved[c] = rc
@@ -1772,7 +1774,10 @@ def read_data_at_snapshot(
             continue
         keys = list(resolved.values())
         if keys:
-            eqd = eq.select(
+            eqd = spark.read.schema(", ".join(
+                f"`{c}` {arrow_to_ddl(footer.field(c).type)}"
+                for c in resolved
+            )).parquet(p).select(
                 *[F.col(c).alias(rc) for c, rc in resolved.items()]
             ).distinct()
             # spec: equality deletes apply only at delete_seq > data_seq
@@ -1833,6 +1838,9 @@ def read_incremental(
     by_id = {int(s["snapshot-id"]): s for s in doc.get("snapshots", [])}
     if from_snapshot_id not in by_id:
         raise ValueError(f"from_snapshot {from_snapshot_id} not in table")
+    # scans under the to-snapshot's schema when it is named, else the
+    # current one (read_data_at_snapshot's time-travel rule)
+    explicit_to = to_snapshot_id is not None
     if to_snapshot_id is None:
         to_snapshot_id = doc.get("current-snapshot-id")
         if to_snapshot_id is None:
@@ -1886,16 +1894,21 @@ def read_incremental(
         new_files = [
             to_files[p] for p in sorted(set(to_files) - set(from_files))
         ]
+    schema_cols, aliases = evolved_read_plan(
+        doc, by_id[to_snapshot_id].get("schema-id") if explicit_to else None,
+        list(to_files.values()),
+    )
     if not new_files:
         if not to_files:
             raise ValueError(
                 f"snapshot {to_snapshot_id} has no live data files"
             )
-        schema = _read_files_with_partitions(
-            spark, list(to_files.values()), row_coords="none"
-        ).schema
-        return local_frame(spark, [], schema)
-    return _read_files_with_partitions(spark, new_files, row_coords="none")
+        return local_frame(
+            spark, [], ", ".join(f"`{n}` {t}" for n, t in schema_cols)
+        )
+    return _read_files_with_partitions(
+        spark, new_files, "none", schema_cols=schema_cols, aliases=aliases
+    )
 
 
 def read_changelog(
@@ -2062,9 +2075,14 @@ def read_changelog(
         new_files = [now[p] for p in sorted(set(now) - set(before))]
         if not new_files:
             return None
+        # under the snapshot's own schema, as live(sid) reads it
+        schema_cols, aliases = evolved_read_plan(
+            doc, s_.get("schema-id"), new_files
+        )
         if not use_lineage:
             return _read_files_with_partitions(
-                spark, new_files, row_coords="none"
+                spark, new_files, "none",
+                schema_cols=schema_cols, aliases=aliases,
             )
         # lineage shape parity with the diff path: fresh append files
         # always inherit (never materialize), so _row_id is
@@ -2074,7 +2092,8 @@ def read_changelog(
         from .metadata_json import _strip_scheme
 
         df = _read_files_with_partitions(
-            spark, new_files, row_coords="fp_pos"
+            spark, new_files, "fp_pos",
+            schema_cols=schema_cols, aliases=aliases,
         )
         lmap = local_frame(
             spark,

@@ -3,15 +3,15 @@
 The reference's table-overview screen renders ``IcebergTable.properties``
 (data.rs:16, a ``HashMap<String, String>``) as a key/value table sorted
 into rows (components.rs:330-355). Live Iceberg exposes the same map via
-``SHOW TBLPROPERTIES``; without the runtime jar the engine derives a
-deterministic properties map per table from its snapshots frame — the
-same display path over fixture-backed values, and the live wrapper is
-ready for when a catalog is attached.
+``SHOW TBLPROPERTIES`` (``show_tblproperties_sql``); without the
+runtime jar the engine derives a deterministic properties map per table
+from its snapshots frame — the same display path over fixture-backed
+values.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 #: static defaults every derived table reports (Iceberg's own write
@@ -70,12 +70,3 @@ def show_tblproperties_sql(table: str) -> str:
         raise ValueError(f"invalid table identifier: {table!r}")
     return f"SHOW TBLPROPERTIES {table}"
 
-
-def live_table_properties(spark: SparkSession, table: str) -> DataFrame:
-    """Live-catalog properties (needs the Iceberg runtime jar): SHOW
-    TBLPROPERTIES reshaped to the fixture frame's display columns."""
-    return spark.sql(show_tblproperties_sql(table)).select(
-        F.lit(table).alias("table_name"),
-        F.col("key").alias("prop_key"),
-        F.col("value").alias("prop_value"),
-    )

@@ -51,14 +51,6 @@ def display_type(spark_type_name: str) -> str:
     return SPARK_TO_DISPLAY.get(t, t)
 
 
-def field_display_names(schemas_long: DataFrame) -> DataFrame:
-    """J2 name resolution: the display name of a field-id is taken from the
-    first schema version containing it (components.rs:547-552)."""
-    return schemas_long.groupBy("table_name", "field_id").agg(
-        F.min_by("name", "schema_id").alias("field_name")
-    )
-
-
 def evolution_matrix(schemas_long: DataFrame, schema_ids: list[int]) -> DataFrame:
     """J2 — wide presence/type matrix: one row per field_id, one column pair
     per schema version (type + required; null = absent, the reference's "—").

@@ -183,11 +183,6 @@ class SnapshotFilter:
         return n
 
 
-def apply_filters(df: DataFrame, flt: SnapshotFilter) -> DataFrame:
-    """F1 over a snapshots frame that already has ``operation``."""
-    return df.filter(flt.predicate())
-
-
 def timeline(
     df: DataFrame, flt: SnapshotFilter | None = None, barrier: bool = False
 ) -> DataFrame:

@@ -20,6 +20,7 @@ and ``update_schema`` (adding nested columns with fresh ids).
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 #: Spark SQL dtype → Iceberg primitive (the nested converters recurse
@@ -50,23 +51,30 @@ _ICEBERG_TO_SQL = {
 
 _PRECISION_LOSS = {"timestamp_ns", "timestamptz_ns"}
 
-#: v3 types with no DIRECT Spark column mapping — this generic
-#: converter fails LOUD with the type named (not a cryptic DDL parse
-#: error downstream, and never the reference's panic). All three are
-#: special-cased by BOTH read planes before calling this, as TOP-LEVEL
-#: columns: ``variant`` scans in its parquet shape (struct<metadata,
-#: value> binary) and decodes to canonical JSON strings
-#: (metadata/variant.py); ``geometry``/``geography`` scan as WKB
-#: binary and decode to WKT strings (metadata/geo.py). NESTED
-#: occurrences (inside struct/list/map) still fail loud here.
-_UNSUPPORTED = {"variant", "geometry", "geography"}
+#: Spark primitive names a schema may carry verbatim (``sql_to_iceberg``
+#: passes through what it does not map, e.g. ``void``)
+_SPARK_PRIMITIVES = frozenset(_ICEBERG_TO_SQL.values()) | {
+    "tinyint", "smallint", "void", "time",
+}
+
+_DECIMAL_RE = re.compile(r"^decimal\(\s*\d+\s*,\s*\d+\s*\)$")
+
+# v3 ``variant`` and ``geometry``/``geography`` have no DIRECT Spark
+# column mapping, so iceberg_to_ddl fails LOUD on them with the type
+# named (not a cryptic DDL parse error downstream, and never the
+# reference's panic). BOTH read planes special-case them as TOP-LEVEL
+# columns before calling it: ``variant`` scans in its parquet shape
+# (struct<metadata, value> binary) and decodes to canonical JSON strings
+# (metadata/variant.py); ``geometry``/``geography`` scan as WKB binary
+# and decode to WKT strings (metadata/geo.py). NESTED occurrences
+# (inside struct/list/map) still fail loud.
 
 
 class UnsupportedIcebergType(Exception):
     """A spec type this engine cannot materialize as a Spark column.
-    Deliberately NOT a ValueError: schema-plan fallbacks catch
-    ValueError to mean 'use mergeSchema', which would silently misread
-    these columns."""
+    Deliberately NOT a ValueError: planners that treat ValueError as
+    "no usable schema" must not swallow it, since the read would then
+    silently drop or misread the column."""
 
 
 def split_top(s: str) -> list[str]:
@@ -131,7 +139,9 @@ def iceberg_to_ddl(t) -> str:
 
     v3 nanosecond timestamps map to Spark's microsecond timestamps with
     a PRECISION warning (sub-microsecond digits truncate on read);
-    ``unknown`` maps to a string column that reads null."""
+    ``unknown`` maps to a string column that reads null; ``fixed[n]``
+    reads as ``binary``. Any other type with no Spark DDL raises
+    :class:`UnsupportedIcebergType` naming it."""
     if isinstance(t, str):
         if t in _PRECISION_LOSS:
             import warnings
@@ -141,13 +151,17 @@ def iceberg_to_ddl(t) -> str:
                 "(Spark timestamps are µs; sub-µs digits truncate)",
                 stacklevel=2,
             )
-        if t.split("(")[0] in _UNSUPPORTED:
-            raise UnsupportedIcebergType(
-                f"Iceberg type {t!r} has no Spark column mapping in "
-                "this engine — drop or exclude the column to read the "
-                "table"
-            )
-        return _ICEBERG_TO_SQL.get(t, t)
+        if t in _ICEBERG_TO_SQL:
+            return _ICEBERG_TO_SQL[t]
+        if t.startswith("fixed[") and t.endswith("]"):
+            return "binary"  # fixed-length bytes read as Spark binary
+        if t in _SPARK_PRIMITIVES or _DECIMAL_RE.match(t):
+            return t
+        raise UnsupportedIcebergType(
+            f"Iceberg type {t!r} has no Spark column mapping in "
+            "this engine — drop or exclude the column to read the "
+            "table"
+        )
     kind = t.get("type")
     if kind == "list":
         return f"array<{iceberg_to_ddl(t['element'])}>"
@@ -161,7 +175,7 @@ def iceberg_to_ddl(t) -> str:
             for f in t.get("fields", [])
         )
         return f"struct<{inner}>"
-    raise ValueError(f"unknown Iceberg type: {t!r}")
+    raise UnsupportedIcebergType(f"unknown Iceberg type: {t!r}")
 
 
 def max_field_id(t, default: int = 0) -> int:

@@ -88,33 +88,6 @@ def shingles(text: Column | str = "text", n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 64) -> Column:
-    """num_hashes-wide MinHash signature.
-
-    Split the work by strength: string hashing happens once per shingle
-    JVM-side (xxhash64, codegen); the num_hashes universal re-hashes + min
-    run as one vectorized numpy kernel per Arrow batch (a pandas_udf).
-    A pure higher-order-function version (min over xxhash64(s, seed) per
-    seed) is ~50× slower because nested lambdas are interpreted per element.
-    """
-    base = F.transform(shingle_col, lambda s: F.xxhash64(s))
-    a_params, b_params = _lcg_params(num_hashes)
-
-    @pandas_udf("array<bigint>")
-    def _sig(hashes: pd.Series) -> pd.Series:
-        a = a_params[:, None]
-        b = b_params[:, None]
-        out = []
-        with np.errstate(over="ignore"):
-            for h in hashes:
-                hv = np.asarray(h, dtype=np.int64).view(np.uint64)[None, :]
-                sig = (a * hv + b).min(axis=1).view(np.int64)
-                out.append(sig)
-        return pd.Series(out)
-
-    return _sig(base)
-
-
 def _minhash_kernel(num_hashes: int, bands: int, shingle_n: int):
     """One Arrow-batch kernel: word array → shingle set → 64-bit shingle
     hashes → MinHash signature → per-band mixed bucket hashes.

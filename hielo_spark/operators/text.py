@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
 # Tiny multilingual stopword sets for the n-gram/lexicon language-ID
-# heuristic and the stopword-ratio quality signal. Public-knowledge lists.
+# heuristic. Public-knowledge lists.
 STOPWORDS = {
     "en": ["the", "a", "of", "and", "to", "in", "is", "that", "it", "for"],
     "de": ["der", "die", "das", "und", "ist", "von", "zu", "mit", "den", "ein"],
@@ -51,14 +51,6 @@ def punct_ratio(text: Column | str = "text") -> Column:
     # bare expression over 50k docs on 2 tasks).
     n_punct = F.regexp_count(text, F.lit(r"[\.,;:!\?]"))
     return F.when(F.length(text) > 0, n_punct / F.length(text)).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(text: Column | str = "text", lang: str = "en") -> Column:
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    ws = words(text)
-    n = F.size(ws)
-    n_stop = F.size(F.filter(ws, lambda w: F.array_contains(sw, F.lower(w))))
-    return F.when(n > 0, n_stop / n).otherwise(F.lit(0.0))
 
 
 def quality_score(text: Column | str = "text") -> Column:

@@ -2649,8 +2649,8 @@ class HieloIcebergDataSource(DataSource):
     def _data_cols_ddl(table_dir: str, options=None) -> list[tuple[str, str]]:
         """[(name, 'name ddl')] for the current schema — nested
         list/map/struct JSON renders to Spark DDL recursively;
-        decimal(p,s)/fixed[n] pass through (valid DDL, or rejected
-        loudly by Spark's parser)."""
+        decimal(p,s) passes through and fixed[n] reads as binary (a
+        type with no Spark mapping is an UnsupportedIcebergType)."""
         doc = _load_doc(table_dir)
         schema = _read_schema_block(doc, options or {})
         if schema is None:

@@ -79,7 +79,10 @@ def _build(spark, t, shape):
              snapshot_id=101, timestamp_ms=T1, partition_by=part)
     if shape == "dv":
         C.upgrade_format_version(t, 3)
-    C.append(spark, t, _rows(spark, 10, 20, nan=shape == "nan"),
+    second = _rows(spark, 10, 20, nan=shape == "nan")
+    if shape == "addcol":
+        second = second.withColumn("w", F.col("x") / 2)
+    C.append(spark, t, second,
              snapshot_id=102, timestamp_ms=T2, partition_by=part)
     C.create_ref(t, "t2", 102, ref_type="tag")
     if shape in ("posdel", "dv"):
@@ -97,6 +100,14 @@ def _build(spark, t, shape):
         C.delete_equality(
             spark, t, spark.createDataFrame([(3,), (14,), (17,)], "id long"),
             snapshot_id=104, timestamp_ms=T4)
+    elif shape == "addcol":
+        # add-column evolution by write, once per write plane: the
+        # commit.append at 102 brought ``w`` (above), the DataSource
+        # append at 103 brings ``z``
+        _rows(spark, 20, 30).withColumn("z", F.col("id") * 3) \
+            .write.format("hielo_iceberg").mode("append") \
+            .option("snapshot-id", "103").option("timestamp-ms", str(T3)) \
+            .save(t)
     elif shape == "rename":
         C.update_schema(t, rename={"a": "b"}, timestamp_ms=T2 + 5)
         C.append(spark, t, _rows(spark, 20, 30, value_col="b"),
@@ -154,7 +165,7 @@ def _ds_plan_paths(t, opts, schema, pushed) -> set[str]:
 @pytest.mark.parametrize(
     "shape",
     ["plain", "identity", "bucket", "posdel", "eqdel", "dv", "rename",
-     "nan", "partdel"],
+     "nan", "partdel", "addcol"],
 )
 def test_planes_agree(registered, tmp_path, shape):
     spark = registered
@@ -175,6 +186,14 @@ def test_planes_agree(registered, tmp_path, shape):
         assert all(d["pvals"] in data_pvals for d in dels), dels
     for sel, (opts, kwargs) in SELECTORS.items():
         ds = spark.read.format("hielo_iceberg").options(**opts).load(t)
+        if shape == "addcol":
+            # each snapshot reads under its own schema on both planes:
+            # the pre-evolution one omits both added columns
+            added = {"current": {"w", "z"}, "snapshot-id": set()}.get(
+                sel, {"w"})
+            jvm = read_data_at_snapshot(spark, mpath, **kwargs)
+            assert set(ds.columns) == set(jvm.columns) \
+                == {"id", "a", "s", "x"} | added, sel
         v = "x" if shape == "nan" else ("b" if "b" in ds.columns else "a")
         lit = float if v == "x" else int
         filters = _filters(v, lit)

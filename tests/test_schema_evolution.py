@@ -560,6 +560,34 @@ def test_variant_geometry_fail_loud_not_silent():
     assert not issubclass(UnsupportedIcebergType, ValueError)
 
 
+def test_unmapped_types_fail_loud_on_the_dataframe_plane(spark, tmp_path):
+    """The DataFrame plane scans under the metadata schema, so a column
+    type with no Spark mapping raises with the type named instead of
+    the column silently vanishing; ``fixed[n]`` reads as binary."""
+    from hielo_spark.metadata.types import (
+        UnsupportedIcebergType,
+        iceberg_to_ddl,
+    )
+
+    assert iceberg_to_ddl("fixed[16]") == "binary"
+    assert iceberg_to_ddl("decimal(10, 2)") == "decimal(10, 2)"
+    with pytest.raises(UnsupportedIcebergType, match="frobnicate"):
+        iceberg_to_ddl("frobnicate")
+    with pytest.raises(UnsupportedIcebergType, match="weird"):
+        iceberg_to_ddl({"type": "weird"})
+    t = str(tmp_path / "t")
+    C.append(spark, t, spark.createDataFrame([(1, "a")], ["id", "v"]),
+             snapshot_id=101, timestamp_ms=1700000000000)
+    mpath = C.current_metadata_path(t)
+    doc = json.load(open(mpath))
+    doc["schemas"][0]["fields"].append(
+        {"id": 3, "name": "odd", "required": False, "type": "frobnicate"})
+    doc["last-column-id"] = 3
+    json.dump(doc, open(mpath, "w"))
+    with pytest.raises(UnsupportedIcebergType, match="frobnicate"):
+        read_data_at_snapshot(spark, mpath)
+
+
 def test_variant_and_geometry_columns_read_as_strings(spark, tmp_path):
     """r9: variant columns DECODE to JSON strings and geometry columns
     to WKT strings (null where a file predates the column) instead of
