@@ -478,64 +478,6 @@ MANIFEST_LIST_SCHEMA_V2 = json.dumps({
 })
 
 
-def _avro_json_value(field_schema, v):
-    """Python value → Avro JSON-encoding shape (unions wrap non-null
-    values as {"type": value}; records recurse). The JSON-decoder route
-    sidesteps py4j's Integer/Long boxing (small Python ints arrive as
-    java.lang.Integer, which Avro refuses for long fields)."""
-    t = field_schema.getType().getName()
-    if t == "union":
-        if v is None:
-            return None
-        member = next(
-            s for s in field_schema.getTypes() if s.getType().getName() != "null"
-        )
-        return {member.getType().getName(): _avro_json_value(member, v)}
-    if t == "record":
-        v = v if v is not None else {}  # empty record (e.g. r102) when absent
-        return {
-            f.name(): _avro_json_value(f.schema(), v.get(f.name()))
-            for f in field_schema.getFields()
-        }
-    if t == "map":
-        vs = field_schema.getValueType()
-        return {str(k): _avro_json_value(vs, val) for k, val in v.items()}
-    if t == "array":
-        items = field_schema.getElementType()
-        return [_avro_json_value(items, x) for x in (v or [])]
-    if t == "bytes":
-        # Avro JSON encoding of bytes: ISO-8859-1 string (one char per byte)
-        return v.decode("latin-1") if isinstance(v, (bytes, bytearray)) else v
-    return v
-
-
-def write_avro(
-    spark: SparkSession,
-    path: str,
-    schema_json: str,
-    rows: list[dict],
-    meta: dict[str, str] | None = None,
-) -> None:
-    """Write an Avro container file with the pure-Python container
-    writer (``metadata/avro_py.write_avro_file`` — byte-compatible with
-    the JVM library, round-trip pinned in tests; the manifest-rewrite
-    and DataSource commit paths already write with it). ``meta``
-    entries land in the container header key-value metadata — where the
-    Iceberg spec puts ``schema`` / ``partition-spec-id`` / ``content`` /
-    ``format-version`` on manifests and manifest lists.
-
-    r14: this replaced the py4j-driven JVM DataFileWriter route, which
-    cost ~0.5 s of driver time PER manifest (one JSON-encode plus
-    several py4j roundtrips per row/field — guide §7.3 driver-side
-    work); the binary encoder writes the same natural-Python datums
-    (None/ints/bytes/dicts) with zero JVM traffic. ``spark`` stays in
-    the signature for the 15+ call sites; it is deliberately unused."""
-    del spark  # no JVM needed — kept for call-site compatibility
-    from .avro_py import write_avro_file
-
-    write_avro_file(path, schema_json, rows, meta=meta)
-
-
 def _parse_metrics_value(v: str):
     """'full' → None (full metrics), 'counts'/'none' pass through,
     'truncate(N)' with N >= 1 → ("truncate", N). Anything else raises —
@@ -1582,13 +1524,15 @@ def _stage_files_manifest(
     ``record_count``, ``file_size_in_bytes`` and optional
     ``lower_bounds`` / ``upper_bounds`` / ``null_counts`` /
     ``nan_counts`` / ``distinct_counts`` string maps and
-    ``partition_values``); the table's metrics properties
+    ``partition_values``) or a deletion vector's coordinate record
+    (:func:`puffin.write_dv_container`: ``file_format`` and the ``dv``
+    blob coordinates); the table's metrics properties
     (:func:`_metrics_mode_of`) truncate or drop column metrics here.
     Bounds are recorded twice: as the engine's name-keyed strings and
     as the spec's field-id-keyed Appendix D bytes.
 
     ``content`` 1 (position deletes, stats under the reserved
-    ``file_path``/``pos`` field ids) or 2 (equality deletes on the
+    ``file_path``/``pos`` field ids, or deletion vectors) or 2 (equality deletes on the
     ``dtypes`` columns, recorded as ``equality_ids``) stages a delete
     manifest instead: a ``delete-manifest-NNNNN-*.avro`` with the
     ``deletes`` header, full metrics whatever the metrics properties
@@ -1642,13 +1586,17 @@ def _stage_files_manifest(
             c: dtypes[c] for c in {**(lo or {}), **(hi or {})} if c in dtypes
         } or None
         nulls = counts(f.get("null_counts"))
+        dv = f.get("dv") or {}
         entries.append({
             "status": 1,
             "snapshot_id": snapshot_id,
             "data_file": {
                 "content": content,
                 "file_path": f["path"],
-                "file_format": "PARQUET",
+                "file_format": f.get("file_format", "PARQUET"),
+                "referenced_data_file": dv.get("referenced"),
+                "content_offset": dv.get("offset"),
+                "content_size_in_bytes": dv.get("size"),
                 "sort_order_id": sort_order_id,
                 "first_row_id": rid,
                 "equality_ids": equality_ids,
@@ -2500,61 +2448,76 @@ def add_files(
     )
 
 
-def _rewrite_manifest_dropping_data(
-    manifest_path: str, doomed: set[str], mdir: str, seq: int,
-    snapshot_id: int | None = None,
-) -> tuple[str, int, int, int, int, int] | None:
-    """Rewrite a DATA manifest with the entries whose ``file_path`` is
-    in ``doomed`` re-emitted as status=2 TOMBSTONES — the copy-on-write
-    half of overwrite_partitions (same raw-record rewrite under the
-    manifest's own writer schema as _rewrite_manifest_dropping_dvs, so
-    foreign stats/fields survive byte-exact; tombstoned entries get the
-    superseding snapshot's id per the spec's deleted-entry rule).
-    Returns ``(new_path, live_files, live_rows, dropped_files,
-    dropped_rows, dropped_bytes)``, or None when nothing stays live or
-    tombstoned (the caller drops the manifest)."""
+def _tombstone_manifest_row(
+    row: dict, key: str, doomed: set[str], mdir: str, seq: int,
+    snapshot_id: int,
+) -> tuple[dict | None, int, int, int]:
+    """Rewrite the manifest behind the carried-forward manifest-list
+    ``row`` with every live entry whose ``data_file[key]`` is in
+    ``doomed`` (a ``file:`` scheme ignored) re-emitted as a status=2
+    TOMBSTONE — the one tombstoning rewriter, keyed by ``file_path`` for
+    dynamic overwrites (:func:`_tombstone_partitions_in_rows`) and by
+    ``referenced_data_file`` for DV supersession
+    (:func:`_supersede_dv_rows`). A raw-record rewrite under the
+    manifest's own writer schema, so foreign stats and fields survive
+    byte-exact; tombstones take the superseding snapshot's id and prior
+    tombstones are dropped (the spec keeps a deleted entry only in the
+    snapshot that deleted it).
+
+    Returns ``(row, dropped_files, dropped_rows, dropped_bytes)``: the
+    row of the rewritten manifest, reporting its live entries as
+    existing and its tombstones as deleted, or None when nothing stays
+    live or tombstoned (the caller drops the manifest)."""
     import json as _json
 
     from .avro_py import write_avro_file
     from .manifests import _resolve, read_avro_file
 
-    local = _resolve(os.path.join(mdir, "x"), manifest_path)
-    schema, meta, raw = read_avro_file(local)
-    kept, dropped_files, dropped_rows, dropped_bytes = [], 0, 0, 0
-    for e in raw:
-        fp = str((e.get("data_file") or {}).get("file_path") or "")
-        if fp.removeprefix("file:") in doomed and e.get("status") != 2:
-            t = dict(e, status=2)
-            if snapshot_id is not None:
-                t["snapshot_id"] = snapshot_id
-            kept.append(t)
-            dropped_files += 1
-            dropped_rows += int(
-                (e.get("data_file") or {}).get("record_count") or 0
-            )
-            dropped_bytes += int(
-                (e.get("data_file") or {}).get("file_size_in_bytes") or 0
-            )
-            continue
-        if e.get("status") == 2:
-            continue  # prior tombstones belong to their own snapshot
-        kept.append(e)
+    schema, meta, raw = read_avro_file(
+        _resolve(os.path.join(mdir, "x"), row["manifest_path"])
+    )
+
+    def total(entries, field):
+        return sum(
+            int((e.get("data_file") or {}).get(field) or 0) for e in entries
+        )
+
+    kept = [
+        dict(e, status=2, snapshot_id=snapshot_id)
+        if str((e.get("data_file") or {}).get(key)).removeprefix("file:")
+        in doomed else e
+        for e in raw if e.get("status") != 2
+    ]
     if not kept:
-        return None
+        return None, 0, 0, 0
     new_path = os.path.join(
-        mdir, f"manifest-{seq:05d}-ow-{_uuid.uuid4().hex[:8]}.avro"
+        mdir,
+        f"{'delete-manifest' if row.get('content') else 'manifest'}-"
+        f"{seq:05d}-rw-{_uuid.uuid4().hex[:8]}.avro",
     )
     hdr = {
         k: v for k, v in (meta or {}).items() if not k.startswith("avro.")
     }
     write_avro_file(new_path, _json.dumps(schema), kept, meta=hdr)
-    live = [e for e in kept if e.get("status") != 2]
-    live_rows = sum(
-        int((e.get("data_file") or {}).get("record_count") or 0)
-        for e in live
+    live = [e for e in kept if e["status"] != 2]
+    tombs = [e for e in kept if e["status"] == 2]
+    dropped_rows = total(tombs, "record_count")
+    return (
+        dict(
+            row,
+            manifest_path=new_path,
+            manifest_length=os.path.getsize(new_path),
+            added_files_count=0,
+            added_rows_count=0,
+            existing_files_count=len(live),
+            existing_rows_count=total(live, "record_count"),
+            # the removal stays OBSERVABLE: the row reports the
+            # tombstones its manifest carries
+            deleted_files_count=len(tombs),
+            deleted_rows_count=dropped_rows,
+        ),
+        len(tombs), dropped_rows, total(tombs, "file_size_in_bytes"),
     )
-    return (new_path, len(live), live_rows,
-            dropped_files, dropped_rows, dropped_bytes)
 
 
 def _staged_manifest_row(staged: dict, seq: int, snapshot_id: int) -> dict:
@@ -2660,26 +2623,14 @@ def _tombstone_partitions_in_rows(
         if not doomed:
             out_rows.append(r)
             continue
-        rw = _rewrite_manifest_dropping_data(
-            r["manifest_path"], doomed, mdir, seq, snapshot_id=snapshot_id
+        rw, d_f, d_r, d_b = _tombstone_manifest_row(
+            r, "file_path", doomed, mdir, seq, snapshot_id
         )
-        if rw is None:
-            continue
-        new_path, live_f, live_r, d_f, d_r, d_b = rw
         dropped_files += d_f
         dropped_rows += d_r
         dropped_bytes += d_b
-        out_rows.append(dict(
-            r,
-            manifest_path=new_path,
-            manifest_length=os.path.getsize(new_path),
-            added_files_count=0,
-            added_rows_count=0,
-            existing_files_count=live_f,
-            existing_rows_count=live_r,
-            deleted_files_count=d_f,
-            deleted_rows_count=d_r,
-        ))
+        if rw is not None:
+            out_rows.append(rw)
     return out_rows, dropped_files, dropped_rows, dropped_bytes
 
 
@@ -3487,100 +3438,13 @@ def delete_where(
 
 
 def _live_dv_entries(mlist: str, fv: int) -> list[dict]:
-    """Live v3 deletion-vector entries of a snapshot: one dict per DV
-    with the Puffin path, blob region, referenced data file, sequence
-    number, and OWNING manifest path (supersession rewrites need it).
-    Pure-Python planning — no Spark hops."""
-    from .manifests import (
-        _resolve,
-        decode_manifest,
-        inherited_seq_of,
-        read_avro_file,
-    )
+    """Live v3 deletion-vector entries of a snapshot: the
+    :func:`manifests.live_entries` records carrying ``dv`` blob
+    coordinates, each with its Puffin ``path``, ``seq``, cardinality
+    ``records`` and owning ``manifest``. Pure-Python planning."""
+    from .manifests import live_entries
 
-    _, _, mlist_rows = read_avro_file(mlist)
-    out = []
-    for m in mlist_rows:
-        if (m.get("content") or 0) != 1:
-            continue
-        for e in decode_manifest(
-            _resolve(mlist, m["manifest_path"]),
-            inherited_seq=inherited_seq_of(m, fv),
-        ):
-            status, fpath, records, seq, dv = e[0], e[2], e[4], e[7], e[15]
-            if status == 2 or dv is None:
-                continue
-            out.append(
-                {
-                    "puffin": fpath.removeprefix("file:"),
-                    "seq": seq,
-                    "dv": dv,
-                    "records": int(records or 0),  # DV cardinality
-                    "manifest": m["manifest_path"],
-                }
-            )
-    return out
-
-
-def _rewrite_manifest_dropping_dvs(
-    manifest_path: str, refs: set[str], mdir: str, seq: int,
-    snapshot_id: int | None = None,
-) -> tuple[str, int, int, int, int] | None:
-    """Rewrite a delete manifest with the DV entries referencing
-    ``refs`` re-emitted as status=2 TOMBSTONES (data files that just
-    got a replacement DV — the spec allows at most one DV per data
-    file, so the previous one must leave the live set, and the removal
-    must stay OBSERVABLE to metadata/incremental consumers). Raw-record
-    rewrite under the manifest's own writer schema, so foreign
-    stats/fields survive byte-exact; tombstoned entries get the
-    superseding snapshot's id, per the spec's deleted-entry rule.
-    Returns ``(new_path, live_files, live_rows, dropped_files,
-    dropped_rows)``, or None when nothing stays live OR tombstoned
-    (the caller drops the manifest from the carry-forward)."""
-    import json as _json
-
-    from .avro_py import write_avro_file
-    from .manifests import _resolve, read_avro_file
-
-    local = _resolve(os.path.join(mdir, "x"), manifest_path)
-    schema, meta, raw = read_avro_file(local)
-    kept, dropped_files, dropped_rows = [], 0, 0
-    for e in raw:
-        ref = (e.get("data_file") or {}).get("referenced_data_file")
-        if (
-            ref is not None
-            and str(ref).removeprefix("file:") in refs
-            and e.get("status") != 2
-        ):
-            t = dict(e, status=2)
-            if snapshot_id is not None:
-                t["snapshot_id"] = snapshot_id
-            kept.append(t)
-            dropped_files += 1
-            dropped_rows += int(
-                (e.get("data_file") or {}).get("record_count") or 0
-            )
-            continue
-        # prior tombstones are NOT carried again — the spec keeps a
-        # deleted entry only in the snapshot that deleted it
-        if e.get("status") == 2:
-            continue
-        kept.append(e)
-    if not kept:
-        return None
-    new_path = os.path.join(
-        mdir, f"delete-manifest-{seq:05d}-rw-{_uuid.uuid4().hex[:8]}.avro"
-    )
-    hdr = {
-        k: v for k, v in (meta or {}).items() if not k.startswith("avro.")
-    }
-    write_avro_file(new_path, _json.dumps(schema), kept, meta=hdr)
-    live = [e for e in kept if e.get("status") != 2]
-    live_rows = sum(
-        int((e.get("data_file") or {}).get("record_count") or 0)
-        for e in live
-    )
-    return new_path, len(live), live_rows, dropped_files, dropped_rows
+    return [e for e in live_entries(mlist, fv) if e["dv"]]
 
 
 def _commit_deletion_vectors(
@@ -3601,100 +3465,47 @@ def _commit_deletion_vectors(
     row positions as DELETION VECTORS — one ``deletion-vector-v1``
     Puffin blob (portable 64-bit roaring bitmap) per touched data file
     — instead of position-delete parquet, per the Iceberg v3 spec's
-    row-level-delete rules. A data file has at most ONE DV: each new
-    vector is the union of the new positions with the file's previous
-    DV, and the superseded entries are dropped from the carried-forward
-    delete manifests (raw-record rewrite).
-
-    Scale: bitmap construction is one ``applyInPandas`` group per
-    touched file (the previous DV's bytes ride in via a broadcast
-    join); the driver collects one serialized bitmap per file — bounded
-    by candidate-file count × compressed bitmap size (≤ 8 KiB per 64 Ki
-    rows), never by row count. Reads then fetch ONE blob region per
-    scanned file instead of joining a growing pile of delete parquet —
-    the v3 design's point at 100 TB."""
-    entries, puffin_size, total_cardinality, replaced, old_dvs = (
-        _build_dv_entries(
-            spark, table_dir, doc, mdir, current, positions, seq,
-            snapshot_id,
-        )
+    row-level-delete rules. :func:`_stage_deletion_vectors` (shared
+    with the v3 ``merge_into``) merges each file's previous DV into its
+    new one, stages the DV manifests and tombstones the superseded
+    entries; this commits the stage, with an UPDATE's re-appended data
+    manifest (``staged_update``) riding the same snapshot. Returns None
+    when no row matched: Iceberg commits no empty DELETE."""
+    stage = _stage_deletion_vectors(
+        spark, table_dir, doc, mdir, current, positions, seq, snapshot_id,
     )
-    if not entries and not replaced:
-        # Iceberg no-ops a DELETE matching zero rows (candidates pruned
-        # or filter matched nothing) — don't commit an empty snapshot
+    if stage is None:
         return None
-    # NET the summary totals: a replacement DV supersedes the prior one,
-    # so live delete-file count/bytes must not grow monotonically on a
-    # table whose live delete set is constant (blob sizes are the live
-    # accounting; superseded container bytes await the orphan sweep)
-    replaced_bytes = sum(old_dvs[r]["dv"]["size"] for r in replaced)
-    replaced_records = sum(old_dvs[r]["records"] for r in replaced)
-
-    manifest_path = os.path.join(
-        mdir, f"delete-manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
-    )
-    write_avro(
-        spark, manifest_path, MANIFEST_ENTRY_SCHEMA_V2, entries,
-        meta=_manifest_header_meta(doc, 0, "deletes"),
-    )
-
-    base_id = int(current["snapshot-id"])  # branch head under branch DML
-    prior_rows = _supersede_dv_rows(
-        _carry_forward_rows(mdir, doc, base_id), replaced,
-        old_dvs, mdir, seq, snapshot_id=snapshot_id,
-    )
-
-    new_row = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": 0,
-        "content": 1,
-        "sequence_number": seq,
-        "min_sequence_number": seq,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": total_cardinality,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    rows = [new_row]
+    rows = stage["rows"]
     summary = {
         "operation": "delete",
-        "added-dvs": str(len(entries)),
-        "replaced-dvs": str(len(replaced)),
-        # NEW positions only (merged-union minus the replaced
-        # DVs' prior cardinality): re-deleting nothing new adds 0
-        "added-delete-records": str(
-            total_cardinality - replaced_records
-        ),
+        "added-dvs": str(stage["added"]),
+        "replaced-dvs": str(stage["replaced"]),
+        # NEW positions only (merged-union minus the replaced DVs'
+        # prior cardinality): re-deleting nothing new adds 0
+        "added-delete-records": str(stage["records"]),
     }
-    d_files = 0
+    d_files = d_bytes = 0
     if staged_update is not None:
-        # UPDATE on a v3 table: the staged data manifest rides the
-        # same commit; the DVs above reference only the OLD files
-        rows.append(_staged_manifest_row(staged_update, seq,
-                                         snapshot_id))
+        # UPDATE on a v3 table: the DVs above reference only OLD files
+        rows.append(_staged_manifest_row(staged_update, seq, snapshot_id))
         _apply_update_summary(summary, staged_update)
         d_files = staged_update["n_files"]
+        d_bytes = staged_update["added_bytes"]
+    base_id = int(current["snapshot-id"])  # branch head under branch DML
     return _finalize_commit(
-        table_dir, doc, prev_version, prior_rows + rows,
+        table_dir, doc, prev_version, rows,
         snapshot_id, timestamp_ms, seq,
         _with_totals(
-            summary,
-            doc, base_id,
-            d_files,
-            puffin_size - replaced_bytes
-            + (staged_update or {}).get("added_bytes", 0),
-            len(entries) - len(replaced),
+            summary, doc, base_id,
+            d_files, stage["bytes"] + d_bytes, stage["files"],
         ),
         branch=branch,
         parent_id=base_id,
     )
 
 
-def _build_dv_entries(
+def _stage_deletion_vectors(
     spark: SparkSession,
     table_dir: str,
     doc: dict,
@@ -3703,317 +3514,219 @@ def _build_dv_entries(
     positions,
     seq: int,
     snapshot_id: int,
-) -> tuple[list[dict], int, int, set[str], dict[str, dict]]:
-    """Shared DV-write machinery (delete_where's v3 path AND the v3
-    merge): turn a distributed ``(file_path, pos)`` frame into ONE new
-    Puffin container of merged deletion vectors, returning the
-    manifest ENTRIES for it plus what supersession needs —
-    ``(entries, puffin_size, total_cardinality, replaced_refs,
-    old_dvs)``. ``old_dvs[ref]["records"]`` carries each replaced DV's
-    prior cardinality so callers can net the snapshot-summary totals."""
+) -> dict | None:
+    """The one DV stage of ``delete_where``/``update_where`` and the v3
+    ``merge_into``: turn a distributed ``(file_path, pos)`` frame into
+    one merged deletion vector per touched data file — the union of the
+    new positions with the file's previous DV, picked by the read
+    planes' :func:`manifests._dv_per_file` — written by
+    :func:`puffin.write_dv_container` and staged, superseding the
+    previous DVs, by :func:`_stage_dv_manifests` (whose dict this
+    returns). None when ``positions`` is None or touches no file.
+
+    Scale: bitmap construction is one ``applyInPandas`` group per
+    touched file (the previous DV's bytes ride in via a broadcast
+    join). Up to ``_DV_DRIVER_CONTAINER_MAX`` touched files the driver
+    collects one serialized bitmap per file — bounded by candidate-file
+    count × compressed bitmap size (≤ 8 KiB per 64 Ki rows), never by
+    row count — and writes one container; above it each task writes a
+    container of ~128 blobs and the driver collects only their
+    coordinate records. Reads then fetch ONE blob region per scanned
+    file instead of joining a growing pile of delete parquet — the v3
+    design's point at 100 TB."""
+    if positions is None:
+        return None
+    import json
+    import math
+
     from pyspark.sql import functions as F
 
-    from .manifests import _resolve
+    from ..session import _ship_package
+    from .manifests import _dv_per_file, _resolve, live_entries
+    from .puffin import write_dv_container
 
-    fv = int(doc.get("format-version", 2))
-    # MAX-seq DV per referenced file (ascending sort → later overrides)
-    old_dvs: dict[str, dict] = {}
-    for d in sorted(
-        _live_dv_entries(
-            _resolve(
-                os.path.join(mdir, "x"),
-                current["manifest-list"].removeprefix("file:"),
-            ),
-            fv,
+    # fetch prior DVs ONLY for the files this delete touches — the
+    # touched set is planning-plane small (bounded by candidate files),
+    # while the table's live-DV population is not
+    touched = {
+        r.file_path
+        for r in positions.select("file_path").distinct().collect()
+    }
+    if not touched:
+        return None
+    entries = live_entries(
+        _resolve(
+            os.path.join(mdir, "x"),
+            current["manifest-list"].removeprefix("file:"),
         ),
-        key=lambda d: d["seq"] or 0,
-    ):
-        old_dvs[d["dv"]["referenced"].removeprefix("file:")] = d
-
-    rows = []
-    if positions is not None:
-        # the bitmap kernel unpickles on workers via `import
-        # hielo_spark` — ship the package zip so the commit API works
-        # from any working directory (same contract as the DataSource)
-        from ..session import _ship_package
-
-        _ship_package(spark)
-        # fetch prior DVs ONLY for the files this delete touches — the
-        # touched set is planning-plane small (bounded by candidate
-        # files), while the table's live-DV population is not
-        touched = {
-            r.file_path
-            for r in positions.select("file_path").distinct().collect()
-        }
-        old_rows = []
-        for ref in sorted(touched & set(old_dvs)):
-            d = old_dvs[ref]
-            with open(d["puffin"], "rb") as fh:
-                fh.seek(d["dv"]["offset"])
-                old_rows.append((ref, bytearray(fh.read(d["dv"]["size"]))))
-        if old_rows:
-            old_df = local_frame(
-                spark, old_rows, "file_path string, _old binary"
-            )
-            pos2 = positions.join(F.broadcast(old_df), "file_path", "left")
-        else:
-            pos2 = positions.withColumn(
-                "_old", F.lit(None).cast("binary")
-            )
-
-        def _build(pdf):
-            import numpy as np
-            import pandas as pd
-
-            from hielo_spark.metadata.puffin import (
-                decode_dv_payload,
-                dv_payload,
-            )
-
-            fp = pdf["file_path"].iloc[0]
-            pos = np.unique(
-                pdf["pos"].to_numpy(dtype="int64").astype("uint64")
-            )
-            old = pdf["_old"].iloc[0]
-            if old is not None and not (
-                isinstance(old, float) and np.isnan(old)
-            ):
-                pos = np.union1d(pos, decode_dv_payload(bytes(old)))
-            return pd.DataFrame(
-                {
-                    "file_path": [fp],
-                    "dv": [dv_payload(pos)],
-                    "cardinality": [int(len(pos))],
-                }
-            )
-
-        rows_df = pos2.groupBy("file_path").applyInPandas(
-            _build, "file_path string, dv binary, cardinality long"
+        int(doc.get("format-version", 2)),
+    )
+    prior = _dv_per_file(entries, touched)
+    old_rows = []
+    for ref, d in sorted(prior.items()):
+        with open(d["path"], "rb") as fh:
+            fh.seek(d["dv"]["offset"])
+            old_rows.append((ref, bytearray(fh.read(d["dv"]["size"]))))
+    if old_rows:
+        old_df = local_frame(
+            spark, old_rows, "file_path string, _old binary"
         )
-        if len(touched) <= _DV_DRIVER_CONTAINER_MAX:
-            # few touched files: collect the (bounded-per-blob) bitmaps
-            # and write ONE container driver-side — skips a second
-            # Python-worker stage
-            collected = rows_df.collect()
-            coords = _write_dv_container_driver(
-                collected, table_dir, seq, snapshot_id,
-            )
-        else:
-            # many touched files: per-TASK Puffin containers, the v2
-            # distributed delete-parts shape — each task writes one
-            # container holding its batch of DVs and the driver
-            # collects only (file_path, container, offset, length,
-            # cardinality, container_size) coordinate rows, never
-            # blob bytes. Container count targets ~128 blobs each.
-            import math
+        pos2 = positions.join(F.broadcast(old_df), "file_path", "left")
+    else:
+        pos2 = positions.withColumn("_old", F.lit(None).cast("binary"))
+    # the bitmap kernel unpickles on workers via `import hielo_spark` —
+    # ship the package zip so the commit API works from any working
+    # directory (same contract as the DataSource)
+    _ship_package(spark)
 
-            dv_dir = os.path.join(table_dir, "data")
-            os.makedirs(dv_dir, exist_ok=True)
-            prefix = f"seq-{seq:05d}-dvs"
-            snap_id, seq_v = snapshot_id, seq
+    def _build(pdf):
+        import numpy as np
+        import pandas as pd
 
-            def _write_container(batches):
-                import os as _os
-                import uuid as _u
+        from hielo_spark.metadata.puffin import decode_dv_payload, dv_payload
 
-                import pandas as pd
-
-                from hielo_spark.metadata.puffin import (
-                    DV_BLOB_TYPE as _BT,
-                )
-                from hielo_spark.metadata.puffin import (
-                    write_puffin as _wp,
-                )
-
-                acc = []
-                for pdf in batches:
-                    acc.extend(
-                        (fp, bytes(dv), int(card))
-                        for fp, dv, card in zip(
-                            pdf["file_path"], pdf["dv"],
-                            pdf["cardinality"],
-                        )
-                    )
-                if not acc:
-                    return
-                acc.sort(key=lambda r: r[0])
-                path = _os.path.join(
-                    dv_dir, f"{prefix}-{_u.uuid4().hex[:8]}.puffin"
-                )
-                blobs = [
-                    {
-                        "type": _BT,
-                        "fields": [],
-                        "snapshot-id": snap_id,
-                        "sequence-number": seq_v,
-                        "payload": dv,
-                        "properties": {
-                            "referenced-data-file": fp,
-                            "cardinality": str(card),
-                        },
-                    }
-                    for fp, dv, card in acc
-                ]
-                _fs, _ft, metas = _wp(
-                    path, blobs, {"created-by": "hielo_spark"}
-                )
-                fsize = _os.path.getsize(path)
-                yield pd.DataFrame(
-                    {
-                        "file_path": [r[0] for r in acc],
-                        "puffin": path,
-                        "offset": [int(m["offset"]) for m in metas],
-                        "length": [int(m["length"]) for m in metas],
-                        "cardinality": [r[2] for r in acc],
-                        "fsize": fsize,
-                    }
-                )
-
-            n_containers = max(1, math.ceil(len(touched) / 128))
-            coords = [
-                (r.file_path, r.puffin, r.offset, r.length,
-                 r.cardinality, r.fsize)
-                for r in rows_df.repartition(n_containers)
-                .mapInPandas(
-                    _write_container,
-                    "file_path string, puffin string, offset long, "
-                    "length long, cardinality long, fsize long",
-                )
-                .collect()
-            ]
-        rows = coords
-
-    replaced = {c[0] for c in rows} & set(old_dvs)
-    # a DV belongs to its referenced data file's partition — stamp it
-    # so the partition-statistics plane attributes DV delete records to
-    # their true partitions (pure-Python planning pass, O(live files))
-    live = {}
-    if rows:
-        from .manifests import live_data_file_dicts
-
-        live = live_data_file_dicts(
-            _resolve(
-                os.path.join(mdir, "x"),
-                current["manifest-list"].removeprefix("file:"),
-            ),
-            fv,
-        )
-    entries = []
-    total_cardinality = 0
-    puffin_size = sum({c[1]: c[5] for c in rows}.values())
-    for fp, ppath, off, length, card, fsize in sorted(rows):
-        total_cardinality += int(card)
-        ref = live.get(fp.removeprefix("file:"), {})
-        entries.append(
+        fp = pdf["file_path"].iloc[0]
+        pos = np.unique(pdf["pos"].to_numpy(dtype="int64").astype("uint64"))
+        old = pdf["_old"].iloc[0]
+        if old is not None and not (isinstance(old, float) and np.isnan(old)):
+            pos = np.union1d(pos, decode_dv_payload(bytes(old)))
+        return pd.DataFrame(
             {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "data_file": {
-                    "content": 1,  # DVs are position deletes
-                    "file_path": ppath,
-                    "file_format": "PUFFIN",
-                    "record_count": int(card),
-                    "file_size_in_bytes": int(fsize),
-                    "referenced_data_file": fp,
-                    "content_offset": int(off),
-                    "content_size_in_bytes": int(length),
-                    "partition_values": ref.get("pvals") or None,
-                    "partition_types": ref.get("ptypes") or None,
-                },
+                "file_path": [fp],
+                "dv": [dv_payload(pos)],
+                "cardinality": [int(len(pos))],
             }
         )
 
-    return entries, puffin_size, total_cardinality, replaced, old_dvs
-
-
-def _write_dv_container_driver(
-    collected, table_dir: str, seq: int, snapshot_id: int
-) -> list[tuple]:
-    """Write ONE Puffin container of DV blobs driver-side (the
-    few-touched-files path) and return coordinate rows of the same
-    shape the distributed writer yields: ``(file_path, puffin, offset,
-    length, cardinality, container_size)``."""
-    from .puffin import DV_BLOB_TYPE, write_puffin
-
-    if not collected:
-        return []
-    puffin_path = os.path.join(
-        table_dir, "data",
-        f"seq-{seq:05d}-dvs-{_uuid.uuid4().hex[:8]}.puffin",
+    rows_df = pos2.groupBy("file_path").applyInPandas(
+        _build, "file_path string, dv binary, cardinality long"
     )
-    os.makedirs(os.path.dirname(puffin_path), exist_ok=True)
-    ordered = sorted(collected, key=lambda r: r.file_path)
-    blobs = [
-        {
-            # spec: DV blob metadata sets referenced-data-file and
-            # cardinality properties; fields is unused for DVs
-            "type": DV_BLOB_TYPE,
-            "fields": [],
-            "snapshot-id": snapshot_id,
-            "sequence-number": seq,
-            "payload": bytes(r.dv),
-            "properties": {
-                "referenced-data-file": r.file_path,
-                "cardinality": str(int(r.cardinality)),
-            },
-        }
-        for r in ordered
-    ]
-    _fsize, _foot, metas = write_puffin(
-        puffin_path, blobs, {"created-by": "hielo_spark"}
+    dv_dir = os.path.join(table_dir, "data")
+    if len(touched) <= _DV_DRIVER_CONTAINER_MAX:
+        # few touched files: one container written driver-side skips
+        # a second Python-worker stage
+        coords = write_dv_container(
+            dv_dir, seq, snapshot_id,
+            [(r.file_path, r.dv, r.cardinality) for r in rows_df.collect()],
+        )
+    else:
+        # many touched files: each task writes one container of its
+        # batch (~128 blobs) and the driver collects only coordinate
+        # records, never blob bytes
+        def _write_container(batches):
+            import json as _json
+
+            import pandas as pd
+
+            from hielo_spark.metadata.puffin import write_dv_container as w
+
+            recs = w(dv_dir, seq, snapshot_id, [
+                r for pdf in batches
+                for r in zip(pdf["file_path"], pdf["dv"], pdf["cardinality"])
+            ])
+            if recs:
+                yield pd.DataFrame({"rec": [_json.dumps(r) for r in recs]})
+
+        n_containers = max(1, math.ceil(len(touched) / 128))
+        coords = [
+            json.loads(r.rec)
+            for r in rows_df.repartition(n_containers)
+            .mapInPandas(_write_container, "rec string").collect()
+        ]
+    return _stage_dv_manifests(
+        doc, mdir, current, entries, coords, list(prior.values()), seq,
+        snapshot_id,
     )
-    fsize = os.path.getsize(puffin_path)
-    return [
-        (r.file_path, puffin_path, int(m["offset"]), int(m["length"]),
-         int(r.cardinality), fsize)
-        for r, m in zip(ordered, metas)
-    ]
+
+
+def _stage_dv_manifests(
+    doc: dict,
+    mdir: str,
+    current: dict,
+    entries: list[dict],
+    coords: list[dict],
+    superseded: list[dict],
+    seq: int,
+    snapshot_id: int,
+) -> dict:
+    """Stage the deletion vectors :func:`puffin.write_dv_container`
+    wrote (``coords``) against ``current``, whose live ``entries`` the
+    caller read, and retire the DV entries they replace
+    (``superseded``): one delete manifest per partition spec of the
+    referenced data files, through :func:`_stage_files_manifest`, each
+    DV carrying its data file's partition (the way
+    ``rewrite_position_deletes`` passes ``ptypes``), so the
+    partition-statistics plane attributes its records to that
+    partition; and ``current``'s carry-forward with the superseded
+    entries tombstoned (spec: at most one DV per data file).
+
+    Returns ``rows`` (the carry-forward, then the DV manifests' rows),
+    ``added`` and ``replaced`` DV counts, ``records`` (the positions
+    the new DVs add over the ones they replace) and the net ``files``
+    and ``bytes`` deltas of the live delete set: container bytes in,
+    superseded blob bytes out (superseded containers wait for the
+    orphan sweep)."""
+    from .manifests import _norm_ref_path
+
+    data = {e["path"]: e for e in entries if e["content"] == 0}
+    by_spec: dict[int, list[tuple[dict, dict]]] = {}
+    for c in coords:
+        f = data.get(_norm_ref_path(c["dv"]["referenced"]), {})
+        by_spec.setdefault(f.get("spec_id", 0), []).append((c, f))
+    staged = []
+    for spec_id, group in sorted(by_spec.items()):
+        ptypes = next((f["ptypes"] for _, f in group if f.get("ptypes")), None)
+        staged.append(_stage_files_manifest(
+            doc, [dict(c, partition_values=f.get("pvals")) for c, f in group],
+            {}, snapshot_id, seq, mdir, spec_id,
+            _partition_avro_fields(doc, ptypes, spec_id), ptypes, content=1,
+        ))
+    carried = _supersede_dv_rows(
+        _carry_forward_rows(mdir, doc, int(current["snapshot-id"])),
+        superseded, mdir, seq, snapshot_id,
+    )
+    containers = {c["path"]: c["file_size_in_bytes"] for c in coords}
+    return {
+        "rows": carried + [
+            _staged_manifest_row(s, seq, snapshot_id) for s in staged
+        ],
+        "added": len(coords),
+        "replaced": len(superseded),
+        "records": sum(c["record_count"] for c in coords)
+        - sum(d["records"] for d in superseded),
+        "files": len(coords) - len(superseded),
+        "bytes": sum(containers.values())
+        - sum(d["dv"]["size"] for d in superseded),
+    }
 
 
 def _supersede_dv_rows(
     prior_rows: list[dict],
-    replaced: set[str],
-    old_dvs: dict[str, dict],
+    superseded: list[dict],
     mdir: str,
     seq: int,
-    snapshot_id: int | None = None,
+    snapshot_id: int,
 ) -> list[dict]:
-    """Tombstone superseded DV entries in the carried-forward delete
-    manifests (spec: at most one DV per data file) — rewrite each
-    affected manifest re-emitting the superseded entries as status=2
-    with the superseding snapshot's id, drop manifests left with
-    nothing live or tombstoned."""
-    if not replaced:
-        return prior_rows
-    by_manifest: dict[str, set[str]] = {}
-    for ref in replaced:
-        by_manifest.setdefault(old_dvs[ref]["manifest"], set()).add(ref)
-    rewritten_rows = []
+    """Tombstone the ``superseded`` DV entries (live entries, each with
+    its owning ``manifest``) in the carried-forward delete manifests
+    through :func:`_tombstone_manifest_row`, keyed by
+    ``referenced_data_file``; a manifest left with nothing live or
+    tombstoned is dropped."""
+    doomed: dict[str, set[str]] = {}
+    for d in superseded:
+        doomed.setdefault(d["manifest"], set()).add(
+            d["dv"]["referenced"].removeprefix("file:")
+        )
+    out = []
     for r in prior_rows:
-        refs = by_manifest.get(r["manifest_path"])
-        if not refs:
-            rewritten_rows.append(r)
-            continue
-        rw = _rewrite_manifest_dropping_dvs(
-            r["manifest_path"], refs, mdir, seq, snapshot_id=snapshot_id
-        )
-        if rw is None:
-            continue  # nothing live or tombstoned — drop the manifest
-        new_path, live_files, live_rows, dropped_files, dropped_rows = rw
-        rewritten_rows.append(
-            dict(
-                r,
-                manifest_path=new_path,
-                manifest_length=os.path.getsize(new_path),
-                existing_files_count=live_files,
-                existing_rows_count=live_rows,
-                # supersession stays OBSERVABLE: the manifest-list row
-                # reports the tombstoned DV entries it carries
-                deleted_files_count=dropped_files,
-                deleted_rows_count=dropped_rows,
-            )
-        )
-    return rewritten_rows
+        if r["manifest_path"] in doomed:
+            r = _tombstone_manifest_row(
+                r, "referenced_data_file", doomed[r["manifest_path"]],
+                mdir, seq, snapshot_id,
+            )[0]
+        if r is not None:
+            out.append(r)
+    return out
 
 
 def set_table_properties(
@@ -4117,22 +3830,26 @@ def rewrite_deletion_vectors(
     commit writes its vectors into a NEW Puffin file, so a
     frequently-deleted table accumulates many small containers (each
     holding live blobs next to superseded garbage). This REPLACE commit
-    rewrites all live DVs into ONE Puffin file behind one delete
-    manifest — the v3 twin of ``rewrite_position_deletes``. Blob bytes
-    pass through VERBATIM (no decode/re-encode — the live vector is
-    already the merged truth for its file) at a fresh sequence number,
-    which is safe for position-content deletes: they bind to data files
-    by PATH, so a higher sequence number cannot widen what they apply
-    to. Returns the new snapshot, or None when fewer than ``min_files``
-    Puffin containers are live (nothing worth compacting).
+    rewrites all live DVs — the max-sequence one per data file, picked
+    by the read planes' :func:`manifests._dv_per_file` — into ONE
+    Puffin file through :func:`puffin.write_dv_container`, staged and
+    superseding every prior DV through :func:`_stage_dv_manifests`, so
+    each DV keeps its data file's partition — the v3 twin of
+    ``rewrite_position_deletes``. Blob bytes pass through VERBATIM (no
+    decode/re-encode — the live vector is already the merged truth for
+    its file) at a fresh sequence number, which is safe for
+    position-content deletes: they bind to data files by PATH, so a
+    higher sequence number cannot widen what they apply to. Returns the
+    new snapshot, or None when fewer than ``min_files`` Puffin
+    containers are live (nothing worth compacting).
 
     Scale: pure planning-plane — blob regions are read and re-framed by
     the driver, bounded by live-DV count × bitmap size; no data scan,
     no Spark job."""
     import time
 
-    from .manifests import _resolve
-    from .puffin import DV_BLOB_TYPE, write_puffin
+    from .manifests import _dv_per_file, _norm_ref_path, _resolve, live_entries
+    from .puffin import write_dv_container
 
     doc, prev_version = _load_doc(table_dir)
     fv = int(doc.get("format-version", 2))
@@ -4148,17 +3865,19 @@ def rewrite_deletion_vectors(
         if s["snapshot-id"] == doc["current-snapshot-id"]
     )
     mdir = os.path.join(table_dir, "metadata")
-    mlist = _resolve(
-        os.path.join(mdir, "x"),
-        current["manifest-list"].removeprefix("file:"),
+    entries = live_entries(
+        _resolve(
+            os.path.join(mdir, "x"),
+            current["manifest-list"].removeprefix("file:"),
+        ),
+        fv,
     )
-    dvs = _live_dv_entries(mlist, fv)
-    if len({d["puffin"] for d in dvs}) < min_files:
+    dvs = [e for e in entries if e["dv"]]
+    if len({d["path"] for d in dvs}) < min_files:
         return None
-    # max-seq per referenced file (the live invariant; defensive here)
-    best: dict[str, dict] = {}
-    for d in sorted(dvs, key=lambda d: d["seq"] or 0):
-        best[d["dv"]["referenced"].removeprefix("file:")] = d
+    best = _dv_per_file(
+        dvs, {_norm_ref_path(d["dv"]["referenced"]) for d in dvs}
+    )
 
     seq_new = int(doc.get("last-sequence-number", 0)) + 1
     snapshot_id = (
@@ -4169,104 +3888,32 @@ def rewrite_deletion_vectors(
         timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
     )
 
-    puffin_path = os.path.join(
-        table_dir, "data",
-        f"seq-{seq_new:05d}-dvs-{_uuid.uuid4().hex[:8]}.puffin",
-    )
-    blobs = []
-    cards = {}
-    for ref in sorted(best):
-        d = best[ref]
-        with open(d["puffin"], "rb") as fh:
+    def payload(d):
+        with open(d["path"], "rb") as fh:
             fh.seek(d["dv"]["offset"])
-            payload = fh.read(d["dv"]["size"])
-        # cardinality comes from the live entry's record_count — no
-        # decode: the bytes really do pass through verbatim
-        cards[ref] = d["records"]
-        blobs.append(
-            {
-                "type": DV_BLOB_TYPE,
-                "fields": [],
-                "snapshot-id": snapshot_id,
-                "sequence-number": seq_new,
-                "payload": payload,
-                "properties": {
-                    "referenced-data-file": ref,
-                    "cardinality": str(cards[ref]),
-                },
-            }
-        )
-    _fsize, _foot, metas = write_puffin(
-        puffin_path, blobs, {"created-by": "hielo_spark"}
-    )
-    puffin_size = os.path.getsize(puffin_path)
-    entries = [
-        {
-            "status": 1,
-            "snapshot_id": snapshot_id,
-            "data_file": {
-                "content": 1,
-                "file_path": puffin_path,
-                "file_format": "PUFFIN",
-                "record_count": cards[b["properties"]["referenced-data-file"]],
-                "file_size_in_bytes": puffin_size,
-                "referenced_data_file": b["properties"][
-                    "referenced-data-file"
-                ],
-                "content_offset": int(m["offset"]),
-                "content_size_in_bytes": int(m["length"]),
-            },
-        }
-        for b, m in zip(blobs, metas)
-    ]
-    manifest_path = os.path.join(
-        mdir, f"delete-manifest-{seq_new:05d}-{_uuid.uuid4().hex[:8]}.avro"
-    )
-    write_avro(
-        spark, manifest_path, MANIFEST_ENTRY_SCHEMA_V2, entries,
-        meta=_manifest_header_meta(doc, 0, "deletes"),
-    )
+            return fh.read(d["dv"]["size"])
 
-    # carry forward everything except the rewritten DV entries — shared
-    # supersession machinery (every live ref is being rewritten, so
-    # supersede by each DV's own manifest attribution)
-    rewritten_old = {
-        d["dv"]["referenced"].removeprefix("file:"): d for d in dvs
-    }
-    prior_rows = _supersede_dv_rows(
-        _carry_forward_rows(mdir, doc),
-        set(rewritten_old), rewritten_old, mdir, seq_new,
-        snapshot_id=snapshot_id,
+    # cardinality comes from the live entry's record_count — no decode:
+    # the bytes really do pass through verbatim
+    coords = write_dv_container(
+        os.path.join(table_dir, "data"), seq_new, snapshot_id,
+        [(ref, payload(d), d["records"]) for ref, d in best.items()],
     )
-
-    new_row = {
-        "manifest_path": manifest_path,
-        "manifest_length": os.path.getsize(manifest_path),
-        "partition_spec_id": 0,
-        "content": 1,
-        "sequence_number": seq_new,
-        "min_sequence_number": seq_new,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": sum(cards.values()),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    old_blob_bytes = sum(d["dv"]["size"] for d in dvs)
+    stage = _stage_dv_manifests(
+        doc, mdir, current, entries, coords, dvs, seq_new, snapshot_id,
+    )
     return _finalize_commit(
-        table_dir, doc, prev_version, prior_rows + [new_row],
+        table_dir, doc, prev_version, stage["rows"],
         snapshot_id, timestamp_ms, seq_new,
         _with_totals(
             {
                 "operation": "replace",
-                "rewritten-dv-files": str(len({d["puffin"] for d in dvs})),
-                "added-dvs": str(len(entries)),
+                "rewritten-dv-files": str(len({d["path"] for d in dvs})),
+                "added-dvs": str(stage["added"]),
             },
             doc, doc.get("current-snapshot-id"),
             # net: every prior live DV is superseded by its rewrite
-            0, puffin_size - old_blob_bytes, len(entries) - len(dvs),
+            0, stage["bytes"], stage["files"],
         ),
     )
 
@@ -4871,6 +4518,7 @@ def rewrite_manifests(
     single data manifest (nothing to consolidate)."""
     import time
 
+    from .avro_py import write_avro_file
     from .manifests import _resolve, read_manifest_list
 
     doc, prev_version = _load_doc(table_dir)
@@ -4991,8 +4639,8 @@ def rewrite_manifests(
         mpath = os.path.join(
             mdir, f"manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
         )
-        write_avro(
-            spark, mpath, manifest_entry_schema(pfields), chunk,
+        write_avro_file(
+            mpath, manifest_entry_schema(pfields), chunk,
             meta=_manifest_header_meta(doc, spec_id, "data"),
         )
         new_rows.append(
@@ -5052,7 +4700,10 @@ def merge_into(
     atomic composition correct: the commit's own appended files survive
     its own delete, while every matched pre-existing row disappears.
     Readers see either the whole merge or none of it (the metadata.json
-    version bump is the atomic commit point).
+    version bump is the atomic commit point). On a format-version ≥ 3
+    table the matched keys resolve to row positions instead and commit
+    as deletion vectors through :func:`_stage_deletion_vectors`, the
+    stage ``delete_where`` uses, in the same snapshot.
 
     ``when_matched``: ``"update"`` (matched target rows are replaced by
     the matching source rows — duplicate target keys all die, duplicate
@@ -5204,9 +4855,7 @@ def merge_into(
 
     fv = int(doc.get("format-version", 2))
     eq_files = eq_bytes = 0
-    dv_entries_count = 0
-    dv_net_files = 0
-    dv_net_bytes = 0
+    dv_added = dv_net_files = dv_net_bytes = 0
     current = next(
         s for s in doc["snapshots"] if s["snapshot-id"] == base_id
     )
@@ -5244,46 +4893,15 @@ def merge_into(
             F.col("_fp").alias("file_path"),
             F.col("_pos").cast("long").alias("pos"),
         )
-        dv_entries, dv_puffin_size, dv_cardinality, dv_replaced, dv_old = (  # noqa: E501
-            _build_dv_entries(
-                spark, table_dir, doc, mdir, current, positions, seq,
-                snapshot_id,
+        stage = _stage_deletion_vectors(
+            spark, table_dir, doc, mdir, current, positions, seq,
+            snapshot_id,
+        )
+        if stage is not None:
+            manifest_rows = stage["rows"]
+            dv_added, dv_net_files, dv_net_bytes = (
+                stage["added"], stage["files"], stage["bytes"]
             )
-        )
-        dv_entries_count = len(dv_entries)
-        # net totals: replacements supersede prior DVs (see delete_where)
-        dv_net_files = dv_entries_count - len(dv_replaced)
-        dv_net_bytes = dv_puffin_size - sum(
-            dv_old[r]["dv"]["size"] for r in dv_replaced
-        )
-        del_manifest = os.path.join(
-            mdir, f"delete-manifest-{seq:05d}-{_uuid.uuid4().hex[:8]}.avro"
-        )
-        write_avro(
-            spark, del_manifest, MANIFEST_ENTRY_SCHEMA_V2, dv_entries,
-            meta=_manifest_header_meta(doc, 0, "deletes"),
-        )
-        manifest_rows = _supersede_dv_rows(
-            manifest_rows, dv_replaced, dv_old, mdir, seq,
-            snapshot_id=snapshot_id,
-        )
-        manifest_rows.append(
-            {
-                "manifest_path": del_manifest,
-                "manifest_length": os.path.getsize(del_manifest),
-                "partition_spec_id": 0,
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": dv_entries_count,
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": dv_cardinality,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
     elif n_delete_keys:
         # distributed delete-key write (no coalesce(1) funnel; the keys
         # frame keeps the join's partitioning), spec-sorted per task
@@ -5344,10 +4962,7 @@ def merge_into(
                 "added-records": str(added_records),
                 "deleted-records": str(n_deleted_rows),
                 "equality-delete-files": str(eq_files),
-                **(
-                    {"added-dvs": str(dv_entries_count)}
-                    if dv_entries_count else {}
-                ),
+                **({"added-dvs": str(dv_added)} if dv_added else {}),
                 "added-delete-records": str(n_delete_keys),
                 "total-records": str(prior_total - n_deleted_rows + added_records),
                 **(extra_summary or {}),
@@ -5419,6 +5034,7 @@ def cherrypick_snapshot(
     SAME parquet files — no data is copied or rewritten."""
     import time
 
+    from .avro_py import write_avro_file
     from .manifests import decode_manifest, inherited_seq_of, read_avro_file, _resolve
 
     doc, prev_version = _load_doc(table_dir)
@@ -5532,8 +5148,8 @@ def cherrypick_snapshot(
             )
         return out
 
-    write_avro(
-        spark, manifest_path, entry_schema,
+    write_avro_file(
+        manifest_path, entry_schema,
         [
             {
                 "status": 1,

@@ -10,9 +10,9 @@ them by driving Spark's bundled Apache Avro JVM library through py4j;
 r5 switched decoding to the pure-Python container reader
 (``metadata/avro_py.py``) — the per-field py4j round-trips dominated
 planning time (measured against the Python DataSource on an identical
-scan), and one decoder now serves every plane. The JVM library remains
-the write path's encoder (commit.write_avro) and the conformance tests'
-independent reader. Output frames are unchanged
+scan), and one decoder now serves every plane; its twin encoder
+(``avro_py.write_avro_file``) writes every manifest. The JVM library
+remains the conformance tests' independent reader. Output frames are unchanged
 (``files_from_orders`` shape → `files.py::file_size_histogram` runs
 unchanged on real tables).
 
@@ -42,6 +42,8 @@ position; see the comment at its site).
 """
 
 from __future__ import annotations
+
+import string
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
@@ -95,8 +97,9 @@ def live_entries(
     maps), ``partition`` (the spec's typed record), ``spec_id`` (the
     manifest's partition spec), ``lb``/``ub``/``bt``/``nc``/``nanc``
     (the bounds record ``_file_may_match`` reads), ``dv`` (deletion
-    vector blob coordinates), ``frid`` (v3 first_row_id) and
-    ``equality_ids``."""
+    vector blob coordinates), ``frid`` (v3 first_row_id),
+    ``equality_ids`` and ``manifest`` (the owning manifest's path as the
+    list records it — what a rewrite of that manifest is keyed by)."""
     _, _, mlist_rows = read_avro_file(manifest_list_path)
     out: list[dict] = []
     for m in mlist_rows:
@@ -120,6 +123,7 @@ def live_entries(
                 "lb": lb, "ub": ub, "bt": bt, "nc": nc, "nanc": nanc,
                 "dv": dv, "frid": frid,
                 "equality_ids": rec.get("equality_ids"),
+                "manifest": m["manifest_path"],
             })
     return out
 
@@ -1062,6 +1066,13 @@ def schema_defaults(
     return out
 
 
+#: path characters a URI carries unescaped (RFC 2396 unreserved and
+#: punctuation, ``/`` and ``@``); see _read_files_with_partitions
+_URI_SAFE = frozenset(
+    string.ascii_letters + string.digits + "/_-!.~'()*,;:$&+=@"
+)
+
+
 def _read_files_with_partitions(
     spark: SparkSession,
     data_files: list[dict],
@@ -1092,15 +1103,25 @@ def _read_files_with_partitions(
     def group_key(f):
         return tuple(sorted(f["pvals"].items())) if f["pvals"] else None
 
+    # _metadata.file_path is a URI: a path character a URI must escape
+    # (the ``%`` of a partition directory written as ``s=a%20b``, a
+    # space) comes back escaped (``s=a%2520b``). When some file's path
+    # holds one, decode once so _fp is the path the manifests record,
+    # escaping ``+`` first (url_decode reads it as a space); the decode
+    # runs per row, so reads of plain paths skip it
+    uri = F.col("_metadata.file_path")
+    if any(not _URI_SAFE.issuperset(f["path"]) for f in data_files):
+        uri = F.url_decode(F.regexp_replace(uri, r"\+", "%2B"))
+
+    def fp():
+        return _strip_scheme(uri).alias("_fp")
+
     groups: dict = {}
     for f in data_files:
         groups.setdefault(group_key(f), []).append(f)
     meta_cols = {
-        "fp_pos": [
-            lambda: _strip_scheme(F.col("_metadata.file_path")).alias("_fp"),
-            lambda: F.col("_metadata.row_index").alias("_pos"),
-        ],
-        "fp": [lambda: _strip_scheme(F.col("_metadata.file_path")).alias("_fp")],
+        "fp_pos": [fp, lambda: F.col("_metadata.row_index").alias("_pos")],
+        "fp": [fp],
         "none": [],
     }[row_coords]
     # Spark 4's parquet reader promotes int32→int64 / float→double per

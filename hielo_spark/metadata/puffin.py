@@ -198,6 +198,63 @@ def write_puffin(
     return len(out), len(footer), metas
 
 
+def write_dv_container(
+    directory: str, seq: int, snapshot_id: int, rows
+) -> list[dict]:
+    """Write one Puffin container of ``deletion-vector-v1`` blobs — the
+    one deletion-vector writer, run in-task, on the driver and by DV
+    compaction. ``rows`` are ``(referenced data file, blob payload,
+    cardinality)``; the container lands in ``directory`` as
+    ``seq-NNNNN-dvs-*.puffin``, blobs in referenced-path order.
+
+    Returns one coordinate record per blob: the DV file dict
+    ``commit._stage_files_manifest`` stages — ``path`` (the container),
+    ``file_format``, ``record_count`` (the cardinality),
+    ``file_size_in_bytes`` (the container's) and ``dv``
+    (``referenced``/``offset``/``size``, the shape the manifest decoder
+    reads back). No rows write no file and return ``[]``."""
+    import uuid
+
+    rows = sorted(rows, key=lambda r: r[0])
+    if not rows:
+        return []
+    os.makedirs(directory, exist_ok=True)
+    path = os.path.join(
+        directory, f"seq-{seq:05d}-dvs-{uuid.uuid4().hex[:8]}.puffin"
+    )
+    size, _footer, metas = write_puffin(
+        path,
+        [
+            {
+                # spec: a DV blob names its data file and cardinality
+                # in properties; ``fields`` is unused for DVs
+                "type": DV_BLOB_TYPE,
+                "fields": [],
+                "snapshot-id": snapshot_id,
+                "sequence-number": seq,
+                "payload": bytes(payload),
+                "properties": {
+                    "referenced-data-file": ref,
+                    "cardinality": str(int(card)),
+                },
+            }
+            for ref, payload, card in rows
+        ],
+        {"created-by": "hielo_spark"},
+    )
+    return [
+        {
+            "path": path,
+            "file_format": "PUFFIN",
+            "record_count": int(card),
+            "file_size_in_bytes": size,
+            "dv": {"referenced": ref, "offset": int(m["offset"]),
+                   "size": int(m["length"])},
+        }
+        for (ref, _payload, card), m in zip(rows, metas)
+    ]
+
+
 def read_puffin(path: str) -> tuple[list[dict], dict]:
     """Read a Puffin file → (blobs-with-payloads, file properties).
     Validates all three magics and the footer geometry."""

@@ -2208,7 +2208,7 @@ def meta_deletion_vectors_roundtrip(
 
     cardinality = 0
     for d in dvs:
-        with open(d["puffin"], "rb") as fh:
+        with open(d["path"], "rb") as fh:
             fh.seek(d["dv"]["offset"])
             cardinality += len(decode_dv_payload(fh.read(d["dv"]["size"])))
 

@@ -403,9 +403,7 @@ def test_legacy_string_map_bounds_do_not_break_planning(registered, tmp_path):
     """r5 review finding: pre-r5 manifests carry string maps under the
     spec bound names; planning must fall back, not TypeError."""
     from hielo_spark.metadata.avro_py import write_avro_file
-    from hielo_spark.metadata.commit import (
-        MANIFEST_LIST_SCHEMA_V2, write_avro,
-    )
+    from hielo_spark.metadata.commit import MANIFEST_LIST_SCHEMA_V2
     import os
 
     spark = registered

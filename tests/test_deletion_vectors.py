@@ -3,7 +3,11 @@ vectors`, metadata/roaring.py, metadata/puffin.py): DELETE WHERE on a
 format-version-3 table commits one deletion-vector-v1 Puffin blob per
 touched data file instead of position-delete parquet; both read planes
 apply them; a replacement DV merges the prior one and supersedes it
-(at most one DV per data file, the spec invariant)."""
+(at most one DV per data file, the spec invariant). Every DV commit —
+DELETE/UPDATE, MERGE and the maintenance rewrite — writes through
+`puffin.write_dv_container` and stages through `_stage_files_manifest`,
+so each DV carries its data file's partition spec and values, also
+after compaction."""
 
 from __future__ import annotations
 
@@ -62,7 +66,7 @@ def test_v3_delete_where_commits_deletion_vectors(spark, tmp_path,
     # the delete manifest entries carry the v3 DV fields
     dvs = C._live_dv_entries(_current_mlist(t), 3)
     assert dvs and all(
-        d["puffin"].endswith(".puffin")
+        d["path"].endswith(".puffin")
         and d["dv"]["size"] > 0
         for d in dvs
     )
@@ -71,7 +75,7 @@ def test_v3_delete_where_commits_deletion_vectors(spark, tmp_path,
 
     total = 0
     for d in dvs:
-        with open(d["puffin"], "rb") as fh:
+        with open(d["path"], "rb") as fh:
             fh.seek(d["dv"]["offset"])
             pos = decode_dv_payload(fh.read(d["dv"]["size"]))
         total += len(pos)
@@ -119,7 +123,7 @@ def test_v3_second_delete_merges_and_supersedes(spark, tmp_path,
 
     total = 0
     for d in dvs:
-        with open(d["puffin"], "rb") as fh:
+        with open(d["path"], "rb") as fh:
             fh.seek(d["dv"]["offset"])
             total += len(decode_dv_payload(fh.read(d["dv"]["size"])))
     killed = {i for i in range(100) if i % 10 == 0 or i % 7 == 0}
@@ -236,14 +240,14 @@ def test_rewrite_deletion_vectors_compacts_containers(spark, tmp_path,
             spark, C.current_metadata_path(t)
         ).collect()
     )
-    assert len({d["puffin"] for d in C._live_dv_entries(
+    assert len({d["path"] for d in C._live_dv_entries(
         _current_mlist(t), 3)}) == 2
 
     snap = C.rewrite_deletion_vectors(spark, t, snapshot_id=104,
                                       timestamp_ms=1700300000000)
     assert snap["summary"]["operation"] == "replace"
     dvs = C._live_dv_entries(_current_mlist(t), 3)
-    assert len({d["puffin"] for d in dvs}) == 1
+    assert len({d["path"] for d in dvs}) == 1
     refs = [d["dv"]["referenced"] for d in dvs]
     assert len(refs) == len(set(refs))
     # scans unchanged, both planes
@@ -434,3 +438,49 @@ def test_dv_supersession_is_observable_in_metadata(spark, tmp_path):
     got = sorted(r.id for r in read_data_at_snapshot(
         spark, C.current_metadata_path(t)).collect())
     assert got == list(range(5, 95)) + list(range(200, 205))
+
+
+def test_dv_compaction_keeps_partition_stamps(spark, tmp_path):
+    """Every DV carries its data file's partition, and the maintenance
+    rewrite keeps it, so the partition-statistics plane attributes DV
+    delete records to their true partitions after compaction."""
+    from pyspark.sql import functions as F
+
+    from hielo_spark.metadata import (
+        read_partition_statistics,
+        write_partition_statistics,
+    )
+    from hielo_spark.metadata.manifests import live_entries
+
+    t = str(tmp_path / "wh" / "ns" / "t")
+    for sid, lo in ((101, 0), (102, 20)):
+        C.append(spark, t, spark.range(lo, lo + 20).coalesce(1)
+                 .withColumn("r", (F.col("id") % 2).cast("int")),
+                 partition_by=["r"], snapshot_id=sid,
+                 timestamp_ms=1700000000000 + sid)
+    assert upgrade_format_version(t, 3) == 3
+    C.delete_where(spark, t, "id < 6",
+                   snapshot_id=103, timestamp_ms=1700100000000)
+    C.delete_where(spark, t, "id >= 30",
+                   snapshot_id=104, timestamp_ms=1700200000000)
+
+    def stamps():
+        dvs = [e for e in live_entries(_current_mlist(t), 3) if e["dv"]]
+        return sorted(str(e["pvals"]) for e in dvs), {
+            e["spec_id"] for e in dvs}
+
+    stamped = (["{'r': '0'}"] * 2 + ["{'r': '1'}"] * 2, {0})
+    assert stamps() == stamped
+    C.rewrite_deletion_vectors(spark, t, snapshot_id=105,
+                               timestamp_ms=1700300000000)
+    assert stamps() == stamped
+    assert len({d["path"] for d in C._live_dv_entries(
+        _current_mlist(t), 3)}) == 1
+    write_partition_statistics(spark, t, timestamp_ms=1700400000000)
+    got = {
+        r.partition.r: r.position_delete_record_count
+        for r in read_partition_statistics(spark, t).collect()
+    }
+    assert got == {0: 8, 1: 8}
+    assert sorted(r.id for r in read_data_at_snapshot(
+        spark, C.current_metadata_path(t)).collect()) == list(range(6, 30))

@@ -447,9 +447,8 @@ def test_spec_only_manifest_reads_bounds_and_skips(spark, tmp_path):
     string maps) — the foreign-writer shape — yields the same bounds
     frame, with bounds_types synthesized from the header schema, and
     drives file skipping."""
-    from hielo_spark.metadata.commit import (
-        MANIFEST_ENTRY_SCHEMA_V2, write_avro,
-    )
+    from hielo_spark.metadata.avro_py import write_avro_file
+    from hielo_spark.metadata.commit import MANIFEST_ENTRY_SCHEMA_V2
     from hielo_spark.metadata.manifests import read_manifest
     from hielo_spark.metadata.values import serialize_value
 
@@ -461,8 +460,8 @@ def test_spec_only_manifest_reads_bounds_and_skips(spark, tmp_path):
             {"id": 2, "name": "v", "required": False, "type": "string"},
         ],
     })
-    write_avro(
-        spark, mpath, MANIFEST_ENTRY_SCHEMA_V2,
+    write_avro_file(
+        mpath, MANIFEST_ENTRY_SCHEMA_V2,
         [{
             "status": 1,
             "snapshot_id": 7,

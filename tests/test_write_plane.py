@@ -228,6 +228,41 @@ def test_odd_equality_key_deletes_on_both_planes(registered, tmp_path, odd):
     assert sorted(r.id for r in ds.collect()) == [1, 2]
 
 
+@pytest.mark.parametrize("fv", [2, 3])
+def test_position_deletes_reach_url_quoted_partitions(registered, tmp_path,
+                                                      fv):
+    """A partition directory whose name was URL-quoted (``s=a%20b``) is
+    reported by Spark's ``_metadata.file_path`` quoted once more; the
+    delete must still record the manifest's path, so both planes drop
+    the rows. The ``+`` in the table directory must survive decoding."""
+    from hielo_spark.metadata import upgrade_format_version
+
+    spark = registered
+    t = str(tmp_path / "t+q")
+    C.append(spark, t, spark.createDataFrame(
+        [(i, "a b" if i % 2 else "c") for i in range(10)], "id int, s string"
+    ).coalesce(1), partition_by=["s"],
+        snapshot_id=101, timestamp_ms=1700000000000)
+    if fv == 3:
+        upgrade_format_version(t, 3)
+    C.delete_where(spark, t, "id < 4",
+                   snapshot_id=102, timestamp_ms=1700000001000)
+    import pyarrow.parquet as pq
+
+    ents = live_entries(*_current_list(t))
+    targets = set()
+    for e in ents:
+        if e["content"] == 1:
+            targets |= {e["dv"]["referenced"]} if e["dv"] else set(
+                pq.read_table(e["path"], columns=["file_path"])
+                .column(0).to_pylist())
+    assert len(targets) == 2
+    assert targets <= {e["file_path"] for e in ents if e["content"] == 0}
+    assert _ids(spark, t) == list(range(4, 10))
+    ds = spark.read.format("hielo_iceberg").load(t)
+    assert sorted(r.id for r in ds.collect()) == list(range(4, 10))
+
+
 def _ids(spark, t) -> list[int]:
     return sorted(
         r.id for r in read_data_at_snapshot(
@@ -352,3 +387,53 @@ def test_table_files_have_one_writer():
                 ):
                     found.append((path.name, node.lineno, "part-* glob"))
     assert found == []
+
+
+def test_deletion_vectors_have_one_writer():
+    """Deletion-vector containers are written only by
+    ``puffin.write_dv_container`` (``write_puffin``'s one other caller
+    writes statistics files), and a manifest entry's
+    ``referenced_data_file`` is built only by
+    ``commit._stage_files_manifest``: no module under ``hielo_spark``
+    calls ``write_puffin`` (under any import alias) or builds that dict
+    key (literal or keyword) anywhere else."""
+    import ast
+    import pathlib
+
+    import hielo_spark
+
+    key = "referenced_data_file"
+    found = set()
+
+    def visit(node, owner, mod, puffin_names):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Call):
+                fn = child.func
+                if getattr(fn, "attr", getattr(fn, "id", None)) \
+                        in puffin_names:
+                    found.add(("write_puffin", mod, owner))
+                if any(k.arg == key for k in child.keywords):
+                    found.add((key, mod, owner))
+            if isinstance(child, ast.Dict) and any(
+                isinstance(k, ast.Constant) and k.value == key
+                for k in child.keys
+            ):
+                found.add((key, mod, owner))
+            visit(child, child.name if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ) else owner, mod, puffin_names)
+
+    root = pathlib.Path(hielo_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        puffin_names = {"write_puffin"} | {
+            a.asname for n in ast.walk(tree)
+            if isinstance(n, ast.ImportFrom)
+            for a in n.names if a.name == "write_puffin" and a.asname
+        }
+        visit(tree, None, path.name, puffin_names)
+    assert found == {
+        ("write_puffin", "puffin.py", "write_dv_container"),
+        ("write_puffin", "puffin.py", "write_statistics"),
+        (key, "commit.py", "_stage_files_manifest"),
+    }
