@@ -1089,22 +1089,43 @@ def _variant_shred_udf(spark, shred: dict[str, str]):
     return enc
 
 
-def _prepare_variant_columns(
+def _to_stored_form(
     spark: SparkSession, df: DataFrame, doc: dict,
-    variant_cols: list[str],
+    variant_cols: list[str] | None = None,
     variant_shred: dict[str, dict[str, str]] | None = None,
 ) -> DataFrame:
-    """The write half of the v3 ``variant`` type: each named column —
-    a JSON string (encoded here) or an already-shaped
-    struct<metadata:binary,value:binary> (passed through) — lands in
-    parquet as the spec's unshredded variant pair, and the table
-    schema records the column as ``variant``. New tables commit as
-    format-version 3 (variant is a v3 type); a v2 table must
-    ``upgrade_format_version`` first — loud, never a silent v2 file a
-    foreign reader would mistype."""
-    from pyspark.sql import functions as F
+    """``df`` with every column in the form the table stores it — the
+    one encoder in front of every data-file write of frame rows.
 
+    ``variant_cols`` is the write half of the v3 ``variant`` type: each
+    named column — a JSON string (encoded here, shredded per
+    ``variant_shred``) or an already-shaped
+    struct<metadata:binary,value:binary> (passed through) — lands in
+    parquet as the spec's variant pair, and the table schema records
+    the column as ``variant``. New tables commit as format-version 3
+    (variant is a v3 type); a v2 table must ``upgrade_format_version``
+    first — loud, never a silent v2 file a foreign reader would
+    mistype.
+
+    Every other column the current schema records as ``variant`` or
+    ``geometry(…)``/``geography(…)`` that arrives as a ``string`` — the
+    read planes' JSON and WKT renderings — re-encodes to the unshredded
+    variant pair or to ISO WKB (``geo.wkt_to_wkb``; malformed WKT
+    raises in the task). That is how UPDATE, MERGE and compaction keep
+    rows they read back from the table, and how a SET or a MERGE source
+    may give those columns as JSON or WKT."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    from .metadata_json import current_schema_block
+
+    variant_cols = variant_cols or []
     dtypes = dict(df.dtypes)
+    cur = (current_schema_block(doc) if "schemas" in doc else None) or {}
+    recorded = {
+        f["name"]: f.get("type") for f in cur.get("fields", [])
+        if isinstance(f.get("type"), str)
+    }
     enc = None
     for c in variant_cols:
         t = dtypes.get(c)
@@ -1130,28 +1151,17 @@ def _prepare_variant_columns(
             if enc is None:
                 enc = _variant_encode_udf(spark)
             df = df.withColumn(c, enc(F.col(c)))
-        elif t.replace(" ", "") == _VARIANT_PARQUET_DDL:
-            pass  # already the parquet shape
-        else:
+        elif t.replace(" ", "") != _VARIANT_PARQUET_DDL:
             raise ValueError(
                 f"variant column {c!r} must be a JSON string or "
                 f"{_VARIANT_PARQUET_DDL}, got {t}"
             )
-    if "schemas" in doc:
-        fv = int(doc.get("format-version", 2))
-        if fv < 3:
+    if variant_cols and "schemas" in doc:
+        if int(doc.get("format-version", 2)) < 3:
             raise ValueError(
                 "variant columns need a format-version >= 3 table "
                 "(upgrade_format_version first)"
             )
-        cur = next(
-            (
-                s for s in doc.get("schemas", [])
-                if s.get("schema-id") == doc.get("current-schema-id", 0)
-            ),
-            {},
-        )
-        recorded = {f["name"]: f.get("type") for f in cur.get("fields", [])}
         for c in variant_cols:
             if recorded.get(c) != "variant":
                 raise ValueError(
@@ -1159,8 +1169,26 @@ def _prepare_variant_columns(
                     "not variant — appending variant data to it would "
                     "corrupt the table (evolve the schema explicitly)"
                 )
-    else:
+    elif variant_cols:
         doc["format-version"] = 3  # variant is a v3 type
+
+    @pandas_udf("binary")
+    def wkb(s):
+        import pandas as pd
+
+        from hielo_spark.metadata.geo import wkt_to_wkb
+
+        return pd.Series([wkt_to_wkb(v) for v in s], dtype="object")
+
+    for c, t in recorded.items():
+        if c in variant_cols or dtypes.get(c) != "string":
+            continue
+        if t == "variant":
+            if enc is None:
+                enc = _variant_encode_udf(spark)
+            df = df.withColumn(c, enc(F.col(c)))
+        elif t.split("(")[0] in ("geometry", "geography"):
+            df = df.withColumn(c, wkb(F.col(c)))
     return df
 
 
@@ -1707,15 +1735,20 @@ def _stage_append_manifest(
     variant_cols: list[str] | None = None,
     variant_shred: dict[str, dict[str, str]] | None = None,
     lineage_materialized: bool = False,
-) -> dict:
-    """The write half shared by append() and overwrite_partitions():
-    materialize write-defaults, prepare variant columns, honor the
-    table\'s distribution mode and sort order, write the data files,
-    and emit their manifest. Mutates ``doc`` the same way append
-    always has (shape recording, next-row-id is advanced later by
-    _finalize_commit). Returns :func:`_stage_files_manifest`'s dict —
-    its ``partition_values_of`` maps file path → stringified partition
-    values (what overwrite_partitions dooms prior files against).
+    skip_empty: bool = False,
+) -> dict | None:
+    """The one stage for data files written from a frame — append(),
+    overwrite_partitions(), UPDATE and MERGE: materialize
+    write-defaults, bring columns to their stored form
+    (:func:`_to_stored_form`), honor the table\'s distribution mode and
+    sort order, write the data files, and emit their manifest. Mutates
+    ``doc`` the same way append always has (shape recording,
+    next-row-id is advanced later by _finalize_commit). Returns
+    :func:`_stage_files_manifest`'s dict — its ``partition_values_of``
+    maps file path → stringified partition values (what
+    overwrite_partitions dooms prior files against) — or, with
+    ``skip_empty``, None when the frame wrote no file (MERGE commits no
+    empty data manifest).
 
     ``lineage_materialized``: the frame CARRIES the v3 lineage columns
     (``_row_id`` / ``_last_updated_sequence_number``) as real data —
@@ -1760,10 +1793,7 @@ def _stage_append_manifest(
                         _dfj(f["type"], f["write-default"])
                     ).cast(_i2d(f["type"])),
                 )
-    if variant_cols:
-        df = _prepare_variant_columns(
-            spark, df, doc, variant_cols, variant_shred
-        )
+    df = _to_stored_form(spark, df, doc, variant_cols, variant_shred)
     dtypes = dict(df.dtypes)
     # explicit partition_by wins; otherwise write under the table's
     # recorded default spec (Iceberg writer behavior — partition
@@ -1831,6 +1861,8 @@ def _stage_append_manifest(
         spark, data_dir, df, transforms,
         _sort_exprs(sort_spec, dtypes) if sort_spec else (),
     )
+    if skip_empty and not files:
+        return None
     # stamp the order id ONLY when every order column was present —
     # a partial sort must not claim the full order to readers
     sort_oid = (
@@ -1936,11 +1968,12 @@ def append(
     )
 
 
-def _commit_ids(doc: dict, snapshot_id, timestamp_ms, branch):
-    """``(seq, snapshot_id, timestamp_ms, base_id)`` for a new data
-    commit: the next sequence number, the caller's ids or the defaults
-    (sequence-derived snapshot id, wall clock), and the snapshot the
-    commit builds on — the current one, or the head of ``branch``."""
+def _commit_ids(doc: dict, snapshot_id, timestamp_ms, branch=None):
+    """``(seq, snapshot_id, timestamp_ms, base_id)`` for a new snapshot
+    — every commit that adds one takes them here: the next sequence
+    number, the caller's ids or the defaults (sequence-derived snapshot
+    id, wall clock), and the snapshot the commit builds on — the
+    current one, or the head of ``branch`` (a tag raises)."""
     import time
 
     seq = int(doc.get("last-sequence-number", 0)) + 1
@@ -2569,7 +2602,7 @@ def _tombstone_partitions_in_rows(
 ) -> tuple[list[dict], int, int, int]:
     """The carry-forward half of a dynamic overwrite, shared by the
     JVM-plane overwrite_partitions and the DataSource write plane
-    (commit_py.append_files mode='dynamic-overwrite'): walk the prior
+    (:func:`append_files` mode='dynamic-overwrite'): walk the prior
     manifest-list rows, tombstone live data entries whose current-spec
     partition tuple is in ``incoming`` (empty ``pfields`` = doom every
     live data file — full overwrite), carry everything else untouched.
@@ -2787,19 +2820,12 @@ def delete_equality(
     equality-delete parquet, a content=1 delete manifest whose entry is
     a content=2 delete file at the new sequence number, and the bumped
     metadata.json."""
-    import time
-
     doc, prev_version = _load_doc(table_dir)
-    if doc.get("current-snapshot-id") is None:
+    seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms
+    )
+    if base_id is None:
         raise ValueError("cannot delete from a table with no current snapshot")
-    seq = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq)
-    )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
     mdir = os.path.join(table_dir, "metadata")
 
     # distributed write, natural partitioning (keys frames are usually
@@ -2824,7 +2850,7 @@ def delete_equality(
                 "equality-delete-files": str(n_files),
                 "added-delete-records": str(staged["added_records"]),
             },
-            doc, doc.get("current-snapshot-id"),
+            doc, base_id,
             0, staged["added_bytes"], n_files,
         ),
     )
@@ -2963,26 +2989,18 @@ def rewrite_data_files(
     driver-side from the manifests, bounded by files-per-snapshot like
     any engine's planner, and starts no Spark job."""
     import math
-    import time
 
     from .manifests import live_data_file_dicts, read_data_at_snapshot
 
     doc, prev_version = _load_doc(table_dir)
-    if doc.get("current-snapshot-id") is None:
+    seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms
+    )
+    if base_id is None:
         raise ValueError("cannot rewrite a table with no current snapshot")
-    seq = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq)
-    )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
     mdir = os.path.join(table_dir, "metadata")
 
-    current = next(
-        s for s in doc["snapshots"] if s["snapshot-id"] == doc["current-snapshot-id"]
-    )
+    current = next(s for s in doc["snapshots"] if s["snapshot-id"] == base_id)
     old_files = live_data_file_dicts(
         current["manifest-list"].removeprefix("file:"),
         doc.get("format-version", 2),
@@ -3026,7 +3044,9 @@ def rewrite_data_files(
     # compacted files get fresh column stats from the writer, which is
     # where sort/zorder strategies pay off (tight disjoint ranges →
     # skip_filter reads touch one file). The rewrite is unpartitioned
-    # (spec 0) and its rows keep their lineage (no new row ids).
+    # (spec 0), its rows keep their lineage (no new row ids) and their
+    # variant/geo columns re-encode from the read-back JSON/WKT.
+    live = _to_stored_form(spark, live, doc)
     staged = _stage_files_manifest(
         doc, _write_data_files(spark, data_dir, live, []),
         dict(live.dtypes), snapshot_id, seq, mdir, 0, [], None,
@@ -3150,8 +3170,9 @@ def update_where(
 
     Variant columns round-trip through re-encoding (JSON read-back →
     unshredded variant pair); geometry/geography columns round-trip
-    the same way (WKT read-back → ISO WKB via ``geo.wkt_to_wkb``), and
-    a SET may assign a WKT literal to a geo column directly.
+    the same way (WKT read-back → ISO WKB), both through
+    :func:`_to_stored_form`, and a SET may assign a WKT literal to a
+    geo column directly.
 
     ``branch`` stages the update on that branch (WAP): it bases on the
     branch head, moves only the branch ref, and main readers see
@@ -3195,17 +3216,8 @@ def delete_where(
     On a format-version ≥ 3 table the matched positions commit as
     deletion vectors instead; a v3 delete matching ZERO rows no-ops and
     returns None (Iceberg's empty-delete rule — no empty snapshot)."""
-    import time
-
     from pyspark.sql import Column
     from pyspark.sql import functions as F
-
-    from .manifests import (
-        _file_may_match,
-        _read_files_with_partitions,
-        evolved_read_plan,
-        live_data_file_dicts,
-    )
 
     doc, prev_version = _load_doc(table_dir)
     # branch-scoped DML (WAP): base on the BRANCH head; the commit
@@ -3213,63 +3225,31 @@ def delete_where(
     # fast_forward publishes (same contract as append's and
     # overwrite_partitions' branch writes). A missing ref bases on
     # current and the commit creates the branch.
-    base_id = doc.get("current-snapshot-id")
-    if branch is not None:
-        ref = doc.get("refs", {}).get(branch)
-        if ref is not None:
-            if ref.get("type") != "branch":
-                raise ValueError(f"ref {branch!r} is a tag, not a branch")
-            base_id = int(ref["snapshot-id"])
+    seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms, branch
+    )
     if base_id is None:
         raise ValueError("cannot delete from a table with no current snapshot")
-    seq = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq)
-    )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
     mdir = os.path.join(table_dir, "metadata")
-
+    fv = int(doc.get("format-version", 2))
     current = next(
         s for s in doc["snapshots"] if s["snapshot-id"] == base_id
     )
-    candidates = list(
-        live_data_file_dicts(
-            current["manifest-list"].removeprefix("file:"),
-            doc.get("format-version", 2),
-        ).values()
-    )
-    # evolved tables delete under the CURRENT schema; the alias history
-    # also feeds bounds pruning so a condition on a renamed column still
-    # consults pre-rename files' bounds (recorded under the old name)
-    ev_cols, ev_aliases = evolved_read_plan(doc, doc.get("current-schema-id"))
-    for sf in _conjunct_skip_filters(condition):
-        candidates = [f for f in candidates if _file_may_match(f, sf, ev_aliases)]
     cond = F.expr(condition) if isinstance(condition, str) else condition
     assert isinstance(cond, Column)
     coords = [
         F.col("_fp").alias("file_path"),
         F.col("_pos").cast("long").alias("pos"),
     ]
-    matched = None
-    part_transforms: list = []
-    if candidates:
-        # partition-aware scan (hive-layout files carry identity
-        # partition columns only in metadata — reattach so conditions on
-        # them evaluate) with _fp/_pos row coordinates; evolved tables
-        # scan under the current schema (renames/widens resolve)
-        scan = _read_files_with_partitions(
-            spark, candidates, "fp_pos",
-            schema_cols=ev_cols, aliases=ev_aliases,
-        )
-        matched = scan.filter(cond)
-        # v2 partitioned tables: every delete file belongs to exactly
-        # ONE partition, derived from the matched rows (identity
-        # columns ride the scan; transforms recompute from sources)
-        if int(doc.get("format-version", 2)) < 3:
-            part_transforms = _delete_partition_plan(doc, dict(scan.dtypes))
+    scan = _coordinate_scan(spark, doc, current, condition)
+    matched = None if scan is None else scan.filter(cond)
+    # v2 partitioned tables: every delete file belongs to exactly ONE
+    # partition, derived from the matched rows (identity columns ride
+    # the scan; transforms recompute from sources)
+    part_transforms = (
+        _delete_partition_plan(doc, dict(scan.dtypes))
+        if scan is not None and fv < 3 else []
+    )
     # UPDATE: stage the matched rows, set-exprs applied, as new data
     # files in the SAME commit (position-scoped deletes reference only
     # the OLD files by path, so the staged files are untouched)
@@ -3278,25 +3258,6 @@ def delete_where(
     if update_set is not None:
         if matched is None:
             return None  # no candidate files → nothing matched
-        # variant columns read back as canonical JSON strings — the
-        # write path re-encodes those (variant_cols below), so UPDATE
-        # round-trips them (re-appended unshredded; shredding is a
-        # per-file physical layout). Geo columns read back as WKT and
-        # re-encode to WKB below (geo.wkt_to_wkb).
-        _cur_fields = [
-            f
-            for s in doc.get("schemas", [])
-            if s.get("schema-id") == doc.get("current-schema-id", 0)
-            for f in s.get("fields", [])
-            if isinstance(f.get("type"), str)
-        ]
-        _geo = [
-            f["name"] for f in _cur_fields
-            if f["type"].split("(")[0] in ("geometry", "geography")
-        ]
-        _variant_cols = [
-            f["name"] for f in _cur_fields if f["type"] == "variant"
-        ]
         # scan the LIVE MOR view (prior position/equality deletes and
         # DVs applied) WITH row coordinates: a row an earlier delete
         # removed must neither resurrect through the re-append nor
@@ -3310,10 +3271,7 @@ def delete_where(
         # with THIS commit's sequence. The re-append writes both as
         # materialized columns; CDC then sees an update, not a
         # delete+insert of an unrelated row.
-        fv3_lineage = (
-            int(doc.get("format-version", 2)) >= 3
-            and doc.get("next-row-id") is not None
-        )
+        fv3_lineage = fv >= 3 and doc.get("next-row-id") is not None
         sfs = _conjunct_skip_filters(condition)
         # no explicit snapshot id on the main branch: an explicit id
         # scans under the snapshot's RECORDED schema, but UPDATE
@@ -3349,31 +3307,6 @@ def delete_where(
             # flip would leave the table unreadable under its schema
             expr = F.expr(v) if isinstance(v, str) else v
             upd = upd.withColumn(k, expr.cast(udt[k]))
-        # geo columns read back as WKT strings — re-encode to WKB so
-        # the re-appended parquet carries the spec's binary form (the
-        # same posture as the variant re-encode below; a SET can even
-        # assign a WKT literal and it lands as WKB). Arrow-batched
-        # kernel; malformed WKT raises loudly in the task.
-        if _geo:
-            from pyspark.sql.functions import pandas_udf
-
-            from ..session import _ship_package
-
-            _ship_package(spark)
-
-            @pandas_udf("binary")
-            def _wkb(s):
-                import pandas as pd
-
-                from hielo_spark.metadata.geo import wkt_to_wkb
-
-                return pd.Series(
-                    [wkt_to_wkb(v) for v in s], dtype="object"
-                )
-
-            for c in _geo:
-                if c in upd.columns:
-                    upd = upd.withColumn(c, _wkb(F.col(c)))
         if fv3_lineage:
             # keep each row's _row_id (rides from the lineage read),
             # bump its last-updated sequence to THIS commit's
@@ -3381,60 +3314,104 @@ def delete_where(
                 "_last_updated_sequence_number",
                 F.lit(seq).cast("long"),
             )
+        # variant and geo columns read back as JSON / WKT strings; the
+        # append stage re-encodes them (_to_stored_form)
         staged_update = _stage_append_manifest(
             spark, table_dir, doc, seq, snapshot_id, upd,
-            variant_cols=[c for c in _variant_cols if c in upd.columns]
-            or None,
             lineage_materialized=fv3_lineage,
         )
         matched = persisted  # tombstone exactly the LIVE matched rows
-    if int(doc.get("format-version", 2)) >= 3:
-        # v3 forbids position-delete files: deletes commit as deletion
-        # vectors (one roaring bitmap per touched data file)
-        res = _commit_deletion_vectors(
-            spark, table_dir, doc, prev_version,
-            None if matched is None else matched.select(*coords),
-            seq, snapshot_id, timestamp_ms, mdir, current,
-            staged_update=staged_update,
-            branch=branch,
-        )
+    try:
+        if fv >= 3:
+            # v3 forbids position-delete files: deletes commit as
+            # deletion vectors (one roaring bitmap per touched data
+            # file), merged with each file's previous DV, which they
+            # supersede
+            stage = _stage_deletion_vectors(
+                spark, table_dir, doc, mdir, current,
+                None if matched is None else matched.select(*coords),
+                seq, snapshot_id,
+            )
+            if stage is None:
+                return None  # no row matched: no empty DELETE (Iceberg)
+            rows = stage["rows"]
+            summary = {
+                "operation": "delete",
+                "added-dvs": str(stage["added"]),
+                "replaced-dvs": str(stage["replaced"]),
+                # NEW positions only (merged-union minus the replaced
+                # DVs' prior cardinality): re-deleting nothing adds 0
+                "added-delete-records": str(stage["records"]),
+            }
+            d_bytes, del_files = stage["bytes"], stage["files"]
+        else:
+            staged = _stage_delete_files(
+                spark, doc, 1, matched, coords, part_transforms,
+                os.path.join(table_dir, "data", f"seq-{seq:05d}-posdeletes"),
+                snapshot_id, seq, mdir,
+            )
+            rows = _carry_forward_rows(mdir, doc, base_id) + [
+                _staged_manifest_row(staged, seq, snapshot_id)
+            ]
+            summary = {
+                "operation": "delete",
+                "position-delete-files": str(staged["n_files"]),
+                "added-delete-records": str(staged["added_records"]),
+            }
+            d_bytes, del_files = staged["added_bytes"], staged["n_files"]
+    finally:
         if persisted is not None:
             persisted.unpersist()
-        return res
-    staged = _stage_delete_files(
-        spark, doc, 1, matched, coords, part_transforms,
-        os.path.join(table_dir, "data", f"seq-{seq:05d}-posdeletes"),
-        snapshot_id, seq, mdir,
-    )
-    n_files = staged["n_files"]
-    rows = [_staged_manifest_row(staged, seq, snapshot_id)]
-    summary = {
-        "operation": "delete",
-        "position-delete-files": str(n_files),
-        "added-delete-records": str(staged["added_records"]),
-    }
-    d_files, d_bytes = 0, staged["added_bytes"]
+    d_files = 0
     if staged_update is not None:
-        rows.append(_staged_manifest_row(staged_update, seq,
-                                         snapshot_id))
+        rows.append(_staged_manifest_row(staged_update, seq, snapshot_id))
         _apply_update_summary(summary, staged_update)
-        d_files += staged_update["n_files"]
+        d_files = staged_update["n_files"]
         d_bytes += staged_update["added_bytes"]
-    prior_rows = _carry_forward_rows(mdir, doc, base_id)
-    res = _finalize_commit(
-        table_dir, doc, prev_version, prior_rows + rows,
+    return _finalize_commit(
+        table_dir, doc, prev_version, rows,
         snapshot_id, timestamp_ms, seq,
-        _with_totals(
-            summary,
-            doc, base_id,
-            d_files, d_bytes, n_files,
-        ),
+        _with_totals(summary, doc, base_id, d_files, d_bytes, del_files),
         branch=branch,
         parent_id=base_id,
     )
-    if persisted is not None:
-        persisted.unpersist()
-    return res
+
+
+def _coordinate_scan(spark: SparkSession, doc: dict, base: dict,
+                     condition=None):
+    """The live data files of snapshot ``base``, read with their
+    ``_fp``/``_pos`` row coordinates — the scan a row-level delete
+    resolves positions from (``delete_where``/``update_where``, the v3
+    ``merge_into``). Hive-layout identity partition columns are
+    reattached so conditions on them evaluate, and evolved tables scan
+    under the CURRENT schema (renames and widenings resolve). A SQL
+    ``condition``'s conjuncts prune candidate files by manifest bounds,
+    through the alias history, so a condition on a renamed column
+    still consults pre-rename files' bounds (recorded under the old
+    name). Candidate planning is pure Python over the manifests. None
+    when no candidate file is left."""
+    from .manifests import (
+        _file_may_match,
+        _read_files_with_partitions,
+        evolved_read_plan,
+        live_data_file_dicts,
+    )
+
+    candidates = list(
+        live_data_file_dicts(
+            base["manifest-list"].removeprefix("file:"),
+            doc.get("format-version", 2),
+        ).values()
+    )
+    ev_cols, ev_aliases = evolved_read_plan(doc, doc.get("current-schema-id"))
+    for sf in _conjunct_skip_filters(condition):
+        candidates = [f for f in candidates if _file_may_match(f, sf, ev_aliases)]
+    if not candidates:
+        return None
+    return _read_files_with_partitions(
+        spark, candidates, "fp_pos",
+        schema_cols=ev_cols, aliases=ev_aliases,
+    )
 
 
 def _live_dv_entries(mlist: str, fv: int) -> list[dict]:
@@ -3445,64 +3422,6 @@ def _live_dv_entries(mlist: str, fv: int) -> list[dict]:
     from .manifests import live_entries
 
     return [e for e in live_entries(mlist, fv) if e["dv"]]
-
-
-def _commit_deletion_vectors(
-    spark: SparkSession,
-    table_dir: str,
-    doc: dict,
-    prev_version: int,
-    positions,
-    seq: int,
-    snapshot_id: int,
-    timestamp_ms: int,
-    mdir: str,
-    current: dict,
-    staged_update: dict | None = None,
-    branch: str | None = None,
-) -> dict:
-    """DELETE WHERE on a format-version ≥ 3 table: commit the matched
-    row positions as DELETION VECTORS — one ``deletion-vector-v1``
-    Puffin blob (portable 64-bit roaring bitmap) per touched data file
-    — instead of position-delete parquet, per the Iceberg v3 spec's
-    row-level-delete rules. :func:`_stage_deletion_vectors` (shared
-    with the v3 ``merge_into``) merges each file's previous DV into its
-    new one, stages the DV manifests and tombstones the superseded
-    entries; this commits the stage, with an UPDATE's re-appended data
-    manifest (``staged_update``) riding the same snapshot. Returns None
-    when no row matched: Iceberg commits no empty DELETE."""
-    stage = _stage_deletion_vectors(
-        spark, table_dir, doc, mdir, current, positions, seq, snapshot_id,
-    )
-    if stage is None:
-        return None
-    rows = stage["rows"]
-    summary = {
-        "operation": "delete",
-        "added-dvs": str(stage["added"]),
-        "replaced-dvs": str(stage["replaced"]),
-        # NEW positions only (merged-union minus the replaced DVs'
-        # prior cardinality): re-deleting nothing new adds 0
-        "added-delete-records": str(stage["records"]),
-    }
-    d_files = d_bytes = 0
-    if staged_update is not None:
-        # UPDATE on a v3 table: the DVs above reference only OLD files
-        rows.append(_staged_manifest_row(staged_update, seq, snapshot_id))
-        _apply_update_summary(summary, staged_update)
-        d_files = staged_update["n_files"]
-        d_bytes = staged_update["added_bytes"]
-    base_id = int(current["snapshot-id"])  # branch head under branch DML
-    return _finalize_commit(
-        table_dir, doc, prev_version, rows,
-        snapshot_id, timestamp_ms, seq,
-        _with_totals(
-            summary, doc, base_id,
-            d_files, stage["bytes"] + d_bytes, stage["files"],
-        ),
-        branch=branch,
-        parent_id=base_id,
-    )
 
 
 def _stage_deletion_vectors(
@@ -3846,8 +3765,6 @@ def rewrite_deletion_vectors(
     Scale: pure planning-plane — blob regions are read and re-framed by
     the driver, bounded by live-DV count × bitmap size; no data scan,
     no Spark job."""
-    import time
-
     from .manifests import _dv_per_file, _norm_ref_path, _resolve, live_entries
     from .puffin import write_dv_container
 
@@ -3858,12 +3775,12 @@ def rewrite_deletion_vectors(
             "rewrite_deletion_vectors needs a format-version >= 3 table "
             "(v2 position deletes compact via rewrite_position_deletes)"
         )
-    if doc.get("current-snapshot-id") is None:
-        return None
-    current = next(
-        s for s in doc["snapshots"]
-        if s["snapshot-id"] == doc["current-snapshot-id"]
+    seq_new, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms
     )
+    if base_id is None:
+        return None
+    current = next(s for s in doc["snapshots"] if s["snapshot-id"] == base_id)
     mdir = os.path.join(table_dir, "metadata")
     entries = live_entries(
         _resolve(
@@ -3877,15 +3794,6 @@ def rewrite_deletion_vectors(
         return None
     best = _dv_per_file(
         dvs, {_norm_ref_path(d["dv"]["referenced"]) for d in dvs}
-    )
-
-    seq_new = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq_new)
-    )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
     )
 
     def payload(d):
@@ -3911,7 +3819,7 @@ def rewrite_deletion_vectors(
                 "rewritten-dv-files": str(len({d["path"] for d in dvs})),
                 "added-dvs": str(stage["added"]),
             },
-            doc, doc.get("current-snapshot-id"),
+            doc, base_id,
             # net: every prior live DV is superseded by its rewrite
             0, stage["bytes"], stage["files"],
         ),
@@ -4359,8 +4267,6 @@ def rewrite_position_deletes(
     single-task funnel); planning is pure Python over the manifests.
     Returns the new snapshot dict, or None when the table has fewer
     than two position-delete files."""
-    import time
-
     from .manifests import (
         _resolve,
         decode_manifest,
@@ -4370,12 +4276,12 @@ def rewrite_position_deletes(
     )
 
     doc, prev_version = _load_doc(table_dir)
-    if doc.get("current-snapshot-id") is None:
-        raise ValueError("table has no current snapshot")
-    current = next(
-        s for s in doc["snapshots"]
-        if s["snapshot-id"] == doc["current-snapshot-id"]
+    seq_new, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms
     )
+    if base_id is None:
+        raise ValueError("table has no current snapshot")
+    current = next(s for s in doc["snapshots"] if s["snapshot-id"] == base_id)
     mdir = os.path.join(table_dir, "metadata")
     mlist = _resolve(
         os.path.join(mdir, "x"), current["manifest-list"].removeprefix("file:")
@@ -4416,15 +4322,6 @@ def rewrite_position_deletes(
             pure_pos_manifests.add(m["manifest_path"])
     if len(pos_files) < 2:
         return None  # nothing to compact
-
-    seq_new = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq_new)
-    )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
 
     # partition scoping: each surviving row takes its target data file's
     # partition values (from that file's manifest entry) as the
@@ -4491,7 +4388,7 @@ def rewrite_position_deletes(
                 "added-delete-files": str(n_files),
                 "added-delete-records": str(staged["added_records"]),
             },
-            doc, doc.get("current-snapshot-id"),
+            doc, base_id,
             0, staged["added_bytes"] - old_bytes, n_files - len(pos_files),
         ),
     )
@@ -4516,26 +4413,17 @@ def rewrite_manifests(
     records ``operation: replace`` and the changelog skips it. Returns
     the new snapshot dict, or ``None`` when the table already has a
     single data manifest (nothing to consolidate)."""
-    import time
-
     from .avro_py import write_avro_file
     from .manifests import _resolve, read_manifest_list
 
     doc, prev_version = _load_doc(table_dir)
-    if doc.get("current-snapshot-id") is None:
+    seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms
+    )
+    if base_id is None:
         raise ValueError("cannot rewrite manifests of a table with no snapshot")
-    seq = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq)
-    )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
     mdir = os.path.join(table_dir, "metadata")
-    current = next(
-        s for s in doc["snapshots"] if s["snapshot-id"] == doc["current-snapshot-id"]
-    )
+    current = next(s for s in doc["snapshots"] if s["snapshot-id"] == base_id)
     mlist = _resolve(
         os.path.join(mdir, "x"), current["manifest-list"].removeprefix("file:")
     )
@@ -4672,7 +4560,7 @@ def rewrite_manifests(
                 "added-manifests": str(len(new_rows)),
                 "total-records": current.get("summary", {}).get("total-records", "0"),
             },
-            doc, doc.get("current-snapshot-id"), 0, 0, 0,
+            doc, base_id, 0, 0, 0,
         ),
     )
 
@@ -4734,10 +4622,10 @@ def merge_into(
     Scale: the match split is one distributed semi/anti join of the
     source against the target's live rows (delete-key side is
     ``on``-projected + distinct — small by construction); data files
-    are written by distributed parquet writes; only planning-plane file
-    lists and two scalar counts cross the driver."""
-    import time
-
+    go through :func:`_stage_append_manifest`, the append stage (stored
+    forms, distribution mode, sort order and its ``sort_order_id``);
+    only planning-plane file lists and two scalar counts cross the
+    driver."""
     from .manifests import read_data_at_snapshot
 
     if when_matched not in ("update", "delete", None):
@@ -4773,23 +4661,11 @@ def merge_into(
         raise ValueError(f"key columns missing from source: {missing}")
     # branch-scoped merge (WAP): base on the branch head, move only
     # the branch ref (same contract as delete_where/append)
-    base_id = doc.get("current-snapshot-id")
-    if branch is not None:
-        ref = doc.get("refs", {}).get(branch)
-        if ref is not None:
-            if ref.get("type") != "branch":
-                raise ValueError(f"ref {branch!r} is a tag, not a branch")
-            base_id = int(ref["snapshot-id"])
+    seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
+        doc, snapshot_id, timestamp_ms, branch
+    )
     if base_id is None:
         raise ValueError("cannot merge into a table with no current snapshot")
-    seq = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq)
-    )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
     mdir = os.path.join(table_dir, "metadata")
 
     # main-branch merges read WITHOUT an explicit snapshot id: an
@@ -4870,26 +4746,9 @@ def merge_into(
         # merge's own appended files are never touched.
         from pyspark.sql import functions as F
 
-        from .manifests import (
-            _read_files_with_partitions,
-            evolved_read_plan,
-            live_data_file_dicts,
-        )
-
-        ev_cols, ev_aliases = evolved_read_plan(
-            doc, doc.get("current-schema-id")
-        )
-        candidates = list(
-            live_data_file_dicts(
-                current["manifest-list"].removeprefix("file:"),
-                fv,
-            ).values()
-        )
-        coords = _read_files_with_partitions(
-            spark, candidates, "fp_pos",
-            schema_cols=ev_cols, aliases=ev_aliases,
-        )
-        positions = coords.join(delete_keys, on, "left_semi").select(
+        positions = _coordinate_scan(spark, doc, current).join(
+            delete_keys, on, "left_semi"
+        ).select(
             F.col("_fp").alias("file_path"),
             F.col("_pos").cast("long").alias("pos"),
         )
@@ -4914,39 +4773,16 @@ def merge_into(
         eq_files, eq_bytes = staged["n_files"], staged["added_bytes"]
         manifest_rows.append(_staged_manifest_row(staged, seq, snapshot_id))
 
+    # merged-in rows are NEW rows (fresh row ids) written like appends:
+    # the table's default spec, stored forms, distribution and order
+    appended = None if to_append is None else _stage_append_manifest(
+        spark, table_dir, doc, seq, snapshot_id, to_append, skip_empty=True,
+    )
     added_records = data_files = data_bytes = 0
-    if to_append is not None:
-        data_dir = os.path.join(table_dir, "data", f"seq-{seq:05d}")
-        # keep the table's recorded partition spec: merged rows land in
-        # the same hive layout + manifest partition values as appends,
-        # so pruning never degrades as a table takes merges
-        spec_transforms = _spec_transforms_from_doc(doc)
-        # merged-in rows honor the default sort order exactly like
-        # appends (local per-task sort — tight bounds on fresh files),
-        # declared direction/null-order included
-        dtypes = dict(to_append.dtypes)
-        merge_sort = [s for s in _sort_spec_from_doc(doc) if s[0] in dtypes]
-        files = _write_data_files(
-            spark, data_dir, to_append, spec_transforms,
-            _sort_exprs(merge_sort, dtypes) if merge_sort else (),
-        )
-        added_records = sum(f["record_count"] for f in files)
-        if files:
-            ptypes = _partition_types(spec_transforms, dtypes)
-            # the merged files were written through the table's
-            # recorded DEFAULT spec (spec_transforms above), so
-            # attribute them to it — not spec 0 — after partition
-            # evolution; merged-in rows are NEW rows — fresh row ids
-            merge_spec_id = int(doc.get("default-spec-id", 0))
-            staged = _stage_files_manifest(
-                doc, files, dtypes, snapshot_id, seq, mdir, merge_spec_id,
-                _partition_avro_fields(doc, ptypes, merge_spec_id), ptypes,
-            )
-            data_bytes = staged["added_bytes"]
-            data_files = staged["n_files"]
-            manifest_rows.append(
-                _staged_manifest_row(staged, seq, snapshot_id)
-            )
+    if appended is not None:
+        added_records = appended["added_records"]
+        data_files, data_bytes = appended["n_files"], appended["added_bytes"]
+        manifest_rows.append(_staged_manifest_row(appended, seq, snapshot_id))
 
     if not n_delete_keys and added_records == 0:
         return None  # empty merge: commit nothing, like Iceberg
@@ -5032,8 +4868,6 @@ def cherrypick_snapshot(
     Metadata-only data plane: the source's file entries (with their
     stats) are re-committed at the next sequence number pointing at the
     SAME parquet files — no data is copied or rewritten."""
-    import time
-
     from .avro_py import write_avro_file
     from .manifests import decode_manifest, inherited_seq_of, read_avro_file, _resolve
 
@@ -5051,19 +4885,12 @@ def cherrypick_snapshot(
             f"cherrypick supports append snapshots only; {source_snapshot_id} "
             f"is operation={op!r} (deletes/replaces are parent-relative)"
         )
-    cur = doc.get("current-snapshot-id")
+    seq, snapshot_id, timestamp_ms, cur = _commit_ids(
+        doc, snapshot_id, timestamp_ms
+    )
     if cur is not None and int(cur) == int(source_snapshot_id):
         raise ValueError("source snapshot is already current")
-
     mdir = os.path.join(table_dir, "metadata")
-    seq = int(doc.get("last-sequence-number", 0)) + 1
-    snapshot_id = (
-        snapshot_id if snapshot_id is not None
-        else _default_snapshot_id(doc, seq)
-    )
-    timestamp_ms = (
-        timestamp_ms if timestamp_ms is not None else int(time.time() * 1000)
-    )
 
     # the files the source snapshot ADDED (status=1 entries attributed
     # to it), with their raw entry dicts so stats ride along verbatim

@@ -2940,39 +2940,14 @@ def register(spark) -> None:
 
     The DataSource class is pickled BY REFERENCE into separate Python
     worker processes, so ``hielo_spark`` must be importable there — the
-    normal cluster deployment ships a wheel via ``--py-files``; here a
-    zip of the package is built once per session and attached with
-    ``addPyFile`` so registration works from any working directory."""
+    normal cluster deployment ships a wheel via ``--py-files``; here
+    :func:`session._ship_package` attaches the package zip so
+    registration works from any working directory."""
+    from ..session import _ship_package
+
     try:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass  # static conf on some builds; reader then needs it preset
     _ship_package(spark)
     spark.dataSource.register(HieloIcebergDataSource)
-
-
-def _ship_package(spark) -> None:
-    import tempfile
-    import zipfile
-
-    if getattr(spark, "_hielo_pyfile_shipped", False):
-        return
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    base = os.path.dirname(pkg_root)
-    zpath = os.path.join(
-        tempfile.gettempdir(),
-        f"hielo_spark_pkg_{spark.sparkContext.applicationId}.zip",
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for dirpath, _dirs, files in os.walk(pkg_root):
-                for name in files:
-                    if not name.endswith(".py"):
-                        continue
-                    full = os.path.join(dirpath, name)
-                    zf.write(full, os.path.relpath(full, base))
-    try:
-        spark.sparkContext.addPyFile(zpath)
-        spark._hielo_pyfile_shipped = True
-    except Exception:
-        pass  # already added under this name, or restricted context

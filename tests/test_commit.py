@@ -1613,6 +1613,7 @@ def test_merge_manifest_records_default_spec_id(spark, tmp_path):
     C.append(spark, t, spark.createDataFrame([(1, "a")], ["id", "v"]),
              snapshot_id=101, timestamp_ms=1700000000000)
     C.update_partition_spec(t, ["id"])
+    oid = C.update_sort_order(t, ["id"])
     snap = C.merge_into(
         spark, t, spark.createDataFrame([(2, "b")], ["id", "v"]),
         on=["id"], snapshot_id=102, timestamp_ms=1700100000000,
@@ -1623,6 +1624,15 @@ def test_merge_manifest_records_default_spec_id(spark, tmp_path):
     merged_data = [m for m in rows
                    if (m.content or 0) == 0 and m.added_snapshot_id == 102]
     assert merged_data and all(m.partition_spec_id == 1 for m in merged_data)
+    # merged files honor the default sort order and say so, like appends
+    from hielo_spark.metadata.avro_py import read_avro_file
+
+    oids = {
+        e["data_file"]["sort_order_id"]
+        for m in merged_data
+        for e in read_avro_file(_resolve(mlist, m.manifest_path))[2]
+    }
+    assert oids == {oid}
 
 
 def test_default_snapshot_id_never_collides(spark, tmp_path):

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from hielo_spark.metadata import commit as C
 from hielo_spark.metadata.manifests import (
     _resolve,
@@ -180,3 +182,31 @@ def test_position_delete_scoping_is_planned_per_file_pair():
     assert not _pos_deletes_predate_files([pos(2, "file:" + a, "file:" + a)], {}, data)
     assert _pos_deletes_predate_files([], {b: {"seq": 2}}, data)
     assert not _pos_deletes_predate_files([], {a: {"seq": 2}}, data)
+
+
+@pytest.mark.parametrize("fv,ceilings", [(2, (2, 6, 22)), (3, (4, 8, 42))],
+                         ids=["v2", "v3"])
+def test_dml_job_ceilings(spark, tmp_path, fv, ceilings):
+    """``delete_where``, ``update_where`` and ``merge_into`` on an 11-row
+    table start at most as many Spark jobs as they did before MERGE's
+    data files went through the append stage (four task slots, four
+    shuffle partitions). The rows still come out right."""
+    t = str(tmp_path / "t")
+    C.append(spark, t, spark.range(0, 11).selectExpr("id", "id * 2 AS v"),
+             snapshot_id=101, timestamp_ms=1700000000000)
+    if fv == 3:
+        C.upgrade_format_version(t, 3)
+    _, d = _new_jobs(spark, lambda: C.delete_where(
+        spark, t, "id = 1", snapshot_id=102, timestamp_ms=1700000001000))
+    _, u = _new_jobs(spark, lambda: C.update_where(
+        spark, t, "id = 2", {"v": "v + 1"},
+        snapshot_id=103, timestamp_ms=1700000002000))
+    _, m = _new_jobs(spark, lambda: C.merge_into(
+        spark, t, spark.createDataFrame([(3, 0), (20, 40)], "id long, v long"),
+        on=["id"], snapshot_id=104, timestamp_ms=1700000003000))
+    counts = (len(d), len(u), len(m))
+    assert all(n <= c for n, c in zip(counts, ceilings)), counts
+    got = sorted((r.id, r.v) for r in read_table(spark, t).collect())
+    assert got == sorted(
+        [(i, 2 * i) for i in range(11) if i not in (1, 2, 3)]
+        + [(2, 5), (3, 0), (20, 40)])

@@ -437,3 +437,115 @@ def test_deletion_vectors_have_one_writer():
         ("write_puffin", "puffin.py", "write_statistics"),
         (key, "commit.py", "_stage_files_manifest"),
     }
+
+
+def _variant_table(spark, t: str) -> dict:
+    C.append(spark, t, spark.createDataFrame(
+        [(0, '{"a": 1}'), (1, '"s"'), (2, None)], "id long, v string"),
+        snapshot_id=101, timestamp_ms=1700000000000, variant_cols=["v"])
+    return {0: {"a": 1}, 1: "s", 2: None}
+
+
+def _variant_rows(rows) -> dict:
+    return {r.id: None if r.v is None else json.loads(r.v) for r in rows}
+
+
+def _geo_rows(rows) -> dict:
+    return {r.id: (r.shape, r.tag) for r in rows}
+
+
+@pytest.mark.parametrize("op,kind", [
+    ("merge", "variant"), ("merge", "geo"),
+    ("compact", "variant"), ("compact", "geo"),
+], ids=["merge-variant", "merge-geo", "compact-variant", "compact-geo"])
+def test_read_back_writers_keep_stored_forms(registered, tmp_path, op, kind):
+    """Writers that re-append rows read back from the table store them in
+    the table's forms: a variant column reads back as a JSON string and
+    re-encodes to the Parquet variant pair, a geometry column reads back
+    as WKT and re-encodes to WKB. Files a MERGE or a compaction writes
+    then open on both read planes with the same values."""
+    spark = registered
+    if kind == "variant":
+        t = str(tmp_path / "t")
+        want = _variant_table(spark, t)
+        rows_of = _variant_rows
+        src = spark.createDataFrame([(1, '{"b": [1, 2]}'), (3, "7")],
+                                    "id long, v string")
+        merged = {1: {"b": [1, 2]}, 3: 7}
+    else:
+        from tests.test_geo import _mk_geo_table
+
+        t = _mk_geo_table(spark, tmp_path)
+        want = {0: ("POINT (1 2)", "a"), 1: ("LINESTRING (0 0, 5 5)", "b"),
+                2: (None, "c"), 3: ("POLYGON ((0 0, 4 0, 4 4, 0 0))", "d")}
+        rows_of = _geo_rows
+        src = spark.createDataFrame(
+            [(1, "POINT Z (7 8 9)", "m"), (5, "LINESTRING (1 1, 2 2)", "n")],
+            "id long, shape string, tag string")
+        merged = {1: ("POINT Z (7 8 9)", "m"), 5: ("LINESTRING (1 1, 2 2)", "n")}
+    if op == "merge":
+        C.merge_into(spark, t, src, on=["id"],
+                     snapshot_id=102, timestamp_ms=1700100000000)
+        want = {**want, **merged}
+    else:
+        C.rewrite_data_files(spark, t, snapshot_id=102,
+                             timestamp_ms=1700100000000)
+    jvm = rows_of(read_data_at_snapshot(
+        spark, C.current_metadata_path(t)).collect())
+    ds = rows_of(spark.read.format("hielo_iceberg").load(t).collect())
+    assert jvm == ds == want
+
+
+def _reference_sites(names: set[str], modules: set[str] | None = None) -> set:
+    """``(name, module, top-level def)`` for every use of one of
+    ``names`` in ``hielo_spark``: a name, an attribute or an import.
+    ``modules`` limits the scan to those file names."""
+    import ast
+    import pathlib
+
+    import hielo_spark
+
+    found = set()
+    root = pathlib.Path(hielo_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        if modules is not None and path.name not in modules:
+            continue
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            owner = getattr(top, "name", None)
+            for node in ast.walk(top):
+                used = (
+                    [node.id] if isinstance(node, ast.Name)
+                    else [node.attr] if isinstance(node, ast.Attribute)
+                    else [a.asname or a.name for a in node.names]
+                    if isinstance(node, ast.ImportFrom) else []
+                )
+                found.update((n, path.name, owner) for n in used if n in names)
+    return found
+
+
+def test_read_back_rows_have_one_write_path():
+    """Every data commit takes its sequence number, snapshot id and
+    timestamp from ``commit._commit_ids``; data files are written only
+    by the append stage, the delete-file stage and compaction; and the
+    variant and geometry encoders are used only by the stored-form
+    encoder."""
+    assert _reference_sites({"_default_snapshot_id", "_write_data_files"}) == {
+        ("_default_snapshot_id", "commit.py", "_commit_ids"),
+        ("_write_data_files", "commit.py", "_stage_append_manifest"),
+        ("_write_data_files", "commit.py", "_stage_delete_files"),
+        ("_write_data_files", "commit.py", "rewrite_data_files"),
+    }
+    assert _reference_sites({"wkt_to_wkb", "_variant_encode_udf"},
+                            {"commit.py"}) == {
+        ("wkt_to_wkb", "commit.py", "_to_stored_form"),
+        ("_variant_encode_udf", "commit.py", "_to_stored_form"),
+    }
+
+
+def test_package_has_one_shipper():
+    """The package zip reaches Spark's Python workers through one
+    ``addPyFile`` call, in ``session._ship_package``."""
+    assert _reference_sites({"addPyFile"}) == {
+        ("addPyFile", "session.py", "_ship_package"),
+    }
