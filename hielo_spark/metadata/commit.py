@@ -864,40 +864,6 @@ def _record_added_columns(
     doc["last-column-id"] = next_id[0]
 
 
-def _variant_encode_udf(spark):
-    """Arrow-batched JSON-string → Parquet Variant (metadata, value)
-    encoder (VariantEncoding.md; name-sorted dictionary with the
-    sorted_strings bit — metadata/variant.py's conformant encoder).
-    Per-value Python by necessity: the encoding is a self-describing
-    byte tree. Nulls stay null."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..session import _ship_package
-
-    _ship_package(spark)
-
-    @pandas_udf("struct<metadata:binary,value:binary>")
-    def enc(s):
-        import json as _json
-
-        import pandas as pd
-
-        from hielo_spark.metadata.variant import encode_variant
-
-        metas, vals = [], []
-        for x in s:
-            if x is None or (isinstance(x, float) and x != x):
-                metas.append(None)
-                vals.append(None)
-            else:
-                m, v = encode_variant(_json.loads(x))
-                metas.append(m)
-                vals.append(v)
-        return pd.DataFrame({"metadata": metas, "value": vals})
-
-    return enc
-
-
 _VARIANT_PARQUET_DDL = "struct<metadata:binary,value:binary>"
 
 #: shred target types the writer supports (VariantShredding.md allows
@@ -917,225 +883,61 @@ def _shred_spec_ok(t: str) -> bool:
     )
 
 
-def _shred_tree(fields: dict[str, str]) -> dict:
-    """Dotted shred paths → a nested tree: each node is
-    ``{"type": leaf-type-or-None, "children": {name: node}}``.
-    A path can't be both a leaf and a prefix of another (loud)."""
-    root: dict = {"type": None, "children": {}}
-    for path, t in fields.items():
-        node = root
-        parts = path.split(".")
-        for p in parts[:-1]:
-            node = node["children"].setdefault(
-                p, {"type": None, "children": {}}
-            )
-            if node["type"] is not None:
-                raise ValueError(
-                    f"shred path {path!r} descends through leaf {p!r}"
-                )
-        leaf = node["children"].setdefault(
-            parts[-1], {"type": None, "children": {}}
-        )
-        if leaf["type"] is not None or leaf["children"]:
-            raise ValueError(f"conflicting shred entries at {path!r}")
-        leaf["type"] = t
-    return root
-
-
-def _shred_ddl(node: dict) -> str:
-    """A shred-tree node → the parquet field group DDL
-    (struct<value binary, typed_value T>), recursing for nested
-    objects; ``array<prim>`` leaves become lists of element groups."""
-    t = node["type"]
-    if t is not None:
-        if t.startswith("array<"):
-            tv = (
-                f"array<struct<value:binary,typed_value:{t[6:-1]}>>"
-            )
-        else:
-            tv = t
-        return f"struct<value:binary,typed_value:{tv}>"
-    inner = ",".join(
-        f"`{k}`:{_shred_ddl(c)}" for k, c in node["children"].items()
-    )
-    return f"struct<value:binary,typed_value:struct<{inner}>>"
-
-
-def _variant_shred_udf(spark, shred: dict[str, str]):
-    """Arrow-batched JSON-string → SHREDDED Parquet Variant
-    (VariantShredding.md): the named object fields land as typed
-    subcolumns (struct<value binary, typed_value T> field groups —
-    type-matching values shred, mismatches ride the group's binary
-    ``value``, absent fields leave both null), the remaining fields
-    ride the enclosing level's binary ``value`` remainder, and
-    non-object rows fall back to the plain (metadata, value) pair
-    with a null typed_value. r11: dotted paths shred NESTED objects
-    (each level a recursive typed_value group) and ``array<prim>``
-    shreds arrays into element groups — mismatched elements ride
-    their element group's binary value."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..session import _ship_package
-
-    _ship_package(spark)
-    tree = _shred_tree(dict(shred))
-    inner = ",".join(
-        f"`{k}`:{_shred_ddl(c)}" for k, c in tree["children"].items()
-    )
-    ddl = (
-        "struct<metadata:binary,value:binary,"
-        f"typed_value:struct<{inner}>>"
-    )
-    py_of = {
-        "bigint": int, "double": float, "string": str, "boolean": bool,
-    }
-
-    @pandas_udf(ddl)
-    def enc(s):
-        import json as _json
-
-        import pandas as pd
-
-        from hielo_spark.metadata.variant import (
-            _collect_keys,
-            _encode_value,
-            encode_metadata,
-        )
-
-        def _prim_group(v, t, key_id):
-            want = py_of[t]
-            # bool is an int subclass — keep the check exact
-            if isinstance(v, want) and not (
-                want is int and isinstance(v, bool)
-            ):
-                return {"value": None, "typed_value": v}
-            # JSON null INCLUDED: a null-valued field is a present
-            # variant-null (0x00), not an absent field (both-null
-            # group) — reconstruction must keep it
-            return {
-                "value": _encode_value(v, key_id), "typed_value": None,
-            }
-
-        def _group_of(v, node, key_id):
-            """One PRESENT value vs its shred-tree node → the parquet
-            field group dict."""
-            t = node["type"]
-            if t is not None:
-                if t.startswith("array<"):
-                    if isinstance(v, list):
-                        et = t[6:-1]
-                        return {
-                            "value": None,
-                            "typed_value": [
-                                _prim_group(e, et, key_id) for e in v
-                            ],
-                        }
-                    return {
-                        "value": _encode_value(v, key_id),
-                        "typed_value": None,
-                    }
-                return _prim_group(v, t, key_id)
-            # internal object node: shredded children recurse, the
-            # rest rides THIS level's binary value remainder
-            if not isinstance(v, dict):
-                return {
-                    "value": _encode_value(v, key_id),
-                    "typed_value": None,
-                }
-            groups = {
-                k: (
-                    _group_of(v[k], c, key_id)
-                    if k in v
-                    else {"value": None, "typed_value": None}
-                )
-                for k, c in node["children"].items()
-            }
-            rest = {
-                k: x for k, x in v.items()
-                if k not in node["children"]
-            }
-            return {
-                "value": _encode_value(rest, key_id) if rest else None,
-                "typed_value": groups,
-            }
-
-        metas, vals, typed = [], [], []
-        for x in s:
-            if x is None or (isinstance(x, float) and x != x):
-                metas.append(None)
-                vals.append(None)
-                typed.append(None)
-                continue
-            obj = _json.loads(x)
-            # name-sorted dictionary over the FULL object (a superset
-            # covering shredded fields is spec-legal and keeps ids
-            # stable whichever side a value lands on)
-            keys: list[str] = []
-            _collect_keys(obj, keys, set())
-            keys.sort()
-            key_id = {k: i for i, k in enumerate(keys)}
-            metas.append(encode_metadata(keys))
-            if not isinstance(obj, dict):
-                vals.append(_encode_value(obj, key_id))
-                typed.append(None)
-                continue
-            top = _group_of(obj, tree, key_id)
-            vals.append(top["value"])
-            typed.append(top["typed_value"])
-        return pd.DataFrame(
-            {"metadata": metas, "value": vals, "typed_value": typed}
-        )
-
-    return enc
-
-
-def _to_stored_form(
-    spark: SparkSession, df: DataFrame, doc: dict,
+def _write_plan(
+    doc: dict,
+    dtypes: dict[str, str] | None = None,
     variant_cols: list[str] | None = None,
     variant_shred: dict[str, dict[str, str]] | None = None,
-) -> DataFrame:
-    """``df`` with every column in the form the table stores it — the
-    one encoder in front of every data-file write of frame rows.
+    partition_by: list[str] | None = None,
+    strict_spec: bool = False,
+):
+    """The :class:`data_files.WritePlan` for writing a frame with
+    ``dtypes`` into the table ``doc`` describes — the one reading of
+    the metadata every writer of frame rows takes its layout and stored
+    form from, whichever plane it runs on:
+
+    * the partition transforms — ``partition_by`` when given, else the
+      recorded default spec (:func:`_spec_transforms_from_doc`; one
+      that does not resolve against the current schema writes
+      unpartitioned, or raises with ``strict_spec``);
+    * every write-default column of the current schema (the spec's
+      writer rule: a frame that lacks the column gets the value);
+    * the ``variant`` columns: ``variant_cols`` plus every column the
+      current schema records as ``variant``, each with its shred tree
+      when ``variant_shred`` names one;
+    * the ``geometry(…)``/``geography(…)`` columns.
 
     ``variant_cols`` is the write half of the v3 ``variant`` type: each
-    named column — a JSON string (encoded here, shredded per
+    named column — a JSON string (encoded, shredded per
     ``variant_shred``) or an already-shaped
     struct<metadata:binary,value:binary> (passed through) — lands in
     parquet as the spec's variant pair, and the table schema records
     the column as ``variant``. New tables commit as format-version 3
-    (variant is a v3 type); a v2 table must ``upgrade_format_version``
-    first — loud, never a silent v2 file a foreign reader would
-    mistype.
+    (variant is a v3 type; ``doc`` is updated); a v2 table must
+    ``upgrade_format_version`` first — loud, never a silent v2 file a
+    foreign reader would mistype."""
+    from decimal import Decimal
 
-    Every other column the current schema records as ``variant`` or
-    ``geometry(…)``/``geography(…)`` that arrives as a ``string`` — the
-    read planes' JSON and WKT renderings — re-encodes to the unshredded
-    variant pair or to ISO WKB (``geo.wkt_to_wkb``; malformed WKT
-    raises in the task). That is how UPDATE, MERGE and compaction keep
-    rows they read back from the table, and how a SET or a MERGE source
-    may give those columns as JSON or WKT."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
+    from .data_files import WritePlan
     from .metadata_json import current_schema_block
+    from .transforms import parse_partition_by
+    from .types import ddl_to_arrow, iceberg_to_ddl
+    from .values import default_from_json
+    from .variant import shred_tree
 
     variant_cols = variant_cols or []
-    dtypes = dict(df.dtypes)
+    dtypes = dtypes or {}
     cur = (current_schema_block(doc) if "schemas" in doc else None) or {}
-    recorded = {
-        f["name"]: f.get("type") for f in cur.get("fields", [])
-        if isinstance(f.get("type"), str)
-    }
-    enc = None
+    fields = [f for f in cur.get("fields", []) if isinstance(f.get("type"), str)]
+    recorded = {f["name"]: f["type"] for f in fields}
+    trees = {}
     for c in variant_cols:
         t = dtypes.get(c)
         if t is None:
             raise ValueError(f"variant column {c!r} not in frame")
         shred = (variant_shred or {}).get(c)
         if shred is not None:
-            bad = {
-                st for st in shred.values() if not _shred_spec_ok(st)
-            }
+            bad = {st for st in shred.values() if not _shred_spec_ok(st)}
             if bad:
                 raise ValueError(
                     f"unsupported shred target types {sorted(bad)} "
@@ -1146,12 +948,8 @@ def _to_stored_form(
                 raise ValueError(
                     f"shredding needs a JSON string column, {c!r} is {t}"
                 )
-            df = df.withColumn(c, _variant_shred_udf(spark, shred)(F.col(c)))
-        elif t == "string":
-            if enc is None:
-                enc = _variant_encode_udf(spark)
-            df = df.withColumn(c, enc(F.col(c)))
-        elif t.replace(" ", "") != _VARIANT_PARQUET_DDL:
+            trees[c] = shred_tree(dict(shred))
+        elif t != "string" and t.replace(" ", "") != _VARIANT_PARQUET_DDL:
             raise ValueError(
                 f"variant column {c!r} must be a JSON string or "
                 f"{_VARIANT_PARQUET_DDL}, got {t}"
@@ -1172,24 +970,46 @@ def _to_stored_form(
     elif variant_cols:
         doc["format-version"] = 3  # variant is a v3 type
 
-    @pandas_udf("binary")
-    def wkb(s):
-        import pandas as pd
+    transforms = (
+        parse_partition_by(partition_by) if partition_by
+        else _spec_transforms_from_doc(doc)
+    )
+    spec = next(
+        (s for s in doc.get("partition-specs", [])
+         if s.get("spec-id") == doc.get("default-spec-id", 0)),
+        None,
+    )
+    if strict_spec and not transforms and (spec or {}).get("fields"):
+        raise ValueError(
+            "table has a partitioned default spec that does not "
+            "resolve against the current schema — cannot derive "
+            "partition values for the write"
+        )
 
-        from hielo_spark.metadata.geo import wkt_to_wkb
-
-        return pd.Series([wkt_to_wkb(v) for v in s], dtype="object")
-
-    for c, t in recorded.items():
-        if c in variant_cols or dtypes.get(c) != "string":
+    defaults = []
+    for f in fields:
+        if f.get("write-default") is None:
             continue
-        if t == "variant":
-            if enc is None:
-                enc = _variant_encode_udf(spark)
-            df = df.withColumn(c, enc(F.col(c)))
-        elif t.split("(")[0] in ("geometry", "geography"):
-            df = df.withColumn(c, wkb(F.col(c)))
-    return df
+        v = default_from_json(f["type"], f["write-default"])
+        if f["type"].startswith("decimal"):
+            v = Decimal(str(v))  # stored as its JSON string
+        defaults.append(
+            (f["name"], v, ddl_to_arrow(iceberg_to_ddl(f["type"])))
+        )
+    return WritePlan(
+        tuple(transforms),
+        tuple(defaults),
+        tuple(
+            (c, trees.get(c)) for c in dict.fromkeys([
+                *variant_cols,
+                *(c for c, t in recorded.items() if t == "variant"),
+            ])
+        ),
+        tuple(
+            c for c, t in recorded.items()
+            if t.split("(")[0] in ("geometry", "geography")
+        ),
+    )
 
 
 def update_partition_spec(table_dir: str, partition_by: list[str]) -> int:
@@ -1470,19 +1290,21 @@ def _finalize_commit(
     return snapshot
 
 
-def _write_data_files(spark, data_dir: str, df: DataFrame, transforms,
+def _write_data_files(spark, data_dir: str, df: DataFrame, plan,
                       sort_exprs=(),
                       row_group_rows: int = ROW_GROUP_ROWS) -> list[dict]:
     """Distributed table-file write shared by append, merge, compaction
     and every delete-file writer (:func:`_stage_delete_files`): every
-    task streams its rows through ``data_files.write_files`` inside
-    ``mapInArrow`` and returns one stats record per file (path, size,
-    counts, bounds, partition values); the driver collects the records
-    — one Spark job, no re-read of what was just written. Partitioned
-    writes sort each task by partition key first (then by
-    ``sort_exprs`` — the spec's within-file order for delete files), as
-    Spark's own ``partitionBy`` writer does, so a task keeps one file
-    open. Files land at ``data_dir/[<field>=<value>/]part-*.parquet``,
+    task streams its rows through ``data_files.write_files`` under
+    ``plan`` (a ``data_files.WritePlan``) inside ``mapInArrow`` and
+    returns one stats record per file (path, size, counts, bounds,
+    partition values); the driver collects the records — one Spark job,
+    no re-read of what was just written. Partitioned writes sort each
+    task by partition key first (then by ``sort_exprs`` — the spec's
+    within-file order for delete files), as Spark's own ``partitionBy``
+    writer does, so a task keeps one file open; a partition source only
+    a write-default supplies holds one value across the write and needs
+    no key. Files land at ``data_dir/[<field>=<value>/]part-*.parquet``,
     in row groups of ``row_group_rows`` rows. Only the records of
     successful tasks are collected; any other attempt's files stay
     unreferenced for ``remove_orphan_files``."""
@@ -1493,7 +1315,9 @@ def _write_data_files(spark, data_dir: str, df: DataFrame, transforms,
 
     _ship_package(spark)
     dtypes = dict(df.dtypes)
-    keys = [t.expr(dtypes[t.source]) for t in transforms] + list(sort_exprs)
+    keys = [
+        t.expr(dtypes[t.source]) for t in plan.transforms if t.source in dtypes
+    ] + list(sort_exprs)
     if keys:
         df = df.sortWithinPartitions(*keys)
 
@@ -1503,7 +1327,7 @@ def _write_data_files(spark, data_dir: str, df: DataFrame, transforms,
 
         # part-<task>-<uuid>: files sort by task, like Spark's writer
         prefix = f"part-{TaskContext.get().partitionId():05d}"
-        records, _ = write_files(batches, data_dir, transforms, prefix,
+        records, _ = write_files(batches, data_dir, plan, prefix,
                                  fanout=False,
                                  row_group_rows=row_group_rows)
         if records:
@@ -1738,12 +1562,13 @@ def _stage_append_manifest(
     skip_empty: bool = False,
 ) -> dict | None:
     """The one stage for data files written from a frame — append(),
-    overwrite_partitions(), UPDATE and MERGE: materialize
-    write-defaults, bring columns to their stored form
-    (:func:`_to_stored_form`), honor the table\'s distribution mode and
-    sort order, write the data files, and emit their manifest. Mutates
-    ``doc`` the same way append always has (shape recording,
-    next-row-id is advanced later by _finalize_commit). Returns
+    overwrite_partitions(), UPDATE and MERGE: take the write plan
+    (:func:`_write_plan` — partition spec, write-defaults, stored
+    forms, which the write tasks apply), honor the table\'s
+    distribution mode and sort order, write the data files, and emit
+    their manifest (:func:`_stage_written_files`). Mutates ``doc`` the
+    same way append always has (shape recording, next-row-id is
+    advanced later by _finalize_commit). Returns
     :func:`_stage_files_manifest`'s dict — its ``partition_values_of``
     maps file path → stringified partition values (what
     overwrite_partitions dooms prior files against) — or, with
@@ -1758,74 +1583,32 @@ def _stage_append_manifest(
     inheritance), and the commit assigns NO new ids from the
     ``next-row-id`` watermark (the rows keep the ids they already
     own)."""
-    from .transforms import parse_partition_by
+    from .data_files import written_dtypes
 
     mdir = os.path.join(table_dir, "metadata")
     # 1. data files — distributed parquet write into a per-commit dir
     data_dir = os.path.join(table_dir, "data", f"seq-{seq:05d}")
-    # v3 write-default: columns of the current schema that carry a
-    # write-default and are ABSENT from the frame are materialized as
-    # that value (the spec's writer rule) — a later read of this file
-    # then sees the default explicitly, never via the initial-default
-    # fill path
-    cur_schema = next(
-        (
-            s for s in doc.get("schemas", [])
-            if s.get("schema-id") == doc.get("current-schema-id")
-        ),
-        None,
-    )
-    if cur_schema is not None:
-        from pyspark.sql import functions as _F
-
-        from .types import iceberg_to_ddl as _i2d
-        from .values import default_from_json as _dfj
-
-        for f in cur_schema.get("fields", []):
-            if (
-                f.get("write-default") is not None
-                and isinstance(f.get("type"), str)
-                and f["name"] not in df.columns
-            ):
-                df = df.withColumn(
-                    f["name"],
-                    _F.lit(
-                        _dfj(f["type"], f["write-default"])
-                    ).cast(_i2d(f["type"])),
-                )
-    df = _to_stored_form(spark, df, doc, variant_cols, variant_shred)
-    dtypes = dict(df.dtypes)
+    frame = dict(df.dtypes)
     # explicit partition_by wins; otherwise write under the table's
     # recorded default spec (Iceberg writer behavior — partition
     # evolution via update_partition_spec takes effect on the next write)
-    transforms = (
-        parse_partition_by(partition_by)
-        if partition_by
-        else _spec_transforms_from_doc(doc)
-    )
+    plan = _write_plan(doc, frame, variant_cols, variant_shred, partition_by)
+    dtypes = written_dtypes(frame, plan)
+    transforms = plan.transforms
     for t in transforms:
         if t.source not in dtypes:
             raise ValueError(f"partition source column {t.source!r} not in frame")
-    _record_table_shape(
-        doc,
-        {
-            c: t for c, t in dtypes.items()
-            if c not in ("_row_id", "_last_updated_sequence_number")
-        }
-        if lineage_materialized else dtypes,
-        transforms, frozenset(variant_cols or ()),
-    )
     # honor the table's write.distribution-mode property (Iceberg
     # writer behavior): "range" clusters the frame globally by the
     # default sort order (one shuffle, disjoint per-file ranges),
     # "hash" clusters by the partition transform sources (each
     # partition value lands in one task → one file per partition per
     # commit instead of one per input task), "none"/absent keeps the
-    # caller's distribution
+    # caller's distribution. A column only a write-default supplies is
+    # one value across the write: no key needs it.
     order_spec = _sort_spec_from_doc(doc)
-    sort_spec = [s for s in order_spec if s[0] in dtypes]
-    sort_cols = [s[0] for s in sort_spec]
-    order_cols = [s[0] for s in order_spec]
+    sort_cols = [s[0] for s in order_spec if s[0] in dtypes]
+    sort_spec = [s for s in order_spec if s[0] in frame]
     dist = str(
         (doc.get("properties", {}) or {}).get(
             "write.distribution-mode", "none"
@@ -1834,7 +1617,7 @@ def _stage_append_manifest(
     if dist == "range" and sort_spec:
         # honor each field's declared direction/null-order so file
         # ranges line up with the order readers expect
-        df = df.repartitionByRange(*_sort_exprs(sort_spec, dtypes))
+        df = df.repartitionByRange(*_sort_exprs(sort_spec, frame))
     elif dist == "hash" and transforms:
         # cluster by the DERIVED partition values, not the raw source
         # columns: for non-identity transforms (bucket/days/truncate)
@@ -1842,8 +1625,8 @@ def _stage_append_manifest(
         # would spread a single partition across many tasks, breaking
         # the one-file-per-partition-per-commit intent
         keys = [
-            t.expr(dtypes[t.source]) for t in transforms
-            if t.source in dtypes
+            t.expr(frame[t.source]) for t in transforms
+            if t.source in frame
         ]
         if keys:
             df = df.repartition(*keys)
@@ -1858,21 +1641,60 @@ def _stage_append_manifest(
     # stamped with sort_order_id must actually be in THAT order, desc
     # and nulls-last included.
     files = _write_data_files(
-        spark, data_dir, df, transforms,
-        _sort_exprs(sort_spec, dtypes) if sort_spec else (),
+        spark, data_dir, df, plan,
+        _sort_exprs(sort_spec, frame) if sort_spec else (),
     )
-    if skip_empty and not files:
-        return None
     # stamp the order id ONLY when every order column was present —
     # a partial sort must not claim the full order to readers
     sort_oid = (
         int(doc.get("default-sort-order-id", 0))
-        if sort_cols and len(sort_cols) == len(order_cols)
+        if sort_cols and len(sort_cols) == len(order_spec)
         else None
     )
+    # a lineage-materialized write (UPDATE re-append) keeps first_row_id
+    # null on every file: the parquet carries explicit _row_id columns,
+    # which the lineage read coalesces BEFORE the inheritance fallback
+    return _stage_written_files(
+        doc, files, dtypes, transforms, snapshot_id, seq, mdir,
+        frozenset(variant_cols or ()), sort_order_id=sort_oid,
+        lineage_materialized=lineage_materialized, skip_empty=skip_empty,
+    )
 
-    # 2. manifest for the added files (entry seq null → inherited),
-    # with the spec's typed r102 partition record + header metadata
+
+def _stage_written_files(
+    doc: dict,
+    files: list[dict],
+    dtypes: dict[str, str],
+    transforms,
+    snapshot_id: int,
+    seq: int,
+    mdir: str,
+    variant_cols: frozenset[str] = frozenset(),
+    sort_order_id: int | None = None,
+    lineage_materialized: bool = False,
+    skip_empty: bool = False,
+) -> dict | None:
+    """From data files a write produced to their staged manifest — the
+    tail of both write planes (:func:`_stage_append_manifest`,
+    :func:`append_files`): record the table shape the written
+    ``dtypes`` imply (:func:`_record_table_shape`, also when there is
+    no file), then stage the manifest (:func:`_stage_files_manifest`)
+    with the typed partition record of ``transforms`` — or, with
+    ``skip_empty``, return None when there is no file. On a
+    partitioned spec, files without partition values raise rather
+    than record inconsistent metadata."""
+    _record_table_shape(
+        doc,
+        {
+            c: t for c, t in dtypes.items()
+            if c not in ("_row_id", "_last_updated_sequence_number")
+        }
+        if lineage_materialized else dtypes,
+        transforms, variant_cols,
+    )
+    if skip_empty and not files:
+        return None
+    # the manifest's typed r102 partition record + header metadata
     ptypes = _partition_types(transforms, dtypes)
     spec_id = int(doc.get("default-spec-id", 0))
     pfields = _partition_avro_fields(doc, ptypes, spec_id)
@@ -1891,12 +1713,15 @@ def _stage_append_manifest(
             )
             for i, t in enumerate(transforms)
         ]
-    # a lineage-materialized write (UPDATE re-append) keeps first_row_id
-    # null on every file: the parquet carries explicit _row_id columns,
-    # which the lineage read coalesces BEFORE the inheritance fallback
+    if pfields and any(f.get("partition_values") is None for f in files):
+        raise ValueError(
+            "table has a partitioned default spec but the write "
+            "produced files without partition values — the writer must "
+            "split rows by the spec's partition fields"
+        )
     return _stage_files_manifest(
         doc, files, dtypes, snapshot_id, seq, mdir, spec_id, pfields,
-        ptypes, sort_order_id=sort_oid,
+        ptypes, sort_order_id=sort_order_id,
         assign_row_ids=not lineage_materialized,
     )
 
@@ -1919,12 +1744,15 @@ def append(
     by the streaming sink to record its exactly-once batch marker).
 
     ``variant_cols`` names columns to commit as the v3 ``variant``
-    type: JSON strings are encoded to the Parquet Variant
-    (metadata, value) binary pair (VariantEncoding.md, name-sorted
-    dictionaries), already-shaped structs pass through, and the table
-    schema records the columns as ``variant`` — both read planes then
-    surface canonical JSON strings. New tables commit at
-    format-version 3; v2 tables must upgrade first (loud).
+    type: the write tasks encode JSON strings to the Parquet Variant
+    (metadata, value) binary pair (``data_files.stored_form``;
+    VariantEncoding.md, name-sorted dictionaries), already-shaped
+    structs pass through, and the table schema records the columns as
+    ``variant`` — both read planes then surface canonical JSON strings.
+    Later writes on either plane, the ``hielo_iceberg`` DataSource
+    included, encode a JSON string given for a ``variant`` column the
+    same way (unshredded). New tables commit at format-version 3; v2
+    tables must upgrade first (loud).
     ``variant_shred`` optionally SHREDS named top-level object fields
     into typed subcolumns (VariantShredding.md), e.g.
     ``variant_shred={"v": {"a": "bigint"}}`` — type-matching values
@@ -2113,19 +1941,9 @@ def append_files(
     seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
         doc, snapshot_id, timestamp_ms, branch
     )
-    mdir = os.path.join(table_dir, "metadata")
-    _record_table_shape(doc, dtypes, [])
-    ptypes = _partition_types(_spec_transforms_from_doc(doc), dtypes)
-    spec_id = int(doc.get("default-spec-id", 0))
-    pfields = _partition_avro_fields(doc, ptypes, spec_id)
-    if pfields and any(f.get("partition_values") is None for f in files):
-        raise ValueError(
-            f"table {table_dir!r} has a partitioned default spec but the "
-            "write produced files without partition values — the writer "
-            "must split rows by the spec's partition fields"
-        )
-    staged = _stage_files_manifest(
-        doc, files, dtypes, snapshot_id, seq, mdir, spec_id, pfields, ptypes,
+    staged = _stage_written_files(
+        doc, files, dtypes, _spec_transforms_from_doc(doc), snapshot_id,
+        seq, os.path.join(table_dir, "metadata"),
     )
     return _commit_staged(
         table_dir, doc, prev_version, staged, seq, snapshot_id,
@@ -2771,6 +2589,7 @@ def _stage_delete_files(
     ``rewrite_position_deletes`` takes them from the target data files'
     manifest entries and passes those entries' ``ptypes``. Returns
     :func:`_stage_files_manifest`'s dict."""
+    from .data_files import WritePlan
     from .transforms import PartitionTransform
 
     twins = []
@@ -2790,7 +2609,7 @@ def _stage_delete_files(
         if content == 1:
             df = df.repartition(*[w.source for w in twins], "file_path")
         files = _write_data_files(
-            spark, del_dir, df, twins, list(kdt),
+            spark, del_dir, df, WritePlan(tuple(twins)), list(kdt),
             row_group_rows=(
                 _POS_DELETE_ROW_GROUP_ROWS if content == 1 else ROW_GROUP_ROWS
             ),
@@ -3044,13 +2863,16 @@ def rewrite_data_files(
     # compacted files get fresh column stats from the writer, which is
     # where sort/zorder strategies pay off (tight disjoint ranges →
     # skip_filter reads touch one file). The rewrite is unpartitioned
-    # (spec 0), its rows keep their lineage (no new row ids) and their
-    # variant/geo columns re-encode from the read-back JSON/WKT.
-    live = _to_stored_form(spark, live, doc)
+    # (spec 0), its rows keep their lineage (no new row ids) and the
+    # write tasks re-encode their variant/geo columns from the
+    # read-back JSON/WKT.
+    from .data_files import written_dtypes
+
+    plan = _write_plan(doc)._replace(transforms=())
     staged = _stage_files_manifest(
-        doc, _write_data_files(spark, data_dir, live, []),
-        dict(live.dtypes), snapshot_id, seq, mdir, 0, [], None,
-        assign_row_ids=False,
+        doc, _write_data_files(spark, data_dir, live, plan),
+        written_dtypes(dict(live.dtypes), plan), snapshot_id, seq, mdir,
+        0, [], None, assign_row_ids=False,
     )
     return _finalize_commit(
         table_dir, doc, prev_version,
@@ -3170,9 +2992,9 @@ def update_where(
 
     Variant columns round-trip through re-encoding (JSON read-back →
     unshredded variant pair); geometry/geography columns round-trip
-    the same way (WKT read-back → ISO WKB), both through
-    :func:`_to_stored_form`, and a SET may assign a WKT literal to a
-    geo column directly.
+    the same way (WKT read-back → ISO WKB), both in the write tasks
+    (``data_files.stored_form``), and a SET may assign a WKT literal to
+    a geo column directly.
 
     ``branch`` stages the update on that branch (WAP): it bases on the
     branch head, moves only the branch ref, and main readers see
@@ -3315,7 +3137,7 @@ def delete_where(
                 F.lit(seq).cast("long"),
             )
         # variant and geo columns read back as JSON / WKT strings; the
-        # append stage re-encodes them (_to_stored_form)
+        # append stage's write tasks re-encode them (stored_form)
         staged_update = _stage_append_manifest(
             spark, table_dir, doc, seq, snapshot_id, upd,
             lineage_materialized=fv3_lineage,

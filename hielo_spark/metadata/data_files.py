@@ -11,6 +11,13 @@ estimates. The driver turns the records into manifest entries
 (``commit._stage_files_manifest``), so no plane re-reads what it just
 wrote and both planes record the same stats for the same rows.
 
+The writer also owns the stored form: before a batch is split and
+counted, :func:`stored_form` appends the v3 write-default columns it
+lacks and encodes string ``variant`` and geometry/geography columns
+(JSON → the variant pair, WKT → WKB), as the :class:`WritePlan` the
+driver read from the table metadata (``commit._write_plan``) says.
+So a table stores the same bytes whichever plane wrote it.
+
 Pure pyarrow/numpy: a DataSource worker has no SparkSession, and this
 module imports nothing from Spark.
 """
@@ -21,6 +28,7 @@ import datetime as _dt
 import hashlib
 import os
 import uuid as _uuid
+from typing import NamedTuple
 
 #: Spark SQL types that get per-file lower/upper bounds
 BOUNDABLE = (
@@ -333,16 +341,108 @@ def transform_partition_values(t, col) -> list:
     return [None if v is None else t.value_of(v) for v in col.to_pylist()]
 
 
-def write_files(batches, base_dir: str, transforms, prefix: str,
+class WritePlan(NamedTuple):
+    """What a write does to a frame's rows, read once from the table
+    metadata on the driver (``commit._write_plan``) and pickled to
+    every task:
+
+    * ``transforms`` — the partition spec as ``PartitionTransform``s;
+    * ``defaults`` — ``(name, value, Arrow type)`` per v3 write-default
+      column;
+    * ``variant`` — ``(name, shred tree or None)`` per ``variant``
+      column (``variant.shred_tree``);
+    * ``geo`` — the names of the geometry/geography columns."""
+
+    transforms: tuple = ()
+    defaults: tuple = ()
+    variant: tuple = ()
+    geo: tuple = ()
+
+
+def stored_form(batch, plan: WritePlan):
+    """``batch`` in the form the table stores it: the write-default
+    columns it lacks appended with their values, and every ``variant``
+    or geometry/geography column that arrives as a string encoded —
+    JSON to the Parquet Variant (metadata, value) pair, shredded when
+    the plan has a tree for it; WKT to ISO WKB (malformed input raises
+    in the task). A column already in its stored form passes through,
+    and a SQL null stays null (a variant one as a pair of nulls). Per-value Python by necessity: both
+    encodings are self-describing byte trees."""
+    import json
+
+    import pyarrow as pa
+
+    from .geo import wkt_to_wkb
+    from .variant import encode_variant, shred_variant, stored_type
+
+    for name, value, atype in plan.defaults:
+        if name not in batch.schema.names:
+            batch = batch.append_column(
+                name, pa.array([value] * batch.num_rows, type=atype)
+            )
+
+    def strings(name: str):
+        i = batch.schema.get_field_index(name)
+        t = batch.schema.field(i).type if i >= 0 else None
+        if t is None or not (pa.types.is_string(t)
+                             or pa.types.is_large_string(t)):
+            return i, None
+        return i, batch.column(i).to_pylist()
+
+    for name, tree in plan.variant:
+        i, vals = strings(name)
+        if vals is None:
+            continue
+        objs = [None if s is None else json.loads(s) for s in vals]
+        rows = [
+            {} if s is None  # a SQL null stays a pair of nulls
+            else shred_variant(o, tree) if tree is not None
+            else dict(zip(("metadata", "value"), encode_variant(o)))
+            for s, o in zip(vals, objs)
+        ]
+        batch = batch.set_column(
+            i, name, pa.array(rows, type=stored_type(tree))
+        )
+    for name in plan.geo:
+        i, vals = strings(name)
+        if vals is not None:
+            batch = batch.set_column(i, name, pa.array(
+                [wkt_to_wkb(s) for s in vals], type=pa.binary()
+            ))
+    return batch
+
+
+def written_dtypes(dtypes: dict[str, str], plan: WritePlan) -> dict[str, str]:
+    """The Spark types of the columns :func:`stored_form` makes of a
+    frame with ``dtypes`` — what the driver records for a write
+    without looking at its files (there may be none)."""
+    from .variant import stored_type
+
+    out = dict(dtypes)
+    for name, _, atype in plan.defaults:
+        out.setdefault(name, spark_dtype_of(atype))
+    for name, tree in plan.variant:
+        if out.get(name) == "string":
+            out[name] = spark_dtype_of(stored_type(tree))
+    for name in plan.geo:
+        if out.get(name) == "string":
+            out[name] = "binary"
+    return out
+
+
+def write_files(batches, base_dir: str, plan: WritePlan, prefix: str,
                 fanout: bool, row_group_rows: int = ROW_GROUP_ROWS,
                 ) -> tuple[list[dict], dict[str, str]]:
     """Stream ``batches`` into parquet under ``base_dir`` and return
     ``(records, dtypes)``: one stats record per written file (path,
     size, :class:`FileStats` maps, ``partition_values``) and the Spark
-    types of the incoming columns.
+    types of the written columns. Each batch first takes its stored
+    form (:func:`stored_form`) — unless the plan has nothing to add or
+    encode, when batches go through untouched.
 
-    With ``transforms`` (the partition spec as ``PartitionTransform``
-    objects) rows split by their derived partition tuple into
+    With ``plan.transforms`` (the partition spec as
+    ``PartitionTransform`` objects) rows split by their derived
+    partition tuple into
     ``<field>=<value>/`` directories; identity source columns stay out
     of the files, because their values live in the manifest. With
     ``fanout`` every partition's file stays open until the input ends,
@@ -363,6 +463,8 @@ def write_files(batches, base_dir: str, transforms, prefix: str,
 
     import pyarrow as pa
 
+    transforms = plan.transforms
+    stage = plan.defaults or plan.variant or plan.geo
     open_files: dict[tuple, _OpenFile] = {}
     records: list[dict] = []
     dtypes: dict[str, str] = {}
@@ -388,6 +490,8 @@ def write_files(batches, base_dir: str, transforms, prefix: str,
         f.write(batch)
 
     for batch in batches:
+        if stage:
+            batch = stored_form(batch, plan)
         if not dtypes:
             dtypes = {f.name: spark_dtype_of(f.type) for f in batch.schema}
             missing = [t.source for t in transforms if t.source not in dtypes]

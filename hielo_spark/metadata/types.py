@@ -250,3 +250,49 @@ def arrow_to_ddl(t) -> str:
     if pa.types.is_decimal(t):
         return f"decimal({t.precision},{t.scale})"
     raise ValueError(f"no Spark DDL mapping for arrow type {t}")
+
+
+def ddl_to_arrow(ddl: str):
+    """Spark DDL type string → pyarrow type (None when unparseable —
+    callers then skip casting/declare string); the inverse of
+    :func:`arrow_to_ddl`."""
+    import pyarrow as pa
+
+    t = ddl.strip()
+    low = t.lower()
+    prim = {
+        "int": pa.int32(), "bigint": pa.int64(),
+        "smallint": pa.int16(), "tinyint": pa.int8(),
+        "float": pa.float32(), "double": pa.float64(),
+        "string": pa.string(), "date": pa.date32(),
+        "boolean": pa.bool_(), "binary": pa.binary(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
+        "timestamp_ntz": pa.timestamp("us"),
+    }
+    if low in prim:
+        return prim[low]
+    if low.startswith("decimal") and "(" in t:
+        try:
+            p, s = t[t.index("(") + 1:t.rindex(")")].split(",")
+            return pa.decimal128(int(p), int(s))
+        except (ValueError, IndexError):
+            return None
+    if low.startswith("array<") and low.endswith(">"):
+        inner = ddl_to_arrow(t[6:-1])
+        return pa.list_(inner) if inner is not None else None
+    if low.startswith("map<") and low.endswith(">"):
+        parts = split_top(t[4:-1])
+        if len(parts) != 2:
+            return None
+        kt, vt = (ddl_to_arrow(p) for p in parts)
+        return pa.map_(kt, vt) if kt is not None and vt is not None else None
+    if low.startswith("struct<") and low.endswith(">"):
+        fields = []
+        for part in split_top(t[7:-1]):
+            name, _, ft = part.partition(":")
+            at = ddl_to_arrow(ft)
+            if at is None:
+                return None
+            fields.append(pa.field(name.strip(), at))
+        return pa.struct(fields)
+    return None

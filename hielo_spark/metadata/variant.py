@@ -1,4 +1,4 @@
-"""Iceberg v3 / Parquet ``variant`` binary encoding — read path.
+"""Iceberg v3 / Parquet ``variant`` binary encoding.
 
 Implements the published Parquet Variant encoding (the format Spark's
 VariantType and Iceberg v3's ``variant`` type share:
@@ -10,8 +10,10 @@ plain Python objects; :func:`variant_to_json` renders the canonical
 JSON string the read planes surface variant columns as (the engine has
 no VariantType of its own — JSON strings are the portable output).
 
-The encoder exists for tests and fixtures (round-trip pinning and
-foreign-table simulation); production writes never produce variant.
+The encoders (:func:`encode_variant`, :func:`shred_variant`) are what
+the in-task writer stores a JSON string column of a ``variant`` table
+column as (``data_files.stored_form``); tests and fixtures use them
+for round-trip pinning and foreign-table simulation.
 
 Decoded primitive ids 0-16 cover the spec's finalized core (null,
 booleans, int8/16/32/64, float/double, decimal4/8/16, date,
@@ -314,8 +316,7 @@ def _encode_value(obj, key_id: dict[str, int]) -> bytes:
 
 
 def encode_variant(obj) -> tuple[bytes, bytes]:
-    """Python object → (metadata, value) byte pair (test fixtures).
-    The dictionary is NAME-SORTED (with the sorted_strings metadata
+    """Python object → (metadata, value) byte pair. The dictionary is NAME-SORTED (with the sorted_strings metadata
     bit), so the encoder simulates a conformant foreign writer: object
     field ids ordered by id coincide with ordering by name, which
     VariantEncoding.md requires and name-binary-searching readers rely
@@ -325,6 +326,119 @@ def encode_variant(obj) -> tuple[bytes, bytes]:
     keys.sort()
     key_id = {k: i for i, k in enumerate(keys)}
     return encode_metadata(keys), _encode_value(obj, key_id)
+
+
+def shred_tree(fields: dict[str, str]) -> dict:
+    """Dotted shred paths (``{"a.b": "bigint"}``) → a nested tree: each
+    node is ``{"type": leaf-type-or-None, "children": {name: node}}``.
+    A path can't be both a leaf and a prefix of another (loud)."""
+    root: dict = {"type": None, "children": {}}
+    for path, t in fields.items():
+        node = root
+        parts = path.split(".")
+        for p in parts[:-1]:
+            node = node["children"].setdefault(
+                p, {"type": None, "children": {}}
+            )
+            if node["type"] is not None:
+                raise ValueError(
+                    f"shred path {path!r} descends through leaf {p!r}"
+                )
+        leaf = node["children"].setdefault(
+            parts[-1], {"type": None, "children": {}}
+        )
+        if leaf["type"] is not None or leaf["children"]:
+            raise ValueError(f"conflicting shred entries at {path!r}")
+        leaf["type"] = t
+    return root
+
+
+def stored_type(tree: dict | None = None):
+    """The Arrow type a variant column is stored as: the spec's
+    struct<metadata, value> pair, plus the ``typed_value`` field groups
+    of a :func:`shred_tree` (struct<value binary, typed_value T> per
+    shredded field, recursing for nested objects; ``array<prim>``
+    leaves become lists of element groups)."""
+    import pyarrow as pa
+
+    prim = {"bigint": pa.int64(), "double": pa.float64(),
+            "string": pa.string(), "boolean": pa.bool_()}
+
+    def group(typed):
+        return pa.struct([("value", pa.binary()), ("typed_value", typed)])
+
+    def typed_of(node):
+        t = node["type"]
+        if t is None:
+            return pa.struct([
+                (k, group(typed_of(c))) for k, c in node["children"].items()
+            ])
+        if t.startswith("array<"):
+            return pa.list_(pa.field("element", group(prim[t[6:-1]])))
+        return prim[t]
+
+    pair = [("metadata", pa.binary()), ("value", pa.binary())]
+    if tree is None:
+        return pa.struct(pair)
+    return pa.struct(pair + [("typed_value", typed_of(tree))])
+
+
+def _shredded_prim(v, t: str, key_id: dict) -> dict:
+    want = {"bigint": int, "double": float, "string": str, "boolean": bool}[t]
+    # bool is an int subclass — keep the check exact
+    if isinstance(v, want) and not (want is int and isinstance(v, bool)):
+        return {"value": None, "typed_value": v}
+    # JSON null INCLUDED: a null-valued field is a present variant-null
+    # (0x00), not an absent field (both-null group) — reconstruction
+    # must keep it
+    return {"value": _encode_value(v, key_id), "typed_value": None}
+
+
+def _shredded_group(v, node: dict, key_id: dict) -> dict:
+    """One PRESENT value vs its shred-tree node → the field group."""
+    t = node["type"]
+    if t is not None:
+        if not t.startswith("array<"):
+            return _shredded_prim(v, t, key_id)
+        if isinstance(v, list):
+            return {"value": None, "typed_value": [
+                _shredded_prim(e, t[6:-1], key_id) for e in v
+            ]}
+        return {"value": _encode_value(v, key_id), "typed_value": None}
+    # internal object node: shredded children recurse, the rest rides
+    # THIS level's binary value remainder
+    if not isinstance(v, dict):
+        return {"value": _encode_value(v, key_id), "typed_value": None}
+    rest = {k: x for k, x in v.items() if k not in node["children"]}
+    return {
+        "value": _encode_value(rest, key_id) if rest else None,
+        "typed_value": {
+            k: (_shredded_group(v[k], c, key_id) if k in v
+                else {"value": None, "typed_value": None})
+            for k, c in node["children"].items()
+        },
+    }
+
+
+def shred_variant(obj, tree: dict) -> dict:
+    """Python object → one SHREDDED variant row (VariantShredding.md) of
+    :func:`stored_type` ``(tree)``: the tree's object fields land in
+    typed field groups (type-matching values typed, mismatches in the
+    group's binary ``value``, absent fields leave both null), the other
+    fields ride the enclosing level's binary ``value`` remainder, and a
+    non-object value is the plain pair with a null ``typed_value``. The
+    name-sorted dictionary covers the FULL object (a superset of the
+    remainder's keys is spec-legal and keeps ids stable whichever side
+    a value lands on)."""
+    keys: list[str] = []
+    _collect_keys(obj, keys, set())
+    keys.sort()
+    key_id = {k: i for i, k in enumerate(keys)}
+    if not isinstance(obj, dict):
+        top = {"value": _encode_value(obj, key_id), "typed_value": None}
+    else:
+        top = _shredded_group(obj, tree, key_id)
+    return {"metadata": encode_metadata(keys), **top}
 
 
 # ------------------------------------------------------------- shredding

@@ -78,6 +78,7 @@ from ..metadata.manifests import (
     read_schema_block,
     select_snapshot,
 )
+from ..metadata.types import ddl_to_arrow
 
 
 def _current_metadata_path(table_dir: str) -> str:
@@ -98,14 +99,6 @@ def _opt_true(v) -> bool:
 def _load_doc(table_dir: str) -> dict:
     with open(_current_metadata_path(table_dir)) as f:
         return json.load(f)
-
-
-def _current_schema_block(doc: dict) -> dict | None:
-    """The current schema struct (v2 ``schemas`` list or v1 single
-    ``schema``) — shared with the metadata plane."""
-    from ..metadata.metadata_json import current_schema_block
-
-    return current_schema_block(doc)
 
 
 _TRAVEL_OPTIONS = ("snapshot-id", "as-of-ms", "ref")
@@ -717,13 +710,13 @@ def _read_partition(part: _ScanPartition):
                 if vsrc is None:
                     cols.append(pa.nulls(
                         table.num_rows,
-                        type=_arrow_type_of_ddl(vddl) or pa.string(),
+                        type=ddl_to_arrow(vddl) or pa.string(),
                     ))
                 else:
                     cols.append(_variant_extract_array(
                         table.column(vsrc), vfield, vddl))
                 continue
-            want = _arrow_type_of_ddl(ddl)
+            want = ddl_to_arrow(ddl)
             src = name
             if src not in table.column_names:
                 # renamed column: a file written before the rename
@@ -1199,7 +1192,7 @@ def _variant_extract_array(col, field: str, want_ddl: str):
         reconstruct_shredded,
     )
 
-    want = _arrow_type_of_ddl(want_ddl) or pa.string()
+    want = ddl_to_arrow(want_ddl) or pa.string()
     n = len(col)
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
@@ -2106,54 +2099,52 @@ class _WrittenFiles(WriterCommitMessage):
         self.dtypes = dtypes  # {col: spark dtype}
 
 
-def _arrow_type_of_ddl(ddl: str):
-    """Spark DDL type string → pyarrow type (None when unparseable —
-    callers then skip casting/declare string)."""
-    import pyarrow as pa
+class _TableWriter:
+    """The half both ``hielo_iceberg`` writers share: the table's write
+    plan (``commit._write_plan``, the JVM plane's too), built from ONE
+    load of its metadata document so a commit landing meanwhile cannot
+    mix two versions into it, and the task write that follows it. A
+    table with no metadata yet writes unpartitioned, with nothing to
+    add or encode; a partitioned default spec that does not resolve
+    raises — the tasks could not derive the partition values the
+    commit must record."""
 
-    from ..metadata.types import split_top
+    def __init__(self, table_dir: str, options):
+        from ..metadata.commit import _write_plan
 
-    t = ddl.strip()
-    low = t.lower()
-    prim = {
-        "int": pa.int32(), "bigint": pa.int64(),
-        "smallint": pa.int16(), "tinyint": pa.int8(),
-        "float": pa.float32(), "double": pa.float64(),
-        "string": pa.string(), "date": pa.date32(),
-        "boolean": pa.bool_(), "binary": pa.binary(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-        "timestamp_ntz": pa.timestamp("us"),
-    }
-    if low in prim:
-        return prim[low]
-    if low.startswith("decimal") and "(" in t:
+        self.table_dir = table_dir
+        self.options = options
         try:
-            p, s = t[t.index("(") + 1:t.rindex(")")].split(",")
-            return pa.decimal128(int(p), int(s))
-        except (ValueError, IndexError):
-            return None
-    if low.startswith("array<") and low.endswith(">"):
-        inner = _arrow_type_of_ddl(t[6:-1])
-        return pa.list_(inner) if inner is not None else None
-    if low.startswith("map<") and low.endswith(">"):
-        parts = split_top(t[4:-1])
-        if len(parts) != 2:
-            return None
-        kt, vt = (_arrow_type_of_ddl(p) for p in parts)
-        return pa.map_(kt, vt) if kt is not None and vt is not None else None
-    if low.startswith("struct<") and low.endswith(">"):
-        fields = []
-        for part in split_top(t[7:-1]):
-            name, _, ft = part.partition(":")
-            at = _arrow_type_of_ddl(ft)
-            if at is None:
-                return None
-            fields.append(pa.field(name.strip(), at))
-        return pa.struct(fields)
-    return None
+            doc = _load_doc(table_dir)
+        except FileNotFoundError:
+            doc = {}  # first write to a new table
+        self.plan = _write_plan(doc, strict_spec=True)
+
+    def write(self, iterator):
+        # the writer shared with the JVM plane: Arrow batches take the
+        # stored form and stream into ds-*.parquet files split by the
+        # default spec's partition tuple (identity sources stay out of
+        # the files — their values live in the manifest), one stats
+        # record per file. Input arrives in any order, so each
+        # partition keeps its file open.
+        from ..metadata.data_files import write_files
+
+        files, dtypes = write_files(
+            iterator, os.path.join(self.table_dir, "data"), self.plan,
+            "ds", fanout=True,
+        )
+        return _WrittenFiles(files, dtypes)
+
+    def abort(self, messages, batchId=None):  # noqa: N802 (API name)
+        for m in messages or []:
+            for f in getattr(m, "files", []) or []:
+                try:
+                    os.remove(f["path"])
+                except OSError:
+                    pass
 
 
-class HieloIcebergWriter(DataSourceArrowWriter):
+class HieloIcebergWriter(_TableWriter, DataSourceArrowWriter):
     """``df.write.format("hielo_iceberg").mode("append").save(dir)`` —
     executors stream their Arrow batches into parquet through the
     writer the JVM plane's ``commit.append`` also runs
@@ -2162,13 +2153,19 @@ class HieloIcebergWriter(DataSourceArrowWriter):
     ``commit.append_files`` — the same manifest builder and
     finalize step as every other commit, needing no SparkSession.
 
-    Exactly-once: only files named in SUCCESSFUL tasks' commit messages
-    enter the manifest; retried/zombie task outputs are unreferenced
-    and reclaimed by remove_orphan_files, the Iceberg pattern. Writes
-    follow the table's recorded default partition spec — identity AND
+    What the tasks write follows one write plan (``commit._write_plan``,
+    the JVM plane's too), read from the table metadata once when the
+    writer is built: the default partition spec — identity AND
     hidden-partitioning transforms (bucket/truncate/year/month/day/
     hour), derived per task from the Arrow batches with the same
-    spec-exact murmur3 kernel as the JVM plane.
+    spec-exact murmur3 kernel as the JVM plane — the write-default
+    columns a frame lacks, and the stored form of ``variant`` and
+    geometry/geography columns given as JSON / WKT strings (variant
+    stays unshredded: shredding is an option of ``commit.append``).
+
+    Exactly-once: only files named in SUCCESSFUL tasks' commit messages
+    enter the manifest; retried/zombie task outputs are unreferenced
+    and reclaimed by remove_orphan_files, the Iceberg pattern.
     ``mode("overwrite")`` composes a REPLACE commit (no manifest
     carry-forward, reset totals — Iceberg truncate-and-write); with
     ``option("overwrite-mode", "dynamic")`` it is dynamic PARTITION
@@ -2181,109 +2178,8 @@ class HieloIcebergWriter(DataSourceArrowWriter):
     ``metadata.fast_forward``)."""
 
     def __init__(self, table_dir: str, options, overwrite: bool = False):
-        self.table_dir = table_dir
-        self.options = options
+        super().__init__(table_dir, options)
         self.overwrite = overwrite
-        # resolved once in the planner (which has table-metadata access)
-        # and pickled to tasks: the default spec's PartitionTransform
-        # list (plain strings/ints — picklable) — tasks split rows per
-        # derived partition tuple
-        self.partition_transforms = self._spec_partition_transforms()
-        # v3 write-default columns absent from the incoming frame are
-        # materialized in-task (same rule as the JVM-plane append), so
-        # both write planes produce files the read planes agree on
-        self.write_defaults = self._schema_write_defaults()
-
-    def _schema_write_defaults(self):
-        from ..metadata.types import (
-            UnsupportedIcebergType,
-            iceberg_to_ddl,
-        )
-        from ..metadata.values import default_from_json
-
-        try:
-            doc = _load_doc(self.table_dir)
-        except (TypeError, FileNotFoundError):
-            return []  # first write to a new table: no schema yet
-        schema = _current_schema_block(doc)
-        if schema is None:
-            return []
-        out = []
-        for f in schema.get("fields", []):
-            if f.get("write-default") is not None and isinstance(
-                f.get("type"), str
-            ):
-                try:
-                    ddl = iceberg_to_ddl(f["type"])
-                except UnsupportedIcebergType:
-                    continue
-                out.append(
-                    (
-                        f["name"],
-                        default_from_json(f["type"], f["write-default"]),
-                        ddl,
-                    )
-                )
-        return out
-
-    def _spec_partition_transforms(self):
-        """The default spec as ``PartitionTransform`` objects —
-        identity AND hidden-partitioning transforms (bucket/truncate/
-        year/month/day/hour), the same reconstruction the JVM-plane
-        writer uses, so both planes lay out files identically."""
-        from ..metadata.commit import _spec_transforms_from_doc
-
-        try:
-            doc = _load_doc(self.table_dir)
-        except (TypeError, FileNotFoundError):
-            return []  # first write to a new table: unpartitioned
-        spec = next(
-            (
-                s for s in doc.get("partition-specs", [])
-                if s.get("spec-id") == doc.get("default-spec-id", 0)
-            ),
-            None,
-        )
-        if not spec or not spec.get("fields"):
-            return []
-        ts = _spec_transforms_from_doc(doc)
-        if not ts:
-            raise ValueError(
-                "table has a partitioned default spec that does not "
-                "resolve against the current schema — cannot derive "
-                "partition values for the write"
-            )
-        return ts
-
-    def _with_write_defaults(self, batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            for name, val, ddl in self.write_defaults:
-                if name not in batch.schema.names:
-                    batch = batch.append_column(
-                        name,
-                        pa.array(
-                            [val] * batch.num_rows,
-                            type=_arrow_type_of_ddl(ddl) or pa.string(),
-                        ),
-                    )
-            yield batch
-
-    def write(self, iterator):
-        # the writer shared with the JVM plane: Arrow batches stream
-        # into ds-*.parquet files split by the default spec's partition
-        # tuple (identity sources stay out of the files — their values
-        # live in the manifest), one stats record per file. Input
-        # arrives in any order, so each partition keeps its file open.
-        from ..metadata.data_files import write_files
-
-        files, dtypes = write_files(
-            self._with_write_defaults(iterator),
-            os.path.join(self.table_dir, "data"),
-            self.partition_transforms, "ds", fanout=True,
-        )
-        return _WrittenFiles(files, dtypes)
 
     def commit(self, messages):
         from ..metadata.commit import append_files
@@ -2320,19 +2216,11 @@ class HieloIcebergWriter(DataSourceArrowWriter):
             branch=self.options.get("branch"),
         )
 
-    def abort(self, messages):
-        for m in messages or []:
-            for f in getattr(m, "files", []) or []:
-                try:
-                    os.remove(f["path"])
-                except OSError:
-                    pass
-
 
 from pyspark.sql.datasource import DataSourceStreamArrowWriter
 
 
-class HieloIcebergStreamWriter(DataSourceStreamArrowWriter):
+class HieloIcebergStreamWriter(_TableWriter, DataSourceStreamArrowWriter):
     """``writeStream.format("hielo_iceberg")`` — every micro-batch
     becomes one append snapshot with the same exactly-once contract as
     streaming/iceberg_sink.py: the snapshot summary records
@@ -2341,24 +2229,10 @@ class HieloIcebergStreamWriter(DataSourceStreamArrowWriter):
     mark; a replayed epoch (checkpoint wipe, commit/checkpoint race)
     finds the mark and skips, leaving its files as orphans for the
     sweep. ``option("query-name", ...)`` namespaces the markers — must
-    be unique per logical stream writing the table."""
-
-    def __init__(self, table_dir: str, options):
-        self.table_dir = table_dir
-        self.options = options
-        self.partition_transforms = (
-            HieloIcebergWriter._spec_partition_transforms(self)
-        )
-        self.write_defaults = (
-            HieloIcebergWriter._schema_write_defaults(self)
-        )
-
-    # per-task Arrow write is identical to the batch writer's (incl.
-    # spec-partitioned splitting — the helpers only touch table_dir)
-    write = HieloIcebergWriter.write
-    _with_write_defaults = HieloIcebergWriter._with_write_defaults
-    _spec_partition_transforms = HieloIcebergWriter._spec_partition_transforms
-    _schema_write_defaults = HieloIcebergWriter._schema_write_defaults
+    be unique per logical stream writing the table. Its tasks write as
+    the batch writer's do, from the same write plan (partition layout,
+    write-defaults, variant and geo stored forms) read once when the
+    writer is built."""
 
     def commit(self, messages, batchId=None):  # noqa: N802 (API name)
         import json as _json
@@ -2411,9 +2285,6 @@ class HieloIcebergStreamWriter(DataSourceStreamArrowWriter):
                 else None
             ),
         )
-
-    def abort(self, messages, batchId=None):  # noqa: N802
-        HieloIcebergWriter.abort(self, messages)
 
 
 # -- metadata surfaces (the reference IS a metadata viewer: expose the

@@ -625,27 +625,44 @@ def test_variant_and_geometry_columns_read_as_strings(spark, tmp_path):
 def test_write_default_via_datasource_writer(spark, tmp_path):
     """df.write.format('hielo_iceberg') omitting a write-default column
     materializes the default in-task — files from BOTH write planes
-    read identically on BOTH read planes (no seq-gating divergence)."""
+    read identically on BOTH read planes (no seq-gating divergence).
+    A partition source that only the write-default supplies partitions
+    the files of both write planes under its one value."""
+    import glob
+    import os
+
     from hielo_spark.metadata import upgrade_format_version
     from hielo_spark.metadata.manifests import read_data_at_snapshot
     from hielo_spark.sources import register
 
     register(spark)
-    t = str(tmp_path / "t")
-    C.append(spark, t, spark.createDataFrame([(1,)], ["id"]),
-             snapshot_id=101, timestamp_ms=1700000000000)
-    upgrade_format_version(t, 3)
-    C.update_schema(t, add=[("tier", "string", "bronze")])
-    spark.createDataFrame([(2,)], ["id"]) \
-        .write.format("hielo_iceberg").mode("append") \
-        .option("snapshot-id", "102") \
-        .option("timestamp-ms", "1700100000000").save(t)
-    expect = [(1, "bronze"), (2, "bronze")]
-    jvm = sorted((r.id, r.tier) for r in read_data_at_snapshot(
-        spark, C.current_metadata_path(t)).collect())
-    ds = sorted((r.id, r.tier) for r in
-                spark.read.format("hielo_iceberg").load(t).collect())
-    assert jvm == ds == expect
+    for partitioned in (False, True):
+        t = str(tmp_path / ("part" if partitioned else "t"))
+        C.append(spark, t, spark.createDataFrame([(1,)], ["id"]),
+                 snapshot_id=101, timestamp_ms=1700000000000)
+        upgrade_format_version(t, 3)
+        C.update_schema(t, add=[("tier", "string", "bronze")])
+        expect = [(1, "bronze"), (2, "bronze")]
+        old = set(glob.glob(f"{t}/data/**/*.parquet", recursive=True))
+        if partitioned:
+            C.update_partition_spec(t, ["tier"])
+            C.append(spark, t, spark.createDataFrame([(3,)], ["id"]),
+                     snapshot_id=103, timestamp_ms=1700050000000)
+            expect.append((3, "bronze"))
+        spark.createDataFrame([(2,)], ["id"]) \
+            .write.format("hielo_iceberg").mode("append") \
+            .option("snapshot-id", "102") \
+            .option("timestamp-ms", "1700100000000").save(t)
+        jvm = sorted((r.id, r.tier) for r in read_data_at_snapshot(
+            spark, C.current_metadata_path(t)).collect())
+        ds = sorted((r.id, r.tier) for r in
+                    spark.read.format("hielo_iceberg").load(t).collect())
+        assert jvm == ds == expect
+        if partitioned:
+            new = set(glob.glob(f"{t}/data/**/*.parquet", recursive=True))
+            assert len(new - old) == 2
+            assert {os.path.basename(os.path.dirname(p))
+                    for p in new - old} == {"tier=bronze"}
 
 
 def test_eq_delete_applies_after_post_delete_rename(spark, tmp_path):

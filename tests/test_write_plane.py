@@ -186,14 +186,18 @@ def test_streamed_file_keeps_write_table_row_groups(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from hielo_spark.metadata.data_files import ROW_GROUP_ROWS, write_files
+    from hielo_spark.metadata.data_files import (
+        ROW_GROUP_ROWS,
+        WritePlan,
+        write_files,
+    )
 
     n = ROW_GROUP_ROWS + 5000
     batches = (
         pa.record_batch([pa.array(np.arange(i, min(i + 100_000, n)))], names=["id"])
         for i in range(0, n, 100_000)
     )
-    (rec,), dtypes = write_files(batches, str(tmp_path), [], "part",
+    (rec,), dtypes = write_files(batches, str(tmp_path), WritePlan(), "part",
                                  fanout=False)
     ref = str(tmp_path / "ref.parquet")
     pq.write_table(pa.table({"id": np.arange(n)}), ref)
@@ -454,16 +458,32 @@ def _geo_rows(rows) -> dict:
     return {r.id: (r.shape, r.tag) for r in rows}
 
 
+def _stream_append(df, tmp_path, t: str) -> None:
+    """``df``'s rows as one ``writeStream.format("hielo_iceberg")``
+    micro-batch."""
+    src = str(tmp_path / "stream-src")
+    df.coalesce(1).write.parquet(src)
+    q = (df.sparkSession.readStream.schema(df.schema).parquet(src)
+         .writeStream.format("hielo_iceberg")
+         .option("checkpointLocation", str(tmp_path / "ck"))
+         .trigger(availableNow=True).start(t))
+    q.awaitTermination(120)
+
+
 @pytest.mark.parametrize("op,kind", [
     ("merge", "variant"), ("merge", "geo"),
     ("compact", "variant"), ("compact", "geo"),
-], ids=["merge-variant", "merge-geo", "compact-variant", "compact-geo"])
+    ("ds", "variant"), ("ds", "geo"), ("stream", "variant"),
+], ids=["merge-variant", "merge-geo", "compact-variant", "compact-geo",
+        "ds-variant", "ds-geo", "stream-variant"])
 def test_read_back_writers_keep_stored_forms(registered, tmp_path, op, kind):
     """Writers that re-append rows read back from the table store them in
     the table's forms: a variant column reads back as a JSON string and
     re-encodes to the Parquet variant pair, a geometry column reads back
-    as WKT and re-encodes to WKB. Files a MERGE or a compaction writes
-    then open on both read planes with the same values."""
+    as WKT and re-encodes to WKB. The DataSource writers, batch and
+    stream, store JSON and WKT strings given for those columns the same
+    way. Files a MERGE, a compaction or a DataSource append writes then
+    open on both read planes with the same values."""
     spark = registered
     if kind == "variant":
         t = str(tmp_path / "t")
@@ -487,9 +507,17 @@ def test_read_back_writers_keep_stored_forms(registered, tmp_path, op, kind):
         C.merge_into(spark, t, src, on=["id"],
                      snapshot_id=102, timestamp_ms=1700100000000)
         want = {**want, **merged}
-    else:
+    elif op == "compact":
         C.rewrite_data_files(spark, t, snapshot_id=102,
                              timestamp_ms=1700100000000)
+    else:
+        # the source rows, appended under new ids
+        src = src.withColumn("id", src.id + 10)
+        if op == "ds":
+            _ds_append(src, t)
+        else:
+            _stream_append(src, tmp_path, t)
+        want = {**want, **{k + 10: v for k, v in merged.items()}}
     jvm = rows_of(read_data_at_snapshot(
         spark, C.current_metadata_path(t)).collect())
     ds = rows_of(spark.read.format("hielo_iceberg").load(t).collect())
@@ -527,20 +555,21 @@ def _reference_sites(names: set[str], modules: set[str] | None = None) -> set:
 def test_read_back_rows_have_one_write_path():
     """Every data commit takes its sequence number, snapshot id and
     timestamp from ``commit._commit_ids``; data files are written only
-    by the append stage, the delete-file stage and compaction; and the
-    variant and geometry encoders are used only by the stored-form
-    encoder."""
+    by the append stage, the delete-file stage and compaction; the
+    variant and geometry encoders are used only by the in-task
+    stored-form function, which both write planes run; and the commit
+    module runs no pandas UDF."""
     assert _reference_sites({"_default_snapshot_id", "_write_data_files"}) == {
         ("_default_snapshot_id", "commit.py", "_commit_ids"),
         ("_write_data_files", "commit.py", "_stage_append_manifest"),
         ("_write_data_files", "commit.py", "_stage_delete_files"),
         ("_write_data_files", "commit.py", "rewrite_data_files"),
     }
-    assert _reference_sites({"wkt_to_wkb", "_variant_encode_udf"},
-                            {"commit.py"}) == {
-        ("wkt_to_wkb", "commit.py", "_to_stored_form"),
-        ("_variant_encode_udf", "commit.py", "_to_stored_form"),
+    assert _reference_sites({"wkt_to_wkb", "encode_variant"}) == {
+        ("wkt_to_wkb", "data_files.py", "stored_form"),
+        ("encode_variant", "data_files.py", "stored_form"),
     }
+    assert _reference_sites({"pandas_udf"}, {"commit.py"}) == set()
 
 
 def test_package_has_one_shipper():
