@@ -3,12 +3,20 @@ aggregation per table.
 
 The reference computes these metrics with sequential loops over an
 in-memory Vec<Snapshot> for a single table (analytics.rs:35-348). Here the
-whole suite is a single ``groupBy(table_name).agg(...)`` — partial+final
-aggregation, one shuffle keyed by table — so it scales to metadata for
-millions of tables in one job, instead of one process per table.
+whole suite is a single ``groupBy(table_name).agg(...)``. Over a scanned
+snapshots table that is partial+final aggregation with one shuffle keyed
+by table, so it scales to metadata for millions of tables in one job,
+instead of one process per table. Over a driver-held snapshots frame (a
+``LocalRelation``, e.g. ``snapshots_from_metadata_json``) ``io.fan_out``
+reads the rows as one partition, so the aggregation needs no exchange and
+each of ``health_metrics``, ``alerts`` and ``recommendations`` collects in
+one single-stage job.
 
 Determinism: the reference calls ``Utc::now()`` (analytics.rs:129,261,356);
-every function here takes an explicit ``as_of`` timestamp instead.
+every function here takes an explicit ``as_of`` timestamp instead. It
+enters the plan as data: one projected column from which per-row ages
+are derived, so a refresh at a new ``as_of`` over a driver-held frame
+reuses the generated code of the last one instead of recompiling it.
 
 Parity notes (quirks preserved deliberately; see SURVEY §7 hard parts):
   * "compactions_last_week" is an all-time count (analytics.rs:180).
@@ -43,6 +51,8 @@ GROWTH_CRITICAL_GB_DAY = 500.0
 
 _MS_HOUR = 3600000
 _MS_DAY = 86400000
+_US_HOUR = 1000 * _MS_HOUR
+_US_DAY = 1000 * _MS_DAY
 
 
 def _v(key: str, summary: Column) -> Column:
@@ -56,7 +66,14 @@ def health_metrics(snapshots: DataFrame, as_of: str) -> DataFrame:
     committed_at, manifest_list, schema_id, summary). ``as_of`` replaces
     Utc::now() — 'YYYY-MM-DD HH:MM:SS' UTC.
     """
-    t = F.to_timestamp(F.lit(as_of))
+    # ``as_of`` is projected once as a column, parsed by Spark, and every
+    # metric that depends on it is aggregated from per-row ages. Over a
+    # driver-held frame the optimizer folds this projection into the
+    # LocalRelation's rows (ConvertToLocalRelation), so the timestamp
+    # reaches generated code as a column, not a literal, and a refresh at
+    # a new ``as_of`` compiles nothing. Projected BEFORE fan_out so that
+    # fold happens under its one-partition read.
+    stamped = snapshots.select("*", F.to_timestamp(F.lit(as_of)).alias("_as_of"))
     # Flatten the summary map ONCE per row into typed columns, then
     # aggregate over plain columns: every map probe inside an aggregate
     # expression would otherwise re-evaluate per row per expression
@@ -92,11 +109,16 @@ def health_metrics(snapshots: DataFrame, as_of: str) -> DataFrame:
     # already parallel and nothing is added. Interleaved A/B at sf0.1:
     # 0.58-0.70 s vs 0.83-1.33 s; row-identical (every aggregate below is
     # order-insensitive — exact int sums, min/max, unique-key max_by).
-    flat = fan_out(snapshots).select(
+    # A driver-held frame instead reads as one partition, so the
+    # aggregation below plans no exchange at all.
+    now = F.col("_as_of")
+    flat = fan_out(stamped).select(
         "table_name",
         "snapshot_id",
         "committed_at",
         infer_operation().alias("operation"),
+        (F.unix_micros(now) - F.unix_micros(F.col("committed_at"))).alias("age_us"),
+        (F.unix_millis(now) - F.unix_millis(F.col("committed_at"))).alias("age_ms"),
         _v("added-data-files", summ).try_cast("long").alias("added_files"),
         _v("total-size", summ).isNotNull().alias("sized"),
         (F.coalesce(_v("total-size", summ).try_cast("double"), F.lit(0.0)) / F.lit(1024.0**3)).alias("size_gb"),
@@ -105,6 +127,8 @@ def health_metrics(snapshots: DataFrame, as_of: str) -> DataFrame:
         _ord.alias("ord"),
     )
     ts = F.col("committed_at")
+    age_us = F.col("age_us")
+    age_ms = F.col("age_ms")
     ord_key = F.col("ord")
     comp = is_compaction()
     sized = F.col("sized")
@@ -113,18 +137,22 @@ def health_metrics(snapshots: DataFrame, as_of: str) -> DataFrame:
 
     agg = flat.groupBy("table_name").agg(
         F.count("*").alias("n_snapshots"),
-        # A3 — time-windowed counts (analytics.rs:128-151)
-        F.sum((ts > t - F.expr("INTERVAL 1 HOUR")).cast("int")).alias("snapshots_last_hour"),
-        F.sum((ts > t - F.expr("INTERVAL 1 DAY")).cast("int")).alias("snapshots_last_day"),
-        F.sum((ts > t - F.expr("INTERVAL 7 DAYS")).cast("int")).alias("snapshots_last_week"),
-        # latest snapshot state (O6) for file health + freshness — scalar
-        # max_by per consumed field (same unique ord → same row)
-        F.max(ts).alias("latest_ts"),
+        # A3 — time-windowed counts (analytics.rs:128-151): the strict
+        # ``committed_at > as_of - INTERVAL …`` is ``age < INTERVAL``
+        F.sum((age_us < _US_HOUR).cast("int")).alias("snapshots_last_hour"),
+        F.sum((age_us < _US_DAY).cast("int")).alias("snapshots_last_day"),
+        F.sum((age_us < 7 * _US_DAY).cast("int")).alias("snapshots_last_week"),
+        # freshness: the latest snapshot is the youngest (unix_millis is
+        # monotone, so min(age) = as_of - max(committed_at) exactly)
+        F.min(age_ms).alias("freshness_ms"),
+        # latest snapshot state (O6) for file health — scalar max_by per
+        # consumed field (same unique ord → same row)
         F.max_by(F.col("added_files"), ord_key).alias("latest_added_files"),
         F.max_by(F.col("size_bytes"), ord_key).alias("latest_size_bytes"),
         # A5 — compaction timestamps (min/max/count under the F5 predicate)
         F.min(F.when(comp, ts)).alias("first_compaction_ts"),
         F.max(F.when(comp, ts)).alias("last_compaction_ts"),
+        F.min(F.when(comp, age_ms)).alias("last_compaction_age_ms"),
         F.sum(comp.cast("int")).alias("compaction_count"),
         # A6 — storage: first/last sized snapshot + op ratios
         F.min_by(ts, sized_ord).alias("first_sized_ts"),
@@ -160,9 +188,7 @@ def health_metrics(snapshots: DataFrame, as_of: str) -> DataFrame:
                 total_files_e > 0,
                 F.col("latest_size_bytes") / total_files_e / F.lit(1024.0 * 1024.0),
             ).otherwise(F.lit(0.0)),
-            "_hours_since_comp": F.floor(
-                (F.unix_millis(t) - F.unix_millis(F.col("last_compaction_ts"))) / F.lit(_MS_HOUR)
-            ).cast("double"),
+            "_hours_since_comp": F.floor(F.col("last_compaction_age_ms") / F.lit(_MS_HOUR)).cast("double"),
             "_comp_span_days": F.floor(
                 (F.unix_millis(F.col("last_compaction_ts")) - F.unix_millis(F.col("first_compaction_ts")))
                 / F.lit(_MS_DAY)
@@ -220,7 +246,7 @@ def health_metrics(snapshots: DataFrame, as_of: str) -> DataFrame:
     ).otherwise(F.lit(0.0))
     delete_ratio = F.when(F.col("ops_with_summary") > 0, F.col("delete_ops") / F.col("ops_with_summary")).otherwise(F.lit(0.0))
     update_ratio = F.when(F.col("ops_with_summary") > 0, F.col("update_ops") / F.col("ops_with_summary")).otherwise(F.lit(0.0))
-    freshness_hours = F.floor((F.unix_millis(t) - F.unix_millis(F.col("latest_ts"))) / F.lit(_MS_HOUR)).cast("double")
+    freshness_hours = F.floor(F.col("freshness_ms") / F.lit(_MS_HOUR)).cast("double")
 
     # A8 — overall health score (analytics.rs:290-348); file_count_trend is
     # the parity constant Stable → contributes 0.

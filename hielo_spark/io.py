@@ -91,7 +91,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # Fan-out decision memo (r13 session 3, guide §7.3 driver-side work):
 # keyed on (canonical-plan semanticHash, parallelism) → the probed
-# partition count. The probe itself is plan-time only but NOT free —
+# partition count. The hash is taken below the frame's top projections:
+# a projection never changes the partition count, and a frame rebuilt
+# with a new literal in one (``health_metrics``' ``as_of`` column) must
+# not add an entry per literal. Filters stay in the key: one pushed into
+# a scan can prune its files. The probe itself is plan-time only but NOT free —
 # ``df.rdd`` physically plans the frame AND builds a Python-RDD wrapper
 # (measured 157 ms; the executedPlan form below 105 ms; a semanticHash
 # lookup 9 ms) — and hot paths probe the same frame shape repeatedly
@@ -119,9 +123,28 @@ def fan_out(df: DataFrame) -> DataFrame:
     (AQE coalescing targets), not an under-parallel file scan, so
     fan-out is treated as a no-op and the probe never executes anything.
     The ``execute()`` probe only runs on non-adaptive (scan-rooted,
-    exchange-free) plans, where it builds the RDD without running a job."""
+    exchange-free) plans, where it builds the RDD without running a job.
+
+    A driver-held frame (a ``LocalRelation``, e.g. from ``local_frame``,
+    under only projections and filters, which the optimizer folds into
+    it) is read as ONE partition instead: its rows are already in driver
+    memory, so a round-robin shuffle of them buys nothing, and one
+    partition lets a downstream aggregation plan without an exchange.
+    This is decided from the analyzed plan, before the memo and the
+    probe: such frames never probe and never add a memo entry (a
+    dashboard that rebuilds its frame every refresh would otherwise grow
+    the memo without bound), and the fold, which copies every row on the
+    driver, runs once, when the frame executes, not here as well."""
+    top = df._jdf.queryExecution().analyzed()
+    while top.getClass().getSimpleName() == "Project":
+        top = top.child()
+    plan = top
+    while plan.getClass().getSimpleName() in ("Project", "Filter"):
+        plan = plan.child()
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        return df.coalesce(1)
     p = df.sparkSession.sparkContext.defaultParallelism
-    key = (df._jdf.queryExecution().logical().semanticHash(), p)
+    key = (top.semanticHash(), p)
     n = _FANOUT_MEMO.get(key)
     if n is None:
         ep = df._jdf.queryExecution().executedPlan()

@@ -128,3 +128,61 @@ def test_empty_table_absent(metrics):
     # empty tables simply don't appear (no rows to aggregate) — the
     # caller's contract; reference renders an empty dashboard instead
     assert "empty_t" not in metrics
+
+
+def test_window_and_truncation_boundaries(spark):
+    """The windows are strict (``committed_at > as_of - INTERVAL …``):
+    a snapshot exactly 1 h / 1 day / 7 days old is outside its window,
+    one 1 µs younger is inside. Hour and day figures truncate like
+    chrono's num_hours/num_days."""
+    import datetime as dt
+
+    from hielo_spark.io import local_frame
+    from hielo_spark.metadata.fixtures import SNAPSHOT_SCHEMA
+
+    now = dt.datetime.fromisoformat(AS_OF)
+    us = dt.timedelta(microseconds=1)
+    append = {"operation": "append"}
+    ages = [
+        dt.timedelta(hours=1), dt.timedelta(hours=1) - us,
+        dt.timedelta(days=1), dt.timedelta(days=1) - us,
+        dt.timedelta(days=7), dt.timedelta(days=7) - us,
+    ]
+    rows = [("edge_t", i, now - age, "m", 0, append) for i, age in enumerate(ages)]
+    rows += [
+        ("comp_t", 10, now - dt.timedelta(hours=36), "m", 0,
+         {"operation": "rewrite-data-files"}),
+        ("comp_t", 11, now - dt.timedelta(minutes=59), "m", 0, append),
+    ]
+    m = {
+        r["table_name"]: r.asDict()
+        for r in health_metrics(local_frame(spark, rows, SNAPSHOT_SCHEMA), AS_OF).collect()
+    }
+    edge = m["edge_t"]
+    assert edge["snapshots_last_hour"] == 1
+    assert edge["snapshots_last_day"] == 3
+    assert edge["snapshots_last_week"] == 5
+    # 1 h − 1 µs old: unix_millis truncates the committed instant down,
+    # so the millisecond age is a whole hour
+    assert edge["data_freshness_hours"] == 1.0
+    comp = m["comp_t"]
+    assert comp["time_since_last_compaction_hours"] == 36.0
+    assert comp["days_since_last_compaction"] == 1.5
+    assert comp["data_freshness_hours"] == 0.0
+
+
+@pytest.mark.parametrize("source", ["driver_held", "scan_rooted"])
+def test_malformed_as_of_fails_loudly(spark, sf_dir, source):
+    """A malformed ``as_of`` is Spark's cast error by the time the frame
+    is collected, whether the snapshots are driver-held or scanned."""
+    from pyspark.errors import PySparkException
+
+    from hielo_spark.metadata.fixtures import snapshots_from_orders
+
+    if source == "driver_held":
+        snaps = synthetic_snapshots(spark)
+    else:
+        snaps = snapshots_from_orders(spark, sf_dir)
+    with pytest.raises(PySparkException) as err:
+        health_metrics(snaps, "not a date").collect()
+    assert err.value.getCondition() == "CAST_INVALID_INPUT"

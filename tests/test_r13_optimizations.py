@@ -207,6 +207,22 @@ def test_fan_out_probe_runs_no_jobs_on_exchange_fed_frames(spark, sf_dir):
     assert out is agg
 
 
+def test_fan_out_reads_driver_held_frames_as_one_partition(spark):
+    """A LocalRelation frame's rows are already on the driver: fan_out
+    reads them as one partition, with no shuffle, and decides so before
+    the memo, so rebuilding such frames adds no memo entry."""
+    import hielo_spark.io as hio
+    from hielo_spark.io import local_frame
+
+    size = len(hio._FANOUT_MEMO)
+    for i in range(5):
+        df = local_frame(spark, [(i, "a"), (i + 1, "b")], "k long, v string")
+        out = fan_out(df)
+        assert out.rdd.getNumPartitions() == 1
+        assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    assert len(hio._FANOUT_MEMO) == size
+
+
 def test_ivf_topk_inline_assignment_matches_join_window_form(spark, sf_dir):
     """r13 ivf_topk computes centroid assignment inline per row; results
     must be bit-identical to the r12 broadcast-join + Window argmax."""
@@ -385,3 +401,19 @@ def test_health_metrics_fans_out_underparallel_input(spark, sf_dir):
         snaps.repartition(spark.sparkContext.defaultParallelism), AS_OF_META
     )
     assert _same_rows(m, ref)
+
+
+def test_health_metrics_refreshes_share_one_fan_out_memo_entry(spark, sf_dir):
+    """The ``as_of`` column health_metrics projects onto a scanned
+    snapshots frame does not split the fan_out memo: refreshes at new
+    ``as_of`` values reuse the first refresh's entry, and so its probe."""
+    import hielo_spark.io as hio
+    from hielo_spark.analytics.health import health_metrics
+    from hielo_spark.metadata.fixtures import snapshots_from_orders
+
+    snaps = snapshots_from_orders(spark, sf_dir)
+    health_metrics(snaps, "2025-06-01 12:00:00")
+    size = len(hio._FANOUT_MEMO)
+    for s in range(1, 6):
+        health_metrics(snaps, f"2025-06-01 12:00:{s:02d}")
+    assert len(hio._FANOUT_MEMO) == size

@@ -210,3 +210,26 @@ def test_dml_job_ceilings(spark, tmp_path, fv, ceilings):
     assert got == sorted(
         [(i, 2 * i) for i in range(11) if i not in (1, 2, 3)]
         + [(2, 5), (3, 0), (20, 40)])
+
+
+def test_health_refresh_is_three_jobs_and_no_compile(spark):
+    """A dashboard refresh over driver-held snapshots: ``as_of`` reaches
+    generated code as data, so a refresh at a new ``as_of`` compiles no
+    class, and the one-partition read plans no exchange, so the metrics,
+    alerts and recommendations each collect in one job."""
+    from hielo_spark.analytics.health import alerts, health_metrics, recommendations
+    from hielo_spark.metadata.fixtures import synthetic_snapshots
+
+    snaps = synthetic_snapshots(spark)
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def refresh(as_of):
+        m = health_metrics(snaps, as_of)
+        a = alerts(m)
+        r = recommendations(a, m)
+        return [len(_new_jobs(spark, f.collect)[1]) for f in (m, a, r)]
+
+    refresh("2025-06-01 12:00:00")  # warm: compiles the stages once
+    compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+    assert refresh("2025-06-01 12:00:07") == [1, 1, 1]
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == compiled
