@@ -80,12 +80,6 @@ _AVRO_PARTITION_TYPES = {
     "tinyint": "int", "smallint": "int", "int": "int", "bigint": "long",
 }
 
-# DV commits touching at most this many data files write one Puffin
-# container driver-side (bounded: one ≤8 KiB blob per touched file);
-# above it, tasks write per-task containers and the driver collects
-# only blob coordinates — the v2 distributed delete-parts shape
-_DV_DRIVER_CONTAINER_MAX = 64
-
 
 def _kv_array(key_id: int, val_id: int, key_type: str, val_type: str) -> dict:
     """Iceberg's Avro shape for a non-string-keyed map: an array of
@@ -2558,7 +2552,7 @@ def _stage_delete_files(
     spark: SparkSession,
     doc: dict,
     content: int,
-    src: DataFrame | None,
+    src: DataFrame,
     cols: list,
     transforms,
     del_dir: str,
@@ -2566,17 +2560,15 @@ def _stage_delete_files(
     seq: int,
     mdir: str,
     ptypes: dict | None = None,
-) -> dict:
+) -> dict | None:
     """Write ``src.select(*cols)`` as delete files and stage their
     delete manifest — the one delete-file writer behind
-    ``delete_equality``, ``delete_where``, ``rewrite_position_deletes``
-    and ``merge_into``. ``content`` 1 writes position deletes (``cols``
+    ``delete_equality``, ``rewrite_position_deletes`` and the v2 half of
+    :func:`_stage_row_deletes`. ``content`` 1 writes position deletes (``cols``
     give ``file_path, pos``; hash-partitioned on ``file_path`` so N
     tasks write — never a single-task funnel), 2 equality deletes on
     ``cols``. Rows sort by ``cols`` within each file, the spec's
-    delete-file order. ``src=None`` stages an empty delete manifest (a
-    delete whose condition pruned every data file still commits its
-    snapshot).
+    delete-file order.
 
     With ``transforms`` (from :func:`_delete_partition_plan`) each row's
     partition values are derived from ``src``'s columns as
@@ -2588,7 +2580,8 @@ def _stage_delete_files(
     of the parquet. A twin ``src`` already carries is used as it is:
     ``rewrite_position_deletes`` takes them from the target data files'
     manifest entries and passes those entries' ``ptypes``. Returns
-    :func:`_stage_files_manifest`'s dict."""
+    :func:`_stage_files_manifest`'s dict, or None when ``src`` wrote no
+    file (no empty delete manifest)."""
     from .data_files import WritePlan
     from .transforms import PartitionTransform
 
@@ -2597,23 +2590,23 @@ def _stage_delete_files(
         twin = PartitionTransform(f"__p_{t.field}")
         twin.field = t.field
         twins.append(twin)
-    files, sdt, kdt = [], {}, {}
-    if src is not None:
-        sdt = dict(src.dtypes)
-        df = src.select(*cols, *[
-            w.source if w.source in sdt
-            else t.expr(sdt[t.source]).alias(w.source)
-            for t, w in zip(transforms, twins)
-        ])
-        kdt = dict(df.dtypes[:len(cols)])
-        if content == 1:
-            df = df.repartition(*[w.source for w in twins], "file_path")
-        files = _write_data_files(
-            spark, del_dir, df, WritePlan(tuple(twins)), list(kdt),
-            row_group_rows=(
-                _POS_DELETE_ROW_GROUP_ROWS if content == 1 else ROW_GROUP_ROWS
-            ),
-        )
+    sdt = dict(src.dtypes)
+    df = src.select(*cols, *[
+        w.source if w.source in sdt
+        else t.expr(sdt[t.source]).alias(w.source)
+        for t, w in zip(transforms, twins)
+    ])
+    kdt = dict(df.dtypes[:len(cols)])
+    if content == 1:
+        df = df.repartition(*[w.source for w in twins], "file_path")
+    files = _write_data_files(
+        spark, del_dir, df, WritePlan(tuple(twins)), list(kdt),
+        row_group_rows=(
+            _POS_DELETE_ROW_GROUP_ROWS if content == 1 else ROW_GROUP_ROWS
+        ),
+    )
+    if not files:
+        return None
     spec_id = int(doc.get("default-spec-id", 0)) if transforms else 0
     if ptypes is None:
         ptypes = _partition_types(transforms, sdt)
@@ -2630,7 +2623,7 @@ def delete_equality(
     keys_df: DataFrame,
     snapshot_id: int | None = None,
     timestamp_ms: int | None = None,
-) -> dict:
+) -> dict | None:
     """v2 merge-on-read equality-delete commit: rows matching any tuple
     in ``keys_df`` (by its column names) disappear from reads of data
     files with a STRICTLY LOWER sequence number — a later re-insert of
@@ -2638,7 +2631,8 @@ def delete_equality(
     manifests.read_data_at_snapshot implements. Writes the keys as an
     equality-delete parquet, a content=1 delete manifest whose entry is
     a content=2 delete file at the new sequence number, and the bumped
-    metadata.json."""
+    metadata.json. An empty ``keys_df`` commits nothing and returns
+    None."""
     doc, prev_version = _load_doc(table_dir)
     seq, snapshot_id, timestamp_ms, base_id = _commit_ids(
         doc, snapshot_id, timestamp_ms
@@ -2657,6 +2651,8 @@ def delete_equality(
         os.path.join(table_dir, "data", f"seq-{seq:05d}-deletes"),
         snapshot_id, seq, mdir,
     )
+    if staged is None:
+        return None  # no key: no empty DELETE (Iceberg)
     n_files = staged["n_files"]
     return _finalize_commit(
         table_dir, doc, prev_version,
@@ -3023,11 +3019,12 @@ def delete_where(
     DELETE on a 100 TB table scans only files whose min/max can match),
     scan the survivors with their ``_metadata`` coordinates, evaluate
     ``condition`` (SQL string or Column), and commit the matching
-    (file_path, pos) pairs as position-delete parquet files behind a
-    content=1 delete manifest at the next sequence number. The
-    sequence-scoped read side (manifests.read_data_at_snapshot) then
-    drops those positions from data files with sequence <= the delete's,
-    while files appended later are untouched.
+    (file_path, pos) pairs through :func:`_stage_row_deletes`, as
+    position-delete parquet files behind a content=1 delete manifest at
+    the next sequence number. The sequence-scoped read side
+    (manifests.read_data_at_snapshot) then drops those positions from
+    data files with sequence <= the delete's, while files appended
+    later are untouched.
 
     Scale: candidate planning is pure Python over the manifests (no
     Spark collect); the scan+filter is fully distributed; the delete
@@ -3036,7 +3033,7 @@ def delete_where(
     ordering — never a single-task funnel.
 
     On a format-version ≥ 3 table the matched positions commit as
-    deletion vectors instead; a v3 delete matching ZERO rows no-ops and
+    deletion vectors instead. A delete matching ZERO rows no-ops and
     returns None (Iceberg's empty-delete rule — no empty snapshot)."""
     from pyspark.sql import Column
     from pyspark.sql import functions as F
@@ -3059,27 +3056,15 @@ def delete_where(
     )
     cond = F.expr(condition) if isinstance(condition, str) else condition
     assert isinstance(cond, Column)
-    coords = [
-        F.col("_fp").alias("file_path"),
-        F.col("_pos").cast("long").alias("pos"),
-    ]
     scan = _coordinate_scan(spark, doc, current, condition)
-    matched = None if scan is None else scan.filter(cond)
-    # v2 partitioned tables: every delete file belongs to exactly ONE
-    # partition, derived from the matched rows (identity columns ride
-    # the scan; transforms recompute from sources)
-    part_transforms = (
-        _delete_partition_plan(doc, dict(scan.dtypes))
-        if scan is not None and fv < 3 else []
-    )
+    if scan is None:
+        return None  # no candidate file: nothing matched
+    matched = scan.filter(cond)
     # UPDATE: stage the matched rows, set-exprs applied, as new data
     # files in the SAME commit (position-scoped deletes reference only
     # the OLD files by path, so the staged files are untouched)
     staged_update = None
-    persisted = None
     if update_set is not None:
-        if matched is None:
-            return None  # no candidate files → nothing matched
         # scan the LIVE MOR view (prior position/equality deletes and
         # DVs applied) WITH row coordinates: a row an earlier delete
         # removed must neither resurrect through the re-append nor
@@ -3117,11 +3102,10 @@ def delete_where(
                 f"UPDATE SET targets unknown columns {unknown} "
                 f"(table columns: {data_cols})"
             )
-        persisted = live.filter(cond).persist()
-        if persisted.limit(1).count() == 0:
-            persisted.unpersist()
-            return None  # UPDATE matching nothing: no empty snapshot
-        upd = persisted.drop("_fp", "_pos")
+        # the append and the delete stage both read the matched rows:
+        # the append's write fills the cache the delete stage reads
+        matched = live.filter(cond).persist()
+        upd = matched.drop("_fp", "_pos")
         udt = dict(upd.dtypes)
         for k, v in update_set.items():
             # cast to the column's CURRENT type (Iceberg casts SET
@@ -3136,54 +3120,26 @@ def delete_where(
                 "_last_updated_sequence_number",
                 F.lit(seq).cast("long"),
             )
-        # variant and geo columns read back as JSON / WKT strings; the
-        # append stage's write tasks re-encode them (stored_form)
-        staged_update = _stage_append_manifest(
-            spark, table_dir, doc, seq, snapshot_id, upd,
-            lineage_materialized=fv3_lineage,
-        )
-        matched = persisted  # tombstone exactly the LIVE matched rows
     try:
-        if fv >= 3:
-            # v3 forbids position-delete files: deletes commit as
-            # deletion vectors (one roaring bitmap per touched data
-            # file), merged with each file's previous DV, which they
-            # supersede
-            stage = _stage_deletion_vectors(
-                spark, table_dir, doc, mdir, current,
-                None if matched is None else matched.select(*coords),
-                seq, snapshot_id,
+        if update_set is not None:
+            # variant and geo columns read back as JSON / WKT strings;
+            # the append stage's write tasks re-encode them (stored_form)
+            staged_update = _stage_append_manifest(
+                spark, table_dir, doc, seq, snapshot_id, upd,
+                lineage_materialized=fv3_lineage, skip_empty=True,
             )
-            if stage is None:
-                return None  # no row matched: no empty DELETE (Iceberg)
-            rows = stage["rows"]
-            summary = {
-                "operation": "delete",
-                "added-dvs": str(stage["added"]),
-                "replaced-dvs": str(stage["replaced"]),
-                # NEW positions only (merged-union minus the replaced
-                # DVs' prior cardinality): re-deleting nothing adds 0
-                "added-delete-records": str(stage["records"]),
-            }
-            d_bytes, del_files = stage["bytes"], stage["files"]
-        else:
-            staged = _stage_delete_files(
-                spark, doc, 1, matched, coords, part_transforms,
-                os.path.join(table_dir, "data", f"seq-{seq:05d}-posdeletes"),
-                snapshot_id, seq, mdir,
-            )
-            rows = _carry_forward_rows(mdir, doc, base_id) + [
-                _staged_manifest_row(staged, seq, snapshot_id)
-            ]
-            summary = {
-                "operation": "delete",
-                "position-delete-files": str(staged["n_files"]),
-                "added-delete-records": str(staged["added_records"]),
-            }
-            d_bytes, del_files = staged["added_bytes"], staged["n_files"]
+            if staged_update is None:
+                return None  # UPDATE matching nothing: no empty snapshot
+        stage = _stage_row_deletes(
+            spark, table_dir, doc, mdir, current, matched, seq, snapshot_id,
+        )
     finally:
-        if persisted is not None:
-            persisted.unpersist()
+        if update_set is not None:
+            matched.unpersist()
+    if stage is None:
+        return None  # no row matched: no empty DELETE (Iceberg)
+    summary = {"operation": "delete", **stage["summary"]}
+    rows, d_bytes = stage["rows"], stage["bytes"]
     d_files = 0
     if staged_update is not None:
         rows.append(_staged_manifest_row(staged_update, seq, snapshot_id))
@@ -3193,10 +3149,80 @@ def delete_where(
     return _finalize_commit(
         table_dir, doc, prev_version, rows,
         snapshot_id, timestamp_ms, seq,
-        _with_totals(summary, doc, base_id, d_files, d_bytes, del_files),
+        _with_totals(summary, doc, base_id, d_files, d_bytes, stage["files"]),
         branch=branch,
         parent_id=base_id,
     )
+
+
+def _stage_row_deletes(
+    spark: SparkSession,
+    table_dir: str,
+    doc: dict,
+    mdir: str,
+    current: dict,
+    matched: DataFrame,
+    seq: int,
+    snapshot_id: int,
+) -> dict | None:
+    """The one row-level delete stage of DELETE, UPDATE and MERGE:
+    commit the ``_fp``/``_pos`` row coordinates of ``matched`` (the
+    rows to delete, read with their coordinates) against snapshot
+    ``current`` — as position-delete files through
+    :func:`_stage_delete_files` on a v2 table, partition-scoped when
+    ``matched`` carries the spec's source columns, or as deletion
+    vectors through :func:`_stage_deletion_vectors` on v3, where
+    position-delete files are forbidden.
+
+    Returns ``rows`` (``current``'s carry-forward, then the delete
+    manifests), ``records`` (the positions newly deleted — what a
+    caller reports as deleted rows), the net ``files`` and ``bytes``
+    of the live delete set and the delete kind's ``summary`` keys; or
+    None when no row was deleted."""
+    from pyspark.sql import functions as F
+
+    coords = [
+        F.col("_fp").alias("file_path"),
+        F.col("_pos").cast("long").alias("pos"),
+    ]
+    if int(doc.get("format-version", 2)) >= 3:
+        # one merged roaring bitmap per touched data file, superseding
+        # that file's previous DV
+        stage = _stage_deletion_vectors(
+            spark, table_dir, doc, mdir, current, matched.select(*coords),
+            seq, snapshot_id,
+        )
+        if stage is None:
+            return None
+        return dict(stage, summary={
+            "added-dvs": str(stage["added"]),
+            "replaced-dvs": str(stage["replaced"]),
+            # NEW positions only (merged-union minus the replaced DVs'
+            # prior cardinality): re-deleting nothing adds 0
+            "added-delete-records": str(stage["records"]),
+        })
+    # every delete file belongs to exactly ONE partition, derived from
+    # the matched rows (identity columns ride the scan; transforms
+    # recompute from sources)
+    staged = _stage_delete_files(
+        spark, doc, 1, matched, coords,
+        _delete_partition_plan(doc, dict(matched.dtypes)),
+        os.path.join(table_dir, "data", f"seq-{seq:05d}-posdeletes"),
+        snapshot_id, seq, mdir,
+    )
+    if staged is None:
+        return None
+    return {
+        "rows": _carry_forward_rows(mdir, doc, int(current["snapshot-id"]))
+        + [_staged_manifest_row(staged, seq, snapshot_id)],
+        "records": staged["added_records"],
+        "files": staged["n_files"],
+        "bytes": staged["added_bytes"],
+        "summary": {
+            "position-delete-files": str(staged["n_files"]),
+            "added-delete-records": str(staged["added_records"]),
+        },
+    }
 
 
 def _coordinate_scan(spark: SparkSession, doc: dict, base: dict,
@@ -3252,49 +3278,31 @@ def _stage_deletion_vectors(
     doc: dict,
     mdir: str,
     current: dict,
-    positions,
+    positions: DataFrame,
     seq: int,
     snapshot_id: int,
 ) -> dict | None:
-    """The one DV stage of ``delete_where``/``update_where`` and the v3
-    ``merge_into``: turn a distributed ``(file_path, pos)`` frame into
-    one merged deletion vector per touched data file — the union of the
-    new positions with the file's previous DV, picked by the read
-    planes' :func:`manifests._dv_per_file` — written by
-    :func:`puffin.write_dv_container` and staged, superseding the
-    previous DVs, by :func:`_stage_dv_manifests` (whose dict this
-    returns). None when ``positions`` is None or touches no file.
+    """The v3 half of :func:`_stage_row_deletes`: turn a distributed
+    ``(file_path, pos)`` frame into one merged deletion vector per
+    touched data file — the union of the new positions with the file's
+    previous DV, picked by the read planes' :func:`manifests._dv_per_file`
+    — written by :func:`puffin.write_dv_container` and staged,
+    superseding the previous DVs, by :func:`_stage_dv_manifests` (whose
+    dict this returns). None when ``positions`` touches no file.
 
-    Scale: bitmap construction is one ``applyInPandas`` group per
-    touched file (the previous DV's bytes ride in via a broadcast
-    join). Up to ``_DV_DRIVER_CONTAINER_MAX`` touched files the driver
-    collects one serialized bitmap per file — bounded by candidate-file
-    count × compressed bitmap size (≤ 8 KiB per 64 Ki rows), never by
-    row count — and writes one container; above it each task writes a
-    container of ~128 blobs and the driver collects only their
-    coordinate records. Reads then fetch ONE blob region per scanned
-    file instead of joining a growing pile of delete parquet — the v3
-    design's point at 100 TB."""
-    if positions is None:
-        return None
+    One pass over ``positions``: hash-partitioned on ``file_path``,
+    each task builds the bitmaps of its files, reads each previous DV
+    from its Puffin blob by the coordinates (path, offset, size) the
+    driver planned, writes one container of its blobs and returns only
+    their coordinate records, never blob bytes. A task holds its own
+    positions while it builds; reads then fetch ONE blob region per
+    scanned file instead of joining a growing pile of delete parquet —
+    the v3 design's point at 100 TB."""
     import json
-    import math
-
-    from pyspark.sql import functions as F
 
     from ..session import _ship_package
     from .manifests import _dv_per_file, _resolve, live_entries
-    from .puffin import write_dv_container
 
-    # fetch prior DVs ONLY for the files this delete touches — the
-    # touched set is planning-plane small (bounded by candidate files),
-    # while the table's live-DV population is not
-    touched = {
-        r.file_path
-        for r in positions.select("file_path").distinct().collect()
-    }
-    if not touched:
-        return None
     entries = live_entries(
         _resolve(
             os.path.join(mdir, "x"),
@@ -3302,81 +3310,63 @@ def _stage_deletion_vectors(
         ),
         int(doc.get("format-version", 2)),
     )
-    prior = _dv_per_file(entries, touched)
-    old_rows = []
-    for ref, d in sorted(prior.items()):
-        with open(d["path"], "rb") as fh:
-            fh.seek(d["dv"]["offset"])
-            old_rows.append((ref, bytearray(fh.read(d["dv"]["size"]))))
-    if old_rows:
-        old_df = local_frame(
-            spark, old_rows, "file_path string, _old binary"
-        )
-        pos2 = positions.join(F.broadcast(old_df), "file_path", "left")
-    else:
-        pos2 = positions.withColumn("_old", F.lit(None).cast("binary"))
+    # every live DV by its data file's absolute path: planning-plane
+    # metadata already in hand; a task reads the blobs of its files only
+    prior = {
+        os.path.abspath(p): d
+        for p, d in _dv_per_file(
+            entries, [e["path"] for e in entries if e["content"] == 0]
+        ).items()
+    }
+    blobs = {p: (d["path"], d["dv"]["offset"], d["dv"]["size"])
+             for p, d in prior.items()}
+    dv_dir = os.path.join(table_dir, "data")
     # the bitmap kernel unpickles on workers via `import hielo_spark` —
     # ship the package zip so the commit API works from any working
     # directory (same contract as the DataSource)
     _ship_package(spark)
 
-    def _build(pdf):
+    def _write_dvs(batches):
+        import json as _json
+        import os as _os
+
         import numpy as np
         import pandas as pd
 
-        from hielo_spark.metadata.puffin import decode_dv_payload, dv_payload
-
-        fp = pdf["file_path"].iloc[0]
-        pos = np.unique(pdf["pos"].to_numpy(dtype="int64").astype("uint64"))
-        old = pdf["_old"].iloc[0]
-        if old is not None and not (isinstance(old, float) and np.isnan(old)):
-            pos = np.union1d(pos, decode_dv_payload(bytes(old)))
-        return pd.DataFrame(
-            {
-                "file_path": [fp],
-                "dv": [dv_payload(pos)],
-                "cardinality": [int(len(pos))],
-            }
+        from hielo_spark.metadata.puffin import (
+            decode_dv_payload,
+            dv_payload,
+            write_dv_container,
         )
 
-    rows_df = pos2.groupBy("file_path").applyInPandas(
-        _build, "file_path string, dv binary, cardinality long"
-    )
-    dv_dir = os.path.join(table_dir, "data")
-    if len(touched) <= _DV_DRIVER_CONTAINER_MAX:
-        # few touched files: one container written driver-side skips
-        # a second Python-worker stage
-        coords = write_dv_container(
-            dv_dir, seq, snapshot_id,
-            [(r.file_path, r.dv, r.cardinality) for r in rows_df.collect()],
-        )
-    else:
-        # many touched files: each task writes one container of its
-        # batch (~128 blobs) and the driver collects only coordinate
-        # records, never blob bytes
-        def _write_container(batches):
-            import json as _json
+        parts: dict[str, list] = {}
+        for pdf in batches:
+            for fp, g in pdf.groupby("file_path", sort=False):
+                parts.setdefault(fp, []).append(g["pos"].to_numpy("int64"))
+        rows = []
+        for fp, chunks in parts.items():
+            pos = np.unique(np.concatenate(chunks).astype("uint64"))
+            old = blobs.get(_os.path.abspath(fp))
+            if old is not None:
+                with open(old[0], "rb") as fh:
+                    fh.seek(old[1])
+                    pos = np.union1d(pos, decode_dv_payload(fh.read(old[2])))
+            rows.append((fp, dv_payload(pos), int(len(pos))))
+        recs = write_dv_container(dv_dir, seq, snapshot_id, rows)
+        if recs:
+            yield pd.DataFrame({"rec": [_json.dumps(r) for r in recs]})
 
-            import pandas as pd
-
-            from hielo_spark.metadata.puffin import write_dv_container as w
-
-            recs = w(dv_dir, seq, snapshot_id, [
-                r for pdf in batches
-                for r in zip(pdf["file_path"], pdf["dv"], pdf["cardinality"])
-            ])
-            if recs:
-                yield pd.DataFrame({"rec": [_json.dumps(r) for r in recs]})
-
-        n_containers = max(1, math.ceil(len(touched) / 128))
-        coords = [
-            json.loads(r.rec)
-            for r in rows_df.repartition(n_containers)
-            .mapInPandas(_write_container, "rec string").collect()
-        ]
+    coords = [
+        json.loads(r.rec)
+        for r in positions.repartition("file_path")
+        .mapInPandas(_write_dvs, "rec string").collect()
+    ]
+    if not coords:
+        return None
+    superseded = {os.path.abspath(c["dv"]["referenced"]) for c in coords}
     return _stage_dv_manifests(
-        doc, mdir, current, entries, coords, list(prior.values()), seq,
-        snapshot_id,
+        doc, mdir, current, entries, coords,
+        [d for p, d in prior.items() if p in superseded], seq, snapshot_id,
     )
 
 
@@ -4192,16 +4182,19 @@ def rewrite_position_deletes(
         os.path.join(table_dir, "data", f"seq-{seq_new:05d}-posrewrite"),
         snapshot_id, seq_new, mdir, ptypes=ptypes,
     )
-    n_files = staged["n_files"]
     # carry forward every manifest EXCEPT the pure position-delete ones
-    # just rewritten (a mixed/foreign delete manifest stays untouched)
-    prior_rows = [
+    # just rewritten (a mixed/foreign delete manifest stays untouched);
+    # no survivor (every target compacted away) stages no manifest
+    rows = [
         r for r in _carry_forward_rows(mdir, doc)
         if r["manifest_path"] not in pure_pos_manifests
     ]
+    if staged is not None:
+        rows.append(_staged_manifest_row(staged, seq_new, snapshot_id))
+    staged = staged or {"n_files": 0, "added_records": 0, "added_bytes": 0}
+    n_files = staged["n_files"]
     return _finalize_commit(
-        table_dir, doc, prev_version,
-        prior_rows + [_staged_manifest_row(staged, seq_new, snapshot_id)],
+        table_dir, doc, prev_version, rows,
         snapshot_id, timestamp_ms, seq_new,
         _with_totals(
             {
@@ -4403,17 +4396,16 @@ def merge_into(
 ) -> dict | None:
     """``MERGE INTO`` as a SINGLE merge-on-read snapshot (the Iceberg
     v2 row-level-operations shape, SURVEY §2.1 S11): one commit carries
-    BOTH an equality-delete manifest for the matched keys AND a data
+    BOTH the delete manifest for the matched target rows AND a data
     manifest for the appended rows, at the same sequence number. The
-    spec's scan-planning rule — an equality delete applies only to data
-    files with a STRICTLY LOWER sequence number — is what makes this
-    atomic composition correct: the commit's own appended files survive
-    its own delete, while every matched pre-existing row disappears.
-    Readers see either the whole merge or none of it (the metadata.json
-    version bump is the atomic commit point). On a format-version ≥ 3
-    table the matched keys resolve to row positions instead and commit
-    as deletion vectors through :func:`_stage_deletion_vectors`, the
-    stage ``delete_where`` uses, in the same snapshot.
+    matched rows' positions commit through :func:`_stage_row_deletes`,
+    the stage ``delete_where`` uses — position deletes on v2 (what
+    Iceberg's own merge-on-read MERGE writes), deletion vectors on v3.
+    A position delete names its data file by path, so the commit's own
+    appended files survive its own delete, while every matched
+    pre-existing row disappears. Readers see either the whole merge or
+    none of it (the metadata.json version bump is the atomic commit
+    point).
 
     ``when_matched``: ``"update"`` (matched target rows are replaced by
     the matching source rows — duplicate target keys all die, duplicate
@@ -4441,12 +4433,15 @@ def merge_into(
     deletes base on the BRANCH head, only the branch ref moves, main
     readers see nothing until ``fast_forward`` publishes.
 
-    Scale: the match split is one distributed semi/anti join of the
-    source against the target's live rows (delete-key side is
-    ``on``-projected + distinct — small by construction); data files
-    go through :func:`_stage_append_manifest`, the append stage (stored
-    forms, distribution mode, sort order and its ``sort_order_id``);
-    only planning-plane file lists and two scalar counts cross the
+    Scale: the target's merge-on-read view is read once, with row
+    coordinates; the delete positions are one distributed semi join of
+    it against the source keys, and the match split one semi/anti join
+    of the source against its ``on``-projected distinct keys (an
+    upsert appends the whole source and needs no split). Data files go
+    through :func:`_stage_append_manifest`, the append stage (stored
+    forms, distribution mode, sort order and its ``sort_order_id``).
+    The summary's deleted-record count is what the delete stage wrote;
+    only planning-plane file lists and file records cross the
     driver."""
     from .manifests import read_data_at_snapshot
 
@@ -4494,106 +4489,66 @@ def merge_into(
     # explicit id scans under the snapshot's RECORDED schema, but DML
     # evaluates under the CURRENT schema (a metadata-only evolution
     # bumps current-schema-id without a snapshot). Branch merges pass
-    # the branch head explicitly; its recorded schema applies.
+    # the branch head explicitly; its recorded schema applies. The
+    # one read carries row coordinates: the match split and the
+    # delete positions both come from it.
     target = read_data_at_snapshot(
         spark, current_metadata_path(table_dir),
         snapshot_id=base_id if branch is not None else None,
+        keep_row_coords=True,
     )
+    columns = [c for c in target.columns if c not in ("_fp", "_pos")]
     if when_matched == "update" or when_not_matched == "insert":
-        if set(source_df.columns) != set(target.columns):
+        if set(source_df.columns) != set(columns):
             raise ValueError(
                 f"source columns {sorted(source_df.columns)} != target "
-                f"columns {sorted(target.columns)} (update/insert clauses "
+                f"columns {sorted(columns)} (update/insert clauses "
                 "write full rows)"
             )
-        source_df = source_df.select(*target.columns)
+        source_df = source_df.select(*columns)
 
-    target_keys = target.select(*on).distinct()
-    matched_src = source_df.join(target_keys, on, "left_semi")
-    delete_keys = matched_src.select(*on).distinct()
+    # the target rows a matched clause changes are those whose key the
+    # source holds (a source key matching no target row deletes nothing)
+    delete_keys = None if when_matched is None else source_df.select(*on)
     if extra_delete_keys is not None:
         missing = [c for c in on if c not in extra_delete_keys.columns]
         if missing:
             raise ValueError(
                 f"key columns missing from extra_delete_keys: {missing}"
             )
-        # only keys that match a live target row delete (idempotency:
+        # keys matching no live target row delete nothing (idempotency:
         # re-applying an already-applied delete stays a no-op)
-        extra = (
-            extra_delete_keys.select(*on).distinct()
-            .join(target_keys, on, "left_semi")
-        )
+        extra = extra_delete_keys.select(*on)
         delete_keys = (
-            delete_keys.unionByName(extra).distinct()
-            if when_matched is not None else extra
-        )
-    # deletes only materialize when a matched clause will change rows
-    n_delete_keys = (
-        delete_keys.count()
-        if when_matched is not None or extra_delete_keys is not None
-        else 0
-    )
-
-    to_append = None
-    if when_matched == "update":
-        to_append = matched_src
-    if when_not_matched == "insert":
-        unmatched_src = source_df.join(target_keys, on, "left_anti")
-        to_append = (
-            unmatched_src if to_append is None else to_append.unionByName(unmatched_src)
+            extra if delete_keys is None else delete_keys.unionByName(extra)
         )
 
-    # deleted-row count for the summary (matched keys can hit several
-    # target rows); one distributed count, planning-plane scalar
-    n_deleted_rows = (
-        target.join(delete_keys, on, "left_semi").count() if n_delete_keys else 0
-    )
+    target_keys = target.select(*on).distinct()
+    if when_matched == "update" and when_not_matched == "insert":
+        # every source row is either matched (updated) or not (inserted)
+        to_append = source_df
+    elif when_matched == "update":
+        to_append = source_df.join(target_keys, on, "left_semi")
+    elif when_not_matched == "insert":
+        to_append = source_df.join(target_keys, on, "left_anti")
+    else:
+        to_append = None
 
-    manifest_rows = _carry_forward_rows(mdir, doc, base_id)
-
-    fv = int(doc.get("format-version", 2))
-    eq_files = eq_bytes = 0
-    dv_added = dv_net_files = dv_net_bytes = 0
     current = next(
         s for s in doc["snapshots"] if s["snapshot-id"] == base_id
     )
-    if n_delete_keys and fv >= 3:
-        # v3 merge: resolve the matched keys to ROW POSITIONS and commit
-        # deletion vectors instead of equality deletes — scans then pay
-        # one blob fetch per touched file instead of an anti-join per
-        # equality-delete file, and the table stays DV-only (the v3
-        # shape). Same one-commit atomicity: the DV manifest and the
-        # data manifest land at the same sequence number, and position
-        # deletes apply at delete_seq >= data_seq BY FILE PATH, so the
-        # merge's own appended files are never touched.
-        from pyspark.sql import functions as F
-
-        positions = _coordinate_scan(spark, doc, current).join(
-            delete_keys, on, "left_semi"
-        ).select(
-            F.col("_fp").alias("file_path"),
-            F.col("_pos").cast("long").alias("pos"),
-        )
-        stage = _stage_deletion_vectors(
-            spark, table_dir, doc, mdir, current, positions, seq,
-            snapshot_id,
-        )
-        if stage is not None:
-            manifest_rows = stage["rows"]
-            dv_added, dv_net_files, dv_net_bytes = (
-                stage["added"], stage["files"], stage["bytes"]
-            )
-    elif n_delete_keys:
-        # distributed delete-key write (no coalesce(1) funnel; the keys
-        # frame keeps the join's partitioning), spec-sorted per task
-        transforms = _delete_partition_plan(doc, dict(delete_keys.dtypes))
-        staged = _stage_delete_files(
-            spark, doc, 2, delete_keys, list(on), transforms,
-            os.path.join(table_dir, "data", f"seq-{seq:05d}-deletes"),
-            snapshot_id, seq, mdir,
-        )
-        eq_files, eq_bytes = staged["n_files"], staged["added_bytes"]
-        manifest_rows.append(_staged_manifest_row(staged, seq, snapshot_id))
+    # the matched rows' positions commit through the stage DELETE and
+    # UPDATE use (position deletes on v2, deletion vectors on v3), at
+    # this commit's sequence number: position deletes apply BY FILE
+    # PATH, so the merge's own appended files are never touched
+    stage = None if delete_keys is None else _stage_row_deletes(
+        spark, table_dir, doc, mdir, current,
+        target.join(delete_keys, on, "left_semi"), seq, snapshot_id,
+    )
+    manifest_rows, n_deleted_rows = (
+        (_carry_forward_rows(mdir, doc, base_id), 0) if stage is None
+        else (stage["rows"], stage["records"])
+    )
 
     # merged-in rows are NEW rows (fresh row ids) written like appends:
     # the table's default spec, stored forms, distribution and order
@@ -4606,7 +4561,7 @@ def merge_into(
         data_files, data_bytes = appended["n_files"], appended["added_bytes"]
         manifest_rows.append(_staged_manifest_row(appended, seq, snapshot_id))
 
-    if not n_delete_keys and added_records == 0:
+    if not n_deleted_rows and added_records == 0:
         return None  # empty merge: commit nothing, like Iceberg
 
     prior_total = int(current.get("summary", {}).get("total-records", "0") or 0)
@@ -4619,16 +4574,14 @@ def merge_into(
                 "added-data-files": str(data_files),
                 "added-records": str(added_records),
                 "deleted-records": str(n_deleted_rows),
-                "equality-delete-files": str(eq_files),
-                **({"added-dvs": str(dv_added)} if dv_added else {}),
-                "added-delete-records": str(n_delete_keys),
+                **({} if stage is None else stage["summary"]),
                 "total-records": str(prior_total - n_deleted_rows + added_records),
                 **(extra_summary or {}),
             },
             doc, base_id,
             data_files,
-            data_bytes + eq_bytes + dv_net_bytes,
-            eq_files + dv_net_files,
+            data_bytes + (0 if stage is None else stage["bytes"]),
+            0 if stage is None else stage["files"],
         ),
         branch=branch,
         parent_id=base_id,

@@ -44,17 +44,16 @@ ROW_GROUP_ROWS = 1024 * 1024
 #: k-minimum-values estimates above it (relative error ~1/sqrt(K))
 _SKETCH_K = 4096
 
-_ARROW_TO_SPARK = {
-    "int8": "tinyint", "int16": "smallint", "int32": "int", "int64": "bigint",
-    "float": "float", "double": "double", "string": "string",
-    "large_string": "string", "bool": "boolean", "binary": "binary",
-    "date32[day]": "date",
-}
-
 
 def spark_dtype_of(arrow_type) -> str:
-    """Arrow type → the Spark SQL type name ``DataFrame.dtypes`` uses."""
+    """Arrow type → the Spark SQL type name ``DataFrame.dtypes`` uses.
+    Leaf types render through :func:`types.arrow_to_ddl`, which raises
+    for a type Spark has no name for; the containers render here,
+    because ``DataFrame.dtypes`` leaves struct field names unquoted
+    where DDL backtick-quotes them."""
     import pyarrow as pa
+
+    from .types import arrow_to_ddl
 
     t = arrow_type
     if (pa.types.is_list(t) or pa.types.is_large_list(t)
@@ -68,12 +67,7 @@ def spark_dtype_of(arrow_type) -> str:
             for i in range(t.num_fields)
         )
         return f"struct<{inner}>"
-    if pa.types.is_decimal(t):
-        return f"decimal({t.precision},{t.scale})"
-    s = str(t)
-    if s.startswith("timestamp"):
-        return "timestamp" if "tz=" in s else "timestamp_ntz"
-    return _ARROW_TO_SPARK.get(s, "string")
+    return arrow_to_ddl(t)
 
 
 def render_bound(v) -> str | None:

@@ -1717,9 +1717,9 @@ class HieloIcebergChangesReader(DataSourceReader):
     plain deletes emit ``DELETE``). Scale: one bounded scan per
     touched file per commit — no whole-table diff, the property that
     matters when a consumer catches up over many DML commits on a
-    100 TB table. Equality-delete commits (merge) and dynamic
-    overwrites still raise toward ``metadata.read_changelog`` — their
-    before image genuinely needs the multiset diff."""
+    100 TB table. MERGE commits, equality deletes and dynamic
+    overwrites still raise toward ``metadata.read_changelog``, which
+    renders them by the multiset diff."""
 
     def __init__(self, table_dir: str, options, schema_cols):
         self.table_dir = table_dir

@@ -205,9 +205,8 @@ def test_partition_statistics_surface(spark, tmp_path):
 
 
 def test_merge_eq_delete_counts_attributed(spark, tmp_path):
-    """merge_into's equality-delete files follow the same
-    partition-scoping rule as delete_equality when the merge keys
-    cover the partition sources."""
+    """merge_into's delete files (position deletes, as delete_where
+    writes them) are scoped to the partition of the rows they delete."""
     t = str(tmp_path / "t")
     C.append(spark, t, spark.createDataFrame(
         [(1, "us"), (2, "us"), (3, "eu")], ["id", "region"]),
@@ -220,16 +219,14 @@ def test_merge_eq_delete_counts_attributed(spark, tmp_path):
         snapshot_id=102, timestamp_ms=1700100000000)
     write_partition_statistics(spark, t, timestamp_ms=1700200000000)
     stats = {
-        (r.partition.asDict() or {}).get("region"):
-            r.equality_delete_record_count
+        (r.partition.asDict() or {}).get("region"): (
+            r.position_delete_record_count, r.equality_delete_record_count)
         for r in read_partition_statistics(spark, t).collect()
     }
-    # the merge's delete keys: (2, us) matched → eq-delete under us;
-    # (4, eu) not matched → pure insert, but merge writes delete keys
-    # for the whole source (upsert semantics) — both partitions carry
-    # their OWN key counts, none under a null partition
-    assert set(stats) == {"us", "eu"}
-    assert stats["us"] >= 1 and stats["eu"] >= 0
+    # (2, us) matched → one position deleted under us; (4, eu) not
+    # matched → pure insert, nothing deleted under eu; no delete lands
+    # under a null partition and no equality delete is written
+    assert stats == {"us": (1, 0), "eu": (0, 0)}
 
 
 def test_skew_report_renders_canonical_time_values(spark, tmp_path):

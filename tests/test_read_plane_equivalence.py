@@ -257,3 +257,52 @@ def test_sources_do_not_decode_manifest_entries():
                 surface_nodes = {id(n) for n in ast.walk(node)}
     assert literals == []
     assert len(avro_reads) == 1 and id(avro_reads[0]) in surface_nodes
+
+
+def test_v2_merge_position_deletes_are_partition_scoped(registered, tmp_path):
+    """A v2 MERGE writes position deletes in the partition of the rows
+    it replaces: both read planes return the merged rows, a
+    ``region = 'us'`` read of the DataFrame plane plans only the ``us``
+    files, and the DataSource plane attaches the delete file to ``us``
+    files only."""
+    spark = registered
+    t = str(tmp_path / "t")
+    schema = "id long, region string, x double"
+    C.append(spark, t, spark.createDataFrame(
+        [(1, "us", 1.0), (2, "us", 2.0), (3, "eu", 3.0)], schema),
+        partition_by=["region"], snapshot_id=101, timestamp_ms=T1)
+    snap = C.merge_into(spark, t, spark.createDataFrame(
+        [(2, "us", 20.0), (4, "eu", 4.0)], schema),
+        on=["id"], snapshot_id=102, timestamp_ms=T2)
+    assert snap["summary"]["position-delete-files"] == "1"
+    assert "equality-delete-files" not in snap["summary"]
+    mpath = C.current_metadata_path(t)
+    live = live_entries(
+        _resolve(mpath, select_snapshot(json.load(open(mpath)))["manifest-list"]),
+        2,
+    )
+    (dele,) = [e for e in live if e["content"] != 0]
+    assert (dele["content"], dele["pvals"], dele["records"]) == (
+        1, {"region": "us"}, 1)
+    data = {e["path"]: e["pvals"] for e in live if e["content"] == 0}
+    us_files = {p for p, pv in data.items() if pv == {"region": "us"}}
+    assert us_files and us_files != set(data)
+
+    want = [(1, "us", 1.0), (2, "us", 20.0), (3, "eu", 3.0), (4, "eu", 4.0)]
+    ds = spark.read.format("hielo_iceberg").load(t)
+    jvm = read_data_at_snapshot(spark, mpath)
+    for df in (ds, jvm):
+        assert sorted(tuple(r) for r in df.select("id", "region", "x")
+                      .collect()) == want
+    jvm_us = read_data_at_snapshot(spark, mpath,
+                                   skip_filter=("region", "=", "us"))
+    assert sorted(r.id for r in jvm_us.collect()) == [1, 2]
+    assert {_norm_ref_path(p) for p in jvm_us.inputFiles()} & set(data) \
+        == us_files
+    assert sorted(r.id for r in ds.filter("region = 'us'").collect()) \
+        == [1, 2]
+    reader = HieloIcebergDataSource({"path": t}).reader(ds.schema)
+    tasks = [f for p in reader.partitions() for f in (
+        p.files if isinstance(p, _PackedScanPartition) else [p])]
+    assert {_norm_ref_path(f.path) for f in tasks if f.pos_deletes} \
+        <= us_files

@@ -184,13 +184,14 @@ def test_position_delete_scoping_is_planned_per_file_pair():
     assert not _pos_deletes_predate_files([], {a: {"seq": 2}}, data)
 
 
-@pytest.mark.parametrize("fv,ceilings", [(2, (2, 6, 22)), (3, (4, 8, 42))],
+@pytest.mark.parametrize("fv,ceilings", [(2, (2, 3, 5)), (3, (2, 5, 7))],
                          ids=["v2", "v3"])
 def test_dml_job_ceilings(spark, tmp_path, fv, ceilings):
     """``delete_where``, ``update_where`` and ``merge_into`` on an 11-row
-    table start at most as many Spark jobs as they did before MERGE's
-    data files went through the append stage (four task slots, four
-    shuffle partitions). The rows still come out right."""
+    table start no more Spark jobs than their one read of the target and
+    their writes need (four task slots, four shuffle partitions): no
+    scalar count, one pass of the deletion-vector stage. The rows still
+    come out right."""
     t = str(tmp_path / "t")
     C.append(spark, t, spark.range(0, 11).selectExpr("id", "id * 2 AS v"),
              snapshot_id=101, timestamp_ms=1700000000000)
@@ -210,6 +211,46 @@ def test_dml_job_ceilings(spark, tmp_path, fv, ceilings):
     assert got == sorted(
         [(i, 2 * i) for i in range(11) if i not in (1, 2, 3)]
         + [(2, 5), (3, 0), (20, 40)])
+
+
+def test_dml_deletes_through_one_stage():
+    """``delete_where``, ``update_where`` and ``merge_into`` write
+    position deletes and deletion vectors only through
+    ``commit._stage_row_deletes``, and none of them runs a ``count()``:
+    their summary counts come from what the stages wrote."""
+    import ast
+    import pathlib
+
+    tree = ast.parse(pathlib.Path(C.__file__).read_text())
+    funcs = {f.name: f for f in tree.body if isinstance(f, ast.FunctionDef)}
+
+    def calls(fn):
+        return [
+            n for n in ast.walk(funcs[fn]) if isinstance(n, ast.Call)
+        ]
+
+    def callee(n):
+        f = n.func
+        return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+    def sites(name, content=None):
+        return {
+            fn for fn in funcs for n in calls(fn) if callee(n) == name
+            and (content is None or ast.literal_eval(n.args[2]) == content)
+        }
+
+    assert sites("_stage_deletion_vectors") == {"_stage_row_deletes"}
+    assert sites("_stage_delete_files", 1) == {
+        "_stage_row_deletes", "rewrite_position_deletes",
+    }
+    assert sites("_stage_row_deletes") == {"delete_where", "merge_into"}
+    assert "delete_where" in {callee(n) for n in calls("update_where")}
+    for fn in ("delete_where", "update_where", "merge_into",
+               "_stage_row_deletes", "_stage_deletion_vectors"):
+        assert "count" not in {callee(n) for n in calls(fn)}, fn
+        assert "rewrite_position_deletes" not in {
+            callee(n) for n in calls(fn)
+        }, fn
 
 
 def test_health_refresh_is_three_jobs_and_no_compile(spark):

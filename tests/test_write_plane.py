@@ -276,8 +276,8 @@ def _ids(spark, t) -> list[int]:
 
 def test_delete_writers_never_read_footers(spark, tmp_path, monkeypatch):
     """Every delete writer takes its stats from the in-task writer:
-    position deletes (``delete_where`` and ``rewrite_position_deletes``)
-    and equality deletes (``delete_equality`` and a v2 ``merge_into``)
+    position deletes (``delete_where``, ``rewrite_position_deletes`` and
+    a v2 ``merge_into``) and equality deletes (``delete_equality``)
     commit with the footer reader unavailable."""
     def no_footers(*_a, **_k):
         raise AssertionError("delete writers must not read footers")
@@ -299,9 +299,9 @@ def test_delete_writers_never_read_footers(spark, tmp_path, monkeypatch):
         snapshot_id=106, timestamp_ms=1700000005000)
     assert _ids(spark, t) == [
         1, 2, 4, 6, 8, 9, 11, 12, 13, 14, 16, 17, 18, 19, 99]
-    (eq,) = [e for e in live_entries(*_current_list(t))
-             if e["content"] == 2 and e["sid"] == 106]
-    assert eq["equality_ids"] == [1] and eq["records"] == 1
+    (pos,) = [e for e in live_entries(*_current_list(t))
+              if e["content"] == 1 and e["sid"] == 106]
+    assert pos["equality_ids"] is None and pos["records"] == 1
 
 
 def test_delete_files_come_back_from_their_write_job(
@@ -577,4 +577,51 @@ def test_package_has_one_shipper():
     ``addPyFile`` call, in ``session._ship_package``."""
     assert _reference_sites({"addPyFile"}) == {
         ("addPyFile", "session.py", "_ship_package"),
+    }
+
+
+def test_write_stage_imports_without_the_write_plane():
+    """A Python worker that unpickles a write task imports
+    ``data_files`` alone: the package's re-exports resolve on first
+    use, so ``commit`` stays unimported until something names it."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "import hielo_spark.metadata.data_files\n"
+        "assert 'hielo_spark.metadata.commit' not in sys.modules\n"
+        "from hielo_spark.metadata import append, commit\n"
+        "assert append is commit.append\n"
+        "assert 'hielo_spark.metadata.commit' in sys.modules\n"
+    )
+    subprocess.run([sys.executable, "-c", code], check=True)
+
+
+def test_unmapped_arrow_type_raises():
+    """The write stage names each column's Spark type, and an Arrow type
+    Spark has no name for raises instead of recording ``string``."""
+    import pyarrow as pa
+
+    from hielo_spark.metadata.data_files import spark_dtype_of
+
+    for t in (pa.uint8(), pa.uint64(), pa.float16(), pa.time64("us"),
+              pa.duration("s"), pa.struct([("a", pa.uint16())])):
+        with pytest.raises(ValueError, match="no Spark DDL mapping"):
+            spark_dtype_of(t)
+    assert spark_dtype_of(pa.large_binary()) == "binary"
+    assert spark_dtype_of(pa.struct([("a b", pa.int64())])) == "struct<a b:bigint>"
+
+
+def test_written_dtypes_of_a_shredded_variant():
+    """``written_dtypes`` records a shredded variant column as the
+    struct the write tasks store, in ``DataFrame.dtypes`` form."""
+    from hielo_spark.metadata.data_files import written_dtypes
+
+    frame = {"id": "bigint", "v": "string"}
+    plan = C._write_plan({}, frame, ["v"], {"v": {"a": "bigint"}})
+    assert written_dtypes(frame, plan) == {
+        "id": "bigint",
+        "v": "struct<metadata:binary,value:binary,"
+             "typed_value:struct<a:struct<value:binary,typed_value:bigint>>>",
     }

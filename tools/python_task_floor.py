@@ -13,6 +13,14 @@ The gap is the floor under any small job that crosses into Python, for
 example the ``mapInArrow`` write stage of a small delete. Each figure is
 over 15 runs, in a ``local[*]`` session; the JSON names the core count.
 
+A third one-task ``mapInPandas`` job, run after each timed pair so it
+adds nothing to their walls, times one ``importlib.invalidate_caches()``
+call in the reused worker and counts the ``zipimporter`` entries in
+``sys.path_importer_cache``. PySpark's worker makes that call for every
+task (``pyspark.worker_util.setup_spark_files``), and each zip importer
+then re-reads its archive's central directory, so the two figures name
+how much of the gap that call is and how many archives it re-reads.
+
     python tools/python_task_floor.py
 
 Uses plain PySpark only and is never run by the tests.
@@ -45,6 +53,22 @@ def _first_batch_at(batches):
         yield b.assign(t=first)[["t"]]
 
 
+def _invalidate_caches_cost(batches):
+    import importlib
+    import sys
+    import zipimport
+
+    for b in batches:
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        ms = (time.perf_counter() - t0) * 1000.0
+        zips = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        yield b.head(1).assign(ms=ms, zips=zips)[["ms", "zips"]]
+
+
 def main() -> int:
     spark = (
         SparkSession.builder.master("local[*]")
@@ -58,6 +82,7 @@ def main() -> int:
     src = spark.range(0, 10, 1, 1)  # 10 rows, one partition: one task
     jvm_job = src.selectExpr("id * 2 AS v")
     py_job = src.mapInPandas(_first_batch_at, "t double")
+    cache_job = src.mapInPandas(_invalidate_caches_cost, "ms double, zips long")
 
     def launch_s(job_id: int) -> float:
         stage = sc.statusTracker().getJobInfo(job_id).stageIds[0]
@@ -69,7 +94,7 @@ def main() -> int:
         rows = df.collect()
         return (time.perf_counter() - t0) * 1000.0, rows
 
-    jvm_ms, py_ms, gap_ms = [], [], []
+    jvm_ms, py_ms, gap_ms, inval_ms, zips = [], [], [], [], []
     for i in range(RUNS + 1):  # run 0 warms up and starts the worker
         jms, _ = timed(jvm_job)
         pms, rows = timed(py_job)
@@ -78,12 +103,17 @@ def main() -> int:
             jvm_ms.append(jms)
             py_ms.append(pms)
             gap_ms.append((rows[0]["t"] - launch_s(job_id)) * 1000.0)
+            (cost,) = cache_job.collect()
+            inval_ms.append(cost["ms"])
+            zips.append(cost["zips"])
     print(json.dumps({
         "cores": sc.defaultParallelism,
         "runs": RUNS,
         "jvm_job_ms": _summary(jvm_ms),
         "map_in_pandas_job_ms": _summary(py_ms),
         "launch_to_first_batch_ms": _summary(gap_ms),
+        "invalidate_caches_ms": _summary(inval_ms),
+        "zipimporters": max(zips),
     }))
     spark.stop()
     return 0
